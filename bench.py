@@ -2,6 +2,12 @@
 """Bench harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
+Not the performance yardstick: ``headline_queries_total_sec`` sums
+min-of-2 walls of 14 catalog queries and checks only row counts, so it
+is not comparable across commits or with anything perfbench reports.
+Compare performance with ``python3 perfbench/run.py --workload <name>
+--seed <n>`` (see perfbench/README.md).
+
 Prints ONE JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 

@@ -461,8 +461,9 @@ def decode_image(buf: bytes, fmt: str, h: int, w: int, bands: int = 1) -> np.nda
     if fmt == "png":
         try:
             return decode_png(bytes(buf))
-        except ValueError:
-            # non-8-bit / palette / interlaced variants → real backend
+        except (ValueError, zlib.error, struct.error):
+            # non-8-bit / palette / interlaced variants, or a stream the
+            # in-house inflate/chunk walk cannot read → real backend
             for be in external_backends():
                 if be.can_decode(fmt, buf):
                     return be.decode(buf, fmt)

@@ -94,7 +94,11 @@ def grid_bbox(minx, miny, maxx, maxy, ncols: int, nrows: int):
 
 
 def polygon_bbox(rings) -> np.ndarray:
-    pts = np.vstack(rings)
+    """(minx, miny, maxx, maxy); all NaN for an empty polygon, which
+    then fails every closed bbox test and matches nothing."""
+    pts = np.vstack(rings) if len(rings) else np.empty((0, 2))
+    if not len(pts):
+        return np.full(4, np.nan)
     return np.array(
         [pts[:, 0].min(), pts[:, 1].min(), pts[:, 0].max(), pts[:, 1].max()],
         dtype=np.float64,

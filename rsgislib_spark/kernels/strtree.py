@@ -24,14 +24,18 @@ class STRtree:
         """bboxes: (n,4) float64 (minx,miny,maxx,maxy)."""
         bboxes = np.asarray(bboxes, dtype=np.float64).reshape(-1, 4)
         self.item_boxes = bboxes
-        n = len(bboxes)
+        # a box with a NaN side fails every closed-interval test, so it is
+        # left out of the tree: packed in, it would turn its ancestors'
+        # boxes NaN and hide its siblings from every query
+        live = np.flatnonzero(~np.isnan(bboxes).any(axis=1))
+        n = len(live)
         self.fanout = fanout
         if n == 0:
             self.levels = []
             return
         # --- STR packing of leaf order
-        cx = (bboxes[:, 0] + bboxes[:, 2]) / 2
-        cy = (bboxes[:, 1] + bboxes[:, 3]) / 2
+        cx = (bboxes[live, 0] + bboxes[live, 2]) / 2
+        cy = (bboxes[live, 1] + bboxes[live, 3]) / 2
         nleaf = (n + fanout - 1) // fanout
         nstrips = int(np.ceil(np.sqrt(nleaf)))
         per_strip = nstrips * fanout
@@ -40,10 +44,10 @@ class STRtree:
             seg = order[s : s + per_strip]
             seg_sorted = seg[np.argsort(cy[seg], kind="stable")]
             order[s : s + per_strip] = seg_sorted
-        self.order = order  # leaf slot -> original item index
+        self.order = live[order]  # leaf slot -> original item index
 
         # --- build levels bottom-up; each level: (m,4) boxes + child slices
-        boxes = bboxes[order]
+        boxes = bboxes[self.order]
         self.levels = []  # list of (node_boxes (m,4), child_start (m,), child_end (m,))
         cur = boxes
         while len(cur) > 1:
@@ -72,7 +76,7 @@ class STRtree:
         nq = len(qboxes)
         if nq == 0 or len(self.item_boxes) == 0:
             return np.empty(0, np.int64), np.empty(0, np.int64)
-        if not self.levels:  # single item
+        if not self.levels:  # at most one box without a NaN side
             hits = _isect(qboxes, self.item_boxes)
             qi, ii = np.nonzero(hits)
             return qi.astype(np.int64), ii.astype(np.int64)

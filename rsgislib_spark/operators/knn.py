@@ -17,12 +17,17 @@
 
  - :func:`knn_points_bucketed` — the SCALE path (the north rule's "kNN
    neighbor lookup over cell-bucketed candidates"): both sides bucketed
-   to grid cells, candidates = query's k-ring of cells (equi-join, no
-   broadcast of the point table), exact refine + ``row_number() <= k``.
-   A ring-doubling escalation loop guarantees exactness: a query is
-   resolved only when its kth-neighbour distance is within the ring's
-   coverage guarantee (any point outside ring R is at distance
-   > R·cell), so bucketed == brute-force always.
+   to grid cells, candidates = query's k-ring of cells (equi-join on
+   ``cell_key``, no broadcast of the point table), exact refine + rank
+   ``<= k`` by (d2, nbr_id). A ring-escalation loop guarantees
+   exactness: a query is resolved only when it has k candidates and its
+   kth-neighbour distance is within the ring's coverage guarantee (any
+   point outside ring R is at distance > R·cell), so bucketed ==
+   brute-force always. A query batch small enough to broadcast runs
+   each round as one Spark job and resolves it on the driver; a large
+   query side runs the distributed loop (window rank, persist,
+   anti-join, emptiness check per round). Both share the ring sizing
+   and the resolution rule.
 
  - :func:`radius_count_bucketed` — radius count on the same cell join
    (cell ≥ r ⇒ ring-1 covers the disk), replacing the O(N²) theta-join.
@@ -30,9 +35,11 @@
 Physical shape: ``knn_apply``/``closest_point_join``/``radius_count``
 broadcast the training/match side — the documented FAST PATH when that
 side is small (it is the labelled sample set by construction). The
-``*_bucketed`` operators are the default at scale: shuffle on the cell
-key only, candidates per query bounded by local density, skew handled
-by the same salting policy as the spatial join.
+``*_bucketed`` operators are the default at scale: candidates per query
+bounded by local density, skew handled by the same salting policy as
+the spatial join. Large query sides shuffle on the cell key only; an
+interactive batch is broadcast to the points instead and shuffles
+nothing.
 """
 
 from __future__ import annotations
@@ -43,6 +50,7 @@ from typing import Iterator, Sequence
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 METRICS = ("euclidean", "manhattan", "chebyshev", "minkowski", "mahalanobis")
 SUMMARIES = ("mean", "median", "mode", "min", "max", "stddev")
@@ -52,6 +60,13 @@ MAX_BROADCAST_TRAIN = 5_000_000
 
 #: Linear cell-key grid dimension (matches kernels.cells.linear_cell).
 GRID_DIM = 1 << 21
+#: Beyond this ring the (2r+1)² cell explode costs more than a plain
+#: cross-join of the (few) remaining queries × points.
+XJOIN_RING = 48
+#: Driver fence for a driver-resolved kNN round: a round expected to
+#: return more candidate rows than this ranks them in Spark first and
+#: collects only the top-k rows (patchable in tests).
+MAX_DRIVER_CANDIDATES = 2_000_000
 
 
 def _ring_offsets_expr(ring: int):
@@ -89,6 +104,101 @@ def _union_and_release(outs: list, persisted: list) -> DataFrame:
     return out
 
 
+def _extent(df: DataFrame, cols: Sequence[str]):
+    """One job: the per-column minima, maxima and the row count."""
+    return df.agg(
+        *[F.min(c) for c in cols], *[F.max(c) for c in cols], F.count(F.lit(1))
+    ).first()
+
+
+def _ring_plan(pmin, pmax, qmin, qmax, n_points: int, k: int, cell: float):
+    """(first ring, forced last ring, point density) of a bucketed kNN in
+    d = len(pmin) dimensions, from the per-dimension point and query
+    extents (None reads 0)."""
+    pmin, pmax, qmin, qmax = ([float(v or 0.0) for v in vs] for vs in (pmin, pmax, qmin, qmax))
+    d = len(pmin)
+    span = max(b - a for a, b in zip(pmin, pmax))
+    # span of the COMBINED query+point extent: a query outside the point
+    # bbox must still reach every point cell on the forced final ring, so
+    # max_ring is derived from both tables, not the points alone
+    comb_span = max(
+        max(b, qb) - min(a, qa) for a, b, qa, qb in zip(pmin, pmax, qmin, qmax)
+    )
+    max_ring = max(1, int(math.ceil(comb_span / cell)) + 1)
+    # density-informed initial ring: radius of the d-ball expected to hold
+    # k points (V_d = π^{d/2} / Γ(d/2 + 1)) — self-corrects a badly
+    # undersized cell choice (e.g. sparse data) without paying many
+    # escalation rounds
+    vol = max(span, cell) ** d
+    density = n_points / vol if vol > 0 else 0.0
+    ring = 1
+    if density > 0:
+        ball = math.pi ** (d / 2.0) / math.gamma(d / 2.0 + 1.0)
+        r_expect = ((k + 1) / (ball * density)) ** (1.0 / d)
+        ring = max(1, int(math.ceil(r_expect / cell)))
+    return min(ring, max_ring), max_ring, density
+
+
+def _final_round(ring: int, max_ring: int, cell: float, dist_thres: float, xjoin_ring: int) -> bool:
+    """The round that resolves every remaining query: its ring covers
+    all points, or the threshold disk, or is past the explode cutoff
+    (then a cross-join makes all points candidates — exact for any
+    ring, and a huge explode is far worse)."""
+    return ring >= max_ring or ring * cell >= dist_thres or ring > xjoin_ring
+
+
+def _resolved(cnt, kth_d2, k: int, ring: int, cell: float):
+    """A query's top-k is final after a round of ``ring`` when it has k
+    candidates and the k-th lies within the ring's coverage guarantee
+    (any point outside ring R is > R·cell away). Takes Spark Columns or
+    numpy arrays alike, so both kNN loops apply the one rule."""
+    return (cnt >= k) & (kth_d2 <= float(ring * cell) ** 2)
+
+
+def _top_k(cand: DataFrame, k: int) -> DataFrame:
+    """Exact refine in Spark: ``row_number() ≤ k`` per query by (d2, nbr_id)."""
+    win = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("nbr_id"))
+    return (
+        cand.withColumn("rank", F.row_number().over(win))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "nbr_id", "d2", "rank")
+    )
+
+
+def _point_candidates(
+    base: DataFrame, t: DataFrame, ring: int, cell: float, cross: bool,
+    exclude_self: bool, dist_thres: float, broadcast_queries: bool,
+) -> DataFrame:
+    """(query, point) candidate rows with d2 of one escalation round:
+    each query explodes to its ring of cells and equi-joins the
+    cell-keyed points on ``cell_key`` — the query side broadcast on the
+    driver-resolved path, else a shuffle_hash hint so the optimizer
+    never broadcasts the point table. ``cross`` makes every point a
+    candidate instead."""
+    if cross:
+        cand = base.crossJoin(t.drop("cell_key"))  # exact last resort
+    else:
+        qe = base.select("*", _ring_offsets_expr(ring).alias("o")).withColumn(
+            "cell_key",
+            (F.floor(F.col("qx") / F.lit(cell)).cast("long") + F.col("o.dx")) * F.lit(GRID_DIM)
+            + (F.floor(F.col("qy") / F.lit(cell)).cast("long") + F.col("o.dy")),
+        )
+        if broadcast_queries:
+            cand = t.join(F.broadcast(qe), "cell_key")
+        else:
+            cand = qe.join(t.hint("shuffle_hash"), "cell_key")
+    if exclude_self:
+        cand = cand.filter(F.col("query_id") != F.col("nbr_id"))
+    cand = cand.withColumn(
+        "d2",
+        (F.col("qx") - F.col("tx")) * (F.col("qx") - F.col("tx"))
+        + (F.col("qy") - F.col("ty")) * (F.col("qy") - F.col("ty")),
+    )
+    if np.isfinite(dist_thres):
+        cand = cand.filter(F.col("d2") < F.lit(dist_thres * dist_thres))
+    return cand
+
+
 def knn_points_bucketed(
     queries: DataFrame,
     points: DataFrame,
@@ -105,19 +215,31 @@ def knn_points_bucketed(
     (ref: src/rastergis/RSGISRATKNN.cpp:390-420, which linearly scans
     all training rows; here the scan is restricted to the k-ring).
 
-    Two-phase plan, pure Catalyst (no UDF, NO broadcast of ``points``):
+    Candidates: ``points`` keyed by grid cell; each query explodes to the
+    (2r+1)² cells of its ring and equi-joins them on the cell key (the
+    point table is never broadcast); exact refine by d2 and rank
+    ``≤ k`` per query in (d2, nbr_id) order.
 
-    1. bucket ``points`` by cell key; explode each query to its ring of
-       candidate cells; equi-join on the cell key (shuffle_hash hint so
-       the optimizer never broadcasts the point table);
-    2. exact refine: dist² + ``row_number() ≤ k`` per query.
+    Selection rule: any point outside ring R is at distance > R·cell
+    from the query, so a query is RESOLVED once it has k candidates and
+    its k-th is within R·cell. Unresolved queries re-run with a 4× ring;
+    the round whose ring covers every point (or the threshold disk, or
+    passes the explode cutoff, where a cross-join takes over) resolves
+    the rest. Hence bucketed == brute force always.
 
-    Exactness: any point outside ring R is at distance > R·cell from the
-    query, so a query is RESOLVED once its kth-candidate distance is
-    ≤ R·cell (or R·cell ≥ dist_thres / the world span). Unresolved
-    queries re-run with a doubled ring — each round is a distributed
-    pass over only the remaining queries, so the common case is one
-    round plus a cheap empty check.
+    Physical shape, by the query side:
+
+    - *broadcastable* (Catalyst's size estimate of the projected queries
+      within ``spark.sql.autoBroadcastJoinThreshold``; −1 disables): the
+      batch is collected once, the point extent and count take one job,
+      and each round is one job — the remaining queries, ring-exploded
+      and broadcast, join the points on ``cell_key`` and the candidate
+      rows come back to the driver, which ranks them and applies the
+      selection rule. No persist, anti-join or emptiness check; the
+      result is returned as a local DataFrame.
+    - *large* (self-kNN, whole-table joins): the distributed loop. Each
+      round ranks with a window, persists, anti-joins the resolved
+      queries away and checks the rest for emptiness.
 
     Neighbours at ``dist >= dist_thres`` are excluded (strict ``<``,
     matching knn_apply / the reference's dist_thres test). Queries with
@@ -127,6 +249,8 @@ def knn_points_bucketed(
     (d2, nbr_id) — deterministic across engines when coordinates live
     on an integer lattice (d2 is then integer-valued).
     """
+    from rsgislib_spark.qcommon import broadcastable
+
     q0 = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(x_col).cast("double").alias("qx"),
@@ -138,104 +262,103 @@ def knn_points_bucketed(
         F.col(y_col).cast("double").alias("ty"),
     )
     t = _with_cell_key(t, cell, "tx", "ty", "cell_key")
+    run = _knn_driver_rounds if broadcastable(q0) else _knn_distributed
+    return run(q0, t, k, cell, dist_thres, exclude_self)
 
-    stats = points.agg(
-        F.min(x_col).alias("pminx"),
-        F.max(x_col).alias("pmaxx"),
-        F.min(y_col).alias("pminy"),
-        F.max(y_col).alias("pmaxy"),
-        F.count("*").alias("n"),
-    ).first()
-    qstats = queries.agg(
-        F.min(x_col).alias("qminx"),
-        F.max(x_col).alias("qmaxx"),
-        F.min(y_col).alias("qminy"),
-        F.max(y_col).alias("qmaxy"),
-    ).first()
-    world_span = max(
-        float(stats["pmaxx"] or 0.0) - float(stats["pminx"] or 0.0),
-        float(stats["pmaxy"] or 0.0) - float(stats["pminy"] or 0.0),
+
+def _knn_driver_rounds(
+    q0: DataFrame, t: DataFrame, k: int, cell: float, dist_thres: float, exclude_self: bool
+) -> DataFrame:
+    """Broadcast query batch, rounds resolved on the driver (see
+    :func:`knn_points_bucketed`)."""
+    spark = q0.sparkSession
+    schema = StructType([
+        q0.schema["query_id"], t.schema["nbr_id"],
+        StructField("d2", DoubleType()), StructField("rank", IntegerType()),
+    ])
+    rem = q0.toPandas()
+    if rem.empty:
+        return spark.createDataFrame([], schema)
+    pstats = _extent(t, ["tx", "ty"])
+    n_points = int(pstats[4])
+    ring, max_ring, density = _ring_plan(
+        pstats[:2], pstats[2:4], rem[["qx", "qy"]].min(), rem[["qx", "qy"]].max(), n_points, k, cell
     )
-    # span of the COMBINED query+point extent: a query outside the point
-    # bbox must still reach every point cell on the forced final ring, so
-    # max_ring is derived from both tables, not the points alone
-    comb_span = max(
-        max(float(stats["pmaxx"] or 0.0), float(qstats["qmaxx"] or 0.0))
-        - min(float(stats["pminx"] or 0.0), float(qstats["qminx"] or 0.0)),
-        max(float(stats["pmaxy"] or 0.0), float(qstats["qmaxy"] or 0.0))
-        - min(float(stats["pminy"] or 0.0), float(qstats["qminy"] or 0.0)),
+    outs = []
+    while True:
+        ring = min(ring, max_ring)
+        final = _final_round(ring, max_ring, cell, dist_thres, XJOIN_RING)
+        cross = final and ring > XJOIN_RING
+        cand = _point_candidates(
+            spark.createDataFrame(rem, q0.schema), t, ring, cell, cross,
+            exclude_self, dist_thres, broadcast_queries=True,
+        )
+        per_query = n_points if cross else min(n_points, density * ((2 * ring + 1) * cell) ** 2)
+        if len(rem) * per_query > MAX_DRIVER_CANDIDATES:
+            cand = _top_k(cand, k)  # collect k rows per query, not the candidates
+        top = _top_k_pandas(cand.select("query_id", "nbr_id", "d2").toPandas(), k)
+        if final:
+            outs.append(top)
+            break
+        got = top.groupby("query_id", sort=False)["d2"].agg(["size", "max"])
+        done = got.index[_resolved(got["size"].to_numpy(), got["max"].to_numpy(), k, ring, cell)]
+        outs.append(top[top["query_id"].isin(done)])
+        rem = rem[~rem["query_id"].isin(done)]
+        if rem.empty:
+            break
+        ring *= 4
+    return spark.createDataFrame(pd.concat(outs, ignore_index=True), schema)
+
+
+def _top_k_pandas(cand: pd.DataFrame, k: int) -> pd.DataFrame:
+    """:func:`_top_k` on the driver: rank ≤ k per query by (d2, nbr_id)."""
+    cand = cand.sort_values(["query_id", "d2", "nbr_id"], kind="stable", ignore_index=True)
+    cand["rank"] = cand.groupby("query_id", sort=False).cumcount().astype(np.int32) + 1
+    return cand[cand["rank"] <= k]
+
+
+def _knn_distributed(
+    q0: DataFrame, t: DataFrame, k: int, cell: float, dist_thres: float, exclude_self: bool
+) -> DataFrame:
+    """The scale loop for large query sides (see :func:`knn_points_bucketed`)."""
+    pstats = _extent(t, ["tx", "ty"])
+    qstats = _extent(q0, ["qx", "qy"])
+    ring, max_ring, _ = _ring_plan(
+        pstats[:2], pstats[2:4], qstats[:2], qstats[2:4], int(pstats[4]), k, cell
     )
-    n_points = int(stats["n"])
-    # ring that covers every point from any query — the forced last round
-    max_ring = max(1, int(math.ceil(comb_span / cell)) + 1)
-    thres2 = dist_thres * dist_thres
 
-    # density-informed initial ring: radius expected to contain k points
-    # (self-corrects a badly-undersized cell choice — e.g. sparse data —
-    # without paying many escalation rounds)
-    area = max(world_span, cell) ** 2
-    density = n_points / area if area > 0 else 0.0
-    if density > 0:
-        r_expect = math.sqrt((k + 1) / (math.pi * density))
-        ring = max(1, int(math.ceil(r_expect / cell)))
-    else:
-        ring = 1
-    ring = min(ring, max_ring)
-    # beyond this ring the (2r+1)² cell explode costs more than a plain
-    # repartition cross-join of the (few) remaining queries × points
-    XJOIN_RING = 48
+    def candidates(base: DataFrame, ring: int, cross: bool) -> DataFrame:
+        return _point_candidates(
+            base, t, ring, cell, cross, exclude_self, dist_thres, broadcast_queries=False
+        )
 
-    remaining = q0.withColumn(
-        "_qix", F.floor(F.col("qx") / F.lit(cell)).cast("long")
-    ).withColumn("_qiy", F.floor(F.col("qy") / F.lit(cell)).cast("long"))
+    return _escalate(q0, candidates, k, ring, max_ring, cell, dist_thres, XJOIN_RING)
 
+
+def _escalate(
+    remaining: DataFrame, candidates, k: int, ring: int, max_ring: int,
+    cell: float, dist_thres: float, xjoin_ring: int,
+) -> DataFrame:
+    """Distributed ring escalation: each round ranks the candidates of
+    only the remaining queries (``candidates(base, ring, cross)`` → rows
+    with query_id, nbr_id, d2), keeps the resolved ones, anti-joins them
+    away and stops when nothing remains — so the common case is one
+    round plus a cheap empty check."""
     outs = []
     persisted = []
     while True:
         ring = min(ring, max_ring)
-        # a ring beyond the explode cutoff finalizes via cross-join: the
-        # cross-join is EXACT for any ring (all points are candidates),
-        # and a (2r+1)² explode at large r is far worse
-        final_round = (
-            ring >= max_ring or ring * cell >= dist_thres or ring > XJOIN_RING
-        )
-        base = remaining.select("query_id", "qx", "qy", "_qix", "_qiy")
-        if final_round and ring > XJOIN_RING:
-            # exact last resort: all points are candidates (no broadcast —
-            # Spark cartesian shuffles both sides)
-            cand = base.drop("_qix", "_qiy").crossJoin(t.drop("cell_key"))
-        else:
-            qe = base.select("*", _ring_offsets_expr(ring).alias("o")).withColumn(
-                "cell_key",
-                (F.col("_qix") + F.col("o.dx")) * F.lit(GRID_DIM)
-                + (F.col("_qiy") + F.col("o.dy")),
-            )
-            cand = qe.join(t.hint("shuffle_hash"), "cell_key")
-        if exclude_self:
-            cand = cand.filter(F.col("query_id") != F.col("nbr_id"))
-        cand = cand.withColumn(
-            "d2",
-            (F.col("qx") - F.col("tx")) * (F.col("qx") - F.col("tx"))
-            + (F.col("qy") - F.col("ty")) * (F.col("qy") - F.col("ty")),
-        )
-        if np.isfinite(dist_thres):
-            cand = cand.filter(F.col("d2") < F.lit(thres2))
-        win = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("nbr_id"))
-        ranked = (
-            cand.withColumn("rank", F.row_number().over(win))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "nbr_id", "d2", "rank")
-        )
-        if final_round:
+        final = _final_round(ring, max_ring, cell, dist_thres, xjoin_ring)
+        ranked = _top_k(candidates(remaining, ring, final and ring > xjoin_ring), k)
+        if final:
             outs.append(ranked)
             break
         ranked = ranked.persist()
         persisted.append(ranked)
-        guar2 = float(ring * cell) ** 2
         resolved = (
             ranked.groupBy("query_id")
             .agg(F.count("*").alias("cnt"), F.max("d2").alias("maxd2"))
-            .filter((F.col("cnt") >= k) & (F.col("maxd2") <= F.lit(guar2)))
+            .filter(_resolved(F.col("cnt"), F.col("maxd2"), k, ring, cell))
             .select("query_id")
         )
         outs.append(ranked.join(resolved, "query_id"))
@@ -314,60 +437,21 @@ def knn_features_bucketed(
 
     t = t.withColumn("cell_key", key_from("t", t))
 
-    stats = points.agg(
-        *[F.min(c).alias(f"pmin{j}") for j, c in enumerate(feat_cols)],
-        *[F.max(c).alias(f"pmax{j}") for j, c in enumerate(feat_cols)],
-        F.count("*").alias("n"),
-    ).first()
-    qstats = queries.agg(
-        *[F.min(c).alias(f"qmin{j}") for j, c in enumerate(feat_cols)],
-        *[F.max(c).alias(f"qmax{j}") for j, c in enumerate(feat_cols)],
-    ).first()
-    span = max(
-        float(stats[f"pmax{j}"] or 0.0) - float(stats[f"pmin{j}"] or 0.0)
-        for j in range(d)
+    pstats = _extent(t, [f"t{j}" for j in range(d)])
+    qstats = _extent(q0, [f"q{j}" for j in range(d)])
+    ring, max_ring, _ = _ring_plan(
+        pstats[:d], pstats[d : 2 * d], qstats[:d], qstats[d : 2 * d], int(pstats[2 * d]), k, cell
     )
-    # combined query+point span per dim — queries outside the point bbox
-    # must still reach every point cell on the forced final ring
-    comb_span = max(
-        max(float(stats[f"pmax{j}"] or 0.0), float(qstats[f"qmax{j}"] or 0.0))
-        - min(float(stats[f"pmin{j}"] or 0.0), float(qstats[f"qmin{j}"] or 0.0))
-        for j in range(d)
-    )
-    n_points = int(stats["n"])
-    max_ring = max(1, int(math.ceil(comb_span / cell)) + 1)
     thres2 = dist_thres * dist_thres
-    vol = max(span, cell) ** d
-    density = n_points / vol if vol > 0 else 0.0
-    if density > 0:
-        # radius of the d-ball expected to hold k points
-        # (V_d = π^{d/2} / Γ(d/2 + 1), any d)
-        ball = math.pi ** (d / 2.0) / math.gamma(d / 2.0 + 1.0)
-        r_expect = ((k + 1) / (ball * density)) ** (1.0 / d)
-        ring = max(1, int(math.ceil(r_expect / cell)))
-    else:
-        ring = 1
-    ring = min(ring, max_ring)
     if d <= 3:
-        XJOIN_RING = {1: 2048, 2: 64, 3: 16}[d]
+        xjoin_ring = {1: 2048, 2: 64, 3: 16}[d]
     else:
         # largest ring whose (2r+1)^d explode stays under ~20k candidate
         # cells per query; past it the exact cross-join finalizer wins
-        XJOIN_RING = max(1, int((20_000 ** (1.0 / d) - 1) // 2))
+        xjoin_ring = max(1, int((20_000 ** (1.0 / d) - 1) // 2))
 
-    remaining = q0
-    outs = []
-    persisted = []
-    while True:
-        ring = min(ring, max_ring)
-        # a ring beyond the explode cutoff finalizes via cross-join: the
-        # cross-join is EXACT for any ring (all points are candidates),
-        # and a (2r+1)^d explode at large r is astronomically worse
-        final_round = (
-            ring >= max_ring or ring * cell >= dist_thres or ring > XJOIN_RING
-        )
-        base = remaining
-        if final_round and ring > XJOIN_RING:
+    def candidates(base: DataFrame, ring: int, cross: bool) -> DataFrame:
+        if cross:
             cand = base.crossJoin(t.drop("cell_key"))
         else:
             qe = base
@@ -387,32 +471,9 @@ def knn_features_bucketed(
         cand = cand.withColumn("d2", d2)
         if np.isfinite(dist_thres):
             cand = cand.filter(F.col("d2") < F.lit(thres2))
-        win = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("nbr_id"))
-        ranked = (
-            cand.withColumn("rank", F.row_number().over(win))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "nbr_id", "d2", "rank")
-        )
-        if final_round:
-            outs.append(ranked)
-            break
-        ranked = ranked.persist()
-        persisted.append(ranked)
-        guar2 = float(ring * cell) ** 2
-        resolved = (
-            ranked.groupBy("query_id")
-            .agg(F.count("*").alias("cnt"), F.max("d2").alias("maxd2"))
-            .filter((F.col("cnt") >= k) & (F.col("maxd2") <= F.lit(guar2)))
-            .select("query_id")
-        )
-        outs.append(ranked.join(resolved, "query_id"))
-        remaining = remaining.join(resolved, "query_id", "left_anti").persist()
-        persisted.append(remaining)
-        if remaining.isEmpty():
-            break
-        ring *= 4
+        return cand
 
-    return _union_and_release(outs, persisted)
+    return _escalate(q0, candidates, k, ring, max_ring, cell, dist_thres, xjoin_ring)
 
 
 def radius_count_bucketed(

@@ -9,12 +9,17 @@ multiplicity), base attributes retained.
 Two physical strategies, same semantics:
 
  - :func:`spatial_join_broadcast` — the zone side is broadcast as a
-   pickled ZoneIndex (STR bbox tree + rings). A single ``mapInPandas``
-   pass over the images computes candidate pairs (tree query) and the
-   exact predicate (vectorized rect×polygon kernels) with ZERO shuffle
-   of the big side. This is the 100 TB path whenever zones fit on an
-   executor (they do by design — the reference's zone side is a small
-   vector layer).
+   pickled ZoneIndex (STR bbox tree + rings). The union of the zone
+   bboxes is pushed down first as a Catalyst column filter (closed
+   intervals, the tree's own test), so only images that can meet a zone
+   reach Python. A single ``mapInPandas`` pass over those computes
+   candidate pairs (tree query) and the exact predicate (vectorized
+   rect×polygon kernels) with ZERO shuffle of the big side; ``inner``
+   and ``right`` joins also join back only the filtered images. This is
+   the 100 TB path whenever zones fit on an executor (they do by design
+   — the reference's zone side is a small vector layer).
+   :func:`spatial_select`, :func:`layer_predicate` and the ``vec_*_vec``
+   predicates share the same filtered pair stream.
 
  - :func:`spatial_join_cells` — both sides exploded to covering grid
    cells, cell equi-join (Catalyst sort-merge/shuffle-hash with AQE),
@@ -98,8 +103,30 @@ class ZoneIndex:
         return qs[keep], zs[keep]
 
 
+def _in_zone_bbox(zx: ZoneIndex) -> F.Column:
+    """Catalyst filter keeping the rects that can meet some zone: closed
+    overlap with the union of the zone bboxes, the STRtree's own test, so
+    it drops only rects the tree would reject anyway. A zone bbox with a
+    NaN side matches nothing and stays out of the union; with no other
+    zone, nothing passes."""
+    b = zx.bboxes[~np.isnan(zx.bboxes).any(axis=1)]
+    if not len(b):
+        return F.lit(False)
+    return (
+        (F.col("minx") <= float(b[:, 2].max()))
+        & (F.col("maxx") >= float(b[:, 0].min()))
+        & (F.col("miny") <= float(b[:, 3].max()))
+        & (F.col("maxy") >= float(b[:, 1].min()))
+    )
+
+
 def _pairs_df(images: DataFrame, zindex_b, join_op: str, id_col: str) -> DataFrame:
     """Inner pair list (id_col, zone_id) via broadcast index.
+
+    Only rects inside the zones' union bbox (:func:`_in_zone_bbox`) reach
+    the Python refine: the filter is a plain column predicate, so Catalyst
+    evaluates it in the scan (and a cached table skips whole batches by
+    their column stats) and the refine sees the candidates, not the table.
 
     A THIN input (fewer scan partitions than cores — e.g. one small
     parquet file) would run the whole match kernel on 1-2 tasks; the
@@ -108,7 +135,11 @@ def _pairs_df(images: DataFrame, zindex_b, join_op: str, id_col: str) -> DataFra
     costs microseconds per thousand images and buys full-width refine."""
     from rsgislib_spark.qcommon import widen
 
-    slim = widen(images.select(id_col, "minx", "miny", "maxx", "maxy"))
+    slim = widen(
+        images.select(id_col, "minx", "miny", "maxx", "maxy").filter(
+            _in_zone_bbox(zindex_b.value)
+        )
+    )
     id_type = dict(images.dtypes)[id_col]
     schema = f"{id_col} {id_type}, zone_id long"
 
@@ -146,10 +177,15 @@ def spatial_join_broadcast(
         raise ValueError(f"join_op must be one of {JOIN_OPS}")
     spark = images.sparkSession
     zones_pdf = _fenced_zones_pdf(zones.select("zone_id", "geometry"))
-    zindex_b = spark.sparkContext.broadcast(ZoneIndex.from_pandas(zones_pdf))
+    zx = ZoneIndex.from_pandas(zones_pdf)
+    zindex_b = spark.sparkContext.broadcast(zx)
 
     pairs = _pairs_df(images, zindex_b, join_op, id_col)
     zone_attrs = zones.drop("geometry", "minx", "miny", "maxx", "maxy")
+    if join_how != "left":
+        # only images inside the zones' union bbox can pair, so the join
+        # back shuffles those and not the table (left keeps every image)
+        images = images.filter(_in_zone_bbox(zx))
 
     if join_how == "inner":
         out = images.join(pairs, id_col, "inner").join(

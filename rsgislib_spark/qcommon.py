@@ -45,6 +45,15 @@ def plan_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
+def broadcastable(df: DataFrame) -> bool:
+    """Whether Catalyst's size estimate of ``df`` is within Spark's own
+    ``spark.sql.autoBroadcastJoinThreshold`` (−1 disables broadcasts) —
+    the test the planner applies to a join side."""
+    limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    size = plan_size_bytes(df)
+    return limit >= 0 and size is not None and size <= limit
+
+
 def widen(df: DataFrame) -> DataFrame:
     """Repartition a THIN DataFrame up to the default parallelism.
 

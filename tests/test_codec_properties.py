@@ -239,3 +239,40 @@ def test_pil_backend_real_jfif_roundtrip():
     buf = be.encode(base, "jfif")
     out = codecs.decode_image(buf, "jpg", 64, 64)
     assert codecs.psnr(out, base) >= 30.0
+
+
+class _FakePngBackend:
+    """Stands in for a full PNG decoder: answers any png payload with a
+    fixed array, so a test can see whether the fallback was reached."""
+
+    name = "fake-png"
+    px = np.full((4, 4), 7, dtype=np.uint8)
+
+    def can_decode(self, fmt, buf):
+        return fmt == "png"
+
+    def decode(self, buf, fmt):
+        return self.px
+
+
+def test_png_fallback_on_corrupt_stream(monkeypatch):
+    """A PNG whose IDAT the in-house inflate rejects (zlib.error) or whose
+    chunk walk runs off the end (struct.error) goes to the external
+    backends; with none installed the original error is raised."""
+    import struct
+    import zlib
+
+    import pytest
+
+    png = codecs.encode_png(np.arange(64, dtype=np.uint8).reshape(8, 8))
+    at = png.index(b"IDAT") + 4
+    corrupt = png[:at] + b"\x00\xff\x00\xff" + png[at + 4 :]
+    truncated = png[: 8 + 12 + 13 + 2]  # signature, IHDR, 2 bytes of a length
+    monkeypatch.setattr(codecs, "_EXTERNAL_BACKENDS", [_FakePngBackend()])
+    for buf in (corrupt, truncated):
+        assert np.array_equal(codecs.decode_image(buf, "png", 8, 8), _FakePngBackend.px)
+    monkeypatch.setattr(codecs, "_EXTERNAL_BACKENDS", [])
+    with pytest.raises(zlib.error):
+        codecs.decode_image(corrupt, "png", 8, 8)
+    with pytest.raises(struct.error):
+        codecs.decode_image(truncated, "png", 8, 8)

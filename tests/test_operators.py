@@ -1,6 +1,8 @@
 """Operator parity tests: tiler / zonal / point extraction / kNN vs
 independent numpy oracles over the deterministic fixtures."""
 
+import contextlib
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -275,6 +277,40 @@ class TestPointExtract:
 
 
 # ------------------------------------------------------------------- knn
+@contextlib.contextmanager
+def knn_path(spark, path):
+    """Run knn_points_bucketed on one physical path and check every call
+    took it: "broadcast" (driver-resolved rounds over a broadcast query
+    batch, the default for small batches) or "distributed" (the scale
+    loop, forced by spark.sql.autoBroadcastJoinThreshold=-1)."""
+    from rsgislib_spark.operators import knn
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    threshold = spark.conf.get(key)
+    real = {name: getattr(knn, name) for name in ("_knn_driver_rounds", "_knn_distributed")}
+    taken = []
+
+    def spy(name):
+        def run(*args):
+            taken.append(name)
+            return real[name](*args)
+
+        return run
+
+    for name in real:
+        setattr(knn, name, spy(name))
+    if path == "distributed":
+        spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, threshold)
+        for name, fn in real.items():
+            setattr(knn, name, fn)
+    want = "_knn_driver_rounds" if path == "broadcast" else "_knn_distributed"
+    assert taken and set(taken) == {want}, taken
+
+
 class TestKNN:
     def _brute(self, q, t, tv, k, metric, thres=np.inf, vi=None):
         from rsgislib_spark.operators.knn import _distances
@@ -381,8 +417,31 @@ class TestKNN:
 
     @pytest.mark.parametrize("cell", [2000.0, 50000.0])
     def test_knn_bucketed_equals_brute(self, spark, points_pdf, cell):
-        """Small cell forces multi-round ring escalation; large cell
-        resolves in one round — both must equal brute force exactly."""
+        with knn_path(spark, "broadcast"):
+            self._check_knn_equals_brute(spark, points_pdf, cell)
+
+    @pytest.mark.parametrize("cell", [2000.0, 50000.0])
+    def test_knn_bucketed_equals_brute_distributed(self, spark, points_pdf, cell):
+        with knn_path(spark, "distributed"):
+            self._check_knn_equals_brute(spark, points_pdf, cell)
+
+    def test_knn_bucketed_driver_fence_ranks_in_spark(self, spark, points_pdf, monkeypatch):
+        """A round expected to return more candidate rows than the driver
+        fence ranks them in Spark and collects only the top-k rows."""
+        from rsgislib_spark.operators import knn
+
+        ranked = []
+        real = knn._top_k
+        monkeypatch.setattr(knn, "MAX_DRIVER_CANDIDATES", 0)
+        monkeypatch.setattr(knn, "_top_k", lambda *a: ranked.append(1) or real(*a))
+        with knn_path(spark, "broadcast"):
+            self._check_knn_equals_brute(spark, points_pdf, 50000.0)
+        assert ranked
+
+    def _check_knn_equals_brute(self, spark, points_pdf, cell):
+        """Small cell starts past the explode cutoff (cross-join
+        finalizer); large cell resolves by the ring rule — both must
+        equal brute force exactly."""
         from rsgislib_spark.operators.knn import knn_points_bucketed
 
         k = 4
@@ -405,6 +464,14 @@ class TestKNN:
             assert np.allclose(sub["d2"].to_numpy(), d2[order])
 
     def test_knn_bucketed_dist_thres_strict(self, spark, points_pdf):
+        with knn_path(spark, "broadcast"):
+            self._check_knn_dist_thres_strict(spark, points_pdf)
+
+    def test_knn_bucketed_dist_thres_strict_distributed(self, spark, points_pdf):
+        with knn_path(spark, "distributed"):
+            self._check_knn_dist_thres_strict(spark, points_pdf)
+
+    def _check_knn_dist_thres_strict(self, spark, points_pdf):
         from rsgislib_spark.operators.knn import knn_points_bucketed
 
         pts = spark.createDataFrame(points_pdf)
@@ -482,17 +549,34 @@ class TestKNN:
             assert list(sub["nbr_id"]) == list(ids[order]), qrow.pt_id
             assert np.allclose(sub["d2"].to_numpy(), d2[order])
 
+    @pytest.mark.parametrize("path", ["broadcast", "distributed"])
+    def test_knn_bucketed_empty_query_batch(self, spark, points_pdf, path):
+        from rsgislib_spark.operators.knn import knn_points_bucketed
+
+        pts = spark.createDataFrame(points_pdf)
+        with knn_path(spark, path):
+            got = knn_points_bucketed(pts.filter("pt_id < 0"), pts, k=3).toPandas()
+        assert got.empty
+        assert list(got.columns) == ["query_id", "nbr_id", "d2", "rank"]
+
     def test_closest_point_join_bucketed_matches_broadcast(self, spark, points_pdf):
+        self._check_closest_bucketed_matches_broadcast(spark, points_pdf, "broadcast")
+
+    def test_closest_point_join_bucketed_matches_broadcast_distributed(self, spark, points_pdf):
+        self._check_closest_bucketed_matches_broadcast(spark, points_pdf, "distributed")
+
+    def _check_closest_bucketed_matches_broadcast(self, spark, points_pdf, path):
         base = spark.createDataFrame(points_pdf.iloc[:50])
         match = spark.createDataFrame(points_pdf.iloc[50:])
         a = (
             closest_point_join(base, match, tolerance=80000.0)
             .toPandas().set_index("pt_id").sort_index()
         )
-        b = (
-            closest_point_join(base, match, tolerance=80000.0, strategy="bucketed")
-            .toPandas().set_index("pt_id").sort_index()
-        )
+        with knn_path(spark, path):
+            b = (
+                closest_point_join(base, match, tolerance=80000.0, strategy="bucketed")
+                .toPandas().set_index("pt_id").sort_index()
+            )
         assert list(a.index) == list(b.index)
         for pid in a.index:
             if pd.isna(a.loc[pid, "closest_id"]):
@@ -530,6 +614,14 @@ class TestRound3Fixes:
         """ADVICE r2 (medium): a query far outside the point bbox must
         still find its true k nearest — max_ring derived from the points
         span alone under-covered the forced final ring."""
+        with knn_path(spark, "broadcast"):
+            self._check_knn_query_outside_point_bbox(spark, points_pdf)
+
+    def test_knn_bucketed_query_outside_point_bbox_distributed(self, spark, points_pdf):
+        with knn_path(spark, "distributed"):
+            self._check_knn_query_outside_point_bbox(spark, points_pdf)
+
+    def _check_knn_query_outside_point_bbox(self, spark, points_pdf):
         from rsgislib_spark.operators.knn import knn_points_bucketed
 
         pts = points_pdf.iloc[:60]

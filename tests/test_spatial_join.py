@@ -240,3 +240,78 @@ def test_cells_left_right_hows_match_broadcast(spark_tables):
     )
     assert zkey(br) == zkey(cr)
     assert cr["image_id"].isna().sum() > 0
+
+
+# ------------------------------------------- zone-bbox pushdown semantics
+
+
+def _rect_zones(spark, rects, id0=100):
+    rows = [
+        (id0 + i, geom.polygon_to_wkb([np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]], float)]))
+        for i, (x0, y0, x1, y1) in enumerate(rects)
+    ]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=["zone_id", "geometry"]))
+
+
+def _rect_images(spark, rects):
+    return spark.createDataFrame(
+        pd.DataFrame(
+            [(i, *map(float, r)) for i, r in enumerate(rects)],
+            columns=["image_id", "minx", "miny", "maxx", "maxy"],
+        )
+    )
+
+
+def test_left_join_keeps_images_outside_every_zone_bbox(spark):
+    zones = _rect_zones(spark, [(0, 0, 10, 10), (20, 0, 30, 10)])
+    images = _rect_images(spark, [(2, 2, 4, 4), (100, 100, 110, 110), (-50, 40, -40, 50)])
+    got = spatial_join_broadcast(images, zones, join_how="left").toPandas()
+    got = got.sort_values("image_id").reset_index(drop=True)
+    assert list(got["image_id"]) == [0, 1, 2]
+    assert got.loc[0, "zone_id"] == 100
+    assert got.loc[1:, "zone_id"].isna().all()
+
+
+def test_empty_or_nan_zone_bbox_keeps_other_zone_matches(spark, images_nopix_pdf, zones_pdf):
+    """An empty polygon and a NaN-coordinate polygon match nothing; they
+    must not poison the union-bbox filter or the STRtree nodes they share
+    with other zones."""
+    nan_ring = np.array([[np.nan, 0.0], [1.0, np.nan], [1.0, 1.0]])
+    bad = pd.DataFrame(
+        {
+            "zone_id": [900, 901],
+            "class_name": ["bad", "bad"],
+            "geometry": [geom.polygon_to_wkb([]), geom.polygon_to_wkb([nan_ring])],
+            "minx": [np.nan] * 2, "miny": [np.nan] * 2, "maxx": [np.nan] * 2, "maxy": [np.nan] * 2,
+        }
+    )
+    zones = spark.createDataFrame(pd.concat([zones_pdf, bad], ignore_index=True))
+    images = spark.createDataFrame(images_nopix_pdf[["image_id", "minx", "miny", "maxx", "maxy"]])
+    got = spatial_join_broadcast(images, zones).select("image_id", "zone_id").toPandas()
+    assert set(zip(got["image_id"], got["zone_id"].astype(int))) == brute_pairs(
+        images_nopix_pdf, zones_pdf, "intersects"
+    )
+    only_bad = spark.createDataFrame(bad)
+    assert spatial_join_broadcast(images, only_bad).count() == 0
+
+
+def test_image_touching_zone_bbox_edge_intersects(spark):
+    """Closed intervals: contact on the union bbox's edge or corner is
+    still an intersection."""
+    zones = _rect_zones(spark, [(0, 0, 10, 10)])
+    images = _rect_images(spark, [(10, 2, 12, 4), (10, 10, 12, 12), (-3, -3, 0, 0), (10.5, 2, 12, 4)])
+    for how in ("inner", "right"):
+        got = spatial_join_broadcast(images, zones, join_how=how).toPandas()
+        assert sorted(got["image_id"]) == [0, 1, 2], how
+
+
+def test_layer_predicate_false_outside_union_bbox(spark):
+    from rsgislib_spark.operators.spatial_join import layer_predicate
+
+    zones = _rect_zones(spark, [(0, 0, 10, 10), (20, 20, 30, 30)])
+    far = _rect_images(spark, [(40, 40, 50, 50), (-20, 0, -10, 5)])
+    assert not layer_predicate(far, zones, "intersects")
+    between = _rect_images(spark, [(12, 12, 18, 18)])  # inside the union bbox only
+    assert not layer_predicate(between, zones, "intersects")
+    near = _rect_images(spark, [(40, 40, 50, 50), (30, 30, 35, 35)])
+    assert layer_predicate(near, zones, "intersects")
