@@ -23,11 +23,13 @@
    exactness: a query is resolved only when it has k candidates and its
    kth-neighbour distance is within the ring's coverage guarantee (any
    point outside ring R is at distance > R·cell), so bucketed ==
-   brute-force always. A query batch small enough to broadcast runs
-   each round as one Spark job and resolves it on the driver; a large
-   query side runs the distributed loop (window rank, persist,
-   anti-join, emptiness check per round). Both share the ring sizing
-   and the resolution rule.
+   brute-force always. While the ring-exploded batch of remaining
+   queries and its candidates are small, a round is one Spark job that
+   broadcasts the batch to the points and is resolved on the driver;
+   past that the distributed loop (window rank, persist, anti-join,
+   emptiness check per round) takes the rest.
+   :func:`knn_features_bucketed` runs the same engine in d dimensions
+   on the distributed loop only.
 
  - :func:`radius_count_bucketed` — radius count on the same cell join
    (cell ≥ r ⇒ ring-1 covers the disk), replacing the O(N²) theta-join.
@@ -45,6 +47,7 @@ nothing.
 from __future__ import annotations
 
 import math
+from functools import partial
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -63,29 +66,13 @@ GRID_DIM = 1 << 21
 #: Beyond this ring the (2r+1)² cell explode costs more than a plain
 #: cross-join of the (few) remaining queries × points.
 XJOIN_RING = 48
-#: Driver fence for a driver-resolved kNN round: a round expected to
-#: return more candidate rows than this ranks them in Spark first and
-#: collects only the top-k rows (patchable in tests).
+#: Most candidate rows one driver-resolved kNN round collects, split
+#: evenly over the point table's partitions; past it the distributed
+#: loop takes the remaining queries (patchable in tests). It is also
+#: near the measured crossover: on a 4-core host a driver round ranked
+#: 1.6 M candidates in 1.0 s and 3.2 M in 2.2 s, the distributed loop
+#: took 2.2-2.3 s for either.
 MAX_DRIVER_CANDIDATES = 2_000_000
-
-
-def _ring_offsets_expr(ring: int):
-    """(2·ring+1)² cell offsets as an explodable Catalyst expression —
-    the k-ring expansion stays JVM-side (no UDF, no driver loop over
-    offsets)."""
-    return F.expr(
-        f"explode(flatten(transform(sequence({-ring}, {ring}), "
-        f"dx -> transform(sequence({-ring}, {ring}), "
-        f"dy -> named_struct('dx', dx, 'dy', dy)))))"
-    )
-
-
-def _with_cell_key(df: DataFrame, cell: float, x: str, y: str, out: str) -> DataFrame:
-    return df.withColumn(
-        out,
-        F.floor(F.col(x) / F.lit(cell)).cast("long") * F.lit(GRID_DIM)
-        + F.floor(F.col(y) / F.lit(cell)).cast("long"),
-    )
 
 
 def _union_and_release(outs: list, persisted: list) -> DataFrame:
@@ -105,16 +92,18 @@ def _union_and_release(outs: list, persisted: list) -> DataFrame:
 
 
 def _extent(df: DataFrame, cols: Sequence[str]):
-    """One job: the per-column minima, maxima and the row count."""
-    return df.agg(
-        *[F.min(c) for c in cols], *[F.max(c) for c in cols], F.count(F.lit(1))
+    """One job: the per-column minima, maxima, the row count and the
+    highest partition id."""
+    return df.select(*cols, F.spark_partition_id().alias("_part")).agg(
+        *[F.min(c) for c in cols], *[F.max(c) for c in cols], F.count(F.lit(1)), F.max("_part")
     ).first()
 
 
-def _ring_plan(pmin, pmax, qmin, qmax, n_points: int, k: int, cell: float):
-    """(first ring, forced last ring, point density) of a bucketed kNN in
-    d = len(pmin) dimensions, from the per-dimension point and query
-    extents (None reads 0)."""
+def _ring_plan(pmin, pmax, qmin, qmax, n_points: int, k: int, cell: float, dist_thres: float):
+    """(first ring, forced last ring, mean point density) of a bucketed
+    kNN in d = len(pmin) dimensions, from the per-dimension point and
+    query extents (None reads 0). The forced last ring covers every
+    point, or the threshold disk when that is smaller."""
     pmin, pmax, qmin, qmax = ([float(v or 0.0) for v in vs] for vs in (pmin, pmax, qmin, qmax))
     d = len(pmin)
     span = max(b - a for a, b in zip(pmin, pmax))
@@ -125,6 +114,10 @@ def _ring_plan(pmin, pmax, qmin, qmax, n_points: int, k: int, cell: float):
         max(b, qb) - min(a, qa) for a, b, qa, qb in zip(pmin, pmax, qmin, qmax)
     )
     max_ring = max(1, int(math.ceil(comb_span / cell)) + 1)
+    if np.isfinite(dist_thres):
+        # any point outside ring R is > R·cell away: past this ring every
+        # point is beyond the threshold
+        max_ring = min(max_ring, max(1, int(math.ceil(dist_thres / cell))))
     # density-informed initial ring: radius of the d-ball expected to hold
     # k points (V_d = π^{d/2} / Γ(d/2 + 1)) — self-corrects a badly
     # undersized cell choice (e.g. sparse data) without paying many
@@ -139,12 +132,12 @@ def _ring_plan(pmin, pmax, qmin, qmax, n_points: int, k: int, cell: float):
     return min(ring, max_ring), max_ring, density
 
 
-def _final_round(ring: int, max_ring: int, cell: float, dist_thres: float, xjoin_ring: int) -> bool:
-    """The round that resolves every remaining query: its ring covers
-    all points, or the threshold disk, or is past the explode cutoff
-    (then a cross-join makes all points candidates — exact for any
-    ring, and a huge explode is far worse)."""
-    return ring >= max_ring or ring * cell >= dist_thres or ring > xjoin_ring
+def _final_round(ring: int, max_ring: int, xjoin_ring: int) -> bool:
+    """The round that resolves every remaining query: its ring is the
+    forced last ring, or past the explode cutoff (then a cross-join
+    makes all points candidates — exact for any ring, and a huge explode
+    is far worse)."""
+    return ring >= max_ring or ring > xjoin_ring
 
 
 def _resolved(cnt, kth_d2, k: int, ring: int, cell: float):
@@ -165,38 +158,197 @@ def _top_k(cand: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _point_candidates(
-    base: DataFrame, t: DataFrame, ring: int, cell: float, cross: bool,
-    exclude_self: bool, dist_thres: float, broadcast_queries: bool,
+def _top_k_pandas(cand: pd.DataFrame, k: int) -> pd.DataFrame:
+    """:func:`_top_k` on the driver: rank ≤ k per query by (d2, nbr_id)."""
+    cand = cand.sort_values(["query_id", "d2", "nbr_id"], kind="stable", ignore_index=True)
+    cand["rank"] = cand.groupby("query_id", sort=False).cumcount().astype(np.int32) + 1
+    return cand[cand["rank"] <= k]
+
+
+def _collect_top_k(cand: DataFrame, k: int, per_part: int) -> pd.DataFrame | None:
+    """One driver-resolved round: collect the candidate rows, at most
+    ``per_part`` + 1 from each partition, and rank them on the driver.
+    None when a partition holds more than ``per_part``."""
+    # row number within the partition: the low 33 bits of the id
+    row = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
+    got = cand.select("query_id", "nbr_id", "d2", row.alias("_row")).filter(
+        F.col("_row") <= per_part
+    ).toPandas()
+    if (got["_row"] == per_part).any():
+        return None
+    return _top_k_pandas(got.drop(columns="_row"), k)
+
+
+def _xy_key(cell: float):
+    """Cell key of 2-D points, x index · GRID_DIM + y index (as
+    kernels.cells.linear_cell), over columns ``{prefix}0``/``{prefix}1``;
+    ``offsets`` adds the ring offsets ``_o0``/``_o1``."""
+
+    def key(prefix: str, offsets: bool = False) -> F.Column:
+        ix, iy = (F.floor(F.col(f"{prefix}{j}") / F.lit(cell)).cast("long") for j in range(2))
+        if offsets:
+            ix, iy = ix + F.col("_o0"), iy + F.col("_o1")
+        return ix * F.lit(GRID_DIM) + iy
+
+    return key
+
+
+def _shuffle_join(qe: DataFrame, t: DataFrame) -> DataFrame:
+    """Candidate join of the distributed loop: both sides shuffle on the
+    cell key; the hint keeps the optimizer from broadcasting the points."""
+    return qe.join(t.hint("shuffle_hash"), "cell_key")
+
+
+def _broadcast_join(qe: DataFrame, t: DataFrame) -> DataFrame:
+    """Candidate join of a driver-resolved round: the exploded query
+    batch is broadcast to the points, which do not move."""
+    return t.join(F.broadcast(qe), "cell_key")
+
+
+def _candidates(
+    base: DataFrame, ring: int, cross: bool, join, *,
+    t: DataFrame, d: int, key, exclude_self: bool, dist_thres: float,
 ) -> DataFrame:
-    """(query, point) candidate rows with d2 of one escalation round:
-    each query explodes to its ring of cells and equi-joins the
-    cell-keyed points on ``cell_key`` — the query side broadcast on the
-    driver-resolved path, else a shuffle_hash hint so the optimizer
-    never broadcasts the point table. ``cross`` makes every point a
-    candidate instead."""
+    """(query, point) candidate rows with d2 of one escalation round over
+    query columns q0..q{d-1} and point columns t0..t{d-1}: each query
+    explodes to the (2r+1)^d cells of its ring (one explode per
+    dimension, pure Catalyst) and ``join(exploded, t)`` equi-joins them
+    with the cell-keyed points on ``cell_key``. ``cross`` makes every
+    point a candidate instead."""
     if cross:
         cand = base.crossJoin(t.drop("cell_key"))  # exact last resort
     else:
-        qe = base.select("*", _ring_offsets_expr(ring).alias("o")).withColumn(
-            "cell_key",
-            (F.floor(F.col("qx") / F.lit(cell)).cast("long") + F.col("o.dx")) * F.lit(GRID_DIM)
-            + (F.floor(F.col("qy") / F.lit(cell)).cast("long") + F.col("o.dy")),
-        )
-        if broadcast_queries:
-            cand = t.join(F.broadcast(qe), "cell_key")
-        else:
-            cand = qe.join(t.hint("shuffle_hash"), "cell_key")
+        qe = base
+        for j in range(d):
+            qe = qe.withColumn(f"_o{j}", F.explode(F.expr(f"sequence({-ring}, {ring})")))
+        qe = qe.withColumn("cell_key", key("q", offsets=True)).drop(*[f"_o{j}" for j in range(d)])
+        cand = join(qe, t)
     if exclude_self:
         cand = cand.filter(F.col("query_id") != F.col("nbr_id"))
-    cand = cand.withColumn(
-        "d2",
-        (F.col("qx") - F.col("tx")) * (F.col("qx") - F.col("tx"))
-        + (F.col("qy") - F.col("ty")) * (F.col("qy") - F.col("ty")),
-    )
+    d2 = F.lit(0.0)
+    for j in range(d):
+        diff = F.col(f"q{j}") - F.col(f"t{j}")
+        d2 = d2 + diff * diff
+    cand = cand.withColumn("d2", d2)
     if np.isfinite(dist_thres):
         cand = cand.filter(F.col("d2") < F.lit(dist_thres * dist_thres))
     return cand
+
+
+def _knn_bucketed(
+    q0: DataFrame, t: DataFrame, d: int, key, k: int, cell: float, dist_thres: float,
+    exclude_self: bool, xjoin_ring: int, driver_rounds: bool,
+) -> DataFrame:
+    """Ring escalation shared by the bucketed kNN operators, over query
+    rows (query_id, q0..) and point rows (nbr_id, t0..); see
+    :func:`knn_points_bucketed`. ``driver_rounds`` lets a broadcastable
+    query side resolve its rounds on the driver."""
+    from rsgislib_spark.qcommon import broadcast_limit, broadcastable
+
+    spark = q0.sparkSession
+    schema = StructType([
+        q0.schema["query_id"], t.schema["nbr_id"],
+        StructField("d2", DoubleType()), StructField("rank", IntegerType()),
+    ])
+    t = t.withColumn("cell_key", key("t"))
+    candidates = partial(
+        _candidates, t=t, d=d, key=key, exclude_self=exclude_self, dist_thres=dist_thres
+    )
+    rem = q0.toPandas() if driver_rounds and broadcastable(q0) else None
+    if rem is not None and rem.empty:
+        return spark.createDataFrame([], schema)
+    pstats = _extent(t, [f"t{j}" for j in range(d)])
+    n_points = int(pstats[2 * d])
+    if rem is None:
+        qstats = _extent(q0, [f"q{j}" for j in range(d)])
+        qmin, qmax = qstats[:d], qstats[d : 2 * d]
+    else:
+        qcols = [f"q{j}" for j in range(d)]
+        qmin, qmax = rem[qcols].min(), rem[qcols].max()
+    ring, max_ring, density = _ring_plan(
+        pstats[:d], pstats[d : 2 * d], qmin, qmax, n_points, k, cell, dist_thres
+    )
+    # the candidate scan runs on the point table's partitions (a local
+    # relation, already on the driver, reads as one: the optimizer
+    # evaluates its partition ids there)
+    per_part = MAX_DRIVER_CANDIDATES // ((pstats[2 * d + 1] or 0) + 1)
+    outs = []
+    while rem is not None:
+        ring = min(ring, max_ring)
+        final = _final_round(ring, max_ring, xjoin_ring)
+        cross = final and ring > xjoin_ring
+        cells = 1 if cross else (2 * ring + 1) ** d
+        # the exploded batch (an UnsafeRow of query_id, the d coordinates
+        # and cell_key: a null word and one 8-byte slot per field) must
+        # itself be broadcastable, and the mean density must not expect
+        # more candidates than the driver collects
+        expect = n_points if cross else min(n_points, density * ((2 * ring + 1) * cell) ** d)
+        if (
+            len(rem) * cells * 8 * (d + 3) > broadcast_limit(spark)
+            or len(rem) * expect > MAX_DRIVER_CANDIDATES
+        ):
+            break
+        top = _collect_top_k(
+            candidates(spark.createDataFrame(rem, q0.schema), ring, cross, _broadcast_join),
+            k, per_part,
+        )
+        if top is None:  # hot-spot cells: more candidates than the driver collects
+            break
+        if final:
+            rem = rem.iloc[:0]
+        else:
+            got = top.groupby("query_id", sort=False)["d2"].agg(["size", "max"])
+            done = got.index[_resolved(got["size"].to_numpy(), got["max"].to_numpy(), k, ring, cell)]
+            top = top[top["query_id"].isin(done)]
+            rem = rem[~rem["query_id"].isin(done)]
+        outs.append(top)
+        if rem.empty:
+            return spark.createDataFrame(pd.concat(outs, ignore_index=True), schema)
+        ring *= 4
+    # the distributed loop takes the rest from this ring on
+    remaining = spark.createDataFrame(rem, q0.schema) if outs else q0
+    res = _escalate(
+        remaining, partial(candidates, join=_shuffle_join), k, ring, max_ring, cell, xjoin_ring
+    )
+    if outs:
+        res = res.unionByName(spark.createDataFrame(pd.concat(outs, ignore_index=True), schema))
+    return res
+
+
+def _escalate(
+    remaining: DataFrame, candidates, k: int, ring: int, max_ring: int,
+    cell: float, xjoin_ring: int,
+) -> DataFrame:
+    """Distributed ring escalation: each round ranks the candidates of
+    only the remaining queries (``candidates(base, ring, cross)`` → rows
+    with query_id, nbr_id, d2), keeps the resolved ones, anti-joins them
+    away and stops when nothing remains — so the common case is one
+    round plus a cheap empty check."""
+    outs = []
+    persisted = []
+    while True:
+        ring = min(ring, max_ring)
+        final = _final_round(ring, max_ring, xjoin_ring)
+        ranked = _top_k(candidates(remaining, ring, final and ring > xjoin_ring), k)
+        if final:
+            outs.append(ranked)
+            break
+        ranked = ranked.persist()
+        persisted.append(ranked)
+        resolved = (
+            ranked.groupBy("query_id")
+            .agg(F.count("*").alias("cnt"), F.max("d2").alias("maxd2"))
+            .filter(_resolved(F.col("cnt"), F.col("maxd2"), k, ring, cell))
+            .select("query_id")
+        )
+        outs.append(ranked.join(resolved, "query_id"))
+        remaining = remaining.join(resolved, "query_id", "left_anti").persist()
+        persisted.append(remaining)
+        if remaining.isEmpty():
+            break
+        ring *= 4
+
+    return _union_and_release(outs, persisted)
 
 
 def knn_points_bucketed(
@@ -231,15 +383,19 @@ def knn_points_bucketed(
 
     - *broadcastable* (Catalyst's size estimate of the projected queries
       within ``spark.sql.autoBroadcastJoinThreshold``; −1 disables): the
-      batch is collected once, the point extent and count take one job,
-      and each round is one job — the remaining queries, ring-exploded
-      and broadcast, join the points on ``cell_key`` and the candidate
-      rows come back to the driver, which ranks them and applies the
-      selection rule. No persist, anti-join or emptiness check; the
-      result is returned as a local DataFrame.
-    - *large* (self-kNN, whole-table joins): the distributed loop. Each
-      round ranks with a window, persists, anti-joins the resolved
-      queries away and checks the rest for emptiness.
+      batch is collected once and the point extent and count take one
+      job. Each round is then one job: the remaining queries, exploded
+      to their (2r+1)² cells and broadcast, join the points on
+      ``cell_key``; the candidate rows come back to the driver, which
+      ranks them and applies the selection rule. No persist, anti-join
+      or emptiness check. A round runs this way only while the exploded
+      batch is itself within the broadcast threshold and its candidates
+      within ``MAX_DRIVER_CANDIDATES`` — expected from the mean density,
+      and checked per partition as they are collected.
+    - otherwise, from the round that fails those bounds on, the
+      distributed loop: each round ranks with a window, persists,
+      anti-joins the resolved queries away and checks the rest for
+      emptiness. A query side over the threshold takes it from the start.
 
     Neighbours at ``dist >= dist_thres`` are excluded (strict ``<``,
     matching knn_apply / the reference's dist_thres test). Queries with
@@ -249,126 +405,19 @@ def knn_points_bucketed(
     (d2, nbr_id) — deterministic across engines when coordinates live
     on an integer lattice (d2 is then integer-valued).
     """
-    from rsgislib_spark.qcommon import broadcastable
-
     q0 = queries.select(
         F.col(id_col).alias("query_id"),
-        F.col(x_col).cast("double").alias("qx"),
-        F.col(y_col).cast("double").alias("qy"),
+        F.col(x_col).cast("double").alias("q0"),
+        F.col(y_col).cast("double").alias("q1"),
     )
     t = points.select(
         F.col(id_col).alias("nbr_id"),
-        F.col(x_col).cast("double").alias("tx"),
-        F.col(y_col).cast("double").alias("ty"),
+        F.col(x_col).cast("double").alias("t0"),
+        F.col(y_col).cast("double").alias("t1"),
     )
-    t = _with_cell_key(t, cell, "tx", "ty", "cell_key")
-    run = _knn_driver_rounds if broadcastable(q0) else _knn_distributed
-    return run(q0, t, k, cell, dist_thres, exclude_self)
-
-
-def _knn_driver_rounds(
-    q0: DataFrame, t: DataFrame, k: int, cell: float, dist_thres: float, exclude_self: bool
-) -> DataFrame:
-    """Broadcast query batch, rounds resolved on the driver (see
-    :func:`knn_points_bucketed`)."""
-    spark = q0.sparkSession
-    schema = StructType([
-        q0.schema["query_id"], t.schema["nbr_id"],
-        StructField("d2", DoubleType()), StructField("rank", IntegerType()),
-    ])
-    rem = q0.toPandas()
-    if rem.empty:
-        return spark.createDataFrame([], schema)
-    pstats = _extent(t, ["tx", "ty"])
-    n_points = int(pstats[4])
-    ring, max_ring, density = _ring_plan(
-        pstats[:2], pstats[2:4], rem[["qx", "qy"]].min(), rem[["qx", "qy"]].max(), n_points, k, cell
+    return _knn_bucketed(
+        q0, t, 2, _xy_key(cell), k, cell, dist_thres, exclude_self, XJOIN_RING, driver_rounds=True
     )
-    outs = []
-    while True:
-        ring = min(ring, max_ring)
-        final = _final_round(ring, max_ring, cell, dist_thres, XJOIN_RING)
-        cross = final and ring > XJOIN_RING
-        cand = _point_candidates(
-            spark.createDataFrame(rem, q0.schema), t, ring, cell, cross,
-            exclude_self, dist_thres, broadcast_queries=True,
-        )
-        per_query = n_points if cross else min(n_points, density * ((2 * ring + 1) * cell) ** 2)
-        if len(rem) * per_query > MAX_DRIVER_CANDIDATES:
-            cand = _top_k(cand, k)  # collect k rows per query, not the candidates
-        top = _top_k_pandas(cand.select("query_id", "nbr_id", "d2").toPandas(), k)
-        if final:
-            outs.append(top)
-            break
-        got = top.groupby("query_id", sort=False)["d2"].agg(["size", "max"])
-        done = got.index[_resolved(got["size"].to_numpy(), got["max"].to_numpy(), k, ring, cell)]
-        outs.append(top[top["query_id"].isin(done)])
-        rem = rem[~rem["query_id"].isin(done)]
-        if rem.empty:
-            break
-        ring *= 4
-    return spark.createDataFrame(pd.concat(outs, ignore_index=True), schema)
-
-
-def _top_k_pandas(cand: pd.DataFrame, k: int) -> pd.DataFrame:
-    """:func:`_top_k` on the driver: rank ≤ k per query by (d2, nbr_id)."""
-    cand = cand.sort_values(["query_id", "d2", "nbr_id"], kind="stable", ignore_index=True)
-    cand["rank"] = cand.groupby("query_id", sort=False).cumcount().astype(np.int32) + 1
-    return cand[cand["rank"] <= k]
-
-
-def _knn_distributed(
-    q0: DataFrame, t: DataFrame, k: int, cell: float, dist_thres: float, exclude_self: bool
-) -> DataFrame:
-    """The scale loop for large query sides (see :func:`knn_points_bucketed`)."""
-    pstats = _extent(t, ["tx", "ty"])
-    qstats = _extent(q0, ["qx", "qy"])
-    ring, max_ring, _ = _ring_plan(
-        pstats[:2], pstats[2:4], qstats[:2], qstats[2:4], int(pstats[4]), k, cell
-    )
-
-    def candidates(base: DataFrame, ring: int, cross: bool) -> DataFrame:
-        return _point_candidates(
-            base, t, ring, cell, cross, exclude_self, dist_thres, broadcast_queries=False
-        )
-
-    return _escalate(q0, candidates, k, ring, max_ring, cell, dist_thres, XJOIN_RING)
-
-
-def _escalate(
-    remaining: DataFrame, candidates, k: int, ring: int, max_ring: int,
-    cell: float, dist_thres: float, xjoin_ring: int,
-) -> DataFrame:
-    """Distributed ring escalation: each round ranks the candidates of
-    only the remaining queries (``candidates(base, ring, cross)`` → rows
-    with query_id, nbr_id, d2), keeps the resolved ones, anti-joins them
-    away and stops when nothing remains — so the common case is one
-    round plus a cheap empty check."""
-    outs = []
-    persisted = []
-    while True:
-        ring = min(ring, max_ring)
-        final = _final_round(ring, max_ring, cell, dist_thres, xjoin_ring)
-        ranked = _top_k(candidates(remaining, ring, final and ring > xjoin_ring), k)
-        if final:
-            outs.append(ranked)
-            break
-        ranked = ranked.persist()
-        persisted.append(ranked)
-        resolved = (
-            ranked.groupBy("query_id")
-            .agg(F.count("*").alias("cnt"), F.max("d2").alias("maxd2"))
-            .filter(_resolved(F.col("cnt"), F.col("maxd2"), k, ring, cell))
-            .select("query_id")
-        )
-        outs.append(ranked.join(resolved, "query_id"))
-        remaining = remaining.join(resolved, "query_id", "left_anti").persist()
-        persisted.append(remaining)
-        if remaining.isEmpty():
-            break
-        ring *= 4
-
-    return _union_and_release(outs, persisted)
 
 
 def knn_features_bucketed(
@@ -387,13 +436,13 @@ def knn_features_bucketed(
     linearly scans all training rows; knn_apply broadcasts them; this
     restricts the scan to the Chebyshev cell neighbourhood).
 
-    Same two-phase + ring-escalation design as
-    :func:`knn_points_bucketed`, generalised to d dims: candidates =
-    the (2r+1)^d ring (one chained explode per dimension, pure
-    Catalyst), exact refine + row_number ≤ k, resolution guarantee
-    d_k ≤ r·cell (any point outside the Chebyshev ring R is at L∞ —
-    hence L2 — distance > R·cell, in every dimension count). Returns
-    (query_id, nbr_id, d2, rank).
+    Same candidates, ring escalation and selection rule as
+    :func:`knn_points_bucketed`, in d dims and on the distributed loop
+    only: candidates = the (2r+1)^d ring (one chained explode per
+    dimension, pure Catalyst), exact refine + row_number ≤ k,
+    resolution guarantee d_k ≤ r·cell (any point outside the Chebyshev
+    ring R is at L∞ — hence L2 — distance > R·cell, in every dimension
+    count). Returns (query_id, nbr_id, d2, rank).
 
     Cell key: d ≤ 3 packs the per-dim indices into ONE long (radix
     GRID_DIM — cheapest shuffle key; indices must fit 21 bits); d ≥ 4
@@ -416,10 +465,10 @@ def knn_features_bucketed(
         *[F.col(c).cast("double").alias(f"t{j}") for j, c in enumerate(feat_cols)],
     )
 
-    def key_from(prefix: str, df: DataFrame, offsets=None) -> F.Column:
+    def key(prefix: str, offsets: bool = False) -> F.Column:
         def digit(j):
             idx = F.floor(F.col(f"{prefix}{j}") / F.lit(cell)).cast("long")
-            if offsets is not None:
+            if offsets:
                 idx = idx + F.col(f"_o{j}")
             return idx
 
@@ -435,45 +484,15 @@ def knn_features_bucketed(
         # d ≥ 4: struct key — no packing budget, joins on struct equality
         return F.struct(*[digit(j).alias(f"k{j}") for j in range(d)])
 
-    t = t.withColumn("cell_key", key_from("t", t))
-
-    pstats = _extent(t, [f"t{j}" for j in range(d)])
-    qstats = _extent(q0, [f"q{j}" for j in range(d)])
-    ring, max_ring, _ = _ring_plan(
-        pstats[:d], pstats[d : 2 * d], qstats[:d], qstats[d : 2 * d], int(pstats[2 * d]), k, cell
-    )
-    thres2 = dist_thres * dist_thres
     if d <= 3:
         xjoin_ring = {1: 2048, 2: 64, 3: 16}[d]
     else:
         # largest ring whose (2r+1)^d explode stays under ~20k candidate
         # cells per query; past it the exact cross-join finalizer wins
         xjoin_ring = max(1, int((20_000 ** (1.0 / d) - 1) // 2))
-
-    def candidates(base: DataFrame, ring: int, cross: bool) -> DataFrame:
-        if cross:
-            cand = base.crossJoin(t.drop("cell_key"))
-        else:
-            qe = base
-            for j in range(d):
-                qe = qe.withColumn(
-                    f"_o{j}",
-                    F.explode(F.expr(f"sequence({-ring}, {ring})")),
-                )
-            qe = qe.withColumn("cell_key", key_from("q", qe, offsets=True))
-            cand = qe.join(t.hint("shuffle_hash"), "cell_key")
-        if exclude_self:
-            cand = cand.filter(F.col("query_id") != F.col("nbr_id"))
-        d2 = F.lit(0.0)
-        for j in range(d):
-            diff = F.col(f"q{j}") - F.col(f"t{j}")
-            d2 = d2 + diff * diff
-        cand = cand.withColumn("d2", d2)
-        if np.isfinite(dist_thres):
-            cand = cand.filter(F.col("d2") < F.lit(thres2))
-        return cand
-
-    return _escalate(q0, candidates, k, ring, max_ring, cell, dist_thres, xjoin_ring)
+    return _knn_bucketed(
+        q0, t, d, key, k, cell, dist_thres, exclude_self, xjoin_ring, driver_rounds=False
+    )
 
 
 def radius_count_bucketed(
@@ -495,30 +514,22 @@ def radius_count_bucketed(
     cell = float(cell if cell is not None else radius)
     if cell < radius:
         raise ValueError("cell must be >= radius for ring-1 coverage")
+    key = _xy_key(cell)
     t = points.select(
         F.col(id_col).alias("nbr_id"),
-        F.col(x_col).cast("double").alias("tx"),
-        F.col(y_col).cast("double").alias("ty"),
+        F.col(x_col).cast("double").alias("t0"),
+        F.col(y_col).cast("double").alias("t1"),
     )
-    t = _with_cell_key(t, cell, "tx", "ty", "cell_key")
     q = points.select(
         F.col(id_col).alias("query_id"),
-        F.col(x_col).cast("double").alias("qx"),
-        F.col(y_col).cast("double").alias("qy"),
-    ).withColumn("_qix", F.floor(F.col("qx") / F.lit(cell)).cast("long")).withColumn(
-        "_qiy", F.floor(F.col("qy") / F.lit(cell)).cast("long")
-    )
-    qe = q.select("*", _ring_offsets_expr(1).alias("o")).withColumn(
-        "cell_key",
-        (F.col("_qix") + F.col("o.dx")) * F.lit(GRID_DIM)
-        + (F.col("_qiy") + F.col("o.dy")),
+        F.col(x_col).cast("double").alias("q0"),
+        F.col(y_col).cast("double").alias("q1"),
     )
     r2 = float(radius) * float(radius)
-    cand = qe.join(t.hint("shuffle_hash"), "cell_key").filter(
-        (F.col("qx") - F.col("tx")) * (F.col("qx") - F.col("tx"))
-        + (F.col("qy") - F.col("ty")) * (F.col("qy") - F.col("ty"))
-        <= F.lit(r2)
-    )
+    cand = _candidates(
+        q, 1, False, _shuffle_join, t=t.withColumn("cell_key", key("t")), d=2, key=key,
+        exclude_self=False, dist_thres=np.inf,
+    ).filter(F.col("d2") <= F.lit(r2))
     return cand.groupBy(F.col("query_id").alias(id_col)).agg(
         (F.count("*") - F.lit(1)).alias("n_in_radius")
     )

@@ -45,11 +45,17 @@ def plan_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
+def broadcast_limit(spark: SparkSession) -> int:
+    """Spark's own ``spark.sql.autoBroadcastJoinThreshold`` in bytes (−1
+    disables broadcasts)."""
+    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+
 def broadcastable(df: DataFrame) -> bool:
-    """Whether Catalyst's size estimate of ``df`` is within Spark's own
-    ``spark.sql.autoBroadcastJoinThreshold`` (−1 disables broadcasts) —
-    the test the planner applies to a join side."""
-    limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    """Whether Catalyst's size estimate of ``df`` is within
+    :func:`broadcast_limit` — the test the planner applies to a join
+    side."""
+    limit = broadcast_limit(df.sparkSession)
     size = plan_size_bytes(df)
     return limit >= 0 and size is not None and size <= limit
 

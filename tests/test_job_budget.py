@@ -35,8 +35,8 @@ def test_knn_one_round_job_budget(spark, points_pdf, monkeypatch):
     pts = spark.createDataFrame(points_pdf)
     qs = spark.createDataFrame(points_pdf.iloc[:16])
     rounds = []
-    real = knn._point_candidates
-    monkeypatch.setattr(knn, "_point_candidates", lambda *a, **kw: rounds.append(1) or real(*a, **kw))
+    real = knn._candidates
+    monkeypatch.setattr(knn, "_candidates", lambda *a, **kw: rounds.append(1) or real(*a, **kw))
     n = _jobs(spark, "budget-knn", lambda: knn.knn_points_bucketed(qs, pts, k=4, cell=50000.0).toPandas())
     assert len(rounds) == 1
     assert n <= KNN_ONE_ROUND_JOBS, n

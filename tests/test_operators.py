@@ -278,37 +278,51 @@ class TestPointExtract:
 
 # ------------------------------------------------------------------- knn
 @contextlib.contextmanager
-def knn_path(spark, path):
-    """Run knn_points_bucketed on one physical path and check every call
-    took it: "broadcast" (driver-resolved rounds over a broadcast query
-    batch, the default for small batches) or "distributed" (the scale
-    loop, forced by spark.sql.autoBroadcastJoinThreshold=-1)."""
+def knn_rounds():
+    """Record the kNN rounds that run, in order: "_collect_top_k" for a
+    driver-resolved round, "_escalate" for the distributed loop."""
     from rsgislib_spark.operators import knn
 
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    threshold = spark.conf.get(key)
-    real = {name: getattr(knn, name) for name in ("_knn_driver_rounds", "_knn_distributed")}
+    real = {name: getattr(knn, name) for name in ("_collect_top_k", "_escalate")}
     taken = []
 
     def spy(name):
-        def run(*args):
+        def run(*args, **kwargs):
             taken.append(name)
-            return real[name](*args)
+            return real[name](*args, **kwargs)
 
         return run
 
     for name in real:
         setattr(knn, name, spy(name))
-    if path == "distributed":
-        spark.conf.set(key, "-1")
     try:
-        yield
+        yield taken
     finally:
-        spark.conf.set(key, threshold)
         for name, fn in real.items():
             setattr(knn, name, fn)
-    want = "_knn_driver_rounds" if path == "broadcast" else "_knn_distributed"
-    assert taken and set(taken) == {want}, taken
+
+
+@contextlib.contextmanager
+def knn_path(spark, path, rounds=True):
+    """Run knn_points_bucketed on one physical path and check every call
+    took it: "broadcast" (driver-resolved rounds over a broadcast query
+    batch, the default for small batches) or "distributed" (the scale
+    loop, forced by spark.sql.autoBroadcastJoinThreshold=-1). With
+    ``rounds=False`` no round may run at all."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    threshold = spark.conf.get(key)
+    with knn_rounds() as taken:
+        if path == "distributed":
+            spark.conf.set(key, "-1")
+        try:
+            yield
+        finally:
+            spark.conf.set(key, threshold)
+    want = "_collect_top_k" if path == "broadcast" else "_escalate"
+    assert set(taken) <= {want} and bool(taken) == rounds, (path, taken)
+
+
+KNN_PATHS = ("broadcast", "distributed")
 
 
 class TestKNN:
@@ -415,77 +429,99 @@ class TestKNN:
         for pid in points_pdf["pt_id"]:
             assert buck[pid] == brute[pid]
 
+    def _assert_knn_brute(self, got, qpdf, ppdf, k, label=None):
+        xs = ppdf["x"].to_numpy(float)
+        ys = ppdf["y"].to_numpy(float)
+        ids = ppdf["pt_id"].to_numpy()
+        for qrow in qpdf.itertuples(index=False):
+            d2 = (xs - qrow.x) ** 2 + (ys - qrow.y) ** 2
+            order = np.lexsort((ids, d2))
+            order = order[ids[order] != qrow.pt_id][:k]
+            sub = got[got.query_id == qrow.pt_id].sort_values("rank")
+            assert list(sub["nbr_id"]) == list(ids[order]), (label, qrow.pt_id)
+            assert np.allclose(sub["d2"].to_numpy(), d2[order]), (label, qrow.pt_id)
+
     @pytest.mark.parametrize("cell", [2000.0, 50000.0])
     def test_knn_bucketed_equals_brute(self, spark, points_pdf, cell):
-        with knn_path(spark, "broadcast"):
-            self._check_knn_equals_brute(spark, points_pdf, cell)
-
-    @pytest.mark.parametrize("cell", [2000.0, 50000.0])
-    def test_knn_bucketed_equals_brute_distributed(self, spark, points_pdf, cell):
-        with knn_path(spark, "distributed"):
-            self._check_knn_equals_brute(spark, points_pdf, cell)
-
-    def test_knn_bucketed_driver_fence_ranks_in_spark(self, spark, points_pdf, monkeypatch):
-        """A round expected to return more candidate rows than the driver
-        fence ranks them in Spark and collects only the top-k rows."""
-        from rsgislib_spark.operators import knn
-
-        ranked = []
-        real = knn._top_k
-        monkeypatch.setattr(knn, "MAX_DRIVER_CANDIDATES", 0)
-        monkeypatch.setattr(knn, "_top_k", lambda *a: ranked.append(1) or real(*a))
-        with knn_path(spark, "broadcast"):
-            self._check_knn_equals_brute(spark, points_pdf, 50000.0)
-        assert ranked
-
-    def _check_knn_equals_brute(self, spark, points_pdf, cell):
         """Small cell starts past the explode cutoff (cross-join
         finalizer); large cell resolves by the ring rule — both must
-        equal brute force exactly."""
+        equal brute force exactly, on both physical paths."""
         from rsgislib_spark.operators.knn import knn_points_bucketed
 
         k = 4
         pts = spark.createDataFrame(points_pdf)
         qs = spark.createDataFrame(points_pdf.iloc[:40])
-        got = (
-            knn_points_bucketed(qs, pts, k=k, cell=cell)
-            .toPandas()
-            .sort_values(["query_id", "rank"])
-        )
-        xs = points_pdf["x"].to_numpy(float)
-        ys = points_pdf["y"].to_numpy(float)
-        ids = points_pdf["pt_id"].to_numpy()
-        for qrow in points_pdf.iloc[:40].itertuples(index=False):
-            d2 = (xs - qrow.x) ** 2 + (ys - qrow.y) ** 2
-            order = np.lexsort((ids, d2))
-            order = order[ids[order] != qrow.pt_id][:k]
-            sub = got[got.query_id == qrow.pt_id]
-            assert list(sub["nbr_id"]) == list(ids[order])
-            assert np.allclose(sub["d2"].to_numpy(), d2[order])
+        for path in KNN_PATHS:
+            with knn_path(spark, path):
+                got = knn_points_bucketed(qs, pts, k=k, cell=cell).toPandas()
+            self._assert_knn_brute(got, points_pdf.iloc[:40], points_pdf, k, label=path)
+
+    def test_knn_bucketed_large_explode_hands_over(self, spark, points_pdf):
+        """Once the ring-exploded remaining batch outgrows the broadcast
+        threshold, the distributed loop takes the remaining queries from
+        that ring on; the union equals brute force."""
+        from rsgislib_spark.operators import knn
+
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        threshold = spark.conf.get(key)
+        k = 6
+        qpdf = points_pdf.iloc[:120]
+        # cell 20000: round 1 (ring 7, 120 queries, ~1.1 MB exploded)
+        # leaves 16 queries whose ring-28 round (~2.1 MB) is over 1.5 MB
+        spark.conf.set(key, "1500000")
+        try:
+            with knn_rounds() as taken:
+                got = knn.knn_points_bucketed(
+                    spark.createDataFrame(qpdf), spark.createDataFrame(points_pdf), k=k, cell=20000.0
+                ).toPandas()
+        finally:
+            spark.conf.set(key, threshold)
+        assert taken == ["_collect_top_k", "_escalate"], taken
+        self._assert_knn_brute(got, qpdf, points_pdf, k)
+
+    def test_knn_bucketed_driver_fence_skewed_points(self, spark, monkeypatch):
+        """The driver fence holds on hot-spot points: a round whose
+        partitions return more candidate rows than their share of
+        MAX_DRIVER_CANDIDATES hands the batch to the distributed loop,
+        although the mean point density expects far fewer rows."""
+        from rsgislib_spark.operators import knn
+
+        rng = np.random.default_rng(7)
+        blob = np.floor(rng.normal(0.0, 300.0, (360, 2)))
+        spread = np.floor(rng.uniform(-5e5, 5e5, (40, 2)))
+        xy = np.vstack([blob, spread])
+        ppdf = pd.DataFrame({"pt_id": np.arange(len(xy)), "x": xy[:, 0], "y": xy[:, 1]})
+        qpdf = ppdf.iloc[::20]  # 18 blob queries, 2 spread ones
+        pts = spark.createDataFrame(ppdf).repartition(4)
+        qs = spark.createDataFrame(qpdf)
+        k = 5
+        # the first round runs (the estimate lets it) and returns ~6500
+        # candidate rows: over a 1000-row fence, within the default one
+        for fence, handed_over in ((knn.MAX_DRIVER_CANDIDATES, False), (1000, True)):
+            monkeypatch.setattr(knn, "MAX_DRIVER_CANDIDATES", fence)
+            with knn_rounds() as taken:
+                got = knn.knn_points_bucketed(qs, pts, k=k, cell=4096.0).toPandas()
+            assert taken[0] == "_collect_top_k", (fence, taken)
+            assert ("_escalate" in taken) == handed_over, (fence, taken)
+            self._assert_knn_brute(got, qpdf, ppdf, k, label=fence)
 
     def test_knn_bucketed_dist_thres_strict(self, spark, points_pdf):
-        with knn_path(spark, "broadcast"):
-            self._check_knn_dist_thres_strict(spark, points_pdf)
-
-    def test_knn_bucketed_dist_thres_strict_distributed(self, spark, points_pdf):
-        with knn_path(spark, "distributed"):
-            self._check_knn_dist_thres_strict(spark, points_pdf)
-
-    def _check_knn_dist_thres_strict(self, spark, points_pdf):
         from rsgislib_spark.operators.knn import knn_points_bucketed
 
         pts = spark.createDataFrame(points_pdf)
-        got = knn_points_bucketed(pts, pts, k=5, cell=4096.0, dist_thres=20000.0).toPandas()
-        assert (got["d2"] < 20000.0 ** 2).all()
-        # brute-force the expected per-query count under the threshold
         xs = points_pdf["x"].to_numpy(float)
         ys = points_pdf["y"].to_numpy(float)
         ids = points_pdf["pt_id"].to_numpy()
-        cnt = got.groupby("query_id").size()
-        for i, pid in enumerate(ids):
-            d2 = (xs - xs[i]) ** 2 + (ys - ys[i]) ** 2
-            n = int(((d2 < 20000.0 ** 2) & (ids != pid)).sum())
-            assert cnt.get(pid, 0) == min(n, 5)
+        for path in KNN_PATHS:
+            with knn_path(spark, path):
+                got = knn_points_bucketed(pts, pts, k=5, cell=4096.0, dist_thres=20000.0).toPandas()
+            assert (got["d2"] < 20000.0 ** 2).all(), path
+            # brute-force the expected per-query count under the threshold
+            cnt = got.groupby("query_id").size()
+            for i, pid in enumerate(ids):
+                d2 = (xs - xs[i]) ** 2 + (ys - ys[i]) ** 2
+                n = int(((d2 < 20000.0 ** 2) & (ids != pid)).sum())
+                assert cnt.get(pid, 0) == min(n, 5), (path, pid)
 
     @pytest.mark.parametrize("cell", [30.0, 400.0])
     def test_knn_features_bucketed_equals_brute(self, spark, points_pdf, cell):
@@ -549,41 +585,37 @@ class TestKNN:
             assert list(sub["nbr_id"]) == list(ids[order]), qrow.pt_id
             assert np.allclose(sub["d2"].to_numpy(), d2[order])
 
-    @pytest.mark.parametrize("path", ["broadcast", "distributed"])
+    @pytest.mark.parametrize("path", KNN_PATHS)
     def test_knn_bucketed_empty_query_batch(self, spark, points_pdf, path):
         from rsgislib_spark.operators.knn import knn_points_bucketed
 
         pts = spark.createDataFrame(points_pdf)
-        with knn_path(spark, path):
+        # the driver path answers an empty batch without running a round
+        with knn_path(spark, path, rounds=path == "distributed"):
             got = knn_points_bucketed(pts.filter("pt_id < 0"), pts, k=3).toPandas()
         assert got.empty
         assert list(got.columns) == ["query_id", "nbr_id", "d2", "rank"]
 
     def test_closest_point_join_bucketed_matches_broadcast(self, spark, points_pdf):
-        self._check_closest_bucketed_matches_broadcast(spark, points_pdf, "broadcast")
-
-    def test_closest_point_join_bucketed_matches_broadcast_distributed(self, spark, points_pdf):
-        self._check_closest_bucketed_matches_broadcast(spark, points_pdf, "distributed")
-
-    def _check_closest_bucketed_matches_broadcast(self, spark, points_pdf, path):
         base = spark.createDataFrame(points_pdf.iloc[:50])
         match = spark.createDataFrame(points_pdf.iloc[50:])
         a = (
             closest_point_join(base, match, tolerance=80000.0)
             .toPandas().set_index("pt_id").sort_index()
         )
-        with knn_path(spark, path):
-            b = (
-                closest_point_join(base, match, tolerance=80000.0, strategy="bucketed")
-                .toPandas().set_index("pt_id").sort_index()
-            )
-        assert list(a.index) == list(b.index)
-        for pid in a.index:
-            if pd.isna(a.loc[pid, "closest_id"]):
-                assert pd.isna(b.loc[pid, "closest_id"])
-            else:
-                assert a.loc[pid, "closest_id"] == b.loc[pid, "closest_id"]
-                assert a.loc[pid, "dist"] == pytest.approx(b.loc[pid, "dist"])
+        for path in KNN_PATHS:
+            with knn_path(spark, path):
+                b = (
+                    closest_point_join(base, match, tolerance=80000.0, strategy="bucketed")
+                    .toPandas().set_index("pt_id").sort_index()
+                )
+            assert list(a.index) == list(b.index), path
+            for pid in a.index:
+                if pd.isna(a.loc[pid, "closest_id"]):
+                    assert pd.isna(b.loc[pid, "closest_id"]), (path, pid)
+                else:
+                    assert a.loc[pid, "closest_id"] == b.loc[pid, "closest_id"], (path, pid)
+                    assert a.loc[pid, "dist"] == pytest.approx(b.loc[pid, "dist"]), (path, pid)
 
 
 # ------------------------------------------------- round-3 regression fixes
@@ -614,14 +646,6 @@ class TestRound3Fixes:
         """ADVICE r2 (medium): a query far outside the point bbox must
         still find its true k nearest — max_ring derived from the points
         span alone under-covered the forced final ring."""
-        with knn_path(spark, "broadcast"):
-            self._check_knn_query_outside_point_bbox(spark, points_pdf)
-
-    def test_knn_bucketed_query_outside_point_bbox_distributed(self, spark, points_pdf):
-        with knn_path(spark, "distributed"):
-            self._check_knn_query_outside_point_bbox(spark, points_pdf)
-
-    def _check_knn_query_outside_point_bbox(self, spark, points_pdf):
         from rsgislib_spark.operators.knn import knn_points_bucketed
 
         pts = points_pdf.iloc[:60]
@@ -632,25 +656,27 @@ class TestRound3Fixes:
         qpdf["pt_id"] = qpdf["pt_id"] + 1_000_000
         qpdf["x"] = qpdf["x"] + 3.0 * span  # well outside the point bbox
         k = 3
-        got = (
-            knn_points_bucketed(
-                spark.createDataFrame(qpdf),
-                spark.createDataFrame(pts),
-                k=k,
-                cell=span / 8.0,  # small cell: points-only max_ring would under-cover
-            )
-            .toPandas()
-            .sort_values(["query_id", "rank"])
-        )
         xs = pts["x"].to_numpy(float)
         ys = pts["y"].to_numpy(float)
         ids = pts["pt_id"].to_numpy()
-        for q in qpdf.itertuples(index=False):
-            d2 = (xs - q.x) ** 2 + (ys - q.y) ** 2
-            order = np.lexsort((ids, d2))[:k]
-            sub = got[got.query_id == q.pt_id]
-            assert list(sub["nbr_id"]) == list(ids[order]), q.pt_id
-            assert np.allclose(sub["d2"].to_numpy(), d2[order])
+        for path in KNN_PATHS:
+            with knn_path(spark, path):
+                got = (
+                    knn_points_bucketed(
+                        spark.createDataFrame(qpdf),
+                        spark.createDataFrame(pts),
+                        k=k,
+                        cell=span / 8.0,  # small cell: points-only max_ring would under-cover
+                    )
+                    .toPandas()
+                    .sort_values(["query_id", "rank"])
+                )
+            for q in qpdf.itertuples(index=False):
+                d2 = (xs - q.x) ** 2 + (ys - q.y) ** 2
+                order = np.lexsort((ids, d2))[:k]
+                sub = got[got.query_id == q.pt_id]
+                assert list(sub["nbr_id"]) == list(ids[order]), (path, q.pt_id)
+                assert np.allclose(sub["d2"].to_numpy(), d2[order])
 
     def test_closest_point_bucketed_nan_not_null_dist(self, spark, points_pdf):
         """ADVICE r2 (low): beyond-tolerance rows must emit NaN dist (not
