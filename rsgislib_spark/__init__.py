@@ -24,3 +24,9 @@ hot path.
 """
 
 __version__ = "0.1.0"
+
+from rsgislib_spark.session import install_zip_reread_guard
+
+# Every Python worker that unpickles an engine closure imports the
+# package, so every such worker gets the guard (see its docstring).
+install_zip_reread_guard()

@@ -515,6 +515,26 @@ def arrow_binary_views(arr) -> list:
     return [mv[offs[k] : offs[k + 1]] for k in range(len(arr))]
 
 
+def arrow_batch_cols(b, *names) -> list:
+    """Arrow-batch columns by name: binary columns become zero-copy
+    views (:func:`arrow_binary_views`), ints and floats numpy, the rest
+    python lists."""
+    import pyarrow as pa
+
+    byname = {n: b.column(i) for i, n in enumerate(b.schema.names)}
+    out = []
+    for n in names:
+        arr = byname[n]
+        t = arr.type
+        if pa.types.is_binary(t) or pa.types.is_large_binary(t):
+            out.append(arrow_binary_views(arr))
+        elif pa.types.is_integer(t) or pa.types.is_floating(t):
+            out.append(arr.to_numpy(zero_copy_only=False))
+        else:
+            out.append(arr.to_pylist())
+    return out
+
+
 # ----------------------------------------------------------------- oracles
 
 

@@ -61,13 +61,12 @@ def extract_point_values(
         # for binary payload columns (4.4× on the decode bench).
         import pyarrow as pa
 
-        from rsgislib_spark.operators.zonal import _batch_cols
 
         pid, px, py = pts_b.value
         for b in it:
             if not b.num_rows:
                 continue
-            ids, views, ws, hs, fmts, minxs, minys = _batch_cols(
+            ids, views, ws, hs, fmts, minxs, minys = codecs.arrow_batch_cols(
                 b, "image_id", "bytes", "w", "h", "fmt", "minx", "miny"
             )
             out_pid, out_img, out_val = [], [], []

@@ -13,8 +13,8 @@ Two physical strategies, same semantics:
    bboxes is pushed down first as a Catalyst column filter (closed
    intervals, the tree's own test), so only images that can meet a zone
    reach Python. A single ``mapInPandas`` pass over those computes
-   candidate pairs (tree query) and the exact predicate (vectorized
-   rect×polygon kernels) with ZERO shuffle of the big side; ``inner``
+   candidate pairs (tree query) and the exact predicate with ZERO
+   shuffle of the big side; ``inner``
    and ``right`` joins also join back only the filtered images. This is
    the 100 TB path whenever zones fit on an executor (they do by design
    — the reference's zone side is a small vector layer).
@@ -23,8 +23,13 @@ Two physical strategies, same semantics:
 
  - :func:`spatial_join_cells` — both sides exploded to covering grid
    cells, cell equi-join (Catalyst sort-merge/shuffle-hash with AQE),
-   exact refine afterwards, then pair-dedup. The scale-out path when the
-   zone side is itself huge.
+   pair-dedup, then the exact refine. The scale-out path when the zone
+   side is itself huge.
+
+Both strategies refine through :meth:`ZoneIndex.refine`: one batched
+pass over all candidate (rect, zone) pairs of an Arrow batch
+(``geom.rect_polygon_pairs``), however many zones they touch — never a
+loop over zones.
 """
 
 from __future__ import annotations
@@ -62,44 +67,42 @@ def _fenced_zones_pdf(zones_slim: DataFrame) -> pd.DataFrame:
 
 
 class ZoneIndex:
-    """Broadcastable zone-polygon index: STR bbox tree + decoded rings."""
+    """Broadcastable zone-polygon index: STR bbox tree + decoded rings,
+    and the same rings flattened into a :class:`geom.PolygonSet` (shell
+    vertices and ring edges in flat arrays with per-zone offsets), built
+    once on the driver and carried in the pickle.
+
+    The exact refine (:meth:`refine`) runs over candidate PAIRS, not per
+    zone: every (rect, zone) pair is checked by the pair-batched
+    ``geom.rect_polygon_pairs`` kernels in a few numpy passes, however
+    many zones the candidates touch (a zonal task touches most of its
+    1 000 zones; one pass per zone was ~100 ms a task)."""
 
     def __init__(self, zone_ids: np.ndarray, wkbs: list):
         self.zone_ids = np.asarray(zone_ids, dtype=np.int64)
         self.rings = [geom.wkb_to_polygon(w) for w in wkbs]
-        self.bboxes = np.array([geom.polygon_bbox(r) for r in self.rings]).reshape(-1, 4)
+        self.polys = geom.PolygonSet(self.rings)
+        self.bboxes = self.polys.bboxes
         self.tree = STRtree(self.bboxes)
 
     @classmethod
     def from_pandas(cls, zones_pdf: pd.DataFrame) -> "ZoneIndex":
         return cls(zones_pdf["zone_id"].to_numpy(), list(zones_pdf["geometry"]))
 
-    def match(self, rects: np.ndarray, join_op: str):
-        """(rect_idx, zone_pos) arrays of exact predicate matches.
+    def refine(self, rects: np.ndarray, zone_pos: np.ndarray, join_op: str) -> np.ndarray:
+        """Exact predicate per candidate pair: rect ``rects[i]`` against
+        zone position ``zone_pos[i]`` → (P,) bool; ``join_op`` one of
+        :data:`JOIN_OPS` (else ValueError)."""
+        return geom.rect_polygon_pairs(rects, zone_pos, self.polys, join_op)
 
-        Candidates are grouped per zone by argsort + segment slicing —
-        O(P log P) in the pair count P, NOT O(|zones|·P) boolean masks
-        (the mask formulation was >80% of the north-star match cost)."""
-        if join_op not in JOIN_OPS:
-            raise ValueError(f"join_op must be one of {JOIN_OPS}")
+    def match(self, rects: np.ndarray, join_op: str):
+        """(rect_idx, zone_pos) arrays of exact predicate matches, in
+        zone order: STRtree candidates, then one :meth:`refine` over all
+        of them."""
         qi, zi = self.tree.query(rects)
-        if len(qi) == 0:
-            return qi, zi
         order = np.argsort(zi, kind="stable")
         qs, zs = qi[order], zi[order]
-        starts = np.flatnonzero(np.r_[True, zs[1:] != zs[:-1]])
-        ends = np.r_[starts[1:], len(zs)]
-        keep = np.zeros(len(qs), dtype=bool)
-        for a, b in zip(starts, ends):
-            z = int(zs[a])
-            sub = rects[qs[a:b]]
-            if join_op == "intersects":
-                ok = geom.rect_intersects_polygon(sub, self.rings[z])
-            elif join_op == "within":
-                ok = geom.rect_within_polygon(sub, self.rings[z])
-            else:  # contains: image rect ⊇ zone polygon
-                ok = geom.rect_contains_polygon(sub, self.rings[z])
-            keep[a:b] = ok
+        keep = self.refine(rects[qs], zs, join_op)
         return qs[keep], zs[keep]
 
 
@@ -217,9 +220,10 @@ def spatial_join_cells(
 
     images exploded to covering cells; zones exploded to covering cells
     (driver-side, zone count small — if zones were huge this explode runs
-    as a DataFrame op too); equi-join on cell; exact predicate refine in a
-    vectorized kernel; duplicate pairs (image spanning k cells) removed
-    with ``dropDuplicates`` BEFORE attaching payloads.
+    as a DataFrame op too); equi-join on cell, keyed by the zone's
+    position in the broadcast ZoneIndex; duplicate pairs (image spanning
+    k cells) removed with ``dropDuplicates``; then one
+    :meth:`ZoneIndex.refine` per Arrow batch over all its pairs.
 
     ``join_how`` mirrors the reference's full inner/left/right surface
     (vectorutils/__init__.py:2159-2225) on this path too: ``left``
@@ -244,41 +248,28 @@ def spatial_join_cells(
         zones_pdf["minx"].to_numpy(), zones_pdf["miny"].to_numpy(),
         zones_pdf["maxx"].to_numpy(), zones_pdf["maxy"].to_numpy(), res,
     )
-    zcells = pd.DataFrame(
-        {"zone_id": zones_pdf["zone_id"].to_numpy()[ridx], "cell": cc}
-    )
+    zcells = pd.DataFrame({"zone_pos": ridx.astype(np.int64), "cell": cc})
     zcells_df = spark.createDataFrame(zcells)
     zindex_b = spark.sparkContext.broadcast(ZoneIndex.from_pandas(zones_pdf))
 
     cand = img_cells.join(F.broadcast(zcells_df), "cell", "inner").select(
-        id_col, "zone_id", "minx", "miny", "maxx", "maxy"
-    ).dropDuplicates([id_col, "zone_id"])
+        id_col, "zone_pos", "minx", "miny", "maxx", "maxy"
+    ).dropDuplicates([id_col, "zone_pos"])
 
     id_type = dict(images.dtypes)[id_col]
     schema = f"{id_col} {id_type}, zone_id long"
 
     def _refine(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         zx: ZoneIndex = zindex_b.value
-        pos = {int(z): i for i, z in enumerate(zx.zone_ids)}
         for pdf in it:
             if not len(pdf):
                 continue
             rects = pdf[["minx", "miny", "maxx", "maxy"]].to_numpy(dtype=np.float64)
-            keep = np.zeros(len(pdf), dtype=bool)
-            for z, grp in pdf.groupby("zone_id"):
-                rows = grp.index.to_numpy()
-                loc = pdf.index.get_indexer(rows)
-                sub = rects[loc]
-                rings = zx.rings[pos[int(z)]]
-                if join_op == "intersects":
-                    ok = geom.rect_intersects_polygon(sub, rings)
-                elif join_op == "within":
-                    ok = geom.rect_within_polygon(sub, rings)
-                else:
-                    ok = geom.rect_contains_polygon(sub, rings)
-                keep[loc] = ok
-            out = pdf.loc[keep, [id_col, "zone_id"]]
-            yield out
+            zpos = pdf["zone_pos"].to_numpy(dtype=np.int64)
+            keep = zx.refine(rects, zpos, join_op)
+            yield pd.DataFrame(
+                {id_col: pdf[id_col].to_numpy()[keep], "zone_id": zx.zone_ids[zpos[keep]]}
+            )
 
     pairs = cand.mapInPandas(_refine, schema=schema)
     if join_how == "inner":

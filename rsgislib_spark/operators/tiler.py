@@ -180,7 +180,6 @@ def tile_batches(
         # Arrow input batch.
         import pyarrow as pa
 
-        from rsgislib_spark.operators.zonal import _batch_cols
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else 0
         buf_t, buf_id, buf_x, buf_y = [], [], [], []
@@ -202,7 +201,7 @@ def tile_batches(
         for b in it:
             if not b.num_rows:
                 continue
-            ids, views, ws, hs, fmts = _batch_cols(
+            ids, views, ws, hs, fmts = codecs.arrow_batch_cols(
                 b, "image_id", "bytes", "w", "h", "fmt"
             )
             for k in range(b.num_rows):

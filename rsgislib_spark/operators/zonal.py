@@ -39,25 +39,6 @@ from rsgislib_spark.operators.spatial_join import ZoneIndex
 MAX_BROADCAST_ZONES = 500_000
 
 
-def _batch_cols(b, *names):
-    """Arrow-batch columns by name: binary columns become zero-copy
-    views, ints become numpy, the rest python lists."""
-    byname = {n: b.column(i) for i, n in enumerate(b.schema.names)}
-    out = []
-    for n in names:
-        arr = byname[n]
-        t = arr.type
-        import pyarrow as pa
-
-        if pa.types.is_binary(t) or pa.types.is_large_binary(t):
-            out.append(codecs.arrow_binary_views(arr))
-        elif pa.types.is_integer(t) or pa.types.is_floating(t):
-            out.append(arr.to_numpy(zero_copy_only=False))
-        else:
-            out.append(arr.to_pylist())
-    return out
-
-
 _PARTIAL_SCHEMA = (
     "zone_id long, n long, s double, ss double, mn double, mx double"
 )
@@ -108,7 +89,7 @@ def segment_stats(images: DataFrame, segments: DataFrame) -> DataFrame:
         for b in it:
             if not b.num_rows:
                 continue
-            ids, views, ws, hs, fmts, seg_views = _batch_cols(
+            ids, views, ws, hs, fmts, seg_views = codecs.arrow_batch_cols(
                 b, "image_id", "bytes", "w", "h", "fmt", "seg_bytes"
             )
             outs = []
@@ -177,7 +158,7 @@ def segment_histogram(images: DataFrame, segments: DataFrame) -> DataFrame:
         for b in it:
             if not b.num_rows:
                 continue
-            ids, views, ws, hs, fmts, seg_views = _batch_cols(
+            ids, views, ws, hs, fmts, seg_views = codecs.arrow_batch_cols(
                 b, "image_id", "bytes", "w", "h", "fmt", "seg_bytes"
             )
             for k in range(b.num_rows):
@@ -249,7 +230,7 @@ def zonal_band_stats(
         for b in it:
             if not b.num_rows:
                 continue
-            views, ws, hs, fmts, minxs, minys = _batch_cols(
+            views, ws, hs, fmts, minxs, minys = codecs.arrow_batch_cols(
                 b, "bytes", "w", "h", "fmt", "minx", "miny"
             )
             acc = {}
@@ -463,7 +444,7 @@ def zonal_band_mode_median(
         for b in it:
             if not b.num_rows:
                 continue
-            views, ws, hs, fmts, minxs, minys = _batch_cols(
+            views, ws, hs, fmts, minxs, minys = codecs.arrow_batch_cols(
                 b, "bytes", "w", "h", "fmt", "minx", "miny"
             )
             acc: dict = {}

@@ -1,10 +1,55 @@
-"""SparkSession factory with scale-appropriate defaults."""
+"""SparkSession factory with scale-appropriate defaults, and the Python
+worker's zip re-read guard (installed when the package is imported)."""
 
 from __future__ import annotations
 
 import os
+from typing import TYPE_CHECKING
 
-from pyspark.sql import SparkSession
+if TYPE_CHECKING:
+    from pyspark.sql import SparkSession
+
+
+def install_zip_reread_guard() -> None:
+    """Stop reused Python workers re-reading unchanged zip archives.
+
+    Every Python task starts with pyspark's ``setup_spark_files``, which
+    calls ``importlib.invalidate_caches()``. On CPython 3.11 that
+    makes every cached ``zipimporter`` re-read its whole archive
+    directory: a warm worker holds ~16 importers into pyspark.zip (1 328
+    entries), 0.1–0.2 s of every task, paid before any UDF runs. The
+    guard lets an importer re-read only when its archive's (mtime_ns,
+    size, inode) differs from what that importer last read, so a zip
+    added or rewritten by ``addPyFile``/``--py-files`` is still re-read.
+    The first engine task in a worker still re-reads (it installs the
+    guard by unpickling its closure). Idempotent (the installed method
+    carries ``_stamp_guard``); a no-op where zipimport has no such
+    method."""
+    import zipimport
+
+    cls = getattr(zipimport, "zipimporter", None)
+    reread = getattr(cls, "invalidate_caches", None)
+    if reread is None or getattr(reread, "_stamp_guard", False):
+        return
+
+    def invalidate_caches(importer) -> None:
+        # stat before the read: a rewrite racing the read leaves the old
+        # stamp, so the next call reads again
+        try:
+            st = os.stat(importer.archive)
+            stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            stamp = None
+        if stamp is not None and getattr(importer, "_read_stamp", None) == stamp:
+            return
+        reread(importer)
+        importer._read_stamp = stamp
+
+    invalidate_caches._stamp_guard = True
+    try:
+        cls.invalidate_caches = invalidate_caches
+    except TypeError:  # a builtin (C) zipimporter type
+        pass
 
 
 def get_spark(
@@ -20,6 +65,8 @@ def get_spark(
     Arrow enabled (all custom kernels run as Arrow-batched pandas UDFs),
     shuffle partitions sized to cores (not the 200 default).
     """
+    from pyspark.sql import SparkSession
+
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
     # Python workers must be able to import this package (broadcasts pickle

@@ -7,12 +7,17 @@ kernels over ALL (image, zone) pairs — no tree, no cells — so index and
 join plumbing are tested against exhaustive evaluation.
 """
 
+import inspect
+import tracemalloc
+from collections import Counter
+
 import numpy as np
 import pandas as pd
 import pytest
 
 from rsgislib_spark.kernels import geom
 from rsgislib_spark.operators.spatial_join import (
+    JOIN_OPS,
     ZoneIndex,
     spatial_join_broadcast,
     spatial_join_cells,
@@ -63,7 +68,7 @@ def test_broadcast_join_matches_oracle(spark_tables, images_nopix_pdf, zones_pdf
 
 def test_cell_join_matches_broadcast(spark_tables, images_nopix_pdf, zones_pdf):
     images, zones = spark_tables
-    for join_op in ["intersects", "within"]:
+    for join_op in JOIN_OPS:
         a = (
             spatial_join_broadcast(images, zones, join_op=join_op)
             .select("image_id", "zone_id").toPandas()
@@ -72,6 +77,93 @@ def test_cell_join_matches_broadcast(spark_tables, images_nopix_pdf, zones_pdf):
         pa = set(zip(a["image_id"], a["zone_id"].astype(int)))
         pb = set(zip(b["image_id"], b["zone_id"].astype(int)))
         assert pa == pb
+
+
+def _square(x0, y0, x1, y1):
+    return np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]], dtype=np.float64)
+
+
+#: geom function calls one ZoneIndex.match may make, whatever the number
+#: of zones its candidates touch (a few batched passes, each a few chunks)
+MAX_GEOM_CALLS_PER_MATCH = 200
+
+
+def test_match_refines_all_zones_in_a_bounded_number_of_kernel_calls(monkeypatch):
+    """One match over 1 000 zones calls the geom kernels a bounded
+    number of times, not once (or more) per zone it touches."""
+    polygons = []
+    for i in range(1000):
+        x, y = (i % 40) * 10.0, (i // 40) * 10.0
+        rings = [_square(x, y, x + 10, y + 10)]
+        if i % 3 == 0:
+            rings.append(_square(x + 3, y + 3, x + 7, y + 7))
+        polygons.append(rings)
+    zx = ZoneIndex(np.arange(1000), [geom.polygon_to_wkb(p) for p in polygons])
+    rng = np.random.default_rng(0)
+    x, y = rng.uniform(0, 400, 3000), rng.uniform(0, 250, 3000)
+    rects = np.column_stack([x, y, x + rng.uniform(0, 25, 3000), y + rng.uniform(0, 25, 3000)])
+
+    calls = Counter()
+
+    def counted(name, fn):
+        def wrapper(*a, **kw):
+            calls[name] += 1
+            return fn(*a, **kw)
+
+        return wrapper
+
+    for name, fn in list(vars(geom).items()):
+        if inspect.isfunction(fn) and fn.__module__ == geom.__name__:
+            monkeypatch.setattr(geom, name, counted(name, fn))
+    for op in JOIN_OPS:
+        calls.clear()
+        qi, zi = zx.match(rects, op)
+        assert sum(calls.values()) <= MAX_GEOM_CALLS_PER_MATCH, (op, calls.most_common(5))
+        if op == "intersects":
+            assert len(np.unique(zi)) > 900
+        assert len(qi)
+
+
+def test_refine_of_a_huge_zone_stays_within_the_chunk_budget(monkeypatch):
+    """A 20 000-vertex zone against 20 000 candidate rects is 4·10^8
+    (pair, vertex) elements: the refine walks them in chunks of at most
+    PAIR_ELEM_BUDGET and never allocates pairs × vertices (a single
+    bool array of that shape is 400 MB). The first chunks are enough to
+    see that; the whole walk would take minutes."""
+    t = np.linspace(0, 2 * np.pi, 20_000, endpoint=False)
+    zone = [np.column_stack([5e4 + 4e4 * np.cos(t), 5e4 + 4e4 * np.sin(t)])]
+    zx = ZoneIndex([1], [geom.polygon_to_wkb(zone)])
+    rng = np.random.default_rng(1)
+    x, y = rng.uniform(1e4, 9e4, 20_000), rng.uniform(1e4, 9e4, 20_000)
+    rects = np.column_stack([x, y, x + 500, y + 500])
+
+    class Enough(Exception):
+        pass
+
+    sizes = []
+    real = geom._segment_counts
+
+    def spy(first, count, test, rows):
+        assert int(np.sum(count)) >= 10**8  # the whole product is in play
+
+        def chunk(seg, idx):
+            sizes.append(len(idx))
+            if len(sizes) == 24:
+                raise Enough
+            return test(seg, idx)
+
+        return real(first, count, chunk, rows)
+
+    monkeypatch.setattr(geom, "_segment_counts", spy)
+    tracemalloc.start()
+    try:
+        with pytest.raises(Enough):
+            zx.match(rects, "intersects")
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert max(sizes) <= geom.PAIR_ELEM_BUDGET
+    assert peak < 64 << 20, peak
 
 
 def test_left_join_keeps_unmatched_images(spark_tables):
