@@ -18,8 +18,6 @@ spots (~1% of cells) — to exercise hot-cell salting (SURVEY.md §4.2).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 
@@ -281,18 +279,3 @@ def gen_segments(images: pd.DataFrame, n_seeds: int = 12, seed: int = 42) -> pd.
         lab = np.argmin(d, axis=2).astype(np.int32)
         rows.append((rec.image_id, lab.tobytes(), int(lab.max()) + 1))
     return pd.DataFrame(rows, columns=["image_id", "seg_bytes", "n_segments"])
-
-
-# ----------------------------------------------------------------- caching
-
-CACHE_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cache", "synth")
-
-
-def cached_parquet(name: str, build, refresh: bool = False) -> str:
-    """Build-once parquet cache shared by pytest and bench."""
-    os.makedirs(CACHE_DIR, exist_ok=True)
-    path = os.path.join(CACHE_DIR, f"{name}.parquet")
-    if refresh or not os.path.exists(path):
-        df = build()
-        df.to_parquet(path, index=False)
-    return path

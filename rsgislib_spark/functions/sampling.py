@@ -25,14 +25,6 @@ def hash_bucket(key: Column, n_buckets: int = 16, salt: str = "") -> Column:
     return (F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % n_buckets).cast("int")
 
 
-def deterministic_sample(
-    df: DataFrame, key: Column, fraction_buckets: int, n_buckets: int = 16, salt: str = ""
-) -> DataFrame:
-    """Keep rows whose hash bucket < fraction_buckets (≈ fraction_buckets /
-    n_buckets of the data) — take_random_sample, reproducibly."""
-    return df.filter(hash_bucket(key, n_buckets, salt) < fraction_buckets)
-
-
 def train_test_split(
     df: DataFrame, key: Column, test_buckets: int = 3, n_buckets: int = 10, salt: str = "tt"
 ):

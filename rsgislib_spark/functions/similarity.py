@@ -85,11 +85,6 @@ def cosine_block_pairs(
     )
 
 
-def with_cosine(df: DataFrame, a_col: str, b_col: str, out: str = "cos") -> DataFrame:
-    a, b = F.col(a_col), F.col(b_col)
-    return df.withColumn(out, _dot(a, b) / (_norm(a) * _norm(b)))
-
-
 def cosine_topk_bruteforce(
     vectors: DataFrame,
     queries: DataFrame,

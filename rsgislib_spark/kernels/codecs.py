@@ -254,61 +254,6 @@ def decode_dct(buf: bytes) -> np.ndarray:
     return out[0] if nch == 1 else np.stack(out, axis=2)
 
 
-def is_rsdc(buf) -> bool:
-    """True when the payload is an in-house RSDC lossy container — the
-    batch-decode grouping predicate (JFIF payloads routed through an
-    external backend must not enter ``decode_dct_batch``)."""
-    return bytes(buf[:6]) == _DCT_MAGIC
-
-
-def decode_dct_batch(bufs) -> list:
-    """Decode MANY lossy payloads with one coefficient concatenation and
-    one pair of flat GEMMs per quantization quality across every block
-    of every image — the per-batch shape the Arrow-batched operators
-    feed (image_features groups each Arrow batch's lossy payloads
-    through here). Returns a list of arrays aligned with ``bufs``.
-    Entropy (zlib) stays per-image — each payload is an independent
-    stream; mixed qualities form one GEMM group each (no per-image
-    fallback, nothing is decompressed twice)."""
-    metas, runs = [], []
-    for buf in bufs:
-        if buf[:6] != _DCT_MAGIC:
-            raise ValueError("not an RSDC lossy payload")
-        h, w, nch, quality = struct.unpack_from("<HHBB", buf, 6)
-        H = (h + 7) // 8 * 8
-        W = (w + 7) // 8 * 8
-        nblocks = (H // 8) * (W // 8)
-        raw = zlib.decompress(buf[12:])
-        for c in range(nch):
-            runs.append(
-                np.frombuffer(raw, dtype=np.int16, count=nblocks * 64,
-                              offset=c * nblocks * 128)
-            )
-        metas.append((h, w, H, W, nblocks, nch, quality))
-    if not metas:
-        return []
-    run_start = np.concatenate(([0], np.cumsum([m[5] for m in metas])))
-    by_quality: dict = {}
-    for i, m in enumerate(metas):
-        by_quality.setdefault(m[6], []).append(i)
-    outs: list = [None] * len(bufs)
-    for quality, idxs in by_quality.items():
-        q32 = _qtable(quality).astype(np.float32)
-        grp = []
-        for i in idxs:
-            grp.extend(runs[run_start[i] : run_start[i] + metas[i][5]])
-        u8t = _idct_blocks_u8(np.concatenate(grp), q32)
-        off = 0
-        for i in idxs:
-            h, w, H, W, nb, nch, _ = metas[i]
-            chans = []
-            for _c in range(nch):
-                chans.append(_assemble_dct(u8t[off : off + nb], h, w, H, W))
-                off += nb
-            outs[i] = chans[0] if nch == 1 else np.stack(chans, axis=2)
-    return outs
-
-
 # ----------------------------------------------- pluggable codec backends
 #
 # The in-house codecs above are the DEFAULT backend: deterministic,

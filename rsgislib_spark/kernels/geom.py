@@ -39,18 +39,6 @@ def bbox_intersects(a, b) -> np.ndarray:
     )
 
 
-def bbox_contains(outer, inner) -> np.ndarray:
-    """outer (n,4) fully contains inner (m,4) -> (n,m) bool (closed)."""
-    o = np.asarray(outer, dtype=np.float64).reshape(-1, 4)
-    i = np.asarray(inner, dtype=np.float64).reshape(-1, 4)
-    return (
-        (o[:, None, 0] <= i[None, :, 0])
-        & (o[:, None, 1] <= i[None, :, 1])
-        & (o[:, None, 2] >= i[None, :, 2])
-        & (o[:, None, 3] >= i[None, :, 3])
-    )
-
-
 def bbox_intersection(a, b):
     """Pairwise intersection of equal-length bbox arrays; rows with no
     overlap return a degenerate (nan) box."""

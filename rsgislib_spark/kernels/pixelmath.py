@@ -30,11 +30,6 @@ def geotransform(minx: float, maxy: float, res: float):
     return (minx, res, 0.0, maxy, 0.0, -res)
 
 
-def img_bbox(tlx: float, tly: float, res: float, w: int, h: int):
-    """(minx, miny, maxx, maxy) of an image footprint."""
-    return (tlx, tly - res * h, tlx + res * w, tly)
-
-
 def img_pxl_coords(x, y, tlx, tly, xres, yres, xsize, ysize, check=True):
     """Spatial → pixel coords with the reference's floor(+0.5) rounding.
 

@@ -102,11 +102,6 @@ def focal_stats_tiled(
     )
 
 
-def focal_grid(arr: np.ndarray, stat: str, radius: int = 1) -> np.ndarray:
-    """Whole-array focal filter (library entry for small rasters/tests)."""
-    return KERNELS[stat](arr, radius)
-
-
 def stat_filters_tiled(
     images: DataFrame,
     tile: int = 128,

@@ -1,8 +1,8 @@
-"""Footprint derivation + grid-cell assignment for the images table.
+"""Grid-cell assignment for the images table's footprints.
 
 The Spark replacement for the reference's footprint LUT
-(``python/rsgislib/imageutils/imagelut.py:51-169``): footprint bbox
-columns + an exploded (image, cell) assignment that downstream joins
+(``python/rsgislib/imageutils/imagelut.py:51-169``): an exploded
+(image, cell) assignment of the footprint bbox columns that downstream joins
 equi-join on, and that the writer range-partitions on (Morton cell ids
 are spatially ordered — see kernels.cells).
 """
@@ -11,35 +11,12 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from rsgislib_spark.datagen import PIXEL_SIZE
 from rsgislib_spark.kernels import cells
 
 DEFAULT_RES = 7  # cell edge = 8192 world units = 819 px at 10 m/px
-
-
-def with_footprint(images: DataFrame, pixel_size: float = PIXEL_SIZE) -> DataFrame:
-    """Add maxx/maxy footprint columns from (minx, miny, w, h).
-
-    Pure Catalyst column arithmetic — stays in WholeStageCodegen; no UDF.
-    """
-    return images.withColumn(
-        "maxx", F.col("minx") + F.col("w").cast("double") * F.lit(pixel_size)
-    ).withColumn("maxy", F.col("miny") + F.col("h").cast("double") * F.lit(pixel_size))
-
-
-def cell_of_point(df: DataFrame, x_col: str, y_col: str, res: int = DEFAULT_RES,
-                  out_col: str = "cell") -> DataFrame:
-    """Morton cell id of a point — vectorized pandas UDF over Arrow batches."""
-
-    @F.pandas_udf("long")
-    def _enc(x: pd.Series, y: pd.Series) -> pd.Series:
-        return pd.Series(cells.encode_point(x.to_numpy(), y.to_numpy(), res))
-
-    return df.withColumn(out_col, _enc(F.col(x_col), F.col(y_col)))
 
 
 def explode_footprint_cells(images: DataFrame, res: int = DEFAULT_RES,

@@ -49,6 +49,11 @@ def image_features(images: DataFrame) -> DataFrame:
     mean-pooled thumbnail signature, and the 64-bit phash. Input schema =
     the input_hint table (image_id, bytes, w, h, fmt, ...).
 
+    Every payload decodes on its own through ``codecs.decode_image``, so
+    a row's features never depend on which rows share its Arrow batch
+    (a batched lossy decode was slower here and bit-exact only with one
+    BLAS thread).
+
     Tuning: this op is JVM→Python transfer-bound on fat binary rows —
     set spark.sql.execution.arrow.maxRecordsPerBatch ≈ 64 for the
     session running it (an 8 MB payload partition is ~330 rows = ONE
@@ -62,29 +67,12 @@ def image_features(images: DataFrame) -> DataFrame:
         for b in it:  # mapInArrow: no pandas bytes-object materialization
             if not b.num_rows:
                 continue
-            cols = {name: b.column(i) for i, name in enumerate(b.schema.names)}
-            ids = cols["image_id"].to_pylist()
-            hs = cols["h"].to_numpy(zero_copy_only=False)
-            ws = cols["w"].to_numpy(zero_copy_only=False)
-            fmts = cols["fmt"].to_pylist()
-            views = codecs.arrow_binary_views(cols["bytes"])
-            # Lossy payloads batch through ONE pair of flat IDCT GEMMs
-            # per Arrow batch (decode_dct_batch) instead of per-image
-            # GEMM setup; raw/png decode stays per-image (no shared work).
-            jpg_idx = [
-                k for k in range(b.num_rows)
-                if fmts[k] == "jpg" and codecs.is_rsdc(views[k])
-            ]
-            jpg_dec = (
-                dict(zip(jpg_idx, codecs.decode_dct_batch([views[k] for k in jpg_idx])))
-                if len(jpg_idx) > 1
-                else {}
+            ids, views, ws, hs, fmts = codecs.arrow_batch_cols(
+                b, "image_id", "bytes", "w", "h", "fmt"
             )
             means, stds, thumbs, hashes = [], [], [], []
             for k in range(b.num_rows):
-                img = jpg_dec.get(k)
-                if img is None:
-                    img = codecs.decode_image(views[k], fmts[k], int(hs[k]), int(ws[k]))
+                img = codecs.decode_image(views[k], fmts[k], int(hs[k]), int(ws[k]))
                 thumb = resize_nearest(img, 4, 4).astype(np.float64)
                 # mean/std from integer moment sums (exact in float64 for
                 # uint8 rasters) — cross-engine reproducible, one pass
@@ -182,10 +170,7 @@ def audio_features(audio: DataFrame, frame: int = 1024) -> DataFrame:
         for b in it:
             if not b.num_rows:
                 continue
-            cols = {name: b.column(i) for i, name in enumerate(b.schema.names)}
-            ids = cols["clip_id"].to_pylist()
-            fmts = cols["fmt"].to_pylist()
-            views = codecs.arrow_binary_views(cols["bytes"])
+            ids, views, fmts = codecs.arrow_batch_cols(b, "clip_id", "bytes", "fmt")
             ns, nf, rmean, rmax = [], [], [], []
             for k in range(b.num_rows):
                 pcm = decode_audio(views[k], fmts[k]).astype(np.float64)
@@ -270,62 +255,88 @@ def decode_video_frames(buf: bytes, fmt: str, h: int, w: int) -> np.ndarray:
     )
 
 
+def _frame_batch(ids, nos, hs, ws, chunks):
+    """One output RecordBatch of sampled frames: the payloads leave as
+    ONE contiguous Arrow binary array (an offsets buffer over a single
+    ``np.concatenate`` of the frame rows) — no per-frame Python bytes
+    objects. Callers keep the batch's frame bytes ≤ MAX_FRAME_BATCH_BYTES,
+    so the int32 offsets cannot wrap."""
+    import pyarrow as pa
+
+    sizes = np.concatenate([np.full(len(c), c.shape[1], dtype=np.int64) for c in chunks])
+    offsets = np.concatenate(([0], np.cumsum(sizes))).astype(np.int32)
+    data = np.concatenate([c.reshape(-1) for c in chunks])
+    frame_arr = pa.BinaryArray.from_buffers(
+        pa.binary(), len(sizes),
+        [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(data.tobytes())],
+    )
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(ids, pa.string()),
+            pa.array(np.concatenate(nos), pa.int32()),
+            pa.array(hs, pa.int32()),
+            pa.array(ws, pa.int32()),
+            frame_arr,
+        ],
+        names=["clip_id", "frame_no", "h", "w", "frame"],
+    )
+
+
+#: Most frame bytes one output RecordBatch of :func:`sample_video_frames`
+#: carries — Arrow ``binary`` offsets are int32, so a batch is flushed
+#: before its accumulated frames would pass 2³¹ − 1 bytes.
+MAX_FRAME_BATCH_BYTES = 2**31 - 1
+
+
 def sample_video_frames(video: DataFrame, every_k: int = 5) -> DataFrame:
     """1→N frame-sampling UDTF: every k-th frame becomes a row with its
     own (re-encoded raw) payload — the video face of the tiler's
     one-row-in, many-rows-out shape.
 
     ``mapInArrow`` both ways: input payloads arrive as zero-copy buffer
-    views (``codecs.arrow_binary_views``), and the sampled frames leave
-    as ONE contiguous Arrow binary array built from a single
-    ``np.concatenate`` of the selected frame rows — no per-frame Python
-    bytes objects on either boundary."""
+    views (``codecs.arrow_batch_cols``), and the sampled frames leave as
+    one contiguous binary array per output batch. An input batch whose
+    sampled frames pass ``MAX_FRAME_BATCH_BYTES`` is split over several
+    output batches (mid-clip if need be); one frame larger than the limit
+    raises."""
+    limit = MAX_FRAME_BATCH_BYTES
 
     def _run(it):
-        import pyarrow as pa
-
         for b in it:
             if not b.num_rows:
                 continue
-            cols = {name: b.column(i) for i, name in enumerate(b.schema.names)}
-            ids = cols["clip_id"].to_pylist()
-            hs = cols["h"].to_numpy(zero_copy_only=False)
-            ws = cols["w"].to_numpy(zero_copy_only=False)
-            fmts = cols["fmt"].to_pylist()
-            views = codecs.arrow_binary_views(cols["bytes"])
+            ids, views, fmts, hs, ws = codecs.arrow_batch_cols(
+                b, "clip_id", "bytes", "fmt", "h", "w"
+            )
             out_ids, out_no, out_h, out_w, chunks = [], [], [], [], []
+            nbytes = 0
             for k in range(b.num_rows):
                 h, w = int(hs[k]), int(ws[k])
                 frames = decode_video_frames(views[k], fmts[k], h, w)
-                sel = frames[::every_k]
-                if not len(sel):
-                    continue
-                out_ids.extend([ids[k]] * len(sel))
-                out_no.extend(range(0, len(frames), every_k))
-                out_h.extend([h] * len(sel))
-                out_w.extend([w] * len(sel))
-                chunks.append(np.ascontiguousarray(sel).reshape(len(sel), h * w))
-            if not out_ids:
-                continue
-            sizes = np.concatenate([
-                np.full(len(c), c.shape[1], dtype=np.int32) for c in chunks
-            ])
-            offsets = np.concatenate(([0], np.cumsum(sizes, dtype=np.int64))).astype(np.int32)
-            data = np.concatenate([c.reshape(-1) for c in chunks])
-            frame_arr = pa.BinaryArray.from_buffers(
-                pa.binary(), len(sizes),
-                [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(data.tobytes())],
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ids, pa.string()),
-                    pa.array(out_no, pa.int32()),
-                    pa.array(out_h, pa.int32()),
-                    pa.array(out_w, pa.int32()),
-                    frame_arr,
-                ],
-                names=["clip_id", "frame_no", "h", "w", "frame"],
-            )
+                sel = np.ascontiguousarray(frames[::every_k]).reshape(-1, h * w)
+                nos = np.arange(0, len(frames), every_k)
+                s = 0
+                while s < len(sel):
+                    take = min(len(sel) - s, (limit - nbytes) // (h * w))
+                    if not take:
+                        if not nbytes:
+                            raise ValueError(
+                                f"one {h}x{w} frame exceeds the {limit}-byte "
+                                "output batch limit"
+                            )
+                        yield _frame_batch(out_ids, out_no, out_h, out_w, chunks)
+                        out_ids, out_no, out_h, out_w, chunks = [], [], [], [], []
+                        nbytes = 0
+                        continue
+                    out_ids.extend([ids[k]] * take)
+                    out_no.append(nos[s : s + take])
+                    out_h.extend([h] * take)
+                    out_w.extend([w] * take)
+                    chunks.append(sel[s : s + take])
+                    nbytes += take * h * w
+                    s += take
+            if chunks:
+                yield _frame_batch(out_ids, out_no, out_h, out_w, chunks)
 
     return video.select("clip_id", "bytes", "fmt", "h", "w").mapInArrow(
         _run,

@@ -12,7 +12,7 @@ Reproduces the reference's three tiling conventions exactly
    (``stdimgblockiter.py:214-286``)
 
 The operator is the engine's UDTF shape (1 image row → N tile rows) via
-``mapInPandas``; decode runs once per image inside the Arrow batch, tile
+``mapInArrow``; decode runs once per image inside the Arrow batch, tile
 payloads are raw uint8 (lossless past this point). This is the Spark
 replacement for the reference's tmp-file tile exchange
 (``segmentation/tiledclump.py:134-224``) — the shuffle IS the filesystem.
@@ -20,10 +20,7 @@ replacement for the reference's tmp-file tile exchange
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from rsgislib_spark.datagen import PIXEL_SIZE
@@ -83,14 +80,9 @@ def tile_images(
         for b in it:
             if not b.num_rows:
                 continue
-            cols = {name: b.column(i) for i, name in enumerate(b.schema.names)}
-            ids = cols["image_id"].to_pylist()
-            ws = cols["w"].to_numpy(zero_copy_only=False)
-            hs = cols["h"].to_numpy(zero_copy_only=False)
-            minxs = cols["minx"].to_numpy(zero_copy_only=False)
-            minys = cols["miny"].to_numpy(zero_copy_only=False)
-            fmts = cols["fmt"].to_pylist()
-            views = codecs.arrow_binary_views(cols["bytes"])
+            ids, views, ws, hs, fmts, minxs, minys = codecs.arrow_batch_cols(
+                b, "image_id", "bytes", "w", "h", "fmt", "minx", "miny"
+            )
             out = {k: [] for k in
                    ("image_id", "tile_x", "tile_y", "x0", "y0", "tw", "th", "pixels", "cell")}
             for r in range(b.num_rows):

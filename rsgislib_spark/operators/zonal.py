@@ -29,7 +29,6 @@ end-to-end on the decode bench).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from rsgislib_spark.datagen import PIXEL_SIZE
@@ -196,6 +195,46 @@ def segment_mode(images: DataFrame, segments: DataFrame) -> DataFrame:
     )
 
 
+def _zone_pixels(zx: ZoneIndex, b, no_data_val, pixel_size: float):
+    """The per-(image, zone) step of the polygon zonal operators over one
+    Arrow batch of (bytes, w, h, fmt, minx, miny) rows: for every image,
+    each zone whose envelope meets the image rect (tree query) → the
+    reference's envelope pixel window (``pixelmath.zonal_window``) →
+    pixel centres inside the polygon (polyContainsPixelCenter) → no-data
+    dropped. Yields ``(zone_id, values)`` with float64 values, in image
+    then tree order; an image no zone meets is never decoded."""
+    views, ws, hs, fmts, minxs, minys = codecs.arrow_batch_cols(
+        b, "bytes", "w", "h", "fmt", "minx", "miny"
+    )
+    for k in range(b.num_rows):
+        h, w = int(hs[k]), int(ws[k])
+        minx, miny = float(minxs[k]), float(minys[k])
+        maxy = miny + h * pixel_size
+        maxx = minx + w * pixel_size
+        qi, zi = zx.tree.query(np.array([[minx, miny, maxx, maxy]]))
+        if len(zi) == 0:
+            continue
+        img = codecs.decode_image(views[k], fmts[k], h, w).astype(np.float64)
+        for z in zi:
+            zb = zx.bboxes[z]
+            x1, y1, xs, ys, have = pixelmath.zonal_window(
+                [zb[0]], [zb[2]], [zb[1]], [zb[3]],
+                minx, maxy, pixel_size, pixel_size, w, h,
+            )
+            if not have[0]:
+                continue
+            x1_, y1_, xs_, ys_ = int(x1[0]), int(y1[0]), int(xs[0]), int(ys[0])
+            sub = img[y1_ : y1_ + ys_, x1_ : x1_ + xs_]
+            pcx = minx + (np.arange(x1_, x1_ + xs_) + 0.5) * pixel_size
+            pcy = maxy - (np.arange(y1_, y1_ + ys_) + 0.5) * pixel_size
+            gx, gy = np.meshgrid(pcx, pcy)
+            mask = zx_points_in(zx.rings[z], gx.ravel(), gy.ravel()).reshape(sub.shape)
+            vals = sub[mask]
+            if no_data_val is not None:
+                vals = vals[vals != no_data_val]
+            yield int(zx.zone_ids[z]), vals
+
+
 def zonal_band_stats(
     images: DataFrame,
     zones: DataFrame,
@@ -230,58 +269,24 @@ def zonal_band_stats(
         for b in it:
             if not b.num_rows:
                 continue
-            views, ws, hs, fmts, minxs, minys = codecs.arrow_batch_cols(
-                b, "bytes", "w", "h", "fmt", "minx", "miny"
-            )
             acc = {}
-            for k in range(b.num_rows):
-                h, w = int(hs[k]), int(ws[k])
-                minx, miny = float(minxs[k]), float(minys[k])
-                maxy = miny + h * pixel_size
-                maxx = minx + w * pixel_size
-                qi, zi = zx.tree.query(
-                    np.array([[minx, miny, maxx, maxy]])
-                )
-                if len(zi) == 0:
+            for zid, vals in _zone_pixels(zx, b, no_data_val, pixel_size):
+                vals = vals[(vals >= min_thres) & (vals <= max_thres)]
+                if vals.size == 0:
                     continue
-                img = codecs.decode_image(views[k], fmts[k], h, w).astype(np.float64)
-                for z in zi:
-                    rings = zx.rings[z]
-                    zb = zx.bboxes[z]
-                    # envelope → pixel window with the reference's rule
-                    x1, y1, xs, ys, have = pixelmath.zonal_window(
-                        [zb[0]], [zb[2]], [zb[1]], [zb[3]],
-                        minx, maxy, pixel_size, pixel_size, w, h,
-                    )
-                    if not have[0]:
-                        continue
-                    x1_, y1_, xs_, ys_ = int(x1[0]), int(y1[0]), int(xs[0]), int(ys[0])
-                    sub = img[y1_ : y1_ + ys_, x1_ : x1_ + xs_]
-                    # pixel centers of the window
-                    pcx = minx + (np.arange(x1_, x1_ + xs_) + 0.5) * pixel_size
-                    pcy = maxy - (np.arange(y1_, y1_ + ys_) + 0.5) * pixel_size
-                    gx, gy = np.meshgrid(pcx, pcy)
-                    mask = zx_points_in(rings, gx.ravel(), gy.ravel()).reshape(sub.shape)
-                    vals = sub[mask]
-                    if no_data_val is not None:
-                        vals = vals[vals != no_data_val]
-                    vals = vals[(vals >= min_thres) & (vals <= max_thres)]
-                    if vals.size == 0:
-                        continue
-                    zid = int(zx.zone_ids[z])
-                    a = acc.get(zid)
-                    stat = (
-                        vals.size, float(vals.sum()), float((vals * vals).sum()),
-                        float(vals.min()), float(vals.max()),
-                    )
-                    if a is None:
-                        acc[zid] = list(stat)
-                    else:
-                        a[0] += stat[0]
-                        a[1] += stat[1]
-                        a[2] += stat[2]
-                        a[3] = min(a[3], stat[3])
-                        a[4] = max(a[4], stat[4])
+                a = acc.get(zid)
+                stat = (
+                    vals.size, float(vals.sum()), float((vals * vals).sum()),
+                    float(vals.min()), float(vals.max()),
+                )
+                if a is None:
+                    acc[zid] = list(stat)
+                else:
+                    a[0] += stat[0]
+                    a[1] += stat[1]
+                    a[2] += stat[2]
+                    a[3] = min(a[3], stat[3])
+                    a[4] = max(a[4], stat[4])
             if acc:
                 zids = sorted(acc)
                 yield pa.RecordBatch.from_arrays(
@@ -444,43 +449,13 @@ def zonal_band_mode_median(
         for b in it:
             if not b.num_rows:
                 continue
-            views, ws, hs, fmts, minxs, minys = codecs.arrow_batch_cols(
-                b, "bytes", "w", "h", "fmt", "minx", "miny"
-            )
             acc: dict = {}
-            for k in range(b.num_rows):
-                h, w = int(hs[k]), int(ws[k])
-                minx, miny = float(minxs[k]), float(minys[k])
-                maxy = miny + h * pixel_size
-                maxx = minx + w * pixel_size
-                qi, zi = zx.tree.query(np.array([[minx, miny, maxx, maxy]]))
-                if len(zi) == 0:
+            for zid, vals in _zone_pixels(zx, b, no_data_val, pixel_size):
+                if not vals.size:
                     continue
-                img = codecs.decode_image(views[k], fmts[k], h, w)
-                for z in zi:
-                    rings = zx.rings[z]
-                    zb = zx.bboxes[z]
-                    x1, y1, xs, ys, have = pixelmath.zonal_window(
-                        [zb[0]], [zb[2]], [zb[1]], [zb[3]],
-                        minx, maxy, pixel_size, pixel_size, w, h,
-                    )
-                    if not have[0]:
-                        continue
-                    x1_, y1_, xs_, ys_ = int(x1[0]), int(y1[0]), int(xs[0]), int(ys[0])
-                    sub = img[y1_ : y1_ + ys_, x1_ : x1_ + xs_]
-                    pcx = minx + (np.arange(x1_, x1_ + xs_) + 0.5) * pixel_size
-                    pcy = maxy - (np.arange(y1_, y1_ + ys_) + 0.5) * pixel_size
-                    gx, gy = np.meshgrid(pcx, pcy)
-                    mask = zx_points_in(rings, gx.ravel(), gy.ravel()).reshape(sub.shape)
-                    vals = sub[mask].astype(np.int64)
-                    if no_data_val is not None:
-                        vals = vals[vals != no_data_val]
-                    if not vals.size:
-                        continue
-                    zid = int(zx.zone_ids[z])
-                    counts = np.bincount(vals, minlength=256)
-                    prev = acc.get(zid)
-                    acc[zid] = counts if prev is None else prev + counts
+                counts = np.bincount(vals.astype(np.int64), minlength=256)
+                prev = acc.get(zid)
+                acc[zid] = counts if prev is None else prev + counts
             if not acc:
                 continue
             zids, values, cnts = [], [], []

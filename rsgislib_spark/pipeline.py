@@ -1,24 +1,31 @@
-"""The north-star pipeline: spatial-join + tiling over the image table,
-end to end — the job the BASELINE.json metric (images/sec, N→4N scaling
-efficiency ≥ 0.8) is measured on.
+"""The north-star pipeline: per-zone pixel statistics over the image
+table, end to end — the job the zonal benchmark measures.
 
-Stages (all DataFrame-declarative; Catalyst plans them):
- 1. footprints    — derive (minx,miny,maxx,maxy) per image; column exprs
- 2. spatial join  — images × zone polygons, broadcast STRtree refine
+Both north stars run ONE partial body (:func:`_zone_partials`) in a
+single mapInArrow per task and differ only in their input step:
+ 1. pixels        — :func:`north_star` ships only image_key, derives the
+                    footprints and synthesizes each same-shape stack
+                    (:func:`lattice_grid`); :func:`north_star_decoded`
+                    reads stored bytes and decodes every payload once
+                    (``codecs.decode_image``)
+ 2. pixel kernels — band synthesis + focal sum/count over CHUNK stacks
+                    of same-shape images (:func:`shape_runs`), reduced per
+                    image; the per-tile rollup of the tiler (create_tiles
+                    semantics, imageutils.cpp:2061-2093) is fused away
+                    algebraically, tiles are only counted
+ 3. spatial join  — images × zone polygons, broadcast STRtree refine
                     (perform_spatial_join semantics, vectorutils:2159-2225);
                     zero shuffle of the image side
- 3. tiling + tile kernels — cut each image into fixed tiles + remainders
-                    (create_tiles semantics, imageutils.cpp:2061-2093) with
-                    the per-pixel compute fused in: band synthesis, focal
-                    sum/count (integral image), per-tile block reductions
-                    via ufunc.reduceat — one whole-image numpy pass, no
-                    per-tile Python loop, no pixel payload shuffle
- 4. zonal rollup  — per-zone aggregation of tile stats through the join
-                    (populate_rat_with_stats, rastergis.cpp:1740-1766)
+ 4. zonal rollup  — per-zone partial aggregation in the same map, then
+                    one tiny groupBy (populate_rat_with_stats,
+                    rastergis.cpp:1740-1766; :func:`_zone_stats`)
+
+:func:`tile_stats_df` is the per-tile output of the same kernels.
 
 Scale design: the image side partitions by range on image_key (uniform);
 the zone side broadcasts (small by construction). The only shuffles move
-per-image/per-tile STATS rows (9 small columns), never pixels. Driver
+image keys and per-zone partial STATS rows (9 small columns), never
+pixels. Driver
 work is O(|zones|) pandas — no extra Spark jobs before the main one.
 
 ``replicate=R`` multiplies the image side R× with distinct keys (pixel
@@ -35,7 +42,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from rsgislib_spark.kernels import geom
+from rsgislib_spark.kernels import codecs, geom
 
 TILE = 96
 
@@ -98,7 +105,7 @@ def images_df(spark: SparkSession, sf_dir: str, replicate: int = 1) -> DataFrame
     )
 
 
-# ------------------------------------------------------- fused tile stage
+# ---------------------------------------------------------- pixel kernels
 
 CHUNK = 8  # images per kernel invocation: keeps int16 temporaries (~2·h·w·2B·CHUNK)
 # inside per-core L2 so the kernel stays cache-resident — at CHUNK=64 the
@@ -193,8 +200,24 @@ def _tile_stats_chunk(keys: np.ndarray, w: int, h: int, tile: int, radius: int):
     }
 
 
+def shape_runs(ws: np.ndarray, hs: np.ndarray, keys: np.ndarray):
+    """Rows sorted by (w, h, key) and the same-shape runs of that order:
+    ``(order, [(i, j, w, h), ...])`` where ``order[i:j]`` are the rows of
+    shape (w, h). Every pixel pass stacks same-shape images, so it walks
+    these runs CHUNK rows at a time."""
+    order = np.lexsort((keys, hs, ws))
+    if not len(order):
+        return order, []
+    sw, sh = ws[order], hs[order]
+    cuts = np.flatnonzero((sw[1:] != sw[:-1]) | (sh[1:] != sh[:-1])) + 1
+    bounds = np.concatenate(([0], cuts, [len(order)]))
+    return order, [
+        (int(i), int(j), int(sw[i]), int(sh[i])) for i, j in zip(bounds[:-1], bounds[1:])
+    ]
+
+
 def tile_stats_df(images: DataFrame, tile: int = TILE, radius: int = 1) -> DataFrame:
-    """Stage 3: tiler UDTF with pixel kernels fused. Images are grouped by
+    """Per-tile output of the pixel kernels. Images are grouped by
     shape and processed CHUNK at a time in a single 3-D numpy pass:
     synth band grid → integral-image focal sums → per-tile block
     reductions with ``ufunc.reduceat`` at the tile boundaries (full +
@@ -205,26 +228,22 @@ def tile_stats_df(images: DataFrame, tile: int = TILE, radius: int = 1) -> DataF
         for pdf in it:
             if not len(pdf):
                 continue
-            keys_all = pdf["image_key"].to_numpy(np.int64)
-            ws = pdf["w"].to_numpy(np.int32)
-            hs = pdf["h"].to_numpy(np.int32)
-            frames = []
-            order = np.lexsort((keys_all, hs, ws))
-            i = 0
-            while i < len(order):
-                w, h = int(ws[order[i]]), int(hs[order[i]])
-                j = i
-                while j < len(order) and ws[order[j]] == w and hs[order[j]] == h:
-                    j += 1
-                grp = keys_all[order[i:j]]
-                for c0 in range(0, len(grp), CHUNK):
-                    frames.append(
-                        pd.DataFrame(
-                            _tile_stats_chunk(grp[c0 : c0 + CHUNK], w, h, tile, radius)
+            keys = pdf["image_key"].to_numpy(np.int64)
+            order, runs = shape_runs(
+                pdf["w"].to_numpy(np.int32), pdf["h"].to_numpy(np.int32), keys
+            )
+            yield pd.concat(
+                [
+                    pd.DataFrame(
+                        _tile_stats_chunk(
+                            keys[order[c0 : min(c0 + CHUNK, j)]], w, h, tile, radius
                         )
                     )
-                i = j
-            yield pd.concat(frames, ignore_index=True)
+                    for i, j, w, h in runs
+                    for c0 in range(i, j, CHUNK)
+                ],
+                ignore_index=True,
+            )
 
     schema = (
         "image_key long, tile_x int, tile_y int, n_px long, sum_v long, "
@@ -233,20 +252,12 @@ def tile_stats_df(images: DataFrame, tile: int = TILE, radius: int = 1) -> DataF
     return images.select("image_key", "w", "h").mapInPandas(_run, schema=schema)
 
 
-def _image_stats_chunk(keys: np.ndarray, w: int, h: int, radius: int):
-    """Whole-image reductions for a CHUNK of same-shape images — the
-    per-tile → per-image rollup of :func:`_tile_stats_chunk` fused away
-    algebraically (Σ over tiles of tile-sums ≡ whole-image sum), so no
-    reduceat/tile assembly runs at all. Same band + focal kernels."""
-    grid = lattice_grid(keys, w, h)
-    return _stats_from_grid(grid, radius)
-
-
 def _stats_from_grid(grid: np.ndarray, radius: int):
     """Whole-image band + focal reductions over a (m, h, w) uint8 pixel
-    stack — the kernel half of :func:`_image_stats_chunk`, shared by the
-    synthetic path (grid derived from keys) and the DECODED path (grid
-    decoded from stored bytes by kernels.codecs)."""
+    stack — the per-tile → per-image rollup of :func:`_tile_stats_chunk`
+    fused away algebraically (Σ over tiles of tile-sums ≡ whole-image
+    sum), so no reduceat/tile assembly runs at all. Same band + focal
+    kernels; the stack is synthesized or decoded by the caller."""
     m, h, w = grid.shape
 
     row = np.empty((m, h, w), dtype=np.int16)
@@ -275,127 +286,6 @@ def _stats_from_grid(grid: np.ndarray, radius: int):
     )
 
 
-def image_stats_df(images: DataFrame, tile: int = TILE, radius: int = 1) -> DataFrame:
-    """Fused tiler + kernels + per-image reduction: only ONE stats row
-    per image reaches the Arrow boundary (640k rows instead of ~5.5M
-    tile rows at replicate 32), assembled as ONE DataFrame per Arrow
-    batch (per-chunk DataFrame construction dominated the stubbed-kernel
-    profile). Footprint columns pass through for the zonal match."""
-    if radius != 1:
-        raise ValueError("fused image stats kernel supports radius=1")
-
-    def _run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not len(pdf):
-                continue
-            keys_all = pdf["image_key"].to_numpy(np.int64)
-            ws = pdf["w"].to_numpy(np.int32)
-            hs = pdf["h"].to_numpy(np.int32)
-            bbox = pdf[["minx", "miny", "maxx", "maxy"]].to_numpy(np.float64)
-            n = len(keys_all)
-            order = np.lexsort((keys_all, hs, ws))
-            out_keys = keys_all[order]
-            out_bbox = bbox[order]
-            sum_v = np.empty(n, np.int64)
-            min_v = np.empty(n, np.int64)
-            max_v = np.empty(n, np.int64)
-            focal_sum = np.empty(n, np.int64)
-            focal_cnt = np.empty(n, np.int64)
-            n_tiles = np.empty(n, np.int64)
-            n_px = np.empty(n, np.int64)
-            i = 0
-            while i < n:
-                w, h = int(ws[order[i]]), int(hs[order[i]])
-                j = i
-                while j < n and ws[order[j]] == w and hs[order[j]] == h:
-                    j += 1
-                nt = -(-w // tile) * -(-h // tile)
-                for c0 in range(i, j, CHUNK):
-                    c1 = min(c0 + CHUNK, j)
-                    s, mn, mx, fsum, fcnt = _image_stats_chunk(
-                        out_keys[c0:c1], w, h, radius
-                    )
-                    sum_v[c0:c1] = s
-                    min_v[c0:c1] = mn
-                    max_v[c0:c1] = mx
-                    focal_sum[c0:c1] = fsum
-                    focal_cnt[c0:c1] = fcnt
-                n_tiles[i:j] = nt
-                n_px[i:j] = w * h
-                i = j
-            yield pd.DataFrame(
-                {
-                    "image_key": out_keys,
-                    "minx": out_bbox[:, 0], "miny": out_bbox[:, 1],
-                    "maxx": out_bbox[:, 2], "maxy": out_bbox[:, 3],
-                    "n_tiles": n_tiles, "n_px": n_px,
-                    "sum_v": sum_v, "min_v": min_v, "max_v": max_v,
-                    "focal_sum": focal_sum, "focal_cnt": focal_cnt,
-                }
-            )
-
-    schema = (
-        "image_key long, minx double, miny double, maxx double, maxy double, "
-        "n_tiles long, n_px long, sum_v long, min_v long, max_v long, "
-        "focal_sum long, focal_cnt long"
-    )
-    return images.select(
-        "image_key", "w", "h", "minx", "miny", "maxx", "maxy"
-    ).mapInPandas(_run, schema=schema)
-
-
-STAT_COLS = ["n_tiles", "n_px", "sum_v", "min_v", "max_v", "focal_sum", "focal_cnt"]
-
-
-def zonal_rollup_df(img_stats: DataFrame, zindex_b) -> DataFrame:
-    """Map-side spatial match + PARTIAL per-zone aggregation: the
-    image×zone pair list (≈27 pairs/image at sf0.1 — tens of millions of
-    rows) is never materialized or shuffled; each task emits ≤|zones|
-    partial rows and only those shuffle to the final groupBy. This is
-    aggregation pushdown through the spatial join — the shape that keeps
-    the 10^12-image job's shuffle O(tasks × zones), not O(pairs)."""
-
-    def _run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        zx = zindex_b.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            rects = pdf[["minx", "miny", "maxx", "maxy"]].to_numpy(np.float64)
-            qi, zi = zx.match(rects, "intersects")
-            if not len(qi):
-                continue
-            m = pd.DataFrame({"zone_id": zx.zone_ids[zi]})
-            for c in STAT_COLS:
-                m[c] = pdf[c].to_numpy()[qi]
-            g = m.groupby("zone_id", sort=False)
-            out = g.agg(
-                n_images=("n_px", "size"),
-                n_tiles=("n_tiles", "sum"),
-                n_px=("n_px", "sum"),
-                sum_v=("sum_v", "sum"),
-                min_v=("min_v", "min"),
-                max_v=("max_v", "max"),
-                focal_sum=("focal_sum", "sum"),
-                focal_cnt=("focal_cnt", "sum"),
-            ).reset_index()
-            yield out
-
-    schema = (
-        "zone_id long, n_images long, n_tiles long, n_px long, sum_v long, "
-        "min_v long, max_v long, focal_sum long, focal_cnt long"
-    )
-    partials = img_stats.mapInPandas(_run, schema=schema)
-    return partials.groupBy("zone_id").agg(
-        F.sum("n_images").alias("n_images"),
-        F.sum("n_tiles").alias("n_tiles"),
-        F.sum("n_px").alias("n_px"),
-        F.sum("sum_v").alias("sum_v"),
-        F.min("min_v").alias("min_v"),
-        F.max("max_v").alias("max_v"),
-        F.round(F.sum("focal_sum") / F.sum("focal_cnt"), 6).alias("mean_focal"),
-    )
-
-
 # ------------------------------------------------------------- pipeline
 
 def _derive_footprints(keys: np.ndarray, replicate: int):
@@ -414,73 +304,96 @@ def _derive_footprints(keys: np.ndarray, replicate: int):
     return w, h, bbox
 
 
-def _zone_partials_fused(zindex_b, tile: int, radius: int, replicate: int):
-    """One mapInPandas body = footprint derivation + kernels + per-image
-    rollup + STRtree match + per-zone partial agg. A single JVM↔Python
-    Arrow crossing per task; only ≤|zones| partial rows leave each task."""
+def _zone_partials(zx, ws, hs, bbox, keys, pixels, tile: int, radius: int):
+    """The zonal partial body both north stars run, once per task:
+    per-image band + focal stats over same-shape CHUNK stacks →
+    STRtree match of the footprints → per-zone partial agg. Yields one
+    RecordBatch of at most |zones| rows (none when no image meets a
+    zone). ``pixels(rows, w, h)`` returns the (m, h, w) uint8 stack of
+    ``rows`` (indices into ``ws``/``hs``/``bbox``), all of shape (w, h)."""
+    import pyarrow as pa
 
-    def _run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        zx = zindex_b.value
-        # consume the whole partition at once: the per-zone refine loop
-        # then runs once per TASK (not once per Arrow batch), and the
-        # zonal partial has at most |zones| rows per task
-        batches = [p for p in it if len(p)]
-        if not batches:
+    order, runs = shape_runs(ws, hs, keys)
+    n = len(order)
+    sum_v, min_v, max_v, focal_sum, focal_cnt, n_tiles, n_px = np.empty((7, n), np.int64)
+    for i, j, w, h in runs:
+        for c0 in range(i, j, CHUNK):
+            c1 = min(c0 + CHUNK, j)
+            (
+                sum_v[c0:c1], min_v[c0:c1], max_v[c0:c1],
+                focal_sum[c0:c1], focal_cnt[c0:c1],
+            ) = _stats_from_grid(pixels(order[c0:c1], w, h), radius)
+        n_tiles[i:j] = -(-w // tile) * -(-h // tile)
+        n_px[i:j] = w * h
+    qi, zi = zx.match(bbox[order], "intersects")
+    if not len(qi):
+        return
+    m = pd.DataFrame(
+        {
+            "zone_id": zx.zone_ids[zi],
+            "n_tiles": n_tiles[qi], "n_px": n_px[qi],
+            "sum_v": sum_v[qi], "min_v": min_v[qi], "max_v": max_v[qi],
+            "focal_sum": focal_sum[qi], "focal_cnt": focal_cnt[qi],
+        }
+    )
+    out = m.groupby("zone_id", sort=False).agg(
+        n_images=("n_px", "size"),
+        n_tiles=("n_tiles", "sum"),
+        n_px=("n_px", "sum"),
+        sum_v=("sum_v", "sum"),
+        min_v=("min_v", "min"),
+        max_v=("max_v", "max"),
+        focal_sum=("focal_sum", "sum"),
+        focal_cnt=("focal_cnt", "sum"),
+    ).reset_index()
+    yield pa.RecordBatch.from_pandas(out.astype(np.int64), preserve_index=False)
+
+
+def _zone_stats(rows: DataFrame, sf_dir: str, input_step, *args) -> DataFrame:
+    """Broadcast the zones, run ``input_step(zindex_b, *args)`` as ONE
+    mapInArrow per task, and finish the per-zone stats in one tiny
+    groupBy: aggregation pushdown through the spatial join, so the
+    image×zone pair list is never materialized or shuffled — only
+    ≤|zones| partial rows per task are."""
+    from rsgislib_spark.operators.spatial_join import ZoneIndex
+
+    zindex_b = rows.sparkSession.sparkContext.broadcast(
+        ZoneIndex.from_pandas(load_zones_pdf(sf_dir))
+    )
+    schema = (
+        "zone_id long, n_images long, n_tiles long, n_px long, sum_v long, "
+        "min_v long, max_v long, focal_sum long, focal_cnt long"
+    )
+    partials = rows.mapInArrow(input_step(zindex_b, *args), schema=schema)
+    return partials.groupBy("zone_id").agg(
+        F.sum("n_images").alias("n_images"),
+        F.sum("n_tiles").alias("n_tiles"),
+        F.sum("n_px").alias("n_px"),
+        F.sum("sum_v").alias("sum_v"),
+        F.min("min_v").alias("min_v"),
+        F.max("max_v").alias("max_v"),
+        F.round(F.sum("focal_sum") / F.sum("focal_cnt"), 6).alias("mean_focal"),
+    )
+
+
+def _zone_partials_fused(zindex_b, tile: int, radius: int, replicate: int):
+    """Input step of :func:`north_star`: only the 8-byte image_key
+    crosses the Arrow boundary; footprints are derived and pixels
+    synthesized in-kernel (:func:`lattice_grid`)."""
+
+    def _run(it):
+        # consume the whole partition at once: the zone match then runs
+        # once per TASK (not once per Arrow batch), and the zonal partial
+        # has at most |zones| rows per task
+        keys = [codecs.arrow_batch_cols(b, "image_key")[0] for b in it if b.num_rows]
+        if not keys:
             return
-        for pdf in [pd.concat(batches, ignore_index=True) if len(batches) > 1 else batches[0]]:
-            keys_all = pdf["image_key"].to_numpy(np.int64)
-            ws, hs, bbox = _derive_footprints(keys_all, replicate)
-            n = len(keys_all)
-            order = np.lexsort((keys_all, hs, ws))
-            sum_v = np.empty(n, np.int64)
-            min_v = np.empty(n, np.int64)
-            max_v = np.empty(n, np.int64)
-            focal_sum = np.empty(n, np.int64)
-            focal_cnt = np.empty(n, np.int64)
-            n_tiles = np.empty(n, np.int64)
-            n_px = np.empty(n, np.int64)
-            i = 0
-            while i < n:
-                w, h = int(ws[order[i]]), int(hs[order[i]])
-                j = i
-                while j < n and ws[order[j]] == w and hs[order[j]] == h:
-                    j += 1
-                for c0 in range(i, j, CHUNK):
-                    c1 = min(c0 + CHUNK, j)
-                    s, mn, mx, fsum, fcnt = _image_stats_chunk(
-                        keys_all[order[c0:c1]], w, h, radius
-                    )
-                    sum_v[c0:c1] = s
-                    min_v[c0:c1] = mn
-                    max_v[c0:c1] = mx
-                    focal_sum[c0:c1] = fsum
-                    focal_cnt[c0:c1] = fcnt
-                n_tiles[i:j] = -(-w // tile) * -(-h // tile)
-                n_px[i:j] = w * h
-                i = j
-            rects = bbox[order]
-            qi, zi = zx.match(rects, "intersects")
-            if not len(qi):
-                continue
-            m = pd.DataFrame(
-                {
-                    "zone_id": zx.zone_ids[zi],
-                    "n_tiles": n_tiles[qi], "n_px": n_px[qi],
-                    "sum_v": sum_v[qi], "min_v": min_v[qi], "max_v": max_v[qi],
-                    "focal_sum": focal_sum[qi], "focal_cnt": focal_cnt[qi],
-                }
-            )
-            g = m.groupby("zone_id", sort=False)
-            yield g.agg(
-                n_images=("n_px", "size"),
-                n_tiles=("n_tiles", "sum"),
-                n_px=("n_px", "sum"),
-                sum_v=("sum_v", "sum"),
-                min_v=("min_v", "min"),
-                max_v=("max_v", "max"),
-                focal_sum=("focal_sum", "sum"),
-                focal_cnt=("focal_cnt", "sum"),
-            ).reset_index()
+        keys = np.concatenate(keys).astype(np.int64)
+        ws, hs, bbox = _derive_footprints(keys, replicate)
+        yield from _zone_partials(
+            zindex_b.value, ws, hs, bbox, keys,
+            lambda rows, w, h: lattice_grid(keys[rows], w, h), tile, radius,
+        )
 
     return _run
 
@@ -497,33 +410,14 @@ def north_star(
     tiler/kernels/per-image rollup/STRtree match/zonal partials] → one
     tiny shuffle → final agg. No pair materialization, no pixel shuffle,
     one Python stage."""
-    from rsgislib_spark.operators.spatial_join import ZoneIndex
-
     imgs = images_df(spark, sf_dir, replicate)
     if n_partitions is None:
         # the part scan is 1-2 partitions at bench scale — without an
         # explicit width the whole fused kernel would run on 1-2 cores
         n_partitions = spark.sparkContext.defaultParallelism * 4
     imgs = imgs.repartition(n_partitions, "image_key")
-
-    zindex_b = spark.sparkContext.broadcast(
-        ZoneIndex.from_pandas(load_zones_pdf(sf_dir))
-    )
-    schema = (
-        "zone_id long, n_images long, n_tiles long, n_px long, sum_v long, "
-        "min_v long, max_v long, focal_sum long, focal_cnt long"
-    )
-    partials = imgs.select("image_key").mapInPandas(
-        _zone_partials_fused(zindex_b, tile, 1, max(replicate, 1)), schema=schema
-    )
-    return partials.groupBy("zone_id").agg(
-        F.sum("n_images").alias("n_images"),
-        F.sum("n_tiles").alias("n_tiles"),
-        F.sum("n_px").alias("n_px"),
-        F.sum("sum_v").alias("sum_v"),
-        F.min("min_v").alias("min_v"),
-        F.max("max_v").alias("max_v"),
-        F.round(F.sum("focal_sum") / F.sum("focal_cnt"), 6).alias("mean_focal"),
+    return _zone_stats(
+        imgs.select("image_key"), sf_dir, _zone_partials_fused, tile, 1, max(replicate, 1)
     )
 
 
@@ -561,8 +455,6 @@ def encode_images_df(
     ``decode(encode(grid)) == grid`` exactly and downstream stats stay
     oracle-provable. This is the sandbox stand-in for scanning the stored
     ``bytes`` column of the Iceberg table."""
-    from rsgislib_spark.kernels import codecs
-
     imgs = images_df(spark, sf_dir, replicate)
     if where is not None:
         # Subset BEFORE the encode stage: a filter applied by the caller
@@ -578,26 +470,19 @@ def encode_images_df(
             if not len(pdf):
                 continue
             keys = pdf["image_key"].to_numpy(np.int64)
-            ws = pdf["w"].to_numpy(np.int32)
-            hs = pdf["h"].to_numpy(np.int32)
+            order, runs = shape_runs(
+                pdf["w"].to_numpy(np.int32), pdf["h"].to_numpy(np.int32), keys
+            )
             bufs, fmts = [], []
-            order = np.lexsort((keys, hs, ws))
-            out = pdf.iloc[order].reset_index(drop=True)
-            okeys = keys[order]
-            i = 0
-            while i < len(order):
-                w, h = int(ws[order[i]]), int(hs[order[i]])
-                j = i
-                while j < len(order) and ws[order[j]] == w and hs[order[j]] == h:
-                    j += 1
+            for i, j, w, h in runs:
                 for c0 in range(i, j, CHUNK):
-                    grp = okeys[c0 : min(c0 + CHUNK, j)]
+                    grp = keys[order[c0 : min(c0 + CHUNK, j)]]
                     grid = lattice_grid(grp, w, h)
                     for t, kk in enumerate(grp):
                         fmt = "raw" if kk % 2 == 0 else "png"
                         bufs.append(codecs.encode_image(grid[t], fmt))
                         fmts.append(fmt)
-                i = j
+            out = pdf.iloc[order].reset_index(drop=True)
             out["bytes"] = bufs
             out["fmt"] = fmts
             yield out[
@@ -612,99 +497,39 @@ def encode_images_df(
 
 
 def _zone_partials_decoded(zindex_b, tile: int, radius: int):
-    """Fused decode → kernels → per-image rollup → STRtree match →
-    per-zone partial agg over BYTES-BEARING rows: the executor reads real
-    pixel payloads exactly as ``RSGISCalcImage::calcImage`` does
-    (src/img/RSGISCalcImage.cpp:149-230 — the reference executor always
-    decodes pixels before the per-pixel callback). Decode is per image
-    (variable-size codec payloads), the stats kernels run on same-shape
-    CHUNK stacks like the synthetic path."""
-    from rsgislib_spark.kernels import codecs
+    """Input step of :func:`north_star_decoded` over BYTES-BEARING rows:
+    the executor reads real pixel payloads exactly as
+    ``RSGISCalcImage::calcImage`` does (src/img/RSGISCalcImage.cpp:149-230
+    — the reference executor always decodes pixels before the per-pixel
+    callback). Each payload decodes once (``codecs.decode_image``) into
+    its slot of a preallocated same-shape stack."""
 
     def _run(it):
-        import pyarrow as pa
-
-        zx = zindex_b.value
-        # Arrow RecordBatches, NOT pandas: converting a binary column to
-        # pandas materializes one Python bytes object per row — measured
-        # 4.4× slower end-to-end than reading the Arrow buffers directly
-        # (22.1 s vs 5.0 s pass-through on the 50k-image bench table).
-        batches = [b for b in it if b.num_rows]
-        if not batches:
-            return
-        ws_l, hs_l, bbox_l, bufs, fmts = [], [], [], [], []
-        for b in batches:
-            cols = {name: b.column(i) for i, name in enumerate(b.schema.names)}
-            ws_l.append(cols["w"].to_numpy(zero_copy_only=False).astype(np.int32))
-            hs_l.append(cols["h"].to_numpy(zero_copy_only=False).astype(np.int32))
-            bbox_l.append(
-                np.stack(
-                    [cols[c].to_numpy(zero_copy_only=False).astype(np.float64)
-                     for c in ("minx", "miny", "maxx", "maxy")], axis=1
-                )
+        cols = [
+            codecs.arrow_batch_cols(
+                b, "bytes", "fmt", "w", "h", "minx", "miny", "maxx", "maxy"
             )
-            bufs.extend(codecs.arrow_binary_views(cols["bytes"]))
-            fmts.extend(cols["fmt"].to_pylist())
-        ws = np.concatenate(ws_l)
-        hs = np.concatenate(hs_l)
-        bbox = np.concatenate(bbox_l, axis=0)
-        n = len(ws)
-        order = np.lexsort((np.arange(n), hs, ws))
-        sum_v = np.empty(n, np.int64)
-        min_v = np.empty(n, np.int64)
-        max_v = np.empty(n, np.int64)
-        focal_sum = np.empty(n, np.int64)
-        focal_cnt = np.empty(n, np.int64)
-        n_tiles = np.empty(n, np.int64)
-        n_px = np.empty(n, np.int64)
-        i = 0
-        while i < n:
-            w, h = int(ws[order[i]]), int(hs[order[i]])
-            j = i
-            while j < n and ws[order[j]] == w and hs[order[j]] == h:
-                j += 1
-            for c0 in range(i, j, CHUNK):
-                c1 = min(c0 + CHUNK, j)
-                stack = np.empty((c1 - c0, h, w), dtype=np.uint8)
-                for t, oi in enumerate(order[c0:c1]):
-                    stack[t] = codecs.decode_image(bufs[oi], fmts[oi], h, w)
-                s, mn, mx, fsum, fcnt = _stats_from_grid(stack, radius)
-                sum_v[c0:c1] = s
-                min_v[c0:c1] = mn
-                max_v[c0:c1] = mx
-                focal_sum[c0:c1] = fsum
-                focal_cnt[c0:c1] = fcnt
-            n_tiles[i:j] = -(-w // tile) * -(-h // tile)
-            n_px[i:j] = w * h
-            i = j
-        rects = bbox[order]
-        qi, zi = zx.match(rects, "intersects")
-        if not len(qi):
+            for b in it
+            if b.num_rows
+        ]
+        if not cols:
             return
-        m = pd.DataFrame(
-            {
-                "zone_id": zx.zone_ids[zi],
-                "n_tiles": n_tiles[qi], "n_px": n_px[qi],
-                "sum_v": sum_v[qi], "min_v": min_v[qi], "max_v": max_v[qi],
-                "focal_sum": focal_sum[qi], "focal_cnt": focal_cnt[qi],
-            }
+        bufs = [v for c in cols for v in c[0]]
+        fmts = [f for c in cols for f in c[1]]
+        ws, hs = (np.concatenate([c[k] for c in cols]).astype(np.int32) for k in (2, 3))
+        bbox = np.stack(
+            [np.concatenate([c[k] for c in cols]).astype(np.float64) for k in range(4, 8)],
+            axis=1,
         )
-        g = m.groupby("zone_id", sort=False)
-        out = g.agg(
-            n_images=("n_px", "size"),
-            n_tiles=("n_tiles", "sum"),
-            n_px=("n_px", "sum"),
-            sum_v=("sum_v", "sum"),
-            min_v=("min_v", "min"),
-            max_v=("max_v", "max"),
-            focal_sum=("focal_sum", "sum"),
-            focal_cnt=("focal_cnt", "sum"),
-        ).reset_index()
-        yield pa.RecordBatch.from_pandas(
-            out.astype(
-                {c: np.int64 for c in out.columns if c != "zone_id"}
-            ),
-            preserve_index=False,
+
+        def pixels(rows, w, h):
+            stack = np.empty((len(rows), h, w), dtype=np.uint8)
+            for t, r in enumerate(rows):
+                stack[t] = codecs.decode_image(bufs[r], fmts[r], h, w)
+            return stack
+
+        yield from _zone_partials(
+            zindex_b.value, ws, hs, bbox, np.arange(len(ws)), pixels, tile, radius
         )
 
     return _run
@@ -728,26 +553,9 @@ def north_star_decoded(
     by default the encode stage feeds the decode stage in-plan (bytes
     cross the Arrow boundary between the two Python stages — the
     sandbox stand-in for a storage scan; pixels still never shuffle)."""
-    from rsgislib_spark.operators.spatial_join import ZoneIndex
-
     if images_bytes is None:
         images_bytes = encode_images_df(spark, sf_dir, n_partitions, replicate)
-    zindex_b = spark.sparkContext.broadcast(
-        ZoneIndex.from_pandas(load_zones_pdf(sf_dir))
-    )
-    schema = (
-        "zone_id long, n_images long, n_tiles long, n_px long, sum_v long, "
-        "min_v long, max_v long, focal_sum long, focal_cnt long"
-    )
-    partials = images_bytes.select(
-        "bytes", "fmt", "w", "h", "minx", "miny", "maxx", "maxy"
-    ).mapInArrow(_zone_partials_decoded(zindex_b, tile, 1), schema=schema)
-    return partials.groupBy("zone_id").agg(
-        F.sum("n_images").alias("n_images"),
-        F.sum("n_tiles").alias("n_tiles"),
-        F.sum("n_px").alias("n_px"),
-        F.sum("sum_v").alias("sum_v"),
-        F.min("min_v").alias("min_v"),
-        F.max("max_v").alias("max_v"),
-        F.round(F.sum("focal_sum") / F.sum("focal_cnt"), 6).alias("mean_focal"),
+    return _zone_stats(
+        images_bytes.select("bytes", "fmt", "w", "h", "minx", "miny", "maxx", "maxy"),
+        sf_dir, _zone_partials_decoded, tile, 1,
     )

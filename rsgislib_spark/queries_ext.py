@@ -2704,11 +2704,10 @@ def q60_image_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     additionally asserted in tests/test_operators.py. Data is the
     deterministic seeded generator (datagen) — no external input.
 
-    Payloads cross the boundary via mapInArrow + arrow_binary_views and
-    lossy decode (both the stored payload and the re-encode roundtrip)
-    batches through decode_dct_batch — the repo's Arrow-boundary rule;
-    only the re-ENCODE is per-image (each image is an independent
-    vectorized DCT+zlib stream; there is no shared work to batch)."""
+    Payloads cross the boundary via mapInArrow + codecs.arrow_batch_cols
+    (zero-copy views) — the repo's Arrow-boundary rule; each stored
+    payload and its re-encode roundtrip decode once through
+    codecs.decode_image, so no row depends on its batch mates."""
     from rsgislib_spark import datagen
     from rsgislib_spark.kernels import codecs
 
@@ -2725,35 +2724,14 @@ def q60_image_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in it:
             if not b.num_rows:
                 continue
-            cols = {name: b.column(i) for i, name in enumerate(b.schema.names)}
-            hs = cols["h"].to_numpy(zero_copy_only=False)
-            ws = cols["w"].to_numpy(zero_copy_only=False)
-            fmts = cols["fmt"].to_pylist()
-            phashes = cols["phash"].to_numpy(zero_copy_only=False)
-            views = codecs.arrow_binary_views(cols["bytes"])
-            jpg_idx = [
-                k for k in range(b.num_rows)
-                if fmts[k] == "jpg" and codecs.is_rsdc(views[k])
-            ]
-            jpg_dec = dict(
-                zip(jpg_idx, codecs.decode_dct_batch([views[k] for k in jpg_idx]))
-            )
-            imgs, re_bufs = [], []
-            for k in range(b.num_rows):
-                img = jpg_dec.get(k)
-                if img is None:
-                    img = codecs.decode_image(views[k], fmts[k], int(hs[k]), int(ws[k]))
-                imgs.append(img)
-                re_bufs.append(codecs.encode_image(img, fmts[k]))
-            jpg_rt = dict(
-                zip(jpg_idx, codecs.decode_dct_batch([re_bufs[k] for k in jpg_idx]))
+            views, ws, hs, fmts, phashes = codecs.arrow_batch_cols(
+                b, "bytes", "w", "h", "fmt", "phash"
             )
             out = {"fmt": [], "px_mean": [], "px_std": [], "phash_ok": [], "psnr_ok": []}
             for k in range(b.num_rows):
-                img = imgs[k]
-                rt = jpg_rt.get(k)
-                if rt is None:
-                    rt = codecs.decode_image(re_bufs[k], fmts[k], int(hs[k]), int(ws[k]))
+                h, w = int(hs[k]), int(ws[k])
+                img = codecs.decode_image(views[k], fmts[k], h, w)
+                rt = codecs.decode_image(codecs.encode_image(img, fmts[k]), fmts[k], h, w)
                 p_db = codecs.psnr(img.astype(np.float64), rt.astype(np.float64))
                 out["fmt"].append(fmts[k])
                 out["px_mean"].append(float(img.mean()))

@@ -48,35 +48,6 @@ def incremental_event_counts(
     q.awaitTermination()
 
 
-def incremental_tile_pipeline(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    tile: int = 64,
-) -> None:
-    """availableNow image→tiles: newly landed image parquet files are
-    decoded and tiled; previously processed files are skipped via the
-    checkpoint. This is the streaming face of operators.tiler."""
-    from rsgislib_spark.operators.tiler import TILE_SCHEMA, tile_images
-
-    schema = (
-        "image_id string, bytes binary, w int, h int, fmt string, "
-        "caption string, phash long, minx double, miny double"
-    )
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    tiles = tile_images(stream, tile, tile, mode="simple")
-    q = (
-        tiles.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def streaming_image_features(
     spark: SparkSession,
     src_dir: str,

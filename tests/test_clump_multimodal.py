@@ -90,6 +90,61 @@ def test_image_features_real_payload(spark):
     assert all(len(t) == 16 for t in out["thumb16"])
 
 
+def test_image_features_batch_independent(spark):
+    """image_features gives the same row whatever rows share its Arrow
+    batch (one row per batch vs the default), and that row equals the
+    features of its own per-payload codecs.decode_image. The reference
+    runs in a Spark task: the lossy IDCT's float32 GEMM can round
+    differently under another BLAS thread count, and get_spark gives
+    every Python worker one BLAS thread."""
+    from rsgislib_spark import datagen
+    from rsgislib_spark.operators.multimodal import image_features
+
+    pdf = datagen.gen_images(72, seed=7)
+    assert set(pdf["fmt"]) == {"raw", "png", "jpg"}
+    sdf = spark.createDataFrame(pdf[["image_id", "bytes", "w", "h", "fmt"]]).coalesce(2)
+
+    def features():
+        return {
+            r["image_id"]: (r["px_mean"], r["px_std"], list(r["thumb16"]), r["phash"])
+            for r in image_features(sdf).collect()
+        }
+
+    def reference(rec):
+        from rsgislib_spark.kernels import codecs
+        from rsgislib_spark.kernels.phash import phash64
+        from rsgislib_spark.operators.multimodal import resize_nearest
+
+        image_id, buf, fmt, h, w = rec
+        img = codecs.decode_image(buf, fmt, h, w)
+        n = img.size
+        m = int(img.sum(dtype=np.int64)) / n
+        sq = int((img.astype(np.int64) ** 2).sum())
+        return image_id, (
+            m,
+            float(np.sqrt(max(sq / n - m * m, 0.0))),
+            resize_nearest(img, 4, 4).astype(np.float64).ravel().tolist(),
+            int(phash64(img)),
+        )
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    batched = features()
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        single = features()
+    finally:
+        spark.conf.set(key, old)
+    recs = [
+        (r.image_id, bytes(r.bytes), r.fmt, int(r.h), int(r.w))
+        for r in pdf.itertuples(index=False)
+    ]
+    want = dict(spark.sparkContext.parallelize(recs, 4).map(reference).collect())
+    assert len(batched) == 72
+    assert single == batched
+    assert batched == want
+
+
 def test_resize_kernels():
     from rsgislib_spark.operators.multimodal import resize_mean2, resize_nearest
 
@@ -135,6 +190,43 @@ def test_video_frame_sampling(spark):
     assert [r["frame_no"] for r in out] == [0, 5, 10]
     got = np.frombuffer(out[1]["frame"], dtype=np.uint8).reshape(h, w)
     assert np.array_equal(got, frames[5])
+
+
+def test_video_frames_split_across_batches(spark, monkeypatch):
+    """An output batch is flushed before its frame bytes would pass
+    MAX_FRAME_BATCH_BYTES (Arrow binary offsets are int32): with the
+    limit lowered to three frames, clips split mid-way over several
+    batches and the rows equal the unsplit output; a frame larger than
+    the limit raises."""
+    from rsgislib_spark.operators import multimodal as mm
+
+    h, w = 6, 5
+    rng = np.random.Generator(np.random.Philox(key=[11, 3]))
+    clips = {f"v{i}": rng.integers(0, 256, (n, h, w)).astype(np.uint8)
+             for i, n in enumerate((12, 7, 20))}
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            {"clip_id": list(clips), "bytes": [c.tobytes() for c in clips.values()],
+             "fmt": ["rawframes"] * 3, "h": [h] * 3, "w": [w] * 3}
+        )
+    ).coalesce(1)
+
+    def rows():
+        return sorted(
+            (r["clip_id"], r["frame_no"], r["h"], r["w"], bytes(r["frame"]))
+            for r in mm.sample_video_frames(df, every_k=2).collect()
+        )
+
+    whole = rows()
+    assert whole == sorted(
+        (cid, no, h, w, c[no].tobytes())
+        for cid, c in clips.items() for no in range(0, len(c), 2)
+    )
+    monkeypatch.setattr(mm, "MAX_FRAME_BATCH_BYTES", 3 * h * w + 1)
+    assert rows() == whole
+    monkeypatch.setattr(mm, "MAX_FRAME_BATCH_BYTES", h * w - 1)
+    with pytest.raises(Exception, match="output batch limit"):
+        rows()
 
 
 def test_audio_external_backend_seam(monkeypatch):
@@ -199,13 +291,15 @@ def test_soundfile_parity_when_installed(spark):
 
 
 def test_image_stats_fused_matches_tile_stats(spark):
-    from rsgislib_spark.pipeline import image_stats_df, tile_stats_df
+    """The per-image kernel north_star runs (_stats_from_grid over
+    lattice_grid, tiles counted as in _zone_partials) equals the
+    per-tile kernel of tile_stats_df rolled up per image."""
+    from rsgislib_spark.pipeline import TILE, _stats_from_grid, lattice_grid, tile_stats_df
 
+    shapes = {7: (100, 64), 13: (200, 200)}
     imgs = spark.createDataFrame(
-        [(7, 100, 64, 0.0, 0.0, 1000.0, 640.0), (13, 200, 200, 5.0, 5.0, 2005.0, 2005.0)],
-        "image_key long, w int, h int, minx double, miny double, maxx double, maxy double",
+        [(k, w, h) for k, (w, h) in shapes.items()], "image_key long, w int, h int"
     )
-    fused = {r["image_key"]: r.asDict() for r in image_stats_df(imgs).collect()}
     agg = {
         r["image_key"]: r.asDict()
         for r in tile_stats_df(imgs)
@@ -221,9 +315,16 @@ def test_image_stats_fused_matches_tile_stats(spark):
         )
         .collect()
     }
-    for k in fused:
-        for c in ("n_tiles", "n_px", "sum_v", "min_v", "max_v", "focal_sum", "focal_cnt"):
-            assert fused[k][c] == agg[k][c], (k, c)
+    assert set(agg) == set(shapes)
+    for k, (w, h) in shapes.items():
+        s, mn, mx, fsum, fcnt = _stats_from_grid(lattice_grid(np.array([k]), w, h), 1)
+        fused = {
+            "n_tiles": -(-w // TILE) * -(-h // TILE), "n_px": w * h,
+            "sum_v": s[0], "min_v": mn[0], "max_v": mx[0],
+            "focal_sum": fsum[0], "focal_cnt": fcnt,
+        }
+        for c, v in fused.items():
+            assert v == agg[k][c], (k, c)
 
 
 def test_north_star_runs_and_replicates(spark):
