@@ -187,21 +187,6 @@ def connected_components(
     )
 
 
-def dedup_groups(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_seeds: int = DEFAULT_SEEDS,
-    n_bands: int = DEFAULT_BANDS,
-) -> DataFrame:
-    """End-to-end near-dup GROUP assignment: MinHash+LSH candidate pairs
-    → connected components. Returns (node, label): every doc that has at
-    least one candidate near-dup, labelled by the min doc id of its
-    duplicate group (the canonical survivor under keep-first policy)."""
-    pairs = minhash_band_pairs(df, id_col, text_col, n_seeds, n_bands)
-    return connected_components(pairs, "id_a", "id_b")
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     threshold: float = 0.6,

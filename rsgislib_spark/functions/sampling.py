@@ -34,17 +34,6 @@ def train_test_split(
     return df.filter(b >= test_buckets), df.filter(b < test_buckets)
 
 
-def stratified_counts(df: DataFrame, strata: str, key: Column, keep_buckets: int = 2,
-                      n_buckets: int = 16) -> DataFrame:
-    """Per-stratum deterministic subsample then count — histo_sampling
-    (rastergis.cpp:2127-2147) shape."""
-    return (
-        df.filter(hash_bucket(key, n_buckets) < keep_buckets)
-        .groupBy(strata)
-        .agg(F.count("*").alias("n_sampled"))
-    )
-
-
 def undersample_balanced(df: DataFrame, class_col: str, key: Column) -> DataFrame:
     """Random-undersample every class to the MINORITY class size
     (classification/classimblearn.random_undersample_smpls:230, imblearn

@@ -57,17 +57,6 @@ def ndvi(red: np.ndarray, nir: np.ndarray) -> np.ndarray:
     return out
 
 
-def ndwi(green: np.ndarray, nir: np.ndarray) -> np.ndarray:
-    return ndvi(nir, green)  # same ratio shape, (green-nir)/(green+nir)
-
-
-def evi2(red: np.ndarray, nir: np.ndarray) -> np.ndarray:
-    """EVI2 = 2.5 (nir-red)/(nir + 2.4 red + 1) (calcindices.py:637-689)."""
-    red = red.astype(np.float64)
-    nir = nir.astype(np.float64)
-    return 2.5 * (nir - red) / (nir + 2.4 * red + 1.0)
-
-
 def brightness(bands: list) -> np.ndarray:
     """Mean of bands (calcindices.py whiteness/brightness family)."""
     return np.mean([b.astype(np.float64) for b in bands], axis=0)

@@ -59,27 +59,6 @@ def bbox_area(b) -> np.ndarray:
     return (b[:, 2] - b[:, 0]) * (b[:, 3] - b[:, 1])
 
 
-def buffer_bbox(b, buf: float):
-    b = np.asarray(b, dtype=np.float64).reshape(-1, 4).copy()
-    b[:, 0] -= buf
-    b[:, 1] -= buf
-    b[:, 2] += buf
-    b[:, 3] += buf
-    return b
-
-
-def grid_bbox(minx, miny, maxx, maxy, ncols: int, nrows: int):
-    """Split a bbox into an ncols×nrows grid of bboxes (row-major, top-left
-    first) — reference ``get_bbox_grid`` (geometrytools.py:443-506)."""
-    xs = np.linspace(minx, maxx, ncols + 1)
-    ys = np.linspace(miny, maxy, nrows + 1)
-    boxes = []
-    for r in range(nrows - 1, -1, -1):
-        for c in range(ncols):
-            boxes.append((xs[c], ys[r], xs[c + 1], ys[r + 1]))
-    return np.asarray(boxes, dtype=np.float64)
-
-
 # ------------------------------------------------------- polygon predicates
 
 

@@ -17,19 +17,17 @@
 
  - :func:`knn_points_bucketed` — the SCALE path (the north rule's "kNN
    neighbor lookup over cell-bucketed candidates"): both sides bucketed
-   to grid cells, candidates = query's k-ring of cells (equi-join on
-   ``cell_key``, no broadcast of the point table), exact refine + rank
-   ``<= k`` by (d2, nbr_id). A ring-escalation loop guarantees
+   to grid cells, candidates = query's k-ring of cells, exact refine +
+   rank ``<= k`` by (d2, nbr_id). A ring-escalation loop guarantees
    exactness: a query is resolved only when it has k candidates and its
    kth-neighbour distance is within the ring's coverage guarantee (any
    point outside ring R is at distance > R·cell), so bucketed ==
-   brute-force always. While the ring-exploded batch of remaining
-   queries and its candidates are small, a round is one Spark job that
-   broadcasts the batch to the points and is resolved on the driver;
-   past that the distributed loop (window rank, persist, anti-join,
-   emptiness check per round) takes the rest.
-   :func:`knn_features_bucketed` runs the same engine in d dimensions
-   on the distributed loop only.
+   brute-force always. A small query batch runs the loop inside one
+   Python pass over the points (each partition's exact local top-k,
+   merged on the driver); a large one runs it as a distributed loop of
+   cell equi-joins (window rank, persist, anti-join, emptiness check per
+   round). :func:`knn_features_bucketed` runs the same engine in d
+   dimensions on the distributed loop only.
 
  - :func:`radius_count_bucketed` — radius count on the same cell join
    (cell ≥ r ⇒ ring-1 covers the disk), replacing the O(N²) theta-join.
@@ -40,8 +38,9 @@ side is small (it is the labelled sample set by construction). The
 ``*_bucketed`` operators are the default at scale: candidates per query
 bounded by local density, skew handled by the same salting policy as
 the spatial join. Large query sides shuffle on the cell key only; an
-interactive batch is broadcast to the points instead and shuffles
-nothing.
+interactive batch travels to the points inside the one ``mapInArrow``
+pass, which shuffles nothing and returns at most k rows per query and
+partition.
 """
 
 from __future__ import annotations
@@ -53,7 +52,7 @@ from typing import Iterator, Sequence
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F
-from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 
 METRICS = ("euclidean", "manhattan", "chebyshev", "minkowski", "mahalanobis")
 SUMMARIES = ("mean", "median", "mode", "min", "max", "stddev")
@@ -66,13 +65,16 @@ GRID_DIM = 1 << 21
 #: Beyond this ring the (2r+1)² cell explode costs more than a plain
 #: cross-join of the (few) remaining queries × points.
 XJOIN_RING = 48
-#: Most candidate rows one driver-resolved kNN round collects, split
-#: evenly over the point table's partitions; past it the distributed
-#: loop takes the remaining queries (patchable in tests). It is also
-#: near the measured crossover: on a 4-core host a driver round ranked
-#: 1.6 M candidates in 1.0 s and 3.2 M in 2.2 s, the distributed loop
-#: took 2.2-2.3 s for either.
+#: Most candidate rows a one-pass kNN batch returns to the driver: a
+#: batch runs the pass only when its queries × k × the point table's
+#: partitions fit; past it the distributed loop takes the whole batch
+#: (patchable in tests).
 MAX_DRIVER_CANDIDATES = 2_000_000
+#: Most (query, point) candidate pairs one pass task holds at once: its
+#: candidate ranges are walked in windows of this many elements, so a
+#: hot cell costs time, not memory (read when the op is built; patchable
+#: in tests).
+KNN_ELEM_BUDGET = 1 << 19
 
 
 def _union_and_release(outs: list, persisted: list) -> DataFrame:
@@ -92,18 +94,15 @@ def _union_and_release(outs: list, persisted: list) -> DataFrame:
 
 
 def _extent(df: DataFrame, cols: Sequence[str]):
-    """One job: the per-column minima, maxima, the row count and the
-    highest partition id."""
-    return df.select(*cols, F.spark_partition_id().alias("_part")).agg(
-        *[F.min(c) for c in cols], *[F.max(c) for c in cols], F.count(F.lit(1)), F.max("_part")
-    ).first()
+    """One job: the per-column minima, maxima and the row count."""
+    return df.agg(*[F.min(c) for c in cols], *[F.max(c) for c in cols], F.count(F.lit(1))).first()
 
 
 def _ring_plan(pmin, pmax, qmin, qmax, n_points: int, k: int, cell: float, dist_thres: float):
-    """(first ring, forced last ring, mean point density) of a bucketed
-    kNN in d = len(pmin) dimensions, from the per-dimension point and
-    query extents (None reads 0). The forced last ring covers every
-    point, or the threshold disk when that is smaller."""
+    """(first ring, forced last ring) of a bucketed kNN in d = len(pmin)
+    dimensions, from the per-dimension point and query extents (None
+    reads 0). The forced last ring covers every point, or the threshold
+    disk when that is smaller."""
     pmin, pmax, qmin, qmax = ([float(v or 0.0) for v in vs] for vs in (pmin, pmax, qmin, qmax))
     d = len(pmin)
     span = max(b - a for a, b in zip(pmin, pmax))
@@ -129,7 +128,7 @@ def _ring_plan(pmin, pmax, qmin, qmax, n_points: int, k: int, cell: float, dist_
         ball = math.pi ** (d / 2.0) / math.gamma(d / 2.0 + 1.0)
         r_expect = ((k + 1) / (ball * density)) ** (1.0 / d)
         ring = max(1, int(math.ceil(r_expect / cell)))
-    return min(ring, max_ring), max_ring, density
+    return min(ring, max_ring), max_ring
 
 
 def _final_round(ring: int, max_ring: int, xjoin_ring: int) -> bool:
@@ -165,18 +164,144 @@ def _top_k_pandas(cand: pd.DataFrame, k: int) -> pd.DataFrame:
     return cand[cand["rank"] <= k]
 
 
-def _collect_top_k(cand: DataFrame, k: int, per_part: int) -> pd.DataFrame | None:
-    """One driver-resolved round: collect the candidate rows, at most
-    ``per_part`` + 1 from each partition, and rank them on the driver.
-    None when a partition holds more than ``per_part``."""
-    # row number within the partition: the low 33 bits of the id
-    row = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
-    got = cand.select("query_id", "nbr_id", "d2", row.alias("_row")).filter(
-        F.col("_row") <= per_part
-    ).toPandas()
-    if (got["_row"] == per_part).any():
+def _top_k_rows(q: np.ndarray, j: np.ndarray, d2: np.ndarray, pid: np.ndarray, k: int):
+    """:func:`_top_k` in numpy over candidate rows (query position ``q``,
+    point position ``j``, ``d2``): the first k per query by (d2, pid[j]),
+    sorted by (q, d2, pid[j])."""
+    if not len(q):
+        return q, j, d2
+    order = np.lexsort((pid[j], d2, q))
+    q, j, d2 = q[order], j[order], d2[order]
+    pos = np.arange(len(q))
+    start = np.maximum.accumulate(np.where(np.r_[True, q[1:] != q[:-1]], pos, 0))
+    keep = pos - start < k
+    return q[keep], j[keep], d2[keep]
+
+
+def _partition_top_k(
+    qid: np.ndarray, qx: np.ndarray, qy: np.ndarray,
+    pid: np.ndarray, px: np.ndarray, py: np.ndarray,
+    k: int, cell: float, dist_thres: float, exclude_self: bool, budget: int,
+):
+    """Exact top-k of every query over one partition's points — the ring
+    escalation of :func:`knn_points_bucketed` in numpy, planned by
+    :func:`_ring_plan` on the partition's own extent. The points are
+    sorted by their :func:`_xy_key` cell key, so one ring column of a
+    query is one ``searchsorted`` key range; the candidate ranges are
+    walked ``budget`` elements at a time, over groups of queries whose
+    ranges fit the budget too. d2 is ``0.0 + dx² + dy²`` in
+    the Spark expression's order. Returns (query position, point
+    position, d2) rows sorted by query, then (d2, pid)."""
+    none = (np.zeros(0, np.int64), np.zeros(0, np.int64), np.zeros(0))
+    if not len(px) or not len(qx):
+        return none
+    ring, max_ring = _ring_plan(
+        (px.min(), py.min()), (px.max(), py.max()), (qx.min(), qy.min()), (qx.max(), qy.max()),
+        len(px), k, cell, dist_thres,
+    )
+    keys = np.floor(px / cell).astype(np.int64) * GRID_DIM + np.floor(py / cell).astype(np.int64)
+    order = np.argsort(keys, kind="stable")
+    keys = keys[order]
+    qcx, qcy = np.floor(qx / cell).astype(np.int64), np.floor(qy / cell).astype(np.int64)
+    thres2 = dist_thres * dist_thres if np.isfinite(dist_thres) else None
+
+    def round_top_k(qs, ring, cross):
+        # candidate ranges (query seg_q[s], sorted points lo[s] .. lo[s] + n[s])
+        if cross:  # every point is a candidate
+            seg_q, lo, n = qs, np.zeros(len(qs), np.int64), np.full(len(qs), len(keys))
+        else:
+            col = (qcx[qs, None] + np.arange(-ring, ring + 1)) * GRID_DIM
+            lo = np.searchsorted(keys, (col + (qcy[qs] - ring)[:, None]).ravel(), "left")
+            hi = np.searchsorted(keys, (col + (qcy[qs] + ring)[:, None]).ravel(), "right")
+            seg_q, n = np.repeat(qs, 2 * ring + 1), hi - lo
+        cum = np.r_[0, np.cumsum(n)]
+        top = none
+        for s in range(0, int(cum[-1]), budget):
+            el = np.arange(s, min(s + budget, cum[-1]))
+            seg = np.searchsorted(cum, el, "right") - 1
+            q, j = seg_q[seg], order[lo[seg] + el - cum[seg]]
+            dx, dy = qx[q] - px[j], qy[q] - py[j]
+            d2 = 0.0 + dx * dx + dy * dy
+            keep = np.ones(len(q), bool)
+            if exclude_self:
+                keep &= qid[q] != pid[j]
+            if thres2 is not None:
+                keep &= d2 < thres2
+            top = _top_k_rows(
+                *(np.concatenate([a, b[keep]]) for a, b in zip(top, (q, j, d2))), pid, k
+            )
+        return top
+
+    todo = np.arange(len(qx))
+    outs = []
+    while todo.size:
+        ring = min(ring, max_ring)
+        final = _final_round(ring, max_ring, XJOIN_RING)
+        # queries in groups whose ring ranges also fit the budget
+        step = max(1, budget // (2 * ring + 1))
+        q, j, d2 = (np.concatenate(a) for a in zip(*(
+            round_top_k(todo[c : c + step], ring, final and ring > XJOIN_RING)
+            for c in range(0, len(todo), step)
+        )))
+        if final:
+            outs.append((q, j, d2))
+            break
+        kth = np.full(len(qx), -np.inf)
+        np.maximum.at(kth, q, d2)
+        ok = _resolved(np.bincount(q, minlength=len(qx))[todo], kth[todo], k, ring, cell)
+        keep = np.isin(q, todo[ok])
+        outs.append((q[keep], j[keep], d2[keep]))
+        todo = todo[~ok]
+        ring *= 4
+    return tuple(np.concatenate(a) for a in zip(*outs))
+
+
+def _local_top_k(
+    batch: pd.DataFrame, t: DataFrame, k: int, cell: float, dist_thres: float,
+    exclude_self: bool,
+) -> pd.DataFrame | None:
+    """A query batch's exact kNN in one Python pass over the points: a
+    ``mapInArrow`` over ``t`` (nbr_id, t0, t1) carries the batch in its
+    closure and returns each partition's local top-k
+    (:func:`_partition_top_k`); the driver merges them with
+    :func:`_top_k_pandas`. Exact, because the global top-k of a query is
+    the top-k of the union of its local top-k lists. Returns (query_id,
+    nbr_id, d2, rank), or None, running no job, when the batch's
+    queries × k × the point partitions exceed ``MAX_DRIVER_CANDIDATES``."""
+    from rsgislib_spark.kernels.codecs import arrow_batch_cols
+
+    qid = batch["query_id"].to_numpy()
+    qx, qy = batch["q0"].to_numpy(np.float64), batch["q1"].to_numpy(np.float64)
+    budget = KNN_ELEM_BUDGET
+    schema = StructType([
+        StructField("_q", LongType()), t.schema["nbr_id"], StructField("d2", DoubleType()),
+    ])
+
+    def run(it):
+        import pyarrow as pa
+
+        parts = [b for b in it if b.num_rows]
+        if not parts:  # an empty partition yields nothing
+            return
+        b = pa.Table.from_batches(parts).combine_chunks().to_batches()[0]
+        pid, px, py = arrow_batch_cols(b, "nbr_id", "t0", "t1")
+        q, j, d2 = _partition_top_k(
+            qid, qx, qy, np.asarray(pid), px, py, k, cell, dist_thres, exclude_self, budget
+        )
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(q), b.column("nbr_id").take(pa.array(j)), pa.array(d2)],
+            names=["_q", "nbr_id", "d2"],
+        )
+
+    local = t.mapInArrow(run, schema)
+    # each partition returns at most k rows per query; the partition count
+    # comes from the plan the collect then reuses
+    n_parts = local._jdf.queryExecution().executedPlan().execute().getNumPartitions()
+    if len(batch) * k * n_parts > MAX_DRIVER_CANDIDATES:
         return None
-    return _top_k_pandas(got.drop(columns="_row"), k)
+    got = local.toPandas()
+    cand = pd.DataFrame({"query_id": qid[got["_q"].to_numpy()], "nbr_id": got["nbr_id"], "d2": got["d2"]})
+    return _top_k_pandas(cand, k)
 
 
 def _xy_key(cell: float):
@@ -193,28 +318,17 @@ def _xy_key(cell: float):
     return key
 
 
-def _shuffle_join(qe: DataFrame, t: DataFrame) -> DataFrame:
-    """Candidate join of the distributed loop: both sides shuffle on the
-    cell key; the hint keeps the optimizer from broadcasting the points."""
-    return qe.join(t.hint("shuffle_hash"), "cell_key")
-
-
-def _broadcast_join(qe: DataFrame, t: DataFrame) -> DataFrame:
-    """Candidate join of a driver-resolved round: the exploded query
-    batch is broadcast to the points, which do not move."""
-    return t.join(F.broadcast(qe), "cell_key")
-
-
 def _candidates(
-    base: DataFrame, ring: int, cross: bool, join, *,
+    base: DataFrame, ring: int, cross: bool, *,
     t: DataFrame, d: int, key, exclude_self: bool, dist_thres: float,
 ) -> DataFrame:
     """(query, point) candidate rows with d2 of one escalation round over
     query columns q0..q{d-1} and point columns t0..t{d-1}: each query
     explodes to the (2r+1)^d cells of its ring (one explode per
-    dimension, pure Catalyst) and ``join(exploded, t)`` equi-joins them
-    with the cell-keyed points on ``cell_key``. ``cross`` makes every
-    point a candidate instead."""
+    dimension, pure Catalyst) and equi-joins the cell-keyed points on
+    ``cell_key``, both sides shuffled on it (the hint keeps the optimizer
+    from broadcasting the points). ``cross`` makes every point a
+    candidate instead."""
     if cross:
         cand = base.crossJoin(t.drop("cell_key"))  # exact last resort
     else:
@@ -222,7 +336,7 @@ def _candidates(
         for j in range(d):
             qe = qe.withColumn(f"_o{j}", F.explode(F.expr(f"sequence({-ring}, {ring})")))
         qe = qe.withColumn("cell_key", key("q", offsets=True)).drop(*[f"_o{j}" for j in range(d)])
-        cand = join(qe, t)
+        cand = qe.join(t.hint("shuffle_hash"), "cell_key")
     if exclude_self:
         cand = cand.filter(F.col("query_id") != F.col("nbr_id"))
     d2 = F.lit(0.0)
@@ -237,82 +351,42 @@ def _candidates(
 
 def _knn_bucketed(
     q0: DataFrame, t: DataFrame, d: int, key, k: int, cell: float, dist_thres: float,
-    exclude_self: bool, xjoin_ring: int, driver_rounds: bool,
+    exclude_self: bool, xjoin_ring: int, one_pass: bool,
 ) -> DataFrame:
     """Ring escalation shared by the bucketed kNN operators, over query
     rows (query_id, q0..) and point rows (nbr_id, t0..); see
-    :func:`knn_points_bucketed`. ``driver_rounds`` lets a broadcastable
-    query side resolve its rounds on the driver."""
-    from rsgislib_spark.qcommon import broadcast_limit, broadcastable
+    :func:`knn_points_bucketed`. A row with a null or NaN coordinate is
+    never a query nor a candidate. ``one_pass`` (2-D only) lets a
+    broadcastable batch run :func:`_local_top_k`."""
+    from rsgislib_spark.qcommon import broadcastable
 
     spark = q0.sparkSession
     schema = StructType([
         q0.schema["query_id"], t.schema["nbr_id"],
         StructField("d2", DoubleType()), StructField("rank", IntegerType()),
     ])
-    t = t.withColumn("cell_key", key("t"))
+    qcols, tcols = [f"q{j}" for j in range(d)], [f"t{j}" for j in range(d)]
+    q0, t = (
+        df.where(" AND ".join(f"{c} IS NOT NULL AND NOT isnan({c})" for c in cols))
+        for df, cols in ((q0, qcols), (t, tcols))
+    )
+    if one_pass and broadcastable(q0):
+        batch = q0.toPandas()
+        if batch.empty:
+            return spark.createDataFrame([], schema)
+        top = _local_top_k(batch, t, k, cell, dist_thres, exclude_self)
+        if top is not None:
+            return spark.createDataFrame(top, schema)
+    pstats, qstats = _extent(t, tcols), _extent(q0, qcols)
+    ring, max_ring = _ring_plan(
+        pstats[:d], pstats[d : 2 * d], qstats[:d], qstats[d : 2 * d], int(pstats[2 * d]),
+        k, cell, dist_thres,
+    )
     candidates = partial(
-        _candidates, t=t, d=d, key=key, exclude_self=exclude_self, dist_thres=dist_thres
+        _candidates, t=t.withColumn("cell_key", key("t")), d=d, key=key,
+        exclude_self=exclude_self, dist_thres=dist_thres,
     )
-    rem = q0.toPandas() if driver_rounds and broadcastable(q0) else None
-    if rem is not None and rem.empty:
-        return spark.createDataFrame([], schema)
-    pstats = _extent(t, [f"t{j}" for j in range(d)])
-    n_points = int(pstats[2 * d])
-    if rem is None:
-        qstats = _extent(q0, [f"q{j}" for j in range(d)])
-        qmin, qmax = qstats[:d], qstats[d : 2 * d]
-    else:
-        qcols = [f"q{j}" for j in range(d)]
-        qmin, qmax = rem[qcols].min(), rem[qcols].max()
-    ring, max_ring, density = _ring_plan(
-        pstats[:d], pstats[d : 2 * d], qmin, qmax, n_points, k, cell, dist_thres
-    )
-    # the candidate scan runs on the point table's partitions (a local
-    # relation, already on the driver, reads as one: the optimizer
-    # evaluates its partition ids there)
-    per_part = MAX_DRIVER_CANDIDATES // ((pstats[2 * d + 1] or 0) + 1)
-    outs = []
-    while rem is not None:
-        ring = min(ring, max_ring)
-        final = _final_round(ring, max_ring, xjoin_ring)
-        cross = final and ring > xjoin_ring
-        cells = 1 if cross else (2 * ring + 1) ** d
-        # the exploded batch (an UnsafeRow of query_id, the d coordinates
-        # and cell_key: a null word and one 8-byte slot per field) must
-        # itself be broadcastable, and the mean density must not expect
-        # more candidates than the driver collects
-        expect = n_points if cross else min(n_points, density * ((2 * ring + 1) * cell) ** d)
-        if (
-            len(rem) * cells * 8 * (d + 3) > broadcast_limit(spark)
-            or len(rem) * expect > MAX_DRIVER_CANDIDATES
-        ):
-            break
-        top = _collect_top_k(
-            candidates(spark.createDataFrame(rem, q0.schema), ring, cross, _broadcast_join),
-            k, per_part,
-        )
-        if top is None:  # hot-spot cells: more candidates than the driver collects
-            break
-        if final:
-            rem = rem.iloc[:0]
-        else:
-            got = top.groupby("query_id", sort=False)["d2"].agg(["size", "max"])
-            done = got.index[_resolved(got["size"].to_numpy(), got["max"].to_numpy(), k, ring, cell)]
-            top = top[top["query_id"].isin(done)]
-            rem = rem[~rem["query_id"].isin(done)]
-        outs.append(top)
-        if rem.empty:
-            return spark.createDataFrame(pd.concat(outs, ignore_index=True), schema)
-        ring *= 4
-    # the distributed loop takes the rest from this ring on
-    remaining = spark.createDataFrame(rem, q0.schema) if outs else q0
-    res = _escalate(
-        remaining, partial(candidates, join=_shuffle_join), k, ring, max_ring, cell, xjoin_ring
-    )
-    if outs:
-        res = res.unionByName(spark.createDataFrame(pd.concat(outs, ignore_index=True), schema))
-    return res
+    return _escalate(q0, candidates, k, ring, max_ring, cell, xjoin_ring)
 
 
 def _escalate(
@@ -367,35 +441,36 @@ def knn_points_bucketed(
     (ref: src/rastergis/RSGISRATKNN.cpp:390-420, which linearly scans
     all training rows; here the scan is restricted to the k-ring).
 
-    Candidates: ``points`` keyed by grid cell; each query explodes to the
-    (2r+1)² cells of its ring and equi-joins them on the cell key (the
-    point table is never broadcast); exact refine by d2 and rank
+    Candidates: the points in the (2r+1)² grid cells of a query's ring
+    (the point table is never broadcast); exact refine by d2 and rank
     ``≤ k`` per query in (d2, nbr_id) order.
 
     Selection rule: any point outside ring R is at distance > R·cell
     from the query, so a query is RESOLVED once it has k candidates and
     its k-th is within R·cell. Unresolved queries re-run with a 4× ring;
     the round whose ring covers every point (or the threshold disk, or
-    passes the explode cutoff, where a cross-join takes over) resolves
-    the rest. Hence bucketed == brute force always.
+    passes the explode cutoff, where every point becomes a candidate)
+    resolves the rest. Hence bucketed == brute force always.
 
     Physical shape, by the query side:
 
-    - *broadcastable* (Catalyst's size estimate of the projected queries
-      within ``spark.sql.autoBroadcastJoinThreshold``; −1 disables): the
-      batch is collected once and the point extent and count take one
-      job. Each round is then one job: the remaining queries, exploded
-      to their (2r+1)² cells and broadcast, join the points on
-      ``cell_key``; the candidate rows come back to the driver, which
-      ranks them and applies the selection rule. No persist, anti-join
-      or emptiness check. A round runs this way only while the exploded
-      batch is itself within the broadcast threshold and its candidates
-      within ``MAX_DRIVER_CANDIDATES`` — expected from the mean density,
-      and checked per partition as they are collected.
-    - otherwise, from the round that fails those bounds on, the
-      distributed loop: each round ranks with a window, persists,
-      anti-joins the resolved queries away and checks the rest for
-      emptiness. A query side over the threshold takes it from the start.
+    - *one pass*: the projected queries are broadcastable (Catalyst's
+      size estimate within ``spark.sql.autoBroadcastJoinThreshold``; −1
+      disables) and queries × k × point partitions is within
+      ``MAX_DRIVER_CANDIDATES``. The batch is collected once and rides
+      in the closure of one ``mapInArrow`` over the points. Each task
+      sorts its partition's points by cell key and runs the ring
+      escalation in numpy on the partition's own extent, returning
+      every query's exact local top-k; the driver merges them. One
+      Python pass, no join, shuffle, persist or extent job.
+    - otherwise, the distributed loop from the start: one job for the
+      point and query extents each, then per round the queries explode
+      to their ring cells and equi-join the points on the cell key (both
+      shuffled), rank with a window, persist, anti-join the resolved
+      queries away and check the rest for emptiness.
+
+    A point with a null or NaN coordinate is never a candidate, and
+    such a query returns no rows.
 
     Neighbours at ``dist >= dist_thres`` are excluded (strict ``<``,
     matching knn_apply / the reference's dist_thres test). Queries with
@@ -405,18 +480,17 @@ def knn_points_bucketed(
     (d2, nbr_id) — deterministic across engines when coordinates live
     on an integer lattice (d2 is then integer-valued).
     """
-    q0 = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(x_col).cast("double").alias("q0"),
-        F.col(y_col).cast("double").alias("q1"),
-    )
-    t = points.select(
-        F.col(id_col).alias("nbr_id"),
-        F.col(x_col).cast("double").alias("t0"),
-        F.col(y_col).cast("double").alias("t1"),
+    # one SQL projection per side: one py4j call each, where composed
+    # Columns cost ~25 ms of driver time per kNN call
+    q0, t = (
+        df.selectExpr(
+            f"`{id_col}` AS {name}_id", f"CAST(`{x_col}` AS DOUBLE) AS {p}0",
+            f"CAST(`{y_col}` AS DOUBLE) AS {p}1",
+        )
+        for df, name, p in ((queries, "query", "q"), (points, "nbr", "t"))
     )
     return _knn_bucketed(
-        q0, t, 2, _xy_key(cell), k, cell, dist_thres, exclude_self, XJOIN_RING, driver_rounds=True
+        q0, t, 2, _xy_key(cell), k, cell, dist_thres, exclude_self, XJOIN_RING, one_pass=True
     )
 
 
@@ -491,7 +565,7 @@ def knn_features_bucketed(
         # cells per query; past it the exact cross-join finalizer wins
         xjoin_ring = max(1, int((20_000 ** (1.0 / d) - 1) // 2))
     return _knn_bucketed(
-        q0, t, d, key, k, cell, dist_thres, exclude_self, xjoin_ring, driver_rounds=False
+        q0, t, d, key, k, cell, dist_thres, exclude_self, xjoin_ring, one_pass=False
     )
 
 
@@ -527,7 +601,7 @@ def radius_count_bucketed(
     )
     r2 = float(radius) * float(radius)
     cand = _candidates(
-        q, 1, False, _shuffle_join, t=t.withColumn("cell_key", key("t")), d=2, key=key,
+        q, 1, False, t=t.withColumn("cell_key", key("t")), d=2, key=key,
         exclude_self=False, dist_thres=np.inf,
     ).filter(F.col("d2") <= F.lit(r2))
     return cand.groupBy(F.col("query_id").alias(id_col)).agg(

@@ -88,20 +88,24 @@ def resumable_write(
 # through `df.writeTo(table)` and ACID snapshots/resume become Iceberg's
 # job. One deploy-time config flip, no operator changes.
 
+#: The catalog class the Iceberg probe loads (patchable in tests).
+ICEBERG_CATALOG_CLASS = "org.apache.iceberg.spark.SparkCatalog"
+
+
 def iceberg_available(spark: SparkSession) -> bool:
     """True when this session can write Iceberg tables: an Iceberg
-    SparkCatalog is configured AND its class loads (probed once per
+    SparkCatalog is configured — at start-up (SparkContext conf) or at
+    runtime (``spark.conf.set``) — AND its class loads (probed once per
     call — cheap JVM reflection, no table I/O)."""
     try:
-        confs = dict(spark.sparkContext.getConf().getAll())
+        confs = {**dict(spark.sparkContext.getConf().getAll()), **spark.conf.getAll}
         has_catalog = any(
             k.startswith("spark.sql.catalog.") and "iceberg" in v.lower()
             for k, v in confs.items()
         )
         if not has_catalog:
             return False
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001 — probe only
-            "org.apache.iceberg.spark.SparkCatalog")
+        spark._jvm.java.lang.Class.forName(ICEBERG_CATALOG_CLASS)  # noqa: SLF001 — probe only
         return True
     except Exception:
         return False
@@ -132,11 +136,19 @@ def write_table(
     back to :func:`resumable_write`'s parquet + lineage-manifest layout,
     which provides the same restart-without-recompute guarantee with no
     extra jars. Returns a dict whose ``backend`` key says which path ran.
+    The fallback only replaces or resumes, so ``mode="append"`` without
+    Iceberg raises ``ValueError`` instead of dropping the append intent.
     """
     spark = df.sparkSession
     if table is not None and iceberg_available(spark):
         _write_iceberg(df, table, mode)
         return {"backend": "iceberg", "table": table}
+    if mode == "append":
+        raise ValueError(
+            "write_table(mode='append') needs an Iceberg table: the parquet + "
+            "manifest fallback only replaces or resumes. Configure an Iceberg "
+            "catalog and pass table=, or write with mode='replace'."
+        )
     res = resumable_write(df, out_dir, id_col, n_buckets=n_buckets, stage=stage)
     res["backend"] = "parquet+manifest"
     return res

@@ -12,14 +12,17 @@ Two physical strategies, same semantics:
    pickled ZoneIndex (STR bbox tree + rings). The union of the zone
    bboxes is pushed down first as a Catalyst column filter (closed
    intervals, the tree's own test), so only images that can meet a zone
-   reach Python. A single ``mapInPandas`` pass over those computes
-   candidate pairs (tree query) and the exact predicate with ZERO
-   shuffle of the big side; ``inner``
-   and ``right`` joins also join back only the filtered images. This is
-   the 100 TB path whenever zones fit on an executor (they do by design
-   — the reference's zone side is a small vector layer).
-   :func:`spatial_select`, :func:`layer_predicate` and the ``vec_*_vec``
-   predicates share the same filtered pair stream.
+   reach Python. One ``mapInArrow`` pass over those runs the tree query
+   and the exact predicate and CARRIES THE ROWS: it emits each matching
+   image row (``batch.take``) once per zone it meets, with that zone's
+   ``zone_id``, so nothing joins back on the image id and the big side
+   never shuffles; the zone attributes then join as a broadcast. A
+   ``left`` join passes every image and emits the unmatched ones with a
+   null ``zone_id``. This is the 100 TB path whenever zones fit on an
+   executor (they do by design — the reference's zone side is a small
+   vector layer). :func:`spatial_select`, :func:`layer_predicate` and
+   the ``vec_*_vec`` predicates run the same pass over a slim
+   (id, bbox) projection.
 
  - :func:`spatial_join_cells` — both sides exploded to covering grid
    cells, cell equi-join (Catalyst sort-merge/shuffle-hash with AQE),
@@ -34,7 +37,6 @@ loop over zones.
 
 from __future__ import annotations
 
-import pickle
 from typing import Iterator
 
 import numpy as np
@@ -111,53 +113,75 @@ def _in_zone_bbox(zx: ZoneIndex) -> F.Column:
     overlap with the union of the zone bboxes, the STRtree's own test, so
     it drops only rects the tree would reject anyway. A zone bbox with a
     NaN side matches nothing and stays out of the union; with no other
-    zone, nothing passes."""
+    zone, nothing passes. Built as one SQL expression (one py4j call;
+    composing Columns took ~15 ms), bounds as exact double literals."""
     b = zx.bboxes[~np.isnan(zx.bboxes).any(axis=1)]
     if not len(b):
         return F.lit(False)
-    return (
-        (F.col("minx") <= float(b[:, 2].max()))
-        & (F.col("maxx") >= float(b[:, 0].min()))
-        & (F.col("miny") <= float(b[:, 3].max()))
-        & (F.col("maxy") >= float(b[:, 1].min()))
+    x0, y0, x1, y1 = (
+        f"CAST('{float(v)!r}' AS DOUBLE)"
+        for v in (b[:, 0].min(), b[:, 1].min(), b[:, 2].max(), b[:, 3].max())
     )
+    return F.expr(f"minx <= {x1} AND maxx >= {x0} AND miny <= {y1} AND maxy >= {y0}")
 
 
-def _pairs_df(images: DataFrame, zindex_b, join_op: str, id_col: str) -> DataFrame:
-    """Inner pair list (id_col, zone_id) via broadcast index.
+def _matched_rows(
+    rows: DataFrame, zindex_b, join_op: str, keep_unmatched: bool = False
+) -> DataFrame:
+    """Each row of ``rows`` once per zone of the broadcast index it
+    meets under ``join_op``, with that zone's ``zone_id`` appended: one
+    ``mapInArrow`` pass (tree query, then one exact :meth:`ZoneIndex.refine`
+    per Arrow batch) that carries the rows through (``batch.take``), so a
+    row gets only its own zones even when ids repeat. With
+    ``keep_unmatched`` a row that meets no zone is emitted once with a
+    null ``zone_id``.
 
-    Only rects inside the zones' union bbox (:func:`_in_zone_bbox`) reach
-    the Python refine: the filter is a plain column predicate, so Catalyst
-    evaluates it in the scan (and a cached table skips whole batches by
-    their column stats) and the refine sees the candidates, not the table.
+    Callers filter ``rows`` by :func:`_in_zone_bbox` first (except a left
+    join, which must see every row), so the pass sees the candidates and
+    not the table. A THIN input (fewer scan partitions than cores — e.g.
+    one small parquet file) would run the match on 1-2 tasks, so it is
+    repartitioned up to the default parallelism first (:func:`widen`)."""
+    from pyspark.sql.types import LongType, StructField, StructType
 
-    A THIN input (fewer scan partitions than cores — e.g. one small
-    parquet file) would run the whole match kernel on 1-2 tasks; the
-    skinny (id, bbox) projection is repartitioned up to the default
-    parallelism first. The shuffled rows are ~40 bytes each, so this
-    costs microseconds per thousand images and buys full-width refine."""
+    from rsgislib_spark.kernels.codecs import arrow_batch_cols
     from rsgislib_spark.qcommon import widen
 
-    slim = widen(
-        images.select(id_col, "minx", "miny", "maxx", "maxy").filter(
-            _in_zone_bbox(zindex_b.value)
-        )
-    )
-    id_type = dict(images.dtypes)[id_col]
-    schema = f"{id_col} {id_type}, zone_id long"
+    schema = StructType([*rows.schema.fields, StructField("zone_id", LongType())])
 
-    def _match(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _match(it):
+        import pyarrow as pa
+
         zx: ZoneIndex = zindex_b.value
-        for pdf in it:
-            if not len(pdf):
+        for b in it:
+            if not b.num_rows:
                 continue
-            rects = pdf[["minx", "miny", "maxx", "maxy"]].to_numpy(dtype=np.float64)
-            qi, zi = zx.match(rects, join_op)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy()[qi], "zone_id": zx.zone_ids[zi]}
+            rects = np.column_stack(arrow_batch_cols(b, "minx", "miny", "maxx", "maxy"))
+            qi, zi = zx.match(rects.astype(np.float64), join_op)
+            zone, null = zx.zone_ids[zi], None
+            if keep_unmatched:
+                miss = np.flatnonzero(np.bincount(qi, minlength=b.num_rows) == 0)
+                qi = np.concatenate([qi, miss])
+                null = np.r_[np.zeros(len(zone), bool), np.ones(len(miss), bool)]
+                zone = np.concatenate([zone, np.zeros(len(miss), np.int64)])
+            if not len(qi):
+                continue
+            out = b.take(pa.array(qi))
+            yield pa.RecordBatch.from_arrays(
+                [*out.columns, pa.array(zone, mask=null)], names=[*out.schema.names, "zone_id"]
             )
 
-    return slim.mapInPandas(_match, schema=schema)
+    return widen(rows).mapInArrow(_match, schema=schema)
+
+
+def _id_pairs(images: DataFrame, zones: DataFrame, id_col: str, *join_ops: str) -> list:
+    """(id_col, zone_id) pair streams of the slim (id, bbox) projection,
+    one per ``join_ops`` entry, sharing one zone fence, index broadcast
+    and bbox filter."""
+    zones_pdf = _fenced_zones_pdf(zones.select("zone_id", "geometry"))
+    zx = ZoneIndex.from_pandas(zones_pdf)
+    zindex_b = images.sparkSession.sparkContext.broadcast(zx)
+    slim = images.select(id_col, "minx", "miny", "maxx", "maxy").filter(_in_zone_bbox(zx))
+    return [_matched_rows(slim, zindex_b, op).select(id_col, "zone_id") for op in join_ops]
 
 
 def spatial_join_broadcast(
@@ -169,41 +193,30 @@ def spatial_join_broadcast(
 ) -> DataFrame:
     """Spatial join with the zone side broadcast (primary strategy).
 
-    Output columns: all image columns + ``zone_id`` + zone attribute
-    columns (minus zone geometry/bbox). ``left``/``right`` keep unmatched
-    rows of the respective side with nulls, mirroring geopandas sjoin via
-    the reference's join_how validation (vectorutils/__init__.py:2196-2207).
+    Output columns: ``zone_id``, all image columns, then the zone
+    attribute columns (minus zone geometry/bbox). One row per matching
+    (image row, zone) pair; ``left``/``right`` keep unmatched rows of the
+    respective side with nulls, mirroring geopandas sjoin via the
+    reference's join_how validation (vectorutils/__init__.py:2196-2207).
+    Rows pair by position inside the refine, not by key: ``id_col`` (the
+    image key) may repeat, and is kept for the signature shared with
+    :func:`spatial_join_cells`.
     """
     if join_how not in JOIN_HOWS:
         raise ValueError(f"join_how must be one of {JOIN_HOWS}")
     if join_op not in JOIN_OPS:
         raise ValueError(f"join_op must be one of {JOIN_OPS}")
-    spark = images.sparkSession
     zones_pdf = _fenced_zones_pdf(zones.select("zone_id", "geometry"))
     zx = ZoneIndex.from_pandas(zones_pdf)
-    zindex_b = spark.sparkContext.broadcast(zx)
-
-    pairs = _pairs_df(images, zindex_b, join_op, id_col)
-    zone_attrs = zones.drop("geometry", "minx", "miny", "maxx", "maxy")
-    if join_how != "left":
-        # only images inside the zones' union bbox can pair, so the join
-        # back shuffles those and not the table (left keeps every image)
-        images = images.filter(_in_zone_bbox(zx))
-
-    if join_how == "inner":
-        out = images.join(pairs, id_col, "inner").join(
-            F.broadcast(zone_attrs), "zone_id", "inner"
-        )
-    elif join_how == "left":
-        out = images.join(pairs, id_col, "left").join(
-            F.broadcast(zone_attrs), "zone_id", "left"
-        )
-    else:  # right: every zone at least once
-        out = (
-            images.join(pairs, id_col, "inner")
-            .join(F.broadcast(zone_attrs), "zone_id", "right")
-        )
-    return out
+    zindex_b = images.sparkSession.sparkContext.broadcast(zx)
+    zone_attrs = F.broadcast(zones.drop("geometry", "minx", "miny", "maxx", "maxy"))
+    if join_how == "left":
+        # every image row survives: the pass sees the whole table
+        rows = _matched_rows(images, zindex_b, join_op, keep_unmatched=True)
+    else:
+        rows = _matched_rows(images.filter(_in_zone_bbox(zx)), zindex_b, join_op)
+    # a right join keeps every zone at least once
+    return rows.join(zone_attrs, "zone_id", join_how)
 
 
 def spatial_join_cells(
@@ -298,10 +311,7 @@ def spatial_select(
 ) -> DataFrame:
     """Semi-join: images matching ANY zone — reference ``spatial_select``
     (vectorutils/__init__.py:2565-2610). left_semi keeps image columns only."""
-    pairs = spatial_join_broadcast(
-        images.select(id_col, "minx", "miny", "maxx", "maxy"),
-        zones, join_op=join_op, join_how="inner", id_col=id_col,
-    ).select(id_col).distinct()
+    pairs = _id_pairs(images, zones, id_col, join_op)[0].select(id_col).distinct()
     return images.join(pairs, id_col, "left_semi")
 
 
@@ -318,10 +328,7 @@ def layer_predicate(
     generation + ``isEmpty`` on the pair stream — Spark's collect-limit
     stops at the first surviving pair, so a hit on an early partition
     never scans the rest."""
-    spark = images.sparkSession
-    zones_pdf = _fenced_zones_pdf(zones.select("zone_id", "geometry"))
-    zindex_b = spark.sparkContext.broadcast(ZoneIndex.from_pandas(zones_pdf))
-    return not _pairs_df(images, zindex_b, join_op, id_col).isEmpty()
+    return not _id_pairs(images, zones, id_col, join_op)[0].isEmpty()
 
 
 def vec_intersects_vec(images: DataFrame, zones: DataFrame, id_col: str = "image_id") -> bool:
@@ -345,12 +352,7 @@ def vec_overlaps_vec(images: DataFrame, zones: DataFrame, id_col: str = "image_i
     exact on the catalog's tie-free lattices, where boundary-only
     contact cannot occur; touches/crosses remain out of scope for the
     rectilinear kernels and should use a full geometry library)."""
-    spark = images.sparkSession
-    zones_pdf = _fenced_zones_pdf(zones.select("zone_id", "geometry"))
-    zindex_b = spark.sparkContext.broadcast(ZoneIndex.from_pandas(zones_pdf))
-    pi = _pairs_df(images, zindex_b, "intersects", id_col)
-    pw = _pairs_df(images, zindex_b, "within", id_col)
-    pc = _pairs_df(images, zindex_b, "contains", id_col)
+    pi, pw, pc = _id_pairs(images, zones, id_col, "intersects", "within", "contains")
     return not pi.join(
         pw.unionByName(pc).distinct(), [id_col, "zone_id"], "left_anti"
     ).isEmpty()

@@ -98,16 +98,17 @@ def fenced_small_pdf(
     The broadcast strategies (zone index, training set, match points)
     collect a small-by-construction table to the driver; a mis-sized
     input would OOM the driver silently. Mirrors the explicit ceiling of
-    ``similarity.cosine_block_pairs`` (functions/similarity.py): count
-    first (one cheap agg job on the slim projection), raise with a
-    pointer at the scale path when the caller should bucket instead."""
-    n = df.count()
-    if n > max_rows:
+    ``similarity.cosine_block_pairs`` (functions/similarity.py): one job
+    collects at most ``max_rows`` + 1 rows, and one row too many raises
+    with a pointer at the scale path when the caller should bucket
+    instead."""
+    pdf = df.limit(max_rows + 1).toPandas()
+    if len(pdf) > max_rows:
         raise ValueError(
-            f"{what} would collect {n} rows to the driver "
+            f"{what} would collect more than {max_rows} rows to the driver "
             f"(max_rows={max_rows}). {scale_hint}"
         )
-    return df.toPandas()
+    return pdf
 
 
 # --------------------------------------------------------------------------

@@ -13,12 +13,12 @@ from pyspark.sql import functions as F
 from rsgislib_spark.operators import knn
 from rsgislib_spark.operators.spatial_join import spatial_join_broadcast
 
-#: queries collect, point extent, one round (its broadcast and its join),
-#: result collect; the distributed loop takes 13 for the same call
-KNN_ONE_ROUND_JOBS = 6
-#: zone fence (count, collect), then the filtered refine and the join
-#: back as AQE query stages
-WINDOW_JOIN_JOBS = 6
+#: queries collect, the one Python pass over the points, result collect;
+#: the distributed loop takes 13 for the same call
+KNN_ONE_ROUND_JOBS = 3
+#: zone fence (one collect), the zone attributes' broadcast, then the
+#: filtered refine that carries the rows
+WINDOW_JOIN_JOBS = 3
 
 
 def _jobs(spark, group, action):
@@ -35,8 +35,8 @@ def test_knn_one_round_job_budget(spark, points_pdf, monkeypatch):
     pts = spark.createDataFrame(points_pdf)
     qs = spark.createDataFrame(points_pdf.iloc[:16])
     rounds = []
-    real = knn._candidates
-    monkeypatch.setattr(knn, "_candidates", lambda *a, **kw: rounds.append(1) or real(*a, **kw))
+    real = knn._local_top_k
+    monkeypatch.setattr(knn, "_local_top_k", lambda *a, **kw: rounds.append(1) or real(*a, **kw))
     n = _jobs(spark, "budget-knn", lambda: knn.knn_points_bucketed(qs, pts, k=4, cell=50000.0).toPandas())
     assert len(rounds) == 1
     assert n <= KNN_ONE_ROUND_JOBS, n
@@ -50,5 +50,5 @@ def test_single_zone_window_join_job_budget(spark, images_nopix_pdf, zones_pdf):
         spark, "budget-window",
         lambda: got.extend(spatial_join_broadcast(images, zone).select("image_id").collect()),
     )
-    assert got  # the zone matches images, so the refine and join back both ran
+    assert got  # the zone matches images, so the refine ran
     assert n <= WINDOW_JOIN_JOBS, n

@@ -279,17 +279,21 @@ class TestPointExtract:
 # ------------------------------------------------------------------- knn
 @contextlib.contextmanager
 def knn_rounds():
-    """Record the kNN rounds that run, in order: "_collect_top_k" for a
-    driver-resolved round, "_escalate" for the distributed loop."""
+    """Record the kNN passes that run, in order: "_local_top_k" for the
+    one Python pass over the points (not recorded when it declines a
+    batch over its collect bound, running nothing), "_escalate" for the
+    distributed loop."""
     from rsgislib_spark.operators import knn
 
-    real = {name: getattr(knn, name) for name in ("_collect_top_k", "_escalate")}
+    real = {name: getattr(knn, name) for name in ("_local_top_k", "_escalate")}
     taken = []
 
     def spy(name):
         def run(*args, **kwargs):
-            taken.append(name)
-            return real[name](*args, **kwargs)
+            out = real[name](*args, **kwargs)
+            if out is not None:
+                taken.append(name)
+            return out
 
         return run
 
@@ -305,10 +309,10 @@ def knn_rounds():
 @contextlib.contextmanager
 def knn_path(spark, path, rounds=True):
     """Run knn_points_bucketed on one physical path and check every call
-    took it: "broadcast" (driver-resolved rounds over a broadcast query
-    batch, the default for small batches) or "distributed" (the scale
-    loop, forced by spark.sql.autoBroadcastJoinThreshold=-1). With
-    ``rounds=False`` no round may run at all."""
+    took it: "broadcast" (the query batch shipped to the points in one
+    Python pass, the default for small batches) or "distributed" (the
+    scale loop, forced by spark.sql.autoBroadcastJoinThreshold=-1). With
+    ``rounds=False`` no pass may run at all."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     threshold = spark.conf.get(key)
     with knn_rounds() as taken:
@@ -318,7 +322,7 @@ def knn_path(spark, path, rounds=True):
             yield
         finally:
             spark.conf.set(key, threshold)
-    want = "_collect_top_k" if path == "broadcast" else "_escalate"
+    want = "_local_top_k" if path == "broadcast" else "_escalate"
     assert set(taken) <= {want} and bool(taken) == rounds, (path, taken)
 
 
@@ -456,34 +460,28 @@ class TestKNN:
                 got = knn_points_bucketed(qs, pts, k=k, cell=cell).toPandas()
             self._assert_knn_brute(got, points_pdf.iloc[:40], points_pdf, k, label=path)
 
-    def test_knn_bucketed_large_explode_hands_over(self, spark, points_pdf):
-        """Once the ring-exploded remaining batch outgrows the broadcast
-        threshold, the distributed loop takes the remaining queries from
-        that ring on; the union equals brute force."""
+    def test_knn_bucketed_over_collect_bound_runs_distributed(self, spark, points_pdf, monkeypatch):
+        """A broadcastable batch whose queries × k × point partitions
+        exceed MAX_DRIVER_CANDIDATES runs no Python pass: the distributed
+        loop takes the whole batch from its first ring, and equals brute
+        force; at the bound itself the one pass runs."""
         from rsgislib_spark.operators import knn
 
-        key = "spark.sql.autoBroadcastJoinThreshold"
-        threshold = spark.conf.get(key)
         k = 6
         qpdf = points_pdf.iloc[:120]
-        # cell 20000: round 1 (ring 7, 120 queries, ~1.1 MB exploded)
-        # leaves 16 queries whose ring-28 round (~2.1 MB) is over 1.5 MB
-        spark.conf.set(key, "1500000")
-        try:
+        pts = spark.createDataFrame(points_pdf).repartition(3)
+        qs = spark.createDataFrame(qpdf)
+        for bound, want in ((120 * k * 3, ["_local_top_k"]), (120 * k * 3 - 1, ["_escalate"])):
+            monkeypatch.setattr(knn, "MAX_DRIVER_CANDIDATES", bound)
             with knn_rounds() as taken:
-                got = knn.knn_points_bucketed(
-                    spark.createDataFrame(qpdf), spark.createDataFrame(points_pdf), k=k, cell=20000.0
-                ).toPandas()
-        finally:
-            spark.conf.set(key, threshold)
-        assert taken == ["_collect_top_k", "_escalate"], taken
-        self._assert_knn_brute(got, qpdf, points_pdf, k)
+                got = knn.knn_points_bucketed(qs, pts, k=k, cell=20000.0).toPandas()
+            assert taken == want, (bound, taken)
+            self._assert_knn_brute(got, qpdf, points_pdf, k, label=bound)
 
-    def test_knn_bucketed_driver_fence_skewed_points(self, spark, monkeypatch):
-        """The driver fence holds on hot-spot points: a round whose
-        partitions return more candidate rows than their share of
-        MAX_DRIVER_CANDIDATES hands the batch to the distributed loop,
-        although the mean point density expects far fewer rows."""
+    def test_knn_bucketed_hot_spot_element_budget(self, spark, monkeypatch):
+        """Hot-spot points stay exact when the one pass walks its
+        candidate ranges in windows far smaller than one hot cell (and
+        than one query's candidates), and under the default budget."""
         from rsgislib_spark.operators import knn
 
         rng = np.random.default_rng(7)
@@ -495,15 +493,93 @@ class TestKNN:
         pts = spark.createDataFrame(ppdf).repartition(4)
         qs = spark.createDataFrame(qpdf)
         k = 5
-        # the first round runs (the estimate lets it) and returns ~6500
-        # candidate rows: over a 1000-row fence, within the default one
-        for fence, handed_over in ((knn.MAX_DRIVER_CANDIDATES, False), (1000, True)):
-            monkeypatch.setattr(knn, "MAX_DRIVER_CANDIDATES", fence)
-            with knn_rounds() as taken:
+        for budget in (knn.KNN_ELEM_BUDGET, 7):
+            monkeypatch.setattr(knn, "KNN_ELEM_BUDGET", budget)
+            with knn_path(spark, "broadcast"):
                 got = knn.knn_points_bucketed(qs, pts, k=k, cell=4096.0).toPandas()
-            assert taken[0] == "_collect_top_k", (fence, taken)
-            assert ("_escalate" in taken) == handed_over, (fence, taken)
-            self._assert_knn_brute(got, qpdf, ppdf, k, label=fence)
+            self._assert_knn_brute(got, qpdf, ppdf, k, label=budget)
+
+    def test_knn_bucketed_empty_and_far_partitions(self, spark):
+        """The one pass over point partitions that are empty (fewer rows
+        than partitions) or hold only far-away points: empty ones add
+        nothing, far ones lose the driver merge, and both equal brute
+        force on both paths."""
+        from rsgislib_spark.operators.knn import knn_points_bucketed
+
+        near = [(i, float(i % 7) * 10.0 + 0.5, float(i // 7) * 10.0 + 0.5) for i in range(20)]
+        far = [(100 + i, 1e6 + i * 3.0, 2e6 - i * 5.0) for i in range(20)]
+        ppdf = pd.DataFrame(near + far, columns=["pt_id", "x", "y"])
+        qpdf = ppdf.iloc[[0, 5, 13, 21, 39]]
+        k = 4
+        cases = {
+            # range partitions on x: two hold only the far points
+            "far": spark.createDataFrame(ppdf).repartitionByRange(4, "x"),
+            # 3 rows round-robin over 8 partitions: at least 5 are empty
+            "empty": spark.createDataFrame(ppdf.iloc[[0, 1, 25]]).repartition(8),
+        }
+        parts = {name: df.rdd.glom().map(lambda rows: [r.x for r in rows]).collect() for name, df in cases.items()}
+        assert sum(not xs for xs in parts["empty"]) >= 5, parts
+        assert sum(bool(xs) and min(xs) > 1e5 for xs in parts["far"]) == 2, parts
+        for name, pts in cases.items():
+            sub = ppdf[ppdf["pt_id"].isin([r.pt_id for r in pts.select("pt_id").collect()])]
+            qs = spark.createDataFrame(qpdf)
+            for path in KNN_PATHS:
+                with knn_path(spark, path):
+                    got = knn_points_bucketed(qs, pts, k=k, cell=16.0).toPandas()
+                self._assert_knn_brute(got, qpdf, sub, k, label=(name, path))
+
+    def test_knn_bucketed_null_coordinates(self, spark):
+        """A point with a null coordinate is never a neighbour and a query
+        with one returns no rows, on both paths (a null d2 used to rank
+        first)."""
+        from rsgislib_spark.operators.knn import knn_points_bucketed
+
+        # point 6 spreads the extent past the explode cutoff, so the
+        # escalation ends in the every-point round the null rows reached
+        ppdf = pd.DataFrame({
+            "pt_id": [1, 2, 3, 4, 5, 6],
+            "x": [0.0, 1.0, None, 2.0, 3.0, 200.0],
+            "y": [0.0, 1.0, 5.0, 2.0, None, 4.0],
+        })
+        pts = spark.createDataFrame(ppdf, "pt_id long, x double, y double")
+        qpdf = pd.DataFrame({"pt_id": [10, 11], "x": [0.5, None], "y": [0.5, 1.0]})
+        qs = spark.createDataFrame(qpdf, "pt_id long, x double, y double")
+        for path in KNN_PATHS:
+            with knn_path(spark, path):
+                got = knn_points_bucketed(qs, pts, k=5, cell=1.0).toPandas()
+            got = got.sort_values("rank")
+            assert list(got["query_id"]) == [10] * 4, (path, got)
+            assert list(got["nbr_id"]) == [1, 2, 4, 6], (path, got)
+            assert list(got["d2"]) == [0.5, 0.5, 4.5, 39812.5], (path, got)
+            assert list(got["rank"]) == [1, 2, 3, 4], (path, got)
+
+    def test_partition_top_k_matches_brute(self):
+        """The one pass's per-partition kernel equals a brute-force local
+        top-k over random, hot-spot, empty and far-away point sets, with
+        element budgets down to a handful and a distance threshold."""
+        from rsgislib_spark.operators.knn import _partition_top_k
+
+        rng = np.random.default_rng(11)
+        for trial in range(24):
+            n = int(rng.integers(0, 600))
+            hot = trial % 2 == 0
+            px = np.floor(rng.normal(0, 300, n) if hot else rng.uniform(-1e5, 1e5, n))
+            py = np.floor(rng.normal(0, 300, n) if hot else rng.uniform(-1e5, 1e5, n))
+            pid = rng.permutation(n).astype(np.int64)
+            qx = np.floor(rng.uniform(-2e3, 2e3, 9)) + (3e5 if trial % 3 == 0 else 0.0)
+            qy = np.floor(rng.uniform(-2e3, 2e3, 9))
+            qid = np.arange(9, dtype=np.int64)  # shares ids with points: exclude_self bites
+            k = int(rng.integers(1, 8))
+            cell = float(rng.choice([50.0, 4096.0, 50000.0]))
+            thres = np.inf if trial % 4 else 1500.0
+            budget = int(rng.choice([5, 97, 1 << 19]))
+            q, j, d2 = _partition_top_k(qid, qx, qy, pid, px, py, k, cell, thres, True, budget)
+            want = []
+            for i in range(len(qx)):
+                dd = 0.0 + (qx[i] - px) * (qx[i] - px) + (qy[i] - py) * (qy[i] - py)
+                ok = np.flatnonzero((pid != qid[i]) & (dd < thres * thres if np.isfinite(thres) else True))
+                want += [(i, pid[m], dd[m]) for m in ok[np.lexsort((pid[ok], dd[ok]))][:k]]
+            assert sorted(zip(q.tolist(), pid[j].tolist(), d2.tolist())) == sorted(want), trial
 
     def test_knn_bucketed_dist_thres_strict(self, spark, points_pdf):
         from rsgislib_spark.operators.knn import knn_points_bucketed

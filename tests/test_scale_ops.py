@@ -104,6 +104,28 @@ class TestTableSinkSeam:
         v = manifest.verify_against_manifest(spark, out, "row_id").toPandas()
         assert v.ok.all()
 
+    def test_write_table_append_without_iceberg_raises(self, skewed_df, tmp_path):
+        """The parquet fallback only replaces or resumes: an append there
+        raises and writes nothing instead of quietly replacing."""
+        out = tmp_path / "sink"
+        for table in ("cat.db.tiles", None):
+            with pytest.raises(ValueError, match="append"):
+                manifest.write_table(skewed_df, str(out), "row_id", table=table, mode="append")
+        assert not out.exists()
+
+    def test_iceberg_probe_reads_runtime_conf(self, spark, monkeypatch):
+        """A catalog set at runtime with spark.conf.set counts, not only
+        one in the SparkContext conf (the class probe is pointed at a
+        class that loads here)."""
+        monkeypatch.setattr(manifest, "ICEBERG_CATALOG_CLASS", "java.lang.String")
+        assert manifest.iceberg_available(spark) is False  # no catalog configured
+        spark.conf.set("spark.sql.catalog.rt_ice", "org.apache.iceberg.spark.SparkCatalog")
+        try:
+            assert manifest.iceberg_available(spark) is True
+        finally:
+            spark.conf.unset("spark.sql.catalog.rt_ice")
+        assert manifest.iceberg_available(spark) is False
+
     def test_write_table_routes_iceberg_when_configured(
         self, spark, skewed_df, tmp_path, monkeypatch
     ):

@@ -407,3 +407,21 @@ def test_layer_predicate_false_outside_union_bbox(spark):
     assert not layer_predicate(between, zones, "intersects")
     near = _rect_images(spark, [(40, 40, 50, 50), (30, 30, 35, 35)])
     assert layer_predicate(near, zones, "intersects")
+
+
+@pytest.mark.parametrize("how", ["inner", "left"])
+def test_duplicate_ids_get_only_their_own_zones(spark, how):
+    """Two rows sharing an image_id with different bboxes each pair with
+    their own zones only (pairing by id gave each row the other's zones
+    too: 4 rows where 2 are right)."""
+    zones = _rect_zones(spark, [(0, 0, 10, 10), (20, 0, 30, 10), (40, 0, 50, 10)])
+    images = spark.createDataFrame(
+        pd.DataFrame(
+            [(7, "a", 2.0, 2.0, 4.0, 4.0), (7, "b", 22.0, 2.0, 24.0, 4.0), (8, "c", 60.0, 0.0, 61.0, 1.0)],
+            columns=["image_id", "tag", "minx", "miny", "maxx", "maxy"],
+        )
+    )
+    got = spatial_join_broadcast(images, zones, join_how=how).toPandas()
+    rows = sorted((r.image_id, r.tag, None if pd.isna(r.zone_id) else int(r.zone_id)) for r in got.itertuples())
+    want = [(7, "a", 100), (7, "b", 101)] + ([(8, "c", None)] if how == "left" else [])
+    assert rows == want, rows
