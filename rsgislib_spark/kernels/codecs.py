@@ -288,7 +288,10 @@ class _PILBackend:
         import io
 
         img = self._Image.open(io.BytesIO(bytes(buf)))
-        if img.mode not in ("L", "RGB"):
+        if img.mode in ("P", "PA"):
+            # one index band: the colours live in the palette
+            img = img.convert("RGB")
+        elif img.mode not in ("L", "RGB"):
             img = img.convert("RGB" if len(img.getbands()) >= 3 else "L")
         return np.asarray(img)
 

@@ -15,38 +15,28 @@
    raises on ties; we break ties deterministically by smallest train id
    (documented deviation, SURVEY §2.3).
 
- - :func:`knn_points_bucketed` — the SCALE path (the north rule's "kNN
-   neighbor lookup over cell-bucketed candidates"): both sides bucketed
-   to grid cells, candidates = query's k-ring of cells, exact refine +
-   rank ``<= k`` by (d2, nbr_id). A ring-escalation loop guarantees
-   exactness: a query is resolved only when it has k candidates and its
-   kth-neighbour distance is within the ring's coverage guarantee (any
-   point outside ring R is at distance > R·cell), so bucketed ==
-   brute-force always. A small query batch runs the loop inside one
-   Python pass over the points (each partition's exact local top-k,
-   merged on the driver); a large one runs it as a distributed loop of
-   cell equi-joins (window rank, persist, anti-join, emptiness check per
-   round). :func:`knn_features_bucketed` runs the same engine in d
-   dimensions on the distributed loop only.
+ - :func:`knn_points_bucketed` / :func:`knn_features_bucketed` — the
+   SCALE path (the north rule's "kNN neighbor lookup over cell-bucketed
+   candidates") in 2 or d dimensions: candidates = a query's ring of
+   grid cells, exact refine + rank ``<= k`` by (d2, nbr_id). ONE numpy
+   ring escalation (:func:`_partition_top_k`) runs at every scale: in one
+   Python pass over the points for a batch the driver can merge, in a
+   two-pass tile cogroup (:func:`_tile_top_k`) for any other.
 
- - :func:`radius_count_bucketed` — radius count on the same cell join
-   (cell ≥ r ⇒ ring-1 covers the disk), replacing the O(N²) theta-join.
+ - :func:`radius_count_bucketed` — radius count on a ring-1 cell
+   equi-join (cell ≥ r ⇒ ring-1 covers the disk), replacing the O(N²)
+   theta-join.
 
 Physical shape: ``knn_apply``/``closest_point_join``/``radius_count``
 broadcast the training/match side — the documented FAST PATH when that
 side is small (it is the labelled sample set by construction). The
 ``*_bucketed`` operators are the default at scale: candidates per query
-bounded by local density, skew handled by the same salting policy as
-the spatial join. Large query sides shuffle on the cell key only; an
-interactive batch travels to the points inside the one ``mapInArrow``
-pass, which shuffles nothing and returns at most k rows per query and
-partition.
+bounded by local density, and the point table is never broadcast.
 """
 
 from __future__ import annotations
 
 import math
-from functools import partial
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -54,48 +44,23 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F
 from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 
+from rsgislib_spark.qcommon import GRID_DIM, broadcastable, fenced_small_pdf
+
 METRICS = ("euclidean", "manhattan", "chebyshev", "minkowski", "mahalanobis")
 SUMMARIES = ("mean", "median", "mode", "min", "max", "stddev")
 #: Driver fence for the broadcast side (fenced_small_pdf) — patchable in tests.
 MAX_BROADCAST_TRAIN = 5_000_000
 
-
-#: Linear cell-key grid dimension (matches kernels.cells.linear_cell).
-GRID_DIM = 1 << 21
-#: Beyond this ring the (2r+1)² cell explode costs more than a plain
-#: cross-join of the (few) remaining queries × points.
-XJOIN_RING = 48
 #: Most candidate rows a one-pass kNN batch returns to the driver: a
 #: batch runs the pass only when its queries × k × the point table's
-#: partitions fit; past it the distributed loop takes the whole batch
+#: partitions fit; past it the tile cogroup takes the whole batch
 #: (patchable in tests).
 MAX_DRIVER_CANDIDATES = 2_000_000
-#: Most (query, point) candidate pairs one pass task holds at once: its
-#: candidate ranges are walked in windows of this many elements, so a
-#: hot cell costs time, not memory (read when the op is built; patchable
-#: in tests).
+#: Most (query, point) candidate pairs one kernel call holds at once: its
+#: candidate ranges and dense blocks are walked in windows of this many
+#: elements, so a hot cell costs time, not memory (read when the op is
+#: built; patchable in tests).
 KNN_ELEM_BUDGET = 1 << 19
-
-
-def _union_and_release(outs: list, persisted: list) -> DataFrame:
-    """Union the per-round outputs; when the escalation loop cached
-    intermediates, materialize the union once (localCheckpoint — the
-    blocks are reclaimed by the ContextCleaner on GC) and release the
-    round caches, so repeated invocations in a long-lived session don't
-    accumulate persisted blocks until the storage pool evicts."""
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    if persisted:
-        out = out.localCheckpoint(eager=True)
-        for p in persisted:
-            p.unpersist()
-    return out
-
-
-def _extent(df: DataFrame, cols: Sequence[str]):
-    """One job: the per-column minima, maxima and the row count."""
-    return df.agg(*[F.min(c) for c in cols], *[F.max(c) for c in cols], F.count(F.lit(1))).first()
 
 
 def _ring_plan(pmin, pmax, qmin, qmax, n_points: int, k: int, cell: float, dist_thres: float):
@@ -131,42 +96,60 @@ def _ring_plan(pmin, pmax, qmin, qmax, n_points: int, k: int, cell: float, dist_
     return min(ring, max_ring), max_ring
 
 
-def _final_round(ring: int, max_ring: int, xjoin_ring: int) -> bool:
-    """The round that resolves every remaining query: its ring is the
-    forced last ring, or past the explode cutoff (then a cross-join
-    makes all points candidates — exact for any ring, and a huge explode
-    is far worse)."""
-    return ring >= max_ring or ring > xjoin_ring
+def _cell_spans(pmin, pmax, cell: float) -> list:
+    """(lowest cell, cell count) of each leading dimension a packed cell
+    key holds, from the point extent (None reads 0): at most 3, while
+    the dimension's cells are below 2^53 in magnitude (exact in a double
+    and in int64) and the product of the counts stays below 2^62. Keying
+    fewer dimensions stays exact: a point outside ring R in any keyed
+    dimension is more than R·cell away."""
+    spans = []
+    for a, b in zip(pmin[:3], pmax[:3]):
+        a, b = float(a or 0.0) / cell, float(b or 0.0) / cell
+        if not (abs(a) < 2.0**53 and abs(b) < 2.0**53):
+            break
+        w = math.floor(b) - math.floor(a) + 1
+        if math.prod(s[1] for s in spans) * w >= 1 << 62:
+            break
+        spans.append((math.floor(a), w))
+    return spans
 
 
-def _resolved(cnt, kth_d2, k: int, ring: int, cell: float):
+def _rel_cells(cols, spans, cell: float) -> list:
+    """Cells of coordinate columns relative to each keyed dimension's
+    lowest cell, clipped to one cell beyond the span: a ring around a
+    clipped cell reaches every in-span cell the true ring does."""
+    return [
+        np.clip(np.floor(c / cell), a - 1, a + w).astype(np.int64) - a for c, (a, w) in zip(cols, spans)
+    ]
+
+
+def _box_cells(lo: list, hi: list, stride: list, n: int):
+    """Every cell of each of n rows' boxes [lo[j], hi[j]] over the dims j
+    as (row, Σ index_j · stride[j]), rows in order."""
+    cnt = np.ones(n, np.int64)
+    for a, b in zip(lo, hi):
+        cnt *= np.maximum(b - a + 1, 0)
+    seg = np.repeat(np.arange(n), cnt)
+    t = np.arange(len(seg)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    key = np.zeros(len(seg), np.int64)
+    for a, b, s in zip(lo, hi, stride):
+        span = (b - a + 1)[seg]
+        key += (a[seg] + t % span) * s
+        t //= span
+    return seg, key
+
+
+def _resolved(cnt, kth_d2, k: int, ring: float, cell: float):
     """A query's top-k is final after a round of ``ring`` when it has k
     candidates and the k-th lies within the ring's coverage guarantee
-    (any point outside ring R is > R·cell away). Takes Spark Columns or
-    numpy arrays alike, so both kNN loops apply the one rule."""
+    (any point outside ring R is > R·cell away)."""
     return (cnt >= k) & (kth_d2 <= float(ring * cell) ** 2)
 
 
-def _top_k(cand: DataFrame, k: int) -> DataFrame:
-    """Exact refine in Spark: ``row_number() ≤ k`` per query by (d2, nbr_id)."""
-    win = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("nbr_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "d2", "rank")
-    )
-
-
-def _top_k_pandas(cand: pd.DataFrame, k: int) -> pd.DataFrame:
-    """:func:`_top_k` on the driver: rank ≤ k per query by (d2, nbr_id)."""
-    cand = cand.sort_values(["query_id", "d2", "nbr_id"], kind="stable", ignore_index=True)
-    cand["rank"] = cand.groupby("query_id", sort=False).cumcount().astype(np.int32) + 1
-    return cand[cand["rank"] <= k]
-
-
 def _top_k_rows(q: np.ndarray, j: np.ndarray, d2: np.ndarray, pid: np.ndarray, k: int):
-    """:func:`_top_k` in numpy over candidate rows (query position ``q``,
-    point position ``j``, ``d2``): the first k per query by (d2, pid[j]),
+    """Exact top-k over candidate rows (query position ``q``, point
+    position ``j``, ``d2``): the first k per query by (d2, pid[j]),
     sorted by (q, d2, pid[j])."""
     if not len(q):
         return q, j, d2
@@ -179,76 +162,114 @@ def _top_k_rows(q: np.ndarray, j: np.ndarray, d2: np.ndarray, pid: np.ndarray, k
 
 
 def _partition_top_k(
-    qid: np.ndarray, qx: np.ndarray, qy: np.ndarray,
-    pid: np.ndarray, px: np.ndarray, py: np.ndarray,
+    qid: np.ndarray, qcols: list, pid: np.ndarray, pcols: list,
     k: int, cell: float, dist_thres: float, exclude_self: bool, budget: int,
 ):
-    """Exact top-k of every query over one partition's points — the ring
-    escalation of :func:`knn_points_bucketed` in numpy, planned by
-    :func:`_ring_plan` on the partition's own extent. The points are
-    sorted by their :func:`_xy_key` cell key, so one ring column of a
-    query is one ``searchsorted`` key range; the candidate ranges are
-    walked ``budget`` elements at a time, over groups of queries whose
-    ranges fit the budget too. d2 is ``0.0 + dx² + dy²`` in
-    the Spark expression's order. Returns (query position, point
-    position, d2) rows sorted by query, then (d2, pid)."""
+    """Exact top-k of every query over one set of points in d dimensions
+    (per-dimension coordinate arrays) — THE ring escalation of the
+    bucketed kNN, planned by :func:`_ring_plan` on its inputs' extent.
+
+    Selection rule: any point outside ring R is more than R·cell from the
+    query, so a query is resolved once it has k candidates and its k-th
+    is within R·cell; the rest re-run with a 4× ring, and the ring that
+    covers every point (or the threshold disk) resolves them all. The
+    points are sorted by a cell key packed over the first m ≤ 3
+    dimensions (:func:`_cell_spans`), so a ring is (2r+1)^(m−1)
+    ``searchsorted`` key ranges per query, walked ``budget`` elements at
+    a time over groups of queries whose ranges fit the budget too. A
+    group whose ranges cover more than 1/8 of its (query, point) pairs
+    scores dense query × point blocks instead, each row cut to its k-th
+    d2 (ties kept) before the exact rank; every point is a candidate
+    there, so the group is final. d2 is ``0.0 + Σ diffⱼ²`` in column
+    order, the Spark expression's. Returns (query position, point
+    position, d2) rows, each query's in (d2, pid) order."""
     none = (np.zeros(0, np.int64), np.zeros(0, np.int64), np.zeros(0))
-    if not len(px) or not len(qx):
+    nq, n = len(qcols[0]), len(pcols[0])
+    if not n or not nq:
         return none
+    pmin, pmax = [c.min() for c in pcols], [c.max() for c in pcols]
     ring, max_ring = _ring_plan(
-        (px.min(), py.min()), (px.max(), py.max()), (qx.min(), qy.min()), (qx.max(), qy.max()),
-        len(px), k, cell, dist_thres,
+        pmin, pmax, [c.min() for c in qcols], [c.max() for c in qcols], n, k, cell, dist_thres
     )
-    keys = np.floor(px / cell).astype(np.int64) * GRID_DIM + np.floor(py / cell).astype(np.int64)
+    spans = _cell_spans(pmin, pmax, cell)
+    width = [w for _, w in spans]
+    stride = [math.prod(width[j + 1 :]) for j in range(len(spans))]
+    keys = np.zeros(n, np.int64)
+    for c, (lo, _), s in zip(pcols, spans, stride):
+        rel = np.floor(c / cell).astype(np.int64)
+        rel -= lo
+        rel *= s
+        keys += rel
     order = np.argsort(keys, kind="stable")
     keys = keys[order]
-    qcx, qcy = np.floor(qx / cell).astype(np.int64), np.floor(qy / cell).astype(np.int64)
+    qc = _rel_cells(qcols, spans, cell)
     thres2 = dist_thres * dist_thres if np.isfinite(dist_thres) else None
 
-    def round_top_k(qs, ring, cross):
-        # candidate ranges (query seg_q[s], sorted points lo[s] .. lo[s] + n[s])
-        if cross:  # every point is a candidate
-            seg_q, lo, n = qs, np.zeros(len(qs), np.int64), np.full(len(qs), len(keys))
-        else:
-            col = (qcx[qs, None] + np.arange(-ring, ring + 1)) * GRID_DIM
-            lo = np.searchsorted(keys, (col + (qcy[qs] - ring)[:, None]).ravel(), "left")
-            hi = np.searchsorted(keys, (col + (qcy[qs] + ring)[:, None]).ravel(), "right")
-            seg_q, n = np.repeat(qs, 2 * ring + 1), hi - lo
-        cum = np.r_[0, np.cumsum(n)]
+    def refine(q, j, top):
+        # d2 of candidate pairs, filtered, merged into the running top-k
+        d2 = 0.0
+        for qv, pv in zip(qcols, pcols):
+            diff = qv[q] - pv[j]
+            d2 = d2 + diff * diff
+        keep = np.ones(d2.shape, bool)
+        if exclude_self:
+            keep &= qid[q] != pid[j]
+        if thres2 is not None:
+            keep &= d2 < thres2
+        if d2.ndim == 2 and d2.shape[1] > k:  # dense block: cut each row at its k-th
+            keep &= d2 <= np.partition(np.where(keep, d2, np.inf), k - 1, axis=1)[:, k - 1 : k]
+        q, j = np.broadcast_arrays(q, j)
+        new = (q[keep], j[keep], d2[keep])
+        return _top_k_rows(*(np.concatenate(ab) for ab in zip(top, new)), pid, k)
+
+    def walk(seg_q, lo, cnt):
+        # candidate ranges (query seg_q[s], sorted points lo[s] .. lo[s] + cnt[s])
+        cum = np.r_[0, np.cumsum(cnt)]
         top = none
         for s in range(0, int(cum[-1]), budget):
             el = np.arange(s, min(s + budget, cum[-1]))
             seg = np.searchsorted(cum, el, "right") - 1
-            q, j = seg_q[seg], order[lo[seg] + el - cum[seg]]
-            dx, dy = qx[q] - px[j], qy[q] - py[j]
-            d2 = 0.0 + dx * dx + dy * dy
-            keep = np.ones(len(q), bool)
-            if exclude_self:
-                keep &= qid[q] != pid[j]
-            if thres2 is not None:
-                keep &= d2 < thres2
-            top = _top_k_rows(
-                *(np.concatenate([a, b[keep]]) for a, b in zip(top, (q, j, d2))), pid, k
-            )
+            top = refine(seg_q[seg], order[lo[seg] + el - cum[seg]], top)
         return top
 
-    todo = np.arange(len(qx))
-    outs = []
+    def dense(qs):
+        top, pb = none, min(n, budget)
+        for g in np.split(qs, range(budget // pb, len(qs), budget // pb)):
+            for b in range(0, n, pb):
+                top = refine(g[:, None], np.arange(b, min(b + pb, n))[None, :], top)
+        return top
+
+    if not spans:  # no dimension can be keyed: every point is a candidate
+        return dense(np.arange(nq))
+    todo, outs = np.arange(nq), []
     while todo.size:
         ring = min(ring, max_ring)
-        final = _final_round(ring, max_ring, XJOIN_RING)
-        # queries in groups whose ring ranges also fit the budget
-        step = max(1, budget // (2 * ring + 1))
-        q, j, d2 = (np.concatenate(a) for a in zip(*(
-            round_top_k(todo[c : c + step], ring, final and ring > XJOIN_RING)
-            for c in range(0, len(todo), step)
-        )))
-        if final:
+        r = min(ring, max(width) + 1)
+        per_q = math.prod(min(2 * r + 1, w) for w in width[:-1])  # most ranges per query
+        step = max(1, budget // per_q)  # groups of queries whose ranges fit the budget
+        groups = np.split(todo, range(step, len(todo), step)) if 8 * per_q <= n else []
+        rows, wide, done = [], [todo[:0]] if groups else [todo], np.zeros(nq, bool)
+        for g in groups:
+            lo = [np.maximum(c[g] - r, 0) for c in qc]
+            hi = [np.minimum(c[g] + r, w - 1) for c, w in zip(qc, width)]
+            seg, base = _box_cells(lo[:-1], hi[:-1], stride, len(g))
+            klo = np.searchsorted(keys, base + lo[-1][seg], "left")
+            span = np.maximum(np.searchsorted(keys, base + hi[-1][seg], "right") - klo, 0)
+            if 8 * int(span.sum()) <= len(g) * n:
+                rows.append(walk(g[seg], klo, span))
+            else:
+                wide.append(g)  # its ranges cover most points: score them all
+        wide = np.concatenate(wide)
+        if wide.size:
+            rows.append(dense(wide))
+            done[wide] = True
+        q, j, d2 = (np.concatenate(a) for a in zip(*rows))
+        if ring >= max_ring:
             outs.append((q, j, d2))
             break
-        kth = np.full(len(qx), -np.inf)
+        kth = np.full(nq, -np.inf)
         np.maximum.at(kth, q, d2)
-        ok = _resolved(np.bincount(q, minlength=len(qx))[todo], kth[todo], k, ring, cell)
+        ok = done[todo] | _resolved(np.bincount(q, minlength=nq)[todo], kth[todo], k, ring, cell)
         keep = np.isin(q, todo[ok])
         outs.append((q[keep], j[keep], d2[keep]))
         todo = todo[~ok]
@@ -257,25 +278,24 @@ def _partition_top_k(
 
 
 def _local_top_k(
-    batch: pd.DataFrame, t: DataFrame, k: int, cell: float, dist_thres: float,
+    batch: pd.DataFrame, t: DataFrame, d: int, k: int, cell: float, dist_thres: float,
     exclude_self: bool,
 ) -> pd.DataFrame | None:
     """A query batch's exact kNN in one Python pass over the points: a
-    ``mapInArrow`` over ``t`` (nbr_id, t0, t1) carries the batch in its
-    closure and returns each partition's local top-k
+    ``mapInArrow`` over ``t`` (nbr_id, t0..) carries the batch (query_id,
+    q0..) in its closure and returns each partition's local top-k
     (:func:`_partition_top_k`); the driver merges them with
-    :func:`_top_k_pandas`. Exact, because the global top-k of a query is
+    :func:`_top_k_rows`. Exact, because the global top-k of a query is
     the top-k of the union of its local top-k lists. Returns (query_id,
     nbr_id, d2, rank), or None, running no job, when the batch's
     queries × k × the point partitions exceed ``MAX_DRIVER_CANDIDATES``."""
     from rsgislib_spark.kernels.codecs import arrow_batch_cols
 
     qid = batch["query_id"].to_numpy()
-    qx, qy = batch["q0"].to_numpy(np.float64), batch["q1"].to_numpy(np.float64)
+    qcols = [batch[f"q{j}"].to_numpy(np.float64) for j in range(d)]
     budget = KNN_ELEM_BUDGET
-    schema = StructType([
-        StructField("_q", LongType()), t.schema["nbr_id"], StructField("d2", DoubleType()),
-    ])
+    dist = StructField("d2", DoubleType())
+    schema = StructType([StructField("_q", LongType()), t.schema["nbr_id"], dist])
 
     def run(it):
         import pyarrow as pa
@@ -284,9 +304,9 @@ def _local_top_k(
         if not parts:  # an empty partition yields nothing
             return
         b = pa.Table.from_batches(parts).combine_chunks().to_batches()[0]
-        pid, px, py = arrow_batch_cols(b, "nbr_id", "t0", "t1")
+        pid, *pcols = arrow_batch_cols(b, "nbr_id", *[f"t{j}" for j in range(d)])
         q, j, d2 = _partition_top_k(
-            qid, qx, qy, np.asarray(pid), px, py, k, cell, dist_thres, exclude_self, budget
+            qid, qcols, np.asarray(pid), pcols, k, cell, dist_thres, exclude_self, budget
         )
         yield pa.RecordBatch.from_arrays(
             [pa.array(q), b.column("nbr_id").take(pa.array(j)), pa.array(d2)],
@@ -300,129 +320,175 @@ def _local_top_k(
     if len(batch) * k * n_parts > MAX_DRIVER_CANDIDATES:
         return None
     got = local.toPandas()
-    cand = pd.DataFrame({"query_id": qid[got["_q"].to_numpy()], "nbr_id": got["nbr_id"], "d2": got["d2"]})
-    return _top_k_pandas(cand, k)
+    nbr = got["nbr_id"].to_numpy()
+    q, j, d2 = _top_k_rows(got["_q"].to_numpy(), np.arange(len(got)), got["d2"].to_numpy(), nbr, k)
+    rank = np.arange(len(q)) - np.searchsorted(q, q) + 1  # q is sorted
+    return pd.DataFrame({"query_id": qid[q], "nbr_id": nbr[j], "d2": d2, "rank": rank.astype(np.int32)})
 
 
-def _xy_key(cell: float):
-    """Cell key of 2-D points, x index · GRID_DIM + y index (as
-    kernels.cells.linear_cell), over columns ``{prefix}0``/``{prefix}1``;
-    ``offsets`` adds the ring offsets ``_o0``/``_o1``."""
-
-    def key(prefix: str, offsets: bool = False) -> F.Column:
-        ix, iy = (F.floor(F.col(f"{prefix}{j}") / F.lit(cell)).cast("long") for j in range(2))
-        if offsets:
-            ix, iy = ix + F.col("_o0"), iy + F.col("_o1")
-        return ix * F.lit(GRID_DIM) + iy
-
-    return key
+def _tile_plan(pmin, pmax, n_points: int, k: int, cell: float, dist_thres: float, par: int):
+    """(halo H, keyed spans, tile size in cells, tile count) of the tile
+    cogroup, from the point extent: H is :func:`_ring_plan`'s first
+    ring, and the keyed dimensions (:func:`_cell_spans`) are cut into
+    tiles of T ≥ H cells, about 4·``par`` of them."""
+    halo, _ = _ring_plan(pmin, pmax, pmin, pmax, n_points, k, cell, dist_thres)
+    spans = _cell_spans(pmin, pmax, cell)
+    per_dim = math.ceil((4 * par) ** (1.0 / len(spans))) if spans else 1
+    size = [max(halo, -(-w // per_dim)) for _, w in spans]
+    return halo, spans, size, [-(-w // s) for (_, w), s in zip(spans, size)]
 
 
-def _candidates(
-    base: DataFrame, ring: int, cross: bool, *,
-    t: DataFrame, d: int, key, exclude_self: bool, dist_thres: float,
+def _tile_top_k(
+    q0: DataFrame, t: DataFrame, d: int, k: int, cell: float, dist_thres: float,
+    exclude_self: bool,
 ) -> DataFrame:
-    """(query, point) candidate rows with d2 of one escalation round over
-    query columns q0..q{d-1} and point columns t0..t{d-1}: each query
-    explodes to the (2r+1)^d cells of its ring (one explode per
-    dimension, pure Catalyst) and equi-joins the cell-keyed points on
-    ``cell_key``, both sides shuffled on it (the hint keeps the optimizer
-    from broadcasting the points). ``cross`` makes every point a
-    candidate instead."""
-    if cross:
-        cand = base.crossJoin(t.drop("cell_key"))  # exact last resort
-    else:
-        qe = base
-        for j in range(d):
-            qe = qe.withColumn(f"_o{j}", F.explode(F.expr(f"sequence({-ring}, {ring})")))
-        qe = qe.withColumn("cell_key", key("q", offsets=True)).drop(*[f"_o{j}" for j in range(d)])
-        cand = qe.join(t.hint("shuffle_hash"), "cell_key")
-    if exclude_self:
-        cand = cand.filter(F.col("query_id") != F.col("nbr_id"))
-    d2 = F.lit(0.0)
-    for j in range(d):
-        diff = F.col(f"q{j}") - F.col(f"t{j}")
-        d2 = d2 + diff * diff
-    cand = cand.withColumn("d2", d2)
-    if np.isfinite(dist_thres):
-        cand = cand.filter(F.col("d2") < F.lit(dist_thres * dist_thres))
-    return cand
+    """A query batch's exact kNN as a two-pass tile cogroup: two Python
+    passes of :func:`_partition_top_k` in one Spark DAG.
+
+    - *Sizing*: one job for the points' extent and count feeds
+      :func:`_tile_plan`. Each point goes to its own tile and every
+      neighbour tile within H cells (integer cell arithmetic, at most 3^m
+      copies), each query to its own tile (clamped into the tile range):
+      a tile holds every point within ring H of its queries.
+    - *Pass 1* runs the kernel per tile. A query is final when it has k
+      rows with the k-th within H·cell, or when ``dist_thres`` ≤ H·cell;
+      its rows go to its own tile. A straggler leaves as one row per point
+      tile within its bound: its k-th distance plus one cell (every tile
+      with fewer than k rows), clipped by ``dist_thres``.
+    - *Pass 2* cogroups the points, keyed by their own tile only, with
+      those rows: final rows pass through, stragglers run the kernel over
+      the tile's points, and a window ranks the tiles' rows by (d2, nbr_id).
+
+    Both cogroup inputs are hash-partitioned on the tile into an explicit
+    ``defaultParallelism`` partitions (one wave of Python tasks); left to
+    AQE, the shuffles coalesced into one or two tasks."""
+    from rsgislib_spark.kernels.codecs import arrow_batch_cols
+
+    qn, tn = [f"q{j}" for j in range(d)], [f"t{j}" for j in range(d)]
+    ext = t.agg(*[F.min(c) for c in tn], *[F.max(c) for c in tn], F.count(F.lit(1))).first()
+    par = q0.sparkSession.sparkContext.defaultParallelism
+    halo, spans, size, ntile = _tile_plan(ext[:d], ext[d : 2 * d], ext[2 * d], k, cell, dist_thres, par)
+    # (lowest cell, cells, tile size, tiles, key stride) per keyed dimension
+    plan = [(*sp, size[j], ntile[j], math.prod(ntile[j + 1 :])) for j, sp in enumerate(spans)]
+    reach = halo if math.prod(ntile) > 1 else math.inf  # one tile holds every point
+    budget = KNN_ELEM_BUDGET
+
+    cells = t.selectExpr("*", *[f"FLOOR(t{j} / {cell!r}D) - {p[0]} AS _c{j}" for j, p in enumerate(plan)])
+    near = cells
+    for j, (lo, w, s, nt, st) in enumerate(plan):  # own tile and the neighbour tiles within the halo
+        near = near.selectExpr("*", f"explode(array(-1, 0, 1)) AS _o{j}").where(
+            f"_c{j} DIV {s} + _o{j} BETWEEN 0 AND {nt - 1}"
+            f" AND _c{j} - (_c{j} DIV {s} + _o{j}) * {s} BETWEEN {-halo} AND {s - 1 + halo}"
+        )
+    tiles = " + ".join([f"(_c{j} DIV {p[2]} + _o{j}) * {p[-1]}" for j, p in enumerate(plan)] or ["0L"])
+    own = " + ".join([f"_c{j} DIV {p[2]} * {p[-1]}" for j, p in enumerate(plan)] or ["0L"])
+    qtile = " + ".join([  # the query's cell clipped to one beyond the span, its tile clamped
+        f"LEAST(GREATEST((FLOOR(LEAST(GREATEST(q{j} / {cell!r}D, {lo - 1}D), {lo + w}D)) - {lo})"
+        f" DIV {s}, 0), {nt - 1}) * {st}"
+        for j, (lo, w, s, nt, st) in enumerate(plan)
+    ] or ["0L"])
+    routed = StructType([
+        StructField("tile", LongType()), q0.schema["query_id"],
+        StructField("nbr_id", t.schema["nbr_id"].dataType), StructField("d2", DoubleType()),
+        *[StructField(c, DoubleType()) for c in qn],
+    ])
+
+    def kernel(qt, pts):
+        qid, *qcols = arrow_batch_cols(qt, "query_id", *qn)
+        pid, *pcols = arrow_batch_cols(pts, "nbr_id", *tn)
+        q, j, d2 = _partition_top_k(
+            np.asarray(qid), qcols, np.asarray(pid), pcols, k, cell, dist_thres, exclude_self, budget
+        )
+        return qcols, q, j, d2
+
+    def pass1(pts, qt):
+        import pyarrow as pa
+
+        qt, pts = qt.combine_chunks(), pts.combine_chunks()
+        qcols, q, j, d2 = kernel(qt, pts)
+        cnt, kth = np.bincount(q, minlength=qt.num_rows), np.full(qt.num_rows, -np.inf)
+        np.maximum.at(kth, q, d2)
+        final = _resolved(cnt, kth, k, reach, cell) | (dist_thres <= reach * cell)
+        late, keep = np.flatnonzero(~final), final[q]
+        # a straggler's bound in cells (its k-th distance or dist_thres, plus
+        # one), then every point tile it reaches
+        bound = np.where(cnt[late] >= k, np.floor(np.sqrt(np.maximum(kth[late], 0.0)) / cell) + 1, np.inf)
+        bound = np.minimum(bound, math.floor(min(dist_thres / cell, 2.0**62)) + 1)
+        lo, hi = [], []
+        for c, (_, w, s, nt, _) in zip(_rel_cells([c[late] for c in qcols], spans, cell), plan):
+            r = np.minimum(bound, w + 1).astype(np.int64)
+            lo.append(np.maximum((c - r) // s, 0))
+            hi.append(np.minimum((c + r) // s, nt - 1))
+        seg, tile = _box_cells(lo, hi, [p[-1] for p in plan], len(late))
+        # final rows (with their own tile), then one row per (straggler, point tile)
+        src, n_r = np.r_[q[keep], late[seg]], len(seg)
+        miss = np.arange(len(src)) >= len(src) - n_r
+        return pa.table({
+            "tile": np.r_[qt.column("tile").to_numpy()[q[keep]], tile],
+            "query_id": qt.column("query_id").take(src),
+            "nbr_id": pts.column("nbr_id").take(pa.array(np.r_[j[keep], np.zeros_like(seg)], mask=miss)),
+            "d2": pa.array(np.r_[d2[keep], np.zeros(n_r)], mask=miss),
+            **{c: v[src] for c, v in zip(qn, qcols)},
+        })
+
+    def pass2(pts, rows):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        done = pc.is_valid(rows.column("d2"))
+        late = rows.filter(pc.invert(done)).combine_chunks()
+        _, q, j, d2 = kernel(late, pts.combine_chunks())
+        new = pa.table({"query_id": late["query_id"].take(q), "nbr_id": pts["nbr_id"].take(j), "d2": d2})
+        fin = rows.filter(done).select(new.column_names)
+        return pa.concat_tables([fin, new], promote_options="default")
+
+    def cogroup(a, b, fn, schema):
+        a, b = (df.repartition(par, "tile").groupBy("tile") for df in (a, b))
+        return a.cogroup(b).applyInArrow(fn, schema)
+
+    first = cogroup(
+        near.selectExpr(*t.columns, f"{tiles} AS tile"), q0.selectExpr("*", f"{qtile} AS tile"),
+        pass1, routed,
+    )
+    own_pts = cells.selectExpr(*t.columns, f"{own} AS tile")
+    second = cogroup(own_pts, first, pass2, _result_schema(q0, t)[:3])
+    rank = F.row_number().over(W.partitionBy("query_id").orderBy("d2", "nbr_id"))
+    return second.withColumn("rank", rank).where(f"rank <= {k}")
+
+
+def _result_schema(q0: DataFrame, t: DataFrame) -> StructType:
+    """(query_id, nbr_id, d2, rank) of a bucketed kNN."""
+    fields = [q0.schema["query_id"], t.schema["nbr_id"], StructField("d2", DoubleType())]
+    return StructType([*fields, StructField("rank", IntegerType())])
 
 
 def _knn_bucketed(
-    q0: DataFrame, t: DataFrame, d: int, key, k: int, cell: float, dist_thres: float,
-    exclude_self: bool, xjoin_ring: int, one_pass: bool,
+    queries: DataFrame, points: DataFrame, id_col: str, cols: Sequence[str], k: int,
+    cell: float, dist_thres: float, exclude_self: bool,
 ) -> DataFrame:
-    """Ring escalation shared by the bucketed kNN operators, over query
-    rows (query_id, q0..) and point rows (nbr_id, t0..); see
-    :func:`knn_points_bucketed`. A row with a null or NaN coordinate is
-    never a query nor a candidate. ``one_pass`` (2-D only) lets a
-    broadcastable batch run :func:`_local_top_k`."""
-    from rsgislib_spark.qcommon import broadcastable
-
-    spark = q0.sparkSession
-    schema = StructType([
-        q0.schema["query_id"], t.schema["nbr_id"],
-        StructField("d2", DoubleType()), StructField("rank", IntegerType()),
-    ])
-    qcols, tcols = [f"q{j}" for j in range(d)], [f"t{j}" for j in range(d)]
+    """The bucketed kNN operators' shared body over the coordinate
+    columns ``cols``; see :func:`knn_points_bucketed`. A row with a null
+    or NaN coordinate is never a query nor a candidate. A broadcastable
+    batch runs :func:`_local_top_k`; any other, or one over its collect
+    bound, runs :func:`_tile_top_k`."""
+    d = len(cols)
+    # one SQL projection per side: one py4j call each, where composed
+    # Columns cost ~25 ms of driver time per kNN call
     q0, t = (
-        df.where(" AND ".join(f"{c} IS NOT NULL AND NOT isnan({c})" for c in cols))
-        for df, cols in ((q0, qcols), (t, tcols))
+        df.selectExpr(
+            f"`{id_col}` AS {name}_id", *[f"CAST(`{c}` AS DOUBLE) AS {p}{j}" for j, c in enumerate(cols)]
+        ).where(" AND ".join(f"{p}{j} IS NOT NULL AND NOT isnan({p}{j})" for j in range(d)))
+        for df, name, p in ((queries, "query", "q"), (points, "nbr", "t"))
     )
-    if one_pass and broadcastable(q0):
+    if broadcastable(q0):
+        spark, schema = q0.sparkSession, _result_schema(q0, t)
         batch = q0.toPandas()
         if batch.empty:
             return spark.createDataFrame([], schema)
-        top = _local_top_k(batch, t, k, cell, dist_thres, exclude_self)
+        top = _local_top_k(batch, t, d, k, cell, dist_thres, exclude_self)
         if top is not None:
             return spark.createDataFrame(top, schema)
-    pstats, qstats = _extent(t, tcols), _extent(q0, qcols)
-    ring, max_ring = _ring_plan(
-        pstats[:d], pstats[d : 2 * d], qstats[:d], qstats[d : 2 * d], int(pstats[2 * d]),
-        k, cell, dist_thres,
-    )
-    candidates = partial(
-        _candidates, t=t.withColumn("cell_key", key("t")), d=d, key=key,
-        exclude_self=exclude_self, dist_thres=dist_thres,
-    )
-    return _escalate(q0, candidates, k, ring, max_ring, cell, xjoin_ring)
-
-
-def _escalate(
-    remaining: DataFrame, candidates, k: int, ring: int, max_ring: int,
-    cell: float, xjoin_ring: int,
-) -> DataFrame:
-    """Distributed ring escalation: each round ranks the candidates of
-    only the remaining queries (``candidates(base, ring, cross)`` → rows
-    with query_id, nbr_id, d2), keeps the resolved ones, anti-joins them
-    away and stops when nothing remains — so the common case is one
-    round plus a cheap empty check."""
-    outs = []
-    persisted = []
-    while True:
-        ring = min(ring, max_ring)
-        final = _final_round(ring, max_ring, xjoin_ring)
-        ranked = _top_k(candidates(remaining, ring, final and ring > xjoin_ring), k)
-        if final:
-            outs.append(ranked)
-            break
-        ranked = ranked.persist()
-        persisted.append(ranked)
-        resolved = (
-            ranked.groupBy("query_id")
-            .agg(F.count("*").alias("cnt"), F.max("d2").alias("maxd2"))
-            .filter(_resolved(F.col("cnt"), F.col("maxd2"), k, ring, cell))
-            .select("query_id")
-        )
-        outs.append(ranked.join(resolved, "query_id"))
-        remaining = remaining.join(resolved, "query_id", "left_anti").persist()
-        persisted.append(remaining)
-        if remaining.isEmpty():
-            break
-        ring *= 4
-
-    return _union_and_release(outs, persisted)
+    return _tile_top_k(q0, t, d, k, cell, dist_thres, exclude_self)
 
 
 def knn_points_bucketed(
@@ -443,31 +509,22 @@ def knn_points_bucketed(
 
     Candidates: the points in the (2r+1)² grid cells of a query's ring
     (the point table is never broadcast); exact refine by d2 and rank
-    ``≤ k`` per query in (d2, nbr_id) order.
+    ``≤ k`` per query in (d2, nbr_id) order, by the selection rule of
+    :func:`_partition_top_k` — hence bucketed == brute force always.
 
-    Selection rule: any point outside ring R is at distance > R·cell
-    from the query, so a query is RESOLVED once it has k candidates and
-    its k-th is within R·cell. Unresolved queries re-run with a 4× ring;
-    the round whose ring covers every point (or the threshold disk, or
-    passes the explode cutoff, where every point becomes a candidate)
-    resolves the rest. Hence bucketed == brute force always.
-
-    Physical shape, by the query side:
+    Physical shape, by the query side (both run that one kernel):
 
     - *one pass*: the projected queries are broadcastable (Catalyst's
       size estimate within ``spark.sql.autoBroadcastJoinThreshold``; −1
       disables) and queries × k × point partitions is within
       ``MAX_DRIVER_CANDIDATES``. The batch is collected once and rides
-      in the closure of one ``mapInArrow`` over the points. Each task
-      sorts its partition's points by cell key and runs the ring
-      escalation in numpy on the partition's own extent, returning
-      every query's exact local top-k; the driver merges them. One
-      Python pass, no join, shuffle, persist or extent job.
-    - otherwise, the distributed loop from the start: one job for the
-      point and query extents each, then per round the queries explode
-      to their ring cells and equi-join the points on the cell key (both
-      shuffled), rank with a window, persist, anti-join the resolved
-      queries away and check the rest for emptiness.
+      in the closure of one ``mapInArrow`` over the points, whose tasks
+      return each query's exact local top-k for the driver to merge. No
+      join, shuffle or extent job.
+    - *tile cogroup* otherwise (:func:`_tile_top_k`): one extent job
+      sizes tiles with a halo; pass 1 settles most queries per tile,
+      pass 2 takes each straggler to the tiles within its bound, and a
+      window ranks the union. Two Python passes in one DAG.
 
     A point with a null or NaN coordinate is never a candidate, and
     such a query returns no rows.
@@ -480,18 +537,7 @@ def knn_points_bucketed(
     (d2, nbr_id) — deterministic across engines when coordinates live
     on an integer lattice (d2 is then integer-valued).
     """
-    # one SQL projection per side: one py4j call each, where composed
-    # Columns cost ~25 ms of driver time per kNN call
-    q0, t = (
-        df.selectExpr(
-            f"`{id_col}` AS {name}_id", f"CAST(`{x_col}` AS DOUBLE) AS {p}0",
-            f"CAST(`{y_col}` AS DOUBLE) AS {p}1",
-        )
-        for df, name, p in ((queries, "query", "q"), (points, "nbr", "t"))
-    )
-    return _knn_bucketed(
-        q0, t, 2, _xy_key(cell), k, cell, dist_thres, exclude_self, XJOIN_RING, one_pass=True
-    )
+    return _knn_bucketed(queries, points, id_col, (x_col, y_col), k, cell, dist_thres, exclude_self)
 
 
 def knn_features_bucketed(
@@ -508,65 +554,19 @@ def knn_features_bucketed(
     scale path for ``apply_rat_knn``'s euclidean metric when the
     training side outgrows a broadcast (ref RSGISRATKNN.cpp:390-420
     linearly scans all training rows; knn_apply broadcasts them; this
-    restricts the scan to the Chebyshev cell neighbourhood).
+    restricts the scan to the Chebyshev cell neighbourhood), for any
+    number of features like the reference (RSGISRATKNN.cpp:82-86).
+    Returns (query_id, nbr_id, d2, rank).
 
-    Same candidates, ring escalation and selection rule as
-    :func:`knn_points_bucketed`, in d dims and on the distributed loop
-    only: candidates = the (2r+1)^d ring (one chained explode per
-    dimension, pure Catalyst), exact refine + row_number ≤ k,
-    resolution guarantee d_k ≤ r·cell (any point outside the Chebyshev
-    ring R is at L∞ — hence L2 — distance > R·cell, in every dimension
-    count). Returns (query_id, nbr_id, d2, rank).
-
-    Cell key: d ≤ 3 packs the per-dim indices into ONE long (radix
-    GRID_DIM — cheapest shuffle key; indices must fit 21 bits); d ≥ 4
-    uses a STRUCT of per-dim longs (Catalyst joins on struct equality;
-    no bit budget, arbitrary d — the reference's apply_rat_knn takes
-    any number of RAT fields, RSGISRATKNN.cpp:82-86). The ring explode
-    is (2r+1)^d rows per query, so high-d escalation hands off to the
-    exact cross-join finalizer after a d-dependent cutoff — grid
-    bucketing's curse of dimensionality is real; for d ≳ 8 prefer
+    Same kernel, selection rule and physical shapes as
+    :func:`knn_points_bucketed`. Cells are keyed, and tiles cut, on the
+    first min(d, 3) features; the rest only refine. Exact for any d: a
+    point outside the Chebyshev ring R in any keyed dimension is at L∞ —
+    hence L2 — distance > R·cell. For d ≳ 8 prefer
     similarity.lsh_bucketed_topk."""
-    d = len(feat_cols)
-    if d < 1:
+    if not feat_cols:
         raise ValueError("knn_features_bucketed needs at least 1 feature dim")
-    q0 = queries.select(
-        F.col(id_col).alias("query_id"),
-        *[F.col(c).cast("double").alias(f"q{j}") for j, c in enumerate(feat_cols)],
-    )
-    t = points.select(
-        F.col(id_col).alias("nbr_id"),
-        *[F.col(c).cast("double").alias(f"t{j}") for j, c in enumerate(feat_cols)],
-    )
-
-    def key(prefix: str, offsets: bool = False) -> F.Column:
-        def digit(j):
-            idx = F.floor(F.col(f"{prefix}{j}") / F.lit(cell)).cast("long")
-            if offsets:
-                idx = idx + F.col(f"_o{j}")
-            return idx
-
-        if d <= 3:
-            # radix-packed d-digit key; digits shifted by half the radix
-            # so negative feature indices stay injective (signed digits
-            # with magnitude near GRID_DIM/2 would otherwise collide
-            # across adjacent high digits)
-            kcol = F.lit(0).cast("long")
-            for j in range(d):
-                kcol = kcol * F.lit(GRID_DIM) + digit(j) + F.lit(GRID_DIM // 2)
-            return kcol
-        # d ≥ 4: struct key — no packing budget, joins on struct equality
-        return F.struct(*[digit(j).alias(f"k{j}") for j in range(d)])
-
-    if d <= 3:
-        xjoin_ring = {1: 2048, 2: 64, 3: 16}[d]
-    else:
-        # largest ring whose (2r+1)^d explode stays under ~20k candidate
-        # cells per query; past it the exact cross-join finalizer wins
-        xjoin_ring = max(1, int((20_000 ** (1.0 / d) - 1) // 2))
-    return _knn_bucketed(
-        q0, t, d, key, k, cell, dist_thres, exclude_self, xjoin_ring, one_pass=False
-    )
+    return _knn_bucketed(queries, points, id_col, feat_cols, k, cell, dist_thres, exclude_self)
 
 
 def radius_count_bucketed(
@@ -580,30 +580,28 @@ def radius_count_bucketed(
     """Count of OTHER points within ``radius`` via the cell equi-join —
     the scale path of ``calc_npts_in_radius`` (ref
     vectorattrs/__init__.py:997-1049). With ``cell ≥ radius`` the ring-1
-    neighbourhood covers the whole disk, so candidates are exact; the
-    refine keeps ``d2 ≤ r²``. The self-pair (d2 = 0) always joins, so an
-    inner join + count-1 yields 0 for isolated points without a left
-    join. Pure Catalyst; no broadcast of the point table; one shuffle on
-    the cell key + one on the id for the count."""
+    neighbourhood covers the whole disk, so candidates are exact: each
+    point explodes to the keys of its 3×3 cells (x index · GRID_DIM + y
+    index, as kernels.cells.linear_cell) and equi-joins the cell-keyed
+    points (both shuffled; the hint keeps the optimizer from
+    broadcasting them); the refine keeps ``d2 ≤ r²``. The self-pair
+    (d2 = 0) always joins, so an inner join + count-1 yields 0 for
+    isolated points without a left join. Pure Catalyst."""
     cell = float(cell if cell is not None else radius)
     if cell < radius:
         raise ValueError("cell must be >= radius for ring-1 coverage")
-    key = _xy_key(cell)
-    t = points.select(
-        F.col(id_col).alias("nbr_id"),
-        F.col(x_col).cast("double").alias("t0"),
-        F.col(y_col).cast("double").alias("t1"),
+    key = f"(FLOOR({{0}}0 / {cell!r}D) + {{1}}) * {GRID_DIM} + FLOOR({{0}}1 / {cell!r}D) + {{2}}"
+    t, q = (
+        points.selectExpr(f"`{id_col}` AS {name}", f"CAST(`{x_col}` AS DOUBLE) AS {p}0",
+                          f"CAST(`{y_col}` AS DOUBLE) AS {p}1")
+        for name, p in (("nbr_id", "t"), ("query_id", "q"))
     )
-    q = points.select(
-        F.col(id_col).alias("query_id"),
-        F.col(x_col).cast("double").alias("q0"),
-        F.col(y_col).cast("double").alias("q1"),
-    )
-    r2 = float(radius) * float(radius)
-    cand = _candidates(
-        q, 1, False, t=t.withColumn("cell_key", key("t")), d=2, key=key,
-        exclude_self=False, dist_thres=np.inf,
-    ).filter(F.col("d2") <= F.lit(r2))
+    t = t.selectExpr("*", f"{key.format('t', 0, 0)} AS cell_key")
+    for j in range(2):
+        q = q.selectExpr("*", f"explode(sequence(-1, 1)) AS _o{j}")
+    q = q.selectExpr("query_id", "q0", "q1", f"{key.format('q', '_o0', '_o1')} AS cell_key")
+    d2 = "0.0D + (q0 - t0) * (q0 - t0) + (q1 - t1) * (q1 - t1)"
+    cand = q.join(t.hint("shuffle_hash"), "cell_key").where(f"{d2} <= {float(radius) * float(radius)!r}D")
     return cand.groupBy(F.col("query_id").alias(id_col)).agg(
         (F.count("*") - F.lit(1)).alias("n_in_radius")
     )
@@ -711,8 +709,6 @@ def knn_apply(
     if summary not in SUMMARIES:
         raise ValueError(f"summary must be one of {SUMMARIES}")
     spark = apply_df.sparkSession
-    from rsgislib_spark.qcommon import fenced_small_pdf
-
     tr = fenced_small_pdf(
         train_df.select(*dict.fromkeys([*feat_cols, val_col])),
         "knn_apply broadcast training set",
@@ -790,8 +786,6 @@ def closest_point_join(
             .withColumn("dist", F.coalesce(F.col("dist"), F.lit(float("nan"))))
         )
     spark = base.sparkSession
-    from rsgislib_spark.qcommon import fenced_small_pdf
-
     m = fenced_small_pdf(
         match.select(match_id, "x", "y"),
         "closest_point_join broadcast match set",
@@ -839,8 +833,6 @@ def radius_count(points: DataFrame, radius: float, id_col: str = "pt_id") -> Dat
     ``calc_npts_in_radius`` (``vectorattrs/__init__.py:997-1049``, KDTree
     ball query minus self)."""
     spark = points.sparkSession
-    from rsgislib_spark.qcommon import fenced_small_pdf
-
     p = fenced_small_pdf(
         points.select(id_col, "x", "y"),
         "radius_count broadcast point set",

@@ -478,9 +478,10 @@ FROM r WHERE rn <= 3 GROUP BY pt_id
 
 def q18_radius_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """calc_npts_in_radius: count of other points within r, on the
-    CELL-BUCKETED equi-join (cell ≥ r ⇒ ring-1 covers the disk, exact
-    refine inside) — candidates only, no O(N²) theta-join, no broadcast
-    of the point table."""
+    CELL-BUCKETED ring-1 equi-join (each point explodes to its 3×3 cell
+    keys; cell ≥ r ⇒ ring-1 covers the disk, exact refine inside) —
+    candidates only, no O(N²) theta-join, no broadcast of the point
+    table."""
     from rsgislib_spark.operators.knn import radius_count_bucketed
 
     load_views(spark, sf_dir)

@@ -5063,10 +5063,11 @@ FROM m GROUP BY image_key
 def q89_knn_features_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FEATURE-SPACE kNN over d-dimensional grid buckets
     (operators/knn.knn_features_bucketed) — the scale path for
-    apply_rat_knn when the training table outgrows a broadcast: 3-D cell
-    equi-join on (f1,f2,f3) buckets + ring escalation, proven exact
-    against the brute-force oracle (same statement q74 makes for
-    spatial kNN)."""
+    apply_rat_knn when the training table outgrows a broadcast: the
+    numpy ring escalation over (f1,f2,f3) cell buckets, in one Python
+    pass over the training rows (a batch this size fits the driver
+    merge; larger ones run the tile cogroup), proven exact against the
+    brute-force oracle (same statement q74 makes for spatial kNN)."""
     from rsgislib_spark.operators.knn import knn_features_bucketed
 
     load_views(spark, sf_dir)
@@ -5105,14 +5106,13 @@ _Q130_EXTRA_FEATS = [
 
 
 def q130_knn_features_d5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FEATURE-SPACE kNN at d=5 (VERDICT r4 task 5): the bucketed path
-    generalised past the radix-packed key — d ≥ 4 joins on a STRUCT of
-    per-dim cell indices (no 21-bit budget), matching apply_rat_knn's
-    arbitrary-field-count contract (RSGISRATKNN.cpp:82-86). In this
-    sparse lattice the first 3^5-cell bucketed round resolves the dense
-    queries and the escalation hands the stragglers to the exact
-    cross-join finalizer — proven exact against the 5-d brute-force
-    oracle."""
+    """FEATURE-SPACE kNN at d=5: the bucketed path past three
+    dimensions, matching apply_rat_knn's arbitrary-field-count contract
+    (RSGISRATKNN.cpp:82-86). Cells are keyed on f1..f3 (relative to the
+    lowest cell, so no bit budget); f4 and f5 only refine. In this sparse
+    lattice a query's first ring already spans most occupied cells, so
+    the kernel scores dense query × point blocks — proven exact against
+    the 5-d brute-force oracle."""
     from rsgislib_spark.operators.knn import knn_features_bucketed
 
     load_views(spark, sf_dir)
@@ -5219,13 +5219,15 @@ FROM px GROUP BY image_key
 
 
 def q74_knn_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spatial kNN on the CELL-BUCKETED two-phase join (the north rule's
-    "kNN neighbor lookup over cell-bucketed candidates"): bucket → k-ring
-    candidate equi-join → exact refine → row_number ≤ k, with a
-    ring-escalation guarantee that makes the result identical to brute
-    force. The oracle IS brute force — proving bucketed == exact.
-    Ref: apply_rat_knn (src/rastergis/RSGISRATKNN.cpp:390-420), here the
-    linear scan is restricted to candidate cells."""
+    """Spatial kNN over CELL-BUCKETED candidates (the north rule's "kNN
+    neighbor lookup over cell-bucketed candidates"): points sorted by
+    cell key, each query's k-ring of cells as key ranges → exact refine
+    → rank ≤ k, with a ring-escalation guarantee that makes the result
+    identical to brute force; the batch rides one Python pass over the
+    points (the tile cogroup past the driver-merge bound). The oracle IS
+    brute force — proving bucketed == exact. Ref: apply_rat_knn
+    (src/rastergis/RSGISRATKNN.cpp:390-420), here the linear scan is
+    restricted to candidate cells."""
     from rsgislib_spark.operators.knn import knn_points_bucketed
 
     load_views(spark, sf_dir)

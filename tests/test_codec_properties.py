@@ -258,3 +258,47 @@ def test_png_fallback_on_corrupt_stream(monkeypatch):
         codecs.decode_image(corrupt, "png", 8, 8)
     with pytest.raises(struct.error):
         codecs.decode_image(truncated, "png", 8, 8)
+
+
+def test_pil_backend_palette_png_keeps_colour(monkeypatch):
+    """A palette PNG (colour type 3, which the in-house decoder rejects)
+    decodes through the Pillow backend to its palette's RGB colours: the
+    band-count rule read its one index band as gray. Pillow stands in
+    as a fake that opens the payload as a "P" image."""
+    import struct
+    import types
+    import zlib
+
+    idx = np.array([[0, 1, 2], [2, 1, 0]], dtype=np.uint8)
+    palette = np.array([[255, 0, 0], [0, 255, 0], [0, 0, 255]], dtype=np.uint8)
+
+    def chunk(kind, data):
+        return struct.pack(">I", len(data)) + kind + data + struct.pack(">I", zlib.crc32(kind + data))
+
+    png = (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", struct.pack(">IIBBBBB", 3, 2, 8, 3, 0, 0, 0))
+        + chunk(b"PLTE", palette.tobytes())
+        + chunk(b"IDAT", zlib.compress(b"".join(b"\x00" + row.tobytes() for row in idx)))
+        + chunk(b"IEND", b"")
+    )
+
+    class PaletteImage:
+        def __init__(self, mode, px):
+            self.mode, self.px = mode, px
+
+        def getbands(self):
+            return ("P",) if self.mode == "P" else tuple(self.mode)
+
+        def convert(self, mode):
+            rgb = palette[self.px]
+            return PaletteImage(mode, rgb if mode == "RGB" else rgb.max(axis=2))
+
+        def __array__(self, dtype=None, copy=None):
+            return self.px
+
+    be = object.__new__(codecs._PILBackend)
+    be._Image = types.SimpleNamespace(open=lambda f: PaletteImage("P", idx))
+    monkeypatch.setattr(codecs, "_EXTERNAL_BACKENDS", [be])
+    out = codecs.decode_image(png, "png", 2, 3)
+    assert np.array_equal(out, palette[idx])

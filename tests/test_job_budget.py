@@ -13,9 +13,12 @@ from pyspark.sql import functions as F
 from rsgislib_spark.operators import knn
 from rsgislib_spark.operators.spatial_join import spatial_join_broadcast
 
-#: queries collect, the one Python pass over the points, result collect;
-#: the distributed loop takes 13 for the same call
+#: queries collect, the one Python pass over the points, result collect
 KNN_ONE_ROUND_JOBS = 3
+#: the same call forced onto the tile cogroup: the point extent, then one
+#: job per shuffle stage of the DAG (both passes' inputs, the window) and
+#: the result collect
+KNN_TILE_JOBS = 8
 #: zone fence (one collect), the zone attributes' broadcast, then the
 #: filtered refine that carries the rows
 WINDOW_JOIN_JOBS = 3
@@ -40,6 +43,27 @@ def test_knn_one_round_job_budget(spark, points_pdf, monkeypatch):
     n = _jobs(spark, "budget-knn", lambda: knn.knn_points_bucketed(qs, pts, k=4, cell=50000.0).toPandas())
     assert len(rounds) == 1
     assert n <= KNN_ONE_ROUND_JOBS, n
+
+
+def test_knn_tile_cogroup_job_budget(spark, points_pdf, monkeypatch):
+    pts = spark.createDataFrame(points_pdf)
+    qs = spark.createDataFrame(points_pdf.iloc[:16])
+    tiles = []
+    real = knn._tile_top_k
+    monkeypatch.setattr(knn, "_tile_top_k", lambda *a, **kw: tiles.append(1) or real(*a, **kw))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    threshold = spark.conf.get(key)
+
+    def call():  # builds the op inside the job group: the extent job runs here
+        return knn.knn_points_bucketed(qs, pts, k=4, cell=50000.0).toPandas()
+
+    spark.conf.set(key, "-1")
+    try:
+        n = _jobs(spark, "budget-knn-tile", call)
+    finally:
+        spark.conf.set(key, threshold)
+    assert len(tiles) == 1
+    assert n <= KNN_TILE_JOBS, n
 
 
 def test_single_zone_window_join_job_budget(spark, images_nopix_pdf, zones_pdf):

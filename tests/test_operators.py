@@ -2,6 +2,7 @@
 independent numpy oracles over the deterministic fixtures."""
 
 import contextlib
+import itertools
 
 import numpy as np
 import pandas as pd
@@ -281,11 +282,11 @@ class TestPointExtract:
 def knn_rounds():
     """Record the kNN passes that run, in order: "_local_top_k" for the
     one Python pass over the points (not recorded when it declines a
-    batch over its collect bound, running nothing), "_escalate" for the
-    distributed loop."""
+    batch over its collect bound, running nothing), "_tile_top_k" for the
+    tile cogroup."""
     from rsgislib_spark.operators import knn
 
-    real = {name: getattr(knn, name) for name in ("_local_top_k", "_escalate")}
+    real = {name: getattr(knn, name) for name in ("_local_top_k", "_tile_top_k")}
     taken = []
 
     def spy(name):
@@ -308,10 +309,10 @@ def knn_rounds():
 
 @contextlib.contextmanager
 def knn_path(spark, path, rounds=True):
-    """Run knn_points_bucketed on one physical path and check every call
-    took it: "broadcast" (the query batch shipped to the points in one
-    Python pass, the default for small batches) or "distributed" (the
-    scale loop, forced by spark.sql.autoBroadcastJoinThreshold=-1). With
+    """Run a bucketed kNN on one physical path and check every call took
+    it: "broadcast" (the query batch shipped to the points in one Python
+    pass, the default for small batches) or "distributed" (the tile
+    cogroup, forced by spark.sql.autoBroadcastJoinThreshold=-1). With
     ``rounds=False`` no pass may run at all."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     threshold = spark.conf.get(key)
@@ -322,7 +323,7 @@ def knn_path(spark, path, rounds=True):
             yield
         finally:
             spark.conf.set(key, threshold)
-    want = "_local_top_k" if path == "broadcast" else "_escalate"
+    want = "_local_top_k" if path == "broadcast" else "_tile_top_k"
     assert set(taken) <= {want} and bool(taken) == rounds, (path, taken)
 
 
@@ -447,9 +448,9 @@ class TestKNN:
 
     @pytest.mark.parametrize("cell", [2000.0, 50000.0])
     def test_knn_bucketed_equals_brute(self, spark, points_pdf, cell):
-        """Small cell starts past the explode cutoff (cross-join
-        finalizer); large cell resolves by the ring rule — both must
-        equal brute force exactly, on both physical paths."""
+        """Small cell escalates through wide rings into the dense
+        every-point round; large cell resolves by the ring rule — both
+        must equal brute force exactly, on both physical paths."""
         from rsgislib_spark.operators.knn import knn_points_bucketed
 
         k = 4
@@ -462,16 +463,16 @@ class TestKNN:
 
     def test_knn_bucketed_over_collect_bound_runs_distributed(self, spark, points_pdf, monkeypatch):
         """A broadcastable batch whose queries × k × point partitions
-        exceed MAX_DRIVER_CANDIDATES runs no Python pass: the distributed
-        loop takes the whole batch from its first ring, and equals brute
-        force; at the bound itself the one pass runs."""
+        exceed MAX_DRIVER_CANDIDATES runs no one pass: the tile cogroup
+        takes the whole batch, and equals brute force; at the bound
+        itself the one pass runs."""
         from rsgislib_spark.operators import knn
 
         k = 6
         qpdf = points_pdf.iloc[:120]
         pts = spark.createDataFrame(points_pdf).repartition(3)
         qs = spark.createDataFrame(qpdf)
-        for bound, want in ((120 * k * 3, ["_local_top_k"]), (120 * k * 3 - 1, ["_escalate"])):
+        for bound, want in ((120 * k * 3, ["_local_top_k"]), (120 * k * 3 - 1, ["_tile_top_k"])):
             monkeypatch.setattr(knn, "MAX_DRIVER_CANDIDATES", bound)
             with knn_rounds() as taken:
                 got = knn.knn_points_bucketed(qs, pts, k=k, cell=20000.0).toPandas()
@@ -534,8 +535,8 @@ class TestKNN:
         first)."""
         from rsgislib_spark.operators.knn import knn_points_bucketed
 
-        # point 6 spreads the extent past the explode cutoff, so the
-        # escalation ends in the every-point round the null rows reached
+        # point 6 spreads the extent far past the cell, so the escalation
+        # ends in the dense every-point round the null rows reached
         ppdf = pd.DataFrame({
             "pt_id": [1, 2, 3, 4, 5, 6],
             "x": [0.0, 1.0, None, 2.0, 3.0, 200.0],
@@ -554,32 +555,46 @@ class TestKNN:
             assert list(got["rank"]) == [1, 2, 3, 4], (path, got)
 
     def test_partition_top_k_matches_brute(self):
-        """The one pass's per-partition kernel equals a brute-force local
-        top-k over random, hot-spot, empty and far-away point sets, with
-        element budgets down to a handful and a distance threshold."""
+        """The kernel equals a brute-force local top-k in d = 1..5
+        dimensions over per-column inputs: random, hot-spot, empty and
+        far-away point sets, integer-lattice ties at the k-th distance,
+        coordinates past 2^42·cell, a cell so coarse that the first ring
+        holds every point (the dense round), element budgets down to a
+        handful and a distance threshold."""
         from rsgislib_spark.operators.knn import _partition_top_k
 
         rng = np.random.default_rng(11)
-        for trial in range(24):
-            n = int(rng.integers(0, 600))
+        for d, trial in itertools.product(range(1, 6), range(30)):
+            n = int(rng.integers(0, 400))
             hot = trial % 2 == 0
-            px = np.floor(rng.normal(0, 300, n) if hot else rng.uniform(-1e5, 1e5, n))
-            py = np.floor(rng.normal(0, 300, n) if hot else rng.uniform(-1e5, 1e5, n))
-            pid = rng.permutation(n).astype(np.int64)
-            qx = np.floor(rng.uniform(-2e3, 2e3, 9)) + (3e5 if trial % 3 == 0 else 0.0)
-            qy = np.floor(rng.uniform(-2e3, 2e3, 9))
+            pcols = [np.floor(rng.normal(0, 300, n) if hot else rng.uniform(-1e5, 1e5, n)) for _ in range(d)]
+            qcols = [np.floor(rng.uniform(-2e3, 2e3, 9)) for _ in range(d)]
+            qcols[0] += 3e5 if trial % 3 == 0 else 0.0
             qid = np.arange(9, dtype=np.int64)  # shares ids with points: exclude_self bites
+            pid = rng.permutation(n).astype(np.int64)
             k = int(rng.integers(1, 8))
             cell = float(rng.choice([50.0, 4096.0, 50000.0]))
+            kind = trial % 5
+            if kind == 1:  # a small lattice: many points tie at the k-th d2
+                pcols = [np.floor(c / 2e4) for c in pcols]
+                qcols = [np.floor(c / 2e3) for c in qcols]
+                cell = 1.0
+            elif kind == 2:  # one cell holds everything
+                cell = 1e9
+            elif kind == 3:  # cell indices past 2^42
+                pcols = [c + 2.0**42 * cell for c in pcols]
+                qcols = [c + 2.0**42 * cell for c in qcols]
             thres = np.inf if trial % 4 else 1500.0
             budget = int(rng.choice([5, 97, 1 << 19]))
-            q, j, d2 = _partition_top_k(qid, qx, qy, pid, px, py, k, cell, thres, True, budget)
+            q, j, d2 = _partition_top_k(qid, qcols, pid, pcols, k, cell, thres, True, budget)
             want = []
-            for i in range(len(qx)):
-                dd = 0.0 + (qx[i] - px) * (qx[i] - px) + (qy[i] - py) * (qy[i] - py)
+            for i in range(len(qid)):
+                dd = 0.0
+                for qc, pc in zip(qcols, pcols):
+                    dd = dd + (qc[i] - pc) * (qc[i] - pc)
                 ok = np.flatnonzero((pid != qid[i]) & (dd < thres * thres if np.isfinite(thres) else True))
                 want += [(i, pid[m], dd[m]) for m in ok[np.lexsort((pid[ok], dd[ok]))][:k]]
-            assert sorted(zip(q.tolist(), pid[j].tolist(), d2.tolist())) == sorted(want), trial
+            assert sorted(zip(q.tolist(), pid[j].tolist(), d2.tolist())) == sorted(want), (d, trial)
 
     def test_knn_bucketed_dist_thres_strict(self, spark, points_pdf):
         from rsgislib_spark.operators.knn import knn_points_bucketed
@@ -599,10 +614,31 @@ class TestKNN:
                 n = int(((d2 < 20000.0 ** 2) & (ids != pid)).sum())
                 assert cnt.get(pid, 0) == min(n, 5), (path, pid)
 
+    @staticmethod
+    def _brute_rows(qpdf, ppdf, feats, k, thres=np.inf, exclude_self=True):
+        """Brute-force (query_id, rank, nbr_id, d2) rows in (d2, id) order,
+        d2 = 0.0 + Σ diffⱼ² in column order, as the operators compute it."""
+        cols = [ppdf[c].to_numpy(float) for c in feats]
+        ids = ppdf["pt_id"].to_numpy()
+        rows = []
+        for qrow in qpdf.itertuples(index=False):
+            d2 = 0.0
+            for c, pc in zip(feats, cols):
+                d2 = d2 + (float(getattr(qrow, c)) - pc) * (float(getattr(qrow, c)) - pc)
+            ok = np.flatnonzero(((ids != qrow.pt_id) if exclude_self else True) & (d2 < thres * thres))
+            order = ok[np.lexsort((ids[ok], d2[ok]))][:k]
+            rows += [(qrow.pt_id, r + 1, ids[m], d2[m]) for r, m in enumerate(order)]
+        return sorted(rows)
+
+    @staticmethod
+    def _rows(got):
+        return sorted(got[["query_id", "rank", "nbr_id", "d2"]].itertuples(index=False, name=None))
+
     @pytest.mark.parametrize("cell", [30.0, 400.0])
     def test_knn_features_bucketed_equals_brute(self, spark, points_pdf, cell):
         """3-D feature grid buckets == brute force, for an undersized
-        cell (multi-round escalation) and a roomy one (single round)."""
+        cell (multi-round escalation) and a roomy one (single round), on
+        both physical paths."""
         from rsgislib_spark.operators.knn import knn_features_bucketed
 
         feats = ["size_px", "x", "y"]  # any 3 numeric cols from the fixture
@@ -611,28 +647,18 @@ class TestKNN:
         k = 3
         df = spark.createDataFrame(pdf)
         qs = spark.createDataFrame(pdf.iloc[:30])
-        got = (
-            knn_features_bucketed(qs, df, feats, k=k, cell=cell)
-            .toPandas()
-            .sort_values(["query_id", "rank"])
-        )
-        X = pdf[feats].to_numpy(float)
-        ids = pdf["pt_id"].to_numpy()
-        for qrow in pdf.iloc[:30].itertuples(index=False):
-            qv = np.array([getattr(qrow, c) for c in feats], dtype=float)
-            d2 = ((X - qv) ** 2).sum(axis=1)
-            order = np.lexsort((ids, d2))
-            order = order[ids[order] != qrow.pt_id][:k]
-            sub = got[got.query_id == qrow.pt_id]
-            assert list(sub["nbr_id"]) == list(ids[order]), qrow.pt_id
-            assert np.allclose(sub["d2"].to_numpy(), d2[order])
+        want = self._brute_rows(pdf.iloc[:30], pdf, feats, k)
+        for path in KNN_PATHS:
+            with knn_path(spark, path):
+                got = knn_features_bucketed(qs, df, feats, k=k, cell=cell).toPandas()
+            assert self._rows(got) == want, path
 
     @pytest.mark.parametrize("d,cell", [(4, 250.0), (5, 700.0)])
     def test_knn_features_bucketed_high_d(self, spark, points_pdf, d, cell):
-        """d ≥ 4 struct-key path (no radix budget) == brute force,
-        including NEGATIVE feature values — the generalization past the
-        packed key (VERDICT r4 task 5; ref RSGISRATKNN.cpp:82-86 takes
-        arbitrarily many fields)."""
+        """d ≥ 4 (cells keyed on the first 3 features, the rest only
+        refine) == brute force on both physical paths, including NEGATIVE
+        feature values (ref RSGISRATKNN.cpp:82-86 takes arbitrarily many
+        fields)."""
         from rsgislib_spark.operators.knn import knn_features_bucketed
 
         pdf = points_pdf.copy()
@@ -645,21 +671,100 @@ class TestKNN:
         k = 3
         df = spark.createDataFrame(pdf)
         qs = spark.createDataFrame(pdf.iloc[:25])
-        got = (
-            knn_features_bucketed(qs, df, feats, k=k, cell=cell)
-            .toPandas()
-            .sort_values(["query_id", "rank"])
+        want = self._brute_rows(pdf.iloc[:25], pdf, feats, k)
+        for path in KNN_PATHS:
+            with knn_path(spark, path):
+                got = knn_features_bucketed(qs, df, feats, k=k, cell=cell).toPandas()
+            assert self._rows(got) == want, path
+
+    def test_knn_bucketed_cell_key_past_2_42(self, spark):
+        """Cell indices past 2^42 (cell 1.0) pack relative to the lowest
+        cell on both paths: the absolute x·2^21 + y key overflowed, so the
+        one pass returned no rows and the distributed path raised
+        ARITHMETIC_OVERFLOW."""
+        from rsgislib_spark.operators.knn import knn_points_bucketed
+
+        x0 = 2.0**42
+        pts = spark.createDataFrame(
+            pd.DataFrame({"pt_id": [1, 2, 3], "x": [x0 - 1, x0 + 1, x0], "y": [0.5, 0.0, 0.0]})
         )
-        X = pdf[feats].to_numpy(float)
-        ids = pdf["pt_id"].to_numpy()
-        for qrow in pdf.iloc[:25].itertuples(index=False):
-            qv = np.array([getattr(qrow, c) for c in feats], dtype=float)
-            d2 = ((X - qv) ** 2).sum(axis=1)
-            order = np.lexsort((ids, d2))
-            order = order[ids[order] != qrow.pt_id][:k]
-            sub = got[got.query_id == qrow.pt_id]
-            assert list(sub["nbr_id"]) == list(ids[order]), qrow.pt_id
-            assert np.allclose(sub["d2"].to_numpy(), d2[order])
+        qs = spark.createDataFrame(pd.DataFrame({"pt_id": [10], "x": [x0 + 0.25], "y": [0.25]}))
+        for path in KNN_PATHS:
+            with knn_path(spark, path):
+                got = knn_points_bucketed(qs, pts, k=3, cell=1.0).toPandas().sort_values("rank")
+            assert list(got["nbr_id"]) == [3, 2, 1], (path, got)
+            assert list(got["d2"]) == [0.125, 0.625, 1.625], (path, got)
+
+    @pytest.mark.parametrize("d", [1, 2, 3, 4, 5])
+    def test_knn_tile_cogroup_matches_brute(self, spark, d):
+        """The tile cogroup (forced by threshold −1) == brute force in d
+        dims: queries in empty tiles between two lattice clusters and
+        outside the point bbox, dist_thres below and above the halo H·cell,
+        integer-lattice ties at the k-th distance split across tiles, and
+        a small cell over a hot spot with sparse points and queries, where
+        most queries straggle into pass 2."""
+        from rsgislib_spark.operators import knn
+
+        rng = np.random.default_rng(40 + d)
+        feats = [f"f{j}" for j in range(d)]
+        k = 4
+        par = spark.sparkContext.defaultParallelism
+
+        def frame(xy, first_id=0):
+            cols = {f: np.asarray(xy, dtype=float)[:, j] for j, f in enumerate(feats)}
+            return pd.DataFrame({"pt_id": first_id + np.arange(len(xy)), **cols})
+
+        def plan(ppdf, cell, thres):
+            ext = [ppdf[f].min() for f in feats], [ppdf[f].max() for f in feats]
+            return knn._tile_plan(*ext, len(ppdf), k, cell, thres, par)
+
+        gap = rng.integers(0, 6, (240, d))
+        gap[120:, 0] += 600
+        gap_q = pd.concat([
+            frame(gap[:16]),  # shares ids with points: exclude_self bites
+            frame(np.c_[np.full(8, 300), rng.integers(0, 6, (8, d - 1))], 1000),  # between the clusters
+            frame(np.c_[rng.choice([-50, 700], 8), rng.integers(0, 6, (8, d - 1))], 2000),  # outside
+        ])
+        h = plan(frame(gap), 1.0, np.inf)[0]
+        grid = np.stack(np.meshgrid(np.arange(40), *[np.arange(2)] * (d - 1), indexing="ij"), -1)
+        grid = grid.reshape(-1, d)
+        lattice = grid[rng.choice(len(grid), len(grid) * 3 // 5, replace=False)]  # distinct points
+        hot = np.vstack([np.round(rng.normal(0, 1.5, (200, d))), rng.integers(0, 200, (40, d))])
+        cases = {
+            "gap": (frame(gap), gap_q, 1.0, np.inf),
+            "below": (frame(gap), gap_q, 1.0, 0.5 * h),
+            "above": (frame(gap), gap_q, 1.0, 3.0 * h),
+            "ties": (frame(lattice), frame(lattice).iloc[::5], 1.0, np.inf),
+            "stragglers": (frame(hot), frame(rng.integers(0, 200, (30, d)), 1000), 0.25, np.inf),
+        }
+        for name, (ppdf, qpdf, cell, thres) in cases.items():
+            halo, spans, size, ntile = plan(ppdf, cell, thres)
+
+            def tiles(pdf):  # own tiles, clamped as the cogroup keys them
+                rel = knn._rel_cells([pdf[f].to_numpy() for f in feats], spans, cell)
+                return list(zip(*[np.clip(c // s, 0, nt - 1) for c, s, nt in zip(rel, size, ntile)]))
+
+            want = self._brute_rows(qpdf, ppdf, feats, k, thres)
+            kth = pd.DataFrame(want, columns=["q", "r", "n", "d2"]).groupby("q")["d2"].max()
+            if name == "gap":  # some queries sit in tiles that own no points
+                assert set(tiles(qpdf)) - set(tiles(ppdf)), d
+            if name in ("below", "above"):
+                assert (thres <= halo * cell) == (name == "below"), (d, name)
+            if name == "ties":  # points tied at a query's k-th d2 lie in different tiles
+                P, ptile = ppdf[feats].to_numpy(), tiles(ppdf)
+                split = [
+                    len({ptile[i] for i in np.flatnonzero(((P - P[q]) ** 2).sum(axis=1) == kth[q])})
+                    for q in qpdf["pt_id"]
+                ]
+                assert max(split) > 1, d
+            if name == "stragglers":  # most queries' k-th lies past the halo
+                assert (kth > (halo * cell) ** 2).mean() > 0.5, (d, kth)
+            with knn_path(spark, "distributed"):
+                got = knn.knn_features_bucketed(
+                    spark.createDataFrame(qpdf), spark.createDataFrame(ppdf), feats,
+                    k=k, cell=cell, dist_thres=thres,
+                ).toPandas()
+            assert self._rows(got) == want, (d, name)
 
     @pytest.mark.parametrize("path", KNN_PATHS)
     def test_knn_bucketed_empty_query_batch(self, spark, points_pdf, path):
