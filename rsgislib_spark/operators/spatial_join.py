@@ -8,21 +8,26 @@ multiplicity), base attributes retained.
 
 Two physical strategies, same semantics:
 
- - :func:`spatial_join_broadcast` — the zone side is broadcast as a
-   pickled ZoneIndex (STR bbox tree + rings). The union of the zone
-   bboxes is pushed down first as a Catalyst column filter (closed
-   intervals, the tree's own test), so only images that can meet a zone
-   reach Python. One ``mapInArrow`` pass over those runs the tree query
-   and the exact predicate and CARRIES THE ROWS: it emits each matching
-   image row (``batch.take``) once per zone it meets, with that zone's
-   ``zone_id``, so nothing joins back on the image id and the big side
-   never shuffles; the zone attributes then join as a broadcast. A
-   ``left`` join passes every image and emits the unmatched ones with a
-   null ``zone_id``. This is the 100 TB path whenever zones fit on an
-   executor (they do by design — the reference's zone side is a small
-   vector layer). :func:`spatial_select`, :func:`layer_predicate` and
-   the ``vec_*_vec`` predicates run the same pass over a slim
-   (id, bbox) projection.
+ - :func:`spatial_join_broadcast` — the zone side is collected once
+   (one fenced ``toArrow`` of every zone column but the bbox) and
+   broadcast as a pickled ZoneIndex (STR bbox tree + rings) plus the
+   zone attribute columns as one Arrow batch in zone-position order.
+   The union of the zone bboxes is pushed down first as a Catalyst
+   column filter (closed intervals, the tree's own test), so only images
+   that can meet a zone reach Python. One ``mapInArrow`` pass over those,
+   on the input's own partitions, runs the tree query and the exact
+   predicate and emits the FINAL rows: each matching image row
+   (``batch.take``) once per zone it meets, with that zone's ``zone_id``
+   and attributes taken by zone position. Nothing joins back on the image
+   id or on ``zone_id``, the big side never shuffles, and two zone rows
+   sharing an id keep their own attributes. A ``left`` join passes every
+   image and emits the unmatched ones with a null ``zone_id`` and null
+   attributes. Only ``right`` joins: it must keep every zone, so the pass
+   emits the matched zone's position and the zone rows join on it. This
+   is the 100 TB path whenever zones fit on an executor (they do by
+   design — the reference's zone side is a small vector layer).
+   :func:`spatial_select`, :func:`layer_predicate` and the ``vec_*_vec``
+   predicates run the same pass over a slim (id, bbox) projection.
 
  - :func:`spatial_join_cells` — both sides exploded to covering grid
    cells, cell equi-join (Catalyst sort-merge/shuffle-hash with AQE),
@@ -41,6 +46,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from rsgislib_spark.kernels import geom
@@ -57,15 +63,20 @@ JOIN_HOWS = ("inner", "left", "right")
 MAX_BROADCAST_ZONES = 500_000
 
 
-def _fenced_zones_pdf(zones_slim: DataFrame) -> pd.DataFrame:
-    from rsgislib_spark.qcommon import fenced_small_pdf
+def _zone_side(zones: DataFrame, *cols: str) -> tuple[ZoneIndex, pa.Table]:
+    """The zone side's one driver collect: ``zone_id``, ``geometry`` and
+    ``cols`` of every zone, as Arrow (types exact), behind the
+    :data:`MAX_BROADCAST_ZONES` fence; with the :class:`ZoneIndex` built
+    from it (zone position = row of the table)."""
+    from rsgislib_spark.qcommon import fenced_small_table
 
-    return fenced_small_pdf(
-        zones_slim,
+    table = fenced_small_table(
+        zones.select("zone_id", "geometry", *cols),
         "spatial_join broadcast zone index",
         "Use spatial_join_cells (both-sides-large path) instead.",
         max_rows=MAX_BROADCAST_ZONES,
     )
+    return ZoneIndex(table["zone_id"].to_numpy(), table["geometry"].to_pylist()), table
 
 
 class ZoneIndex:
@@ -125,63 +136,94 @@ def _in_zone_bbox(zx: ZoneIndex) -> F.Column:
     return F.expr(f"minx <= {x1} AND maxx >= {x0} AND miny <= {y1} AND maxy >= {y0}")
 
 
+#: Column the ``right`` join's pass emits in place of ``zone_id``: the
+#: matched zone's position in the broadcast index, the key the zone rows
+#: join on.
+ZONE_POS = "_zone_pos"
+
+#: Zone columns a join does not carry (the polygon and its bbox).
+_ZONE_GEOM = ("geometry", "minx", "miny", "maxx", "maxy")
+
+
+def _zone_batch(zx: ZoneIndex, table: pa.Table, attr_names=()) -> pa.RecordBatch:
+    """What the pass takes per match, in zone-position order: the
+    int64 ``zone_id`` (the pass's output type), then ``attr_names``."""
+    cols = [pa.array(zx.zone_ids), *(table[c].combine_chunks() for c in attr_names)]
+    return pa.RecordBatch.from_arrays(cols, names=["zone_id", *attr_names])
+
+
 def _matched_rows(
-    rows: DataFrame, zindex_b, join_op: str, keep_unmatched: bool = False
+    rows: DataFrame, zones_b, join_op: str, attrs: list = (), how: str = "inner"
 ) -> DataFrame:
-    """Each row of ``rows`` once per zone of the broadcast index it
-    meets under ``join_op``, with that zone's ``zone_id`` appended: one
-    ``mapInArrow`` pass (tree query, then one exact :meth:`ZoneIndex.refine`
-    per Arrow batch) that carries the rows through (``batch.take``), so a
-    row gets only its own zones even when ids repeat. With
-    ``keep_unmatched`` a row that meets no zone is emitted once with a
-    null ``zone_id``.
+    """Each row of ``rows`` once per zone of the broadcast ``(ZoneIndex,
+    zone batch)`` (:func:`_zone_batch`) it meets under ``join_op``: one
+    ``mapInArrow`` pass on ``rows``' own partitions (tree query, then one
+    exact :meth:`ZoneIndex.refine` per Arrow batch) that emits the final
+    rows — ``zone_id``, the row (``batch.take``), then the zone's
+    attribute columns (``attrs``, their fields) — taking the zone columns
+    by zone POSITION, so a row gets only its own zones and a zone row
+    only its own attributes, even when image or zone ids repeat.
+
+    ``how="left"`` also emits each row that meets no zone once, with a
+    null ``zone_id`` and null attributes (a null position). ``how="right"``
+    emits :data:`ZONE_POS` (the matched zone's position) instead of
+    ``zone_id`` and no attributes, for the caller's join on the zone rows.
 
     Callers filter ``rows`` by :func:`_in_zone_bbox` first (except a left
     join, which must see every row), so the pass sees the candidates and
-    not the table. A THIN input (fewer scan partitions than cores — e.g.
-    one small parquet file) would run the match on 1-2 tasks, so it is
-    repartitioned up to the default parallelism first (:func:`widen`)."""
+    not the table. The pass does not repartition: a thin source is
+    widened by its owner (:func:`rsgislib_spark.qcommon.widen`). Its
+    Arrow batches name columns by position, so an attribute may share an
+    image column's name, as in a join's output."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     from rsgislib_spark.kernels.codecs import arrow_batch_cols
-    from rsgislib_spark.qcommon import widen
 
-    schema = StructType([*rows.schema.fields, StructField("zone_id", LongType())])
+    fields = [
+        StructField(ZONE_POS if how == "right" else "zone_id", LongType()),
+        *rows.schema.fields,
+        *attrs,
+    ]
+    slots = [f"_{i}" for i in range(len(fields))]
+    schema = StructType(
+        [StructField(n, f.dataType, f.nullable, f.metadata) for n, f in zip(slots, fields)]
+    )
 
     def _match(it):
-        import pyarrow as pa
-
-        zx: ZoneIndex = zindex_b.value
+        zx, zcols = zones_b.value
         for b in it:
             if not b.num_rows:
                 continue
             rects = np.column_stack(arrow_batch_cols(b, "minx", "miny", "maxx", "maxy"))
             qi, zi = zx.match(rects.astype(np.float64), join_op)
-            zone, null = zx.zone_ids[zi], None
-            if keep_unmatched:
+            null = None
+            if how == "left":
                 miss = np.flatnonzero(np.bincount(qi, minlength=b.num_rows) == 0)
                 qi = np.concatenate([qi, miss])
-                null = np.r_[np.zeros(len(zone), bool), np.ones(len(miss), bool)]
-                zone = np.concatenate([zone, np.zeros(len(miss), np.int64)])
+                null = np.arange(len(qi)) >= len(zi)
+                zi = np.concatenate([zi, np.zeros(len(miss), np.int64)])
             if not len(qi):
                 continue
-            out = b.take(pa.array(qi))
-            yield pa.RecordBatch.from_arrays(
-                [*out.columns, pa.array(zone, mask=null)], names=[*out.schema.names, "zone_id"]
-            )
+            pos = pa.array(zi, mask=null)
+            image = b.take(pa.array(qi)).columns
+            if how == "right":
+                cols = [pos, *image]
+            else:
+                zone = zcols.take(pos).columns
+                cols = [zone[0], *image, *zone[1:]]
+            yield pa.RecordBatch.from_arrays(cols, names=slots)
 
-    return widen(rows).mapInArrow(_match, schema=schema)
+    return rows.mapInArrow(_match, schema=schema).toDF(*(f.name for f in fields))
 
 
 def _id_pairs(images: DataFrame, zones: DataFrame, id_col: str, *join_ops: str) -> list:
     """(id_col, zone_id) pair streams of the slim (id, bbox) projection,
     one per ``join_ops`` entry, sharing one zone fence, index broadcast
     and bbox filter."""
-    zones_pdf = _fenced_zones_pdf(zones.select("zone_id", "geometry"))
-    zx = ZoneIndex.from_pandas(zones_pdf)
-    zindex_b = images.sparkSession.sparkContext.broadcast(zx)
+    zx, table = _zone_side(zones)
+    zones_b = images.sparkSession.sparkContext.broadcast((zx, _zone_batch(zx, table)))
     slim = images.select(id_col, "minx", "miny", "maxx", "maxy").filter(_in_zone_bbox(zx))
-    return [_matched_rows(slim, zindex_b, op).select(id_col, "zone_id") for op in join_ops]
+    return [_matched_rows(slim, zones_b, op).select(id_col, "zone_id") for op in join_ops]
 
 
 def spatial_join_broadcast(
@@ -194,29 +236,56 @@ def spatial_join_broadcast(
     """Spatial join with the zone side broadcast (primary strategy).
 
     Output columns: ``zone_id``, all image columns, then the zone
-    attribute columns (minus zone geometry/bbox). One row per matching
-    (image row, zone) pair; ``left``/``right`` keep unmatched rows of the
-    respective side with nulls, mirroring geopandas sjoin via the
-    reference's join_how validation (vectorutils/__init__.py:2196-2207).
-    Rows pair by position inside the refine, not by key: ``id_col`` (the
-    image key) may repeat, and is kept for the signature shared with
-    :func:`spatial_join_cells`.
+    attribute columns (every zone column but ``zone_id``, geometry and
+    bbox). One row per matching (image row, zone row) pair;
+    ``left``/``right`` keep unmatched rows of the respective side with
+    nulls, mirroring geopandas sjoin via the reference's join_how
+    validation (vectorutils/__init__.py:2196-2207).
+
+    ``inner`` and ``left`` are one fence collect plus one pass
+    (:func:`_matched_rows`) that emits these rows, attributes included:
+    no join. ``right`` joins the pass's matches to the zone rows on the
+    zone position (a broadcast of the matches when they are small).
+    Rows and zones pair by position, not by key: ``id_col`` (the image
+    key) and ``zone_id`` may repeat; ``id_col`` is kept for the
+    signature shared with :func:`spatial_join_cells`.
     """
     if join_how not in JOIN_HOWS:
         raise ValueError(f"join_how must be one of {JOIN_HOWS}")
     if join_op not in JOIN_OPS:
         raise ValueError(f"join_op must be one of {JOIN_OPS}")
-    zones_pdf = _fenced_zones_pdf(zones.select("zone_id", "geometry"))
-    zx = ZoneIndex.from_pandas(zones_pdf)
-    zindex_b = images.sparkSession.sparkContext.broadcast(zx)
-    zone_attrs = F.broadcast(zones.drop("geometry", "minx", "miny", "maxx", "maxy"))
-    if join_how == "left":
-        # every image row survives: the pass sees the whole table
-        rows = _matched_rows(images, zindex_b, join_op, keep_unmatched=True)
-    else:
-        rows = _matched_rows(images.filter(_in_zone_bbox(zx)), zindex_b, join_op)
-    # a right join keeps every zone at least once
-    return rows.join(zone_attrs, "zone_id", join_how)
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    spark = images.sparkSession
+    attr_names = [c for c in zones.columns if c != "zone_id" and c not in _ZONE_GEOM]
+    zx, table = _zone_side(zones, *attr_names)
+    fields = [zones.schema[c] for c in attr_names]
+    # every image row survives a left join: the pass sees the whole table
+    rows = images if join_how == "left" else images.filter(_in_zone_bbox(zx))
+    if join_how == "right":
+        zones_b = spark.sparkContext.broadcast((zx, None))
+        matches = _matched_rows(rows, zones_b, join_op, how="right")
+        zone_rows = spark.createDataFrame(
+            table.drop_columns(["geometry"]).append_column(
+                ZONE_POS, pa.array(np.arange(len(table)))
+            ),
+            schema=StructType(
+                [zones.schema["zone_id"], *fields, StructField(ZONE_POS, LongType(), False)]
+            ),
+        )
+        # a right outer join cannot build (broadcast) its right side, so a
+        # hint on the zone rows would be ignored; Spark broadcasts the
+        # matches when they are small
+        out = matches.join(zone_rows, ZONE_POS, "right")
+        return out.select(
+            zone_rows["zone_id"],
+            *(matches[c] for c in images.columns),
+            *(zone_rows[c] for c in attr_names),
+        )
+    if join_how == "left":  # an unmatched row's zone columns are null
+        fields = [StructField(f.name, f.dataType, True, f.metadata) for f in fields]
+    zones_b = spark.sparkContext.broadcast((zx, _zone_batch(zx, table, attr_names)))
+    return _matched_rows(rows, zones_b, join_op, fields, how=join_how)
 
 
 def spatial_join_cells(
@@ -252,18 +321,15 @@ def spatial_join_cells(
     spark = images.sparkSession
     img_cells = explode_footprint_cells(images, res=res, id_col=id_col)
 
-    zones_pdf = _fenced_zones_pdf(
-        zones.select("zone_id", "geometry", "minx", "miny", "maxx", "maxy")
-    )
+    zx, table = _zone_side(zones, "minx", "miny", "maxx", "maxy")
     from rsgislib_spark.kernels import cells as cellmod
 
     ridx, cc = cellmod.cells_covering_bbox(
-        zones_pdf["minx"].to_numpy(), zones_pdf["miny"].to_numpy(),
-        zones_pdf["maxx"].to_numpy(), zones_pdf["maxy"].to_numpy(), res,
+        *(table[c].to_numpy() for c in ("minx", "miny", "maxx", "maxy")), res
     )
     zcells = pd.DataFrame({"zone_pos": ridx.astype(np.int64), "cell": cc})
     zcells_df = spark.createDataFrame(zcells)
-    zindex_b = spark.sparkContext.broadcast(ZoneIndex.from_pandas(zones_pdf))
+    zindex_b = spark.sparkContext.broadcast(zx)
 
     cand = img_cells.join(F.broadcast(zcells_df), "cell", "inner").select(
         id_col, "zone_pos", "minx", "miny", "maxx", "maxy"

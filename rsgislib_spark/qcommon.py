@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -68,6 +69,14 @@ def widen(df: DataFrame) -> DataFrame:
     serializes the kernel on 1-2 cores. Rows fed to these kernels are
     skinny (keys + dims), so the widening shuffle is ~free.
 
+    The OWNER of a thin source widens it (the catalog's
+    ``widen(_geo_images(spark))``), once, where it knows the source is
+    thin and the work heavy. The operators (``rsgislib_spark.operators``)
+    do not: they run on their input's own partitions, so an interactive
+    call over a few dozen filtered rows pays no shuffle stage and no
+    driver RDD conversion. (The text-dedup functions still widen their
+    document scans, which they tokenize whole.)
+
     Thinness is decided from Catalyst's size estimate (cheap driver
     call, no RDD conversion): anything under ~4 MB/core would scan in
     fewer partitions than cores. At real scale the estimate is huge and
@@ -103,12 +112,28 @@ def fenced_small_pdf(
     with a pointer at the scale path when the caller should bucket
     instead."""
     pdf = df.limit(max_rows + 1).toPandas()
-    if len(pdf) > max_rows:
+    _fence(len(pdf), what, scale_hint, max_rows)
+    return pdf
+
+
+def fenced_small_table(
+    df: DataFrame, what: str, scale_hint: str, max_rows: int = 5_000_000
+) -> pa.Table:
+    """:func:`fenced_small_pdf` collected as Arrow (``toArrow()``), so
+    column types stay exactly Spark's: a nullable int stays int64 with
+    nulls instead of turning into pandas float64, a decimal stays a
+    decimal. For tables whose columns are carried back into Spark rows."""
+    table = df.limit(max_rows + 1).toArrow()
+    _fence(table.num_rows, what, scale_hint, max_rows)
+    return table
+
+
+def _fence(n: int, what: str, scale_hint: str, max_rows: int) -> None:
+    if n > max_rows:
         raise ValueError(
             f"{what} would collect more than {max_rows} rows to the driver "
             f"(max_rows={max_rows}). {scale_hint}"
         )
-    return pdf
 
 
 # --------------------------------------------------------------------------

@@ -286,7 +286,7 @@ def _spatial_join_q(spark: SparkSession, sf_dir: str, join_op: str) -> DataFrame
     from rsgislib_spark.operators.spatial_join import spatial_join_broadcast
 
     load_views(spark, sf_dir)
-    gi = _geo_images(spark).withColumnRenamed("image_key", "image_id")
+    gi = widen(_geo_images(spark)).withColumnRenamed("image_key", "image_id")
     zones = spark.createDataFrame(_zones_with_wkb(spark))
     out = spatial_join_broadcast(
         gi, zones, join_op=join_op, join_how="inner", id_col="image_id"

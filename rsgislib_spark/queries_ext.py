@@ -264,7 +264,7 @@ def q99_spatial_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rsgislib_spark.operators.spatial_join import spatial_select
 
     load_views(spark, sf_dir)
-    gi = _geo_images(spark).withColumnRenamed("image_key", "image_id")
+    gi = widen(_geo_images(spark)).withColumnRenamed("image_key", "image_id")
     zones = spark.createDataFrame(_zones_with_wkb(spark))
     out = spatial_select(gi, zones, join_op="intersects", id_col="image_id")
     return out.select(
@@ -3966,7 +3966,7 @@ def q71_spatial_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rsgislib_spark.operators.spatial_join import spatial_join_broadcast
 
     load_views(spark, sf_dir)
-    gi = _geo_images(spark).withColumnRenamed("image_key", "image_id")
+    gi = widen(_geo_images(spark)).withColumnRenamed("image_key", "image_id")
     zones = spark.createDataFrame(_zones_with_wkb(spark))
     out = spatial_join_broadcast(
         gi, zones, join_op="within", join_how="left", id_col="image_id"

@@ -19,9 +19,10 @@ KNN_ONE_ROUND_JOBS = 3
 #: job per shuffle stage of the DAG (both passes' inputs, the window) and
 #: the result collect
 KNN_TILE_JOBS = 8
-#: zone fence (one collect), the zone attributes' broadcast, then the
-#: filtered refine that carries the rows
-WINDOW_JOIN_JOBS = 3
+#: zone fence (one collect of the whole zone rows), then the one pass over
+#: the bbox-filtered images that emits the final rows: no attribute
+#: broadcast or join, and no widening shuffle of the input
+WINDOW_JOIN_JOBS = 2
 
 
 def _jobs(spark, group, action):
@@ -66,13 +67,34 @@ def test_knn_tile_cogroup_job_budget(spark, points_pdf, monkeypatch):
     assert n <= KNN_TILE_JOBS, n
 
 
-def test_single_zone_window_join_job_budget(spark, images_nopix_pdf, zones_pdf):
-    images = spark.createDataFrame(images_nopix_pdf[["image_id", "minx", "miny", "maxx", "maxy"]])
+def _window_join_jobs(spark, images, zones_pdf, group):
     zone = spark.createDataFrame(zones_pdf).filter(F.col("zone_id") == 3)
     got = []
     n = _jobs(
-        spark, "budget-window",
+        spark, group,
         lambda: got.extend(spatial_join_broadcast(images, zone).select("image_id").collect()),
     )
     assert got  # the zone matches images, so the refine ran
+    return n
+
+
+def test_single_zone_window_join_job_budget(spark, images_nopix_pdf, zones_pdf):
+    images = spark.createDataFrame(images_nopix_pdf[["image_id", "minx", "miny", "maxx", "maxy"]])
+    n = _window_join_jobs(spark, images, zones_pdf, "budget-window")
+    assert n <= WINDOW_JOIN_JOBS, n
+
+
+def test_window_join_on_a_thin_cached_table_job_budget(spark, images_nopix_pdf, zones_pdf):
+    """A cached one-partition image table (fewer partitions than cores):
+    the join runs on that partition, so a widening repartition of the
+    input (one more shuffle stage, one more job) fails here."""
+    images = spark.createDataFrame(
+        images_nopix_pdf[["image_id", "minx", "miny", "maxx", "maxy"]]
+    ).coalesce(1).cache()
+    try:
+        images.count()
+        assert images.rdd.getNumPartitions() == 1
+        n = _window_join_jobs(spark, images, zones_pdf, "budget-window-thin")
+    finally:
+        images.unpersist()
     assert n <= WINDOW_JOIN_JOBS, n

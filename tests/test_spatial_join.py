@@ -337,12 +337,19 @@ def test_cells_left_right_hows_match_broadcast(spark_tables):
 # ------------------------------------------- zone-bbox pushdown semantics
 
 
-def _rect_zones(spark, rects, id0=100):
-    rows = [
-        (id0 + i, geom.polygon_to_wkb([np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]], float)]))
-        for i, (x0, y0, x1, y1) in enumerate(rects)
-    ]
-    return spark.createDataFrame(pd.DataFrame(rows, columns=["zone_id", "geometry"]))
+def _rect_zones(spark, rects, id0=100, ids=None, **attrs):
+    """Rect zones with ids ``id0 + i`` (or ``ids``) and attribute columns."""
+    pdf = pd.DataFrame(
+        {
+            "zone_id": list(range(id0, id0 + len(rects))) if ids is None else ids,
+            "geometry": [
+                geom.polygon_to_wkb([np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]], float)])
+                for x0, y0, x1, y1 in rects
+            ],
+            **attrs,
+        }
+    )
+    return spark.createDataFrame(pdf)
 
 
 def _rect_images(spark, rects):
@@ -425,3 +432,115 @@ def test_duplicate_ids_get_only_their_own_zones(spark, how):
     rows = sorted((r.image_id, r.tag, None if pd.isna(r.zone_id) else int(r.zone_id)) for r in got.itertuples())
     want = [(7, "a", 100), (7, "b", 101)] + ([(8, "c", None)] if how == "left" else [])
     assert rows == want, rows
+
+
+@pytest.mark.parametrize("how", ["inner", "left", "right"])
+def test_zone_rows_sharing_an_id_keep_their_own_attributes(spark, how):
+    """Two zone rows with id 7, "A" at (0,0)-(10,10) and "B" far away; one
+    image inside A. Pairing attributes by zone_id gave the image both A
+    and B; by zone row it gets A only, and a right join keeps B unmatched."""
+    zones = _rect_zones(
+        spark, [(0, 0, 10, 10), (100, 100, 110, 110)], ids=[7, 7], class_name=["A", "B"]
+    )
+    images = _rect_images(spark, [(1, 1, 2, 2)])
+    got = spatial_join_broadcast(images, zones, "intersects", how).toPandas()
+    rows = sorted(
+        ((int(r.zone_id), None if pd.isna(r.image_id) else int(r.image_id), r.class_name)
+         for r in got.itertuples()),
+        key=repr,
+    )
+    want = [(7, 0, "A")] + ([(7, None, "B")] if how == "right" else [])
+    assert rows == want, rows
+
+
+def _attr_zones(spark, with_attrs: bool):
+    import datetime
+    import decimal
+
+    from pyspark.sql.types import (
+        BinaryType, DecimalType, DoubleType, LongType, StringType, StructField,
+        StructType, TimestampType,
+    )
+
+    rects = [(0, 0, 10, 10), (20, 0, 30, 10), (500, 500, 510, 510)]
+    fields = [StructField("zone_id", LongType()), StructField("geometry", BinaryType())]
+    fields += [StructField(c, DoubleType()) for c in ("minx", "miny", "maxx", "maxy")]
+    rows = [
+        [100 + i, geom.polygon_to_wkb([np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]], float)]),
+         float(x0), float(y0), float(x1), float(y1)]
+        for i, (x0, y0, x1, y1) in enumerate(rects)
+    ]
+    if with_attrs:
+        fields += [
+            StructField("name", StringType()),
+            StructField("cnt", LongType()),
+            StructField("score", DoubleType()),
+            StructField("amount", DecimalType(12, 3)),
+            StructField("seen", TimestampType()),
+            StructField("blob", BinaryType()),
+        ]
+        attrs = [
+            ["a", 9_007_199_254_740_993, 0.1, decimal.Decimal("12.345"),
+             datetime.datetime(2021, 3, 4, 5, 6, 7, 891011), b"\x00\x01"],
+            ["b", None, -2.5, decimal.Decimal("-0.001"), datetime.datetime(1999, 12, 31), b""],
+            ["c", 3, float("inf"), None, None, None],
+        ]
+        rows = [r + a for r, a in zip(rows, attrs)]
+    return spark.createDataFrame(rows, StructType(fields))
+
+
+@pytest.mark.parametrize("with_attrs", [True, False], ids=["attrs", "no_attrs"])
+@pytest.mark.parametrize("how", ["inner", "left", "right"])
+def test_zone_attributes_keep_their_types_and_values(spark, how, with_attrs):
+    """The zone attributes the pass carries are the same, in type and
+    value, as a Catalyst join of the exact pairs with the zone rows (the
+    former plan) — a nullable long does not round-trip through float64,
+    a decimal, timestamp or binary keeps its type, an unmatched left row
+    gets null attributes and an unmatched right zone keeps its own."""
+    zones = _attr_zones(spark, with_attrs)
+    images = spark.createDataFrame(
+        pd.DataFrame(
+            [(0, "p", 2.0, 2.0, 4.0, 4.0), (1, "q", 8.0, 1.0, 22.0, 3.0),
+             (2, "r", 24.0, 4.0, 25.0, 5.0), (3, "s", 60.0, 60.0, 61.0, 61.0)],
+            columns=["image_id", "tag", "minx", "miny", "maxx", "maxy"],
+        )
+    )
+    zpdf = zones.select("zone_id", "geometry").toPandas()
+    pairs = spark.createDataFrame(
+        sorted((int(i), z) for i, z in brute_pairs(images.toPandas(), zpdf, "intersects")),
+        "image_id long, zone_id long",
+    )
+    attrs = zones.drop("geometry", "minx", "miny", "maxx", "maxy")
+    want = images.join(pairs, "image_id", "left" if how == "left" else "inner").join(
+        attrs, "zone_id", how
+    )
+    got = spatial_join_broadcast(images, zones, "intersects", how)
+    assert got.dtypes == want.dtypes
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+    if how != "inner":  # the premise: an unmatched side exists
+        assert got.filter("zone_id IS NULL" if how == "left" else "image_id IS NULL").count() == 1
+
+
+@pytest.mark.parametrize("how", ["inner", "left", "right"])
+def test_attribute_named_like_an_image_column_and_empty_zones(spark, how):
+    """A zone attribute may share an image column's name (both columns
+    come out, as from a join), and an empty zone table gives no pairs but
+    still keeps every image in a left join."""
+    zones = _rect_zones(spark, [(0, 0, 10, 10), (20, 0, 30, 10)], id0=1, tag=["z1", "z2"])
+    images = spark.createDataFrame(
+        pd.DataFrame(
+            [(0, "i0", 1.0, 1.0, 2.0, 2.0), (1, "i1", 50.0, 50.0, 51.0, 51.0)],
+            columns=["image_id", "tag", "minx", "miny", "maxx", "maxy"],
+        )
+    )
+    got = spatial_join_broadcast(images, zones, "intersects", how)
+    assert got.columns == ["zone_id", "image_id", "tag", "minx", "miny", "maxx", "maxy", "tag"]
+    rows = sorted(((r[0], r[1], r[2], r[7]) for r in got.collect()), key=repr)
+    want = {
+        "inner": [(1, 0, "i0", "z1")],
+        "left": [(1, 0, "i0", "z1"), (None, 1, "i1", None)],
+        "right": [(1, 0, "i0", "z1"), (2, None, None, "z2")],
+    }[how]
+    assert rows == sorted(want, key=repr), rows
+    empty = spatial_join_broadcast(images, zones.filter("zone_id < 0"), "intersects", how)
+    assert empty.count() == (2 if how == "left" else 0)
