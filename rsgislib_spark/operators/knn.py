@@ -21,7 +21,11 @@
    grid cells, exact refine + rank ``<= k`` by (d2, nbr_id). ONE numpy
    ring escalation (:func:`_partition_top_k`) runs at every scale: in one
    Python pass over the points for a batch the driver can merge, in a
-   two-pass tile cogroup (:func:`_tile_top_k`) for any other.
+   two-pass tile cogroup (:func:`_tile_top_k`) for any other. The one
+   pass reads a point table served from Spark's cache as its prepared
+   copy (:func:`_prepared`): the points packed once, in cell key order,
+   into a few binary rows per partition that persist in Spark's cache
+   while their source's cache instance lives.
 
  - :func:`radius_count_bucketed` — radius count on a ring-1 cell
    equi-join (cell ≥ r ⇒ ring-1 covers the disk), replacing the O(N²)
@@ -36,13 +40,16 @@ bounded by local density, and the point table is never broadcast.
 
 from __future__ import annotations
 
+import functools
 import math
+import threading
+from dataclasses import dataclass
 from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F
-from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
+from pyspark.sql.types import BinaryType, DoubleType, IntegerType, LongType, StructField, StructType
 
 from rsgislib_spark.qcommon import GRID_DIM, broadcastable, fenced_small_pdf
 
@@ -124,6 +131,22 @@ def _rel_cells(cols, spans, cell: float) -> list:
     ]
 
 
+def _cell_keys(pcols, spans, cell: float):
+    """(cell key, key strides) of points over the keyed dimensions
+    ``spans`` (:func:`_cell_spans`): the cells relative to each
+    dimension's lowest cell, packed so that key order is the cells'
+    lexicographic order."""
+    width = [w for _, w in spans]
+    stride = [math.prod(width[j + 1 :]) for j in range(len(spans))]
+    keys = np.zeros(len(pcols[0]), np.int64)
+    for c, (lo, _), s in zip(pcols, spans, stride):
+        rel = np.floor(c / cell).astype(np.int64)
+        rel -= lo
+        rel *= s
+        keys += rel
+    return keys, stride
+
+
 def _box_cells(lo: list, hi: list, stride: list, n: int):
     """Every cell of each of n rows' boxes [lo[j], hi[j]] over the dims j
     as (row, Σ index_j · stride[j]), rows in order."""
@@ -193,13 +216,7 @@ def _partition_top_k(
     )
     spans = _cell_spans(pmin, pmax, cell)
     width = [w for _, w in spans]
-    stride = [math.prod(width[j + 1 :]) for j in range(len(spans))]
-    keys = np.zeros(n, np.int64)
-    for c, (lo, _), s in zip(pcols, spans, stride):
-        rel = np.floor(c / cell).astype(np.int64)
-        rel -= lo
-        rel *= s
-        keys += rel
+    keys, stride = _cell_keys(pcols, spans, cell)
     order = np.argsort(keys, kind="stable")
     keys = keys[order]
     qc = _rel_cells(qcols, spans, cell)
@@ -277,18 +294,150 @@ def _partition_top_k(
     return tuple(np.concatenate(a) for a in zip(*outs))
 
 
+#: Largest prepared row in bytes: a partition's packed points are split
+#: into rows of at most this many (read when a copy is built; patchable
+#: in tests).
+PREPARED_ROW_BYTES = 1 << 24
+#: numpy type of the ids a prepared row packs, by Spark type name: any
+#: other id type keeps the row input step.
+_PACKED_IDS = {"byte": "i1", "short": "i2", "integer": "i4", "long": "i8", "float": "f4", "double": "f8"}
+_PACKED = StructType([StructField("_pts", BinaryType()), StructField("_null", BinaryType())])
+
+
+@dataclass
+class _Prepared:
+    """A cached point side's prepared copy: ``df`` persists its ``rows``
+    packed rows, whose ids are numpy ``ids``; ``plan`` is the point
+    side's plan with cached data and ``source`` the ids of its leaves'
+    cached buffers, the cache instance the copy was built from."""
+
+    sc: object
+    plan: object
+    source: tuple
+    df: DataFrame
+    rows: int
+    ids: str
+
+
+_prepared_copies: list = []
+_prepared_lock = threading.Lock()
+
+
+def _cache_source(t: DataFrame):
+    """(plan with cached data, ids of the leaves' cached buffers) when
+    every leaf of ``t``'s plan is served from Spark's cache, else None."""
+    plan = t._jdf.queryExecution().withCachedData()
+    leaves = plan.collectLeaves()
+    source = []
+    for i in range(leaves.length()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() != "InMemoryRelation":
+            return None
+        source.append(leaf.cacheBuilder().cachedColumnBuffers().id())
+    return plan, tuple(source)
+
+
+def _prepared(t: DataFrame, d: int, cell: float) -> _Prepared | None:
+    """The prepared copy of the point side ``t`` (nbr_id, t0..), built on
+    first use, or None when ``t`` is not served from Spark's cache or its
+    id is not a fixed-width number (those keep the row input step).
+
+    Lifetime: a copy serves only the cache instance it was built from (a
+    plan equal to ``t``'s over the same cached buffers). Each call first
+    unpersists every copy whose source buffers are no longer cached (the
+    source was uncached or re-cached) or whose session stopped. The copy
+    keeps the cell key order of the first call's ``cell``; another cell
+    reuses it (the kernel sorts its input whatever the order)."""
+    sc = t.sparkSession.sparkContext
+    with _prepared_lock:
+        live = sc._jsc.getPersistentRDDs() if _prepared_copies else {}
+        for e in list(_prepared_copies):
+            if e.sc is not sc or not all(i in live for i in e.source):
+                _prepared_copies.remove(e)
+                if e.sc is sc:
+                    e.df.unpersist()
+        ids = _PACKED_IDS.get(t.schema["nbr_id"].dataType.typeName())
+        cached = _cache_source(t) if ids else None
+        if cached is None:
+            return None
+        plan, source = cached
+        for e in _prepared_copies:
+            if e.source == source and e.plan.sameResult(plan):
+                return e
+        pack = functools.partial(_pack_points, d=d, cell=cell, row_bytes=PREPARED_ROW_BYTES, source=source)
+        df = t.mapInArrow(pack, _PACKED).persist()
+        # one job fills the cache and counts the rows (a count takes three)
+        e = _Prepared(sc, plan, source, df, len(df.select(F.lit(1)).collect()), ids)
+        _prepared_copies.append(e)
+        return e
+
+
+def _pack_points(batches, d: int, cell: float, row_bytes: int, source: tuple):
+    """The prepare step over one partition of (nbr_id, t0..): its points
+    in the kernel's cell key order (:func:`_cell_keys` over the
+    partition's extent), each row of at most ``row_bytes`` holding
+    ``_pts`` = the d coordinate arrays (float64) then the id array,
+    contiguous and padded to 8 bytes, and ``_null`` = the id null mask
+    (a byte per point), or null when no id in the row is null.
+
+    ``source`` is not read: it puts the source's cache instance in the
+    pickled function, so the prepared plan of another instance never
+    equals this one in Spark's cache manager."""
+    import pyarrow as pa
+
+    parts = [b for b in batches if b.num_rows]
+    if not parts:  # an empty partition yields nothing
+        return
+    b = pa.Table.from_batches(parts).combine_chunks().to_batches()[0]
+    ids = b.column("nbr_id")
+    pcols = [b.column(f"t{j}").to_numpy() for j in range(d)]
+    keys, _ = _cell_keys(pcols, _cell_spans([c.min() for c in pcols], [c.max() for c in pcols], cell), cell)
+    order = np.argsort(keys, kind="stable")
+    null = ids.is_null().to_numpy(zero_copy_only=False)[order] if ids.null_count else None
+    pid = ids.fill_null(0).to_numpy()[order]
+    width = 8 * d + pid.itemsize
+    per = max(1, row_bytes // width)
+    for lo in range(0, len(order), per):
+        at = order[lo : lo + per]
+        mask = None if null is None else null[lo : lo + per]
+        pts = b"".join([*(c[at].tobytes() for c in pcols), pid[lo : lo + per].tobytes()])
+        mask = mask.tobytes() if mask is not None and mask.any() else None
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([pts + bytes(-len(pts) % 8)]), pa.array([mask], pa.binary())], names=["_pts", "_null"]
+        )
+
+
+def _unpack_points(b, d: int, ids: str):
+    """(pid, pcols, id null mask or None) of each prepared row of an
+    Arrow batch, as zero-copy views of the ``_pts`` buffer."""
+    from rsgislib_spark.kernels.codecs import arrow_batch_cols
+
+    (views,) = arrow_batch_cols(b, "_pts")
+    for pts, null in zip(views, b.column("_null").to_pylist()):
+        n = len(pts) // (8 * d + np.dtype(ids).itemsize)
+        pcols = [np.frombuffer(pts, np.float64, n, 8 * n * j) for j in range(d)]
+        yield np.frombuffer(pts, ids, n, 8 * n * d), pcols, None if null is None else np.frombuffer(null, bool)
+
+
 def _local_top_k(
     batch: pd.DataFrame, t: DataFrame, d: int, k: int, cell: float, dist_thres: float,
     exclude_self: bool,
 ) -> pd.DataFrame | None:
     """A query batch's exact kNN in one Python pass over the points: a
-    ``mapInArrow`` over ``t`` (nbr_id, t0..) carries the batch (query_id,
-    q0..) in its closure and returns each partition's local top-k
-    (:func:`_partition_top_k`); the driver merges them with
-    :func:`_top_k_rows`. Exact, because the global top-k of a query is
-    the top-k of the union of its local top-k lists. Returns (query_id,
-    nbr_id, d2, rank), or None, running no job, when the batch's
-    queries × k × the point partitions exceed ``MAX_DRIVER_CANDIDATES``."""
+    ``mapInArrow`` carries the batch (query_id, q0..) in its closure and
+    returns the local top-k (:func:`_partition_top_k`) of each set of
+    points it reads; the driver merges them with :func:`_top_k_rows`.
+    Exact, because the global top-k of a query is the top-k of the union
+    of its local top-k lists.
+
+    The input step, by the point side ``t`` (nbr_id, t0..): a cached one
+    is read as its prepared copy (:func:`_prepared`), a few packed rows
+    per partition, each a set; any other as its rows, each partition a
+    set. Returns (query_id, nbr_id, d2, rank), or None, running no pass,
+    when the batch's queries × k × the sets (prepared rows, or point
+    partitions) exceed ``MAX_DRIVER_CANDIDATES``."""
+    import pyarrow as pa
+
     from rsgislib_spark.kernels.codecs import arrow_batch_cols
 
     qid = batch["query_id"].to_numpy()
@@ -297,27 +446,38 @@ def _local_top_k(
     dist = StructField("d2", DoubleType())
     schema = StructType([StructField("_q", LongType()), t.schema["nbr_id"], dist])
 
-    def run(it):
-        import pyarrow as pa
+    def top(pid, pcols, nbr):
+        # one set's local top-k, its ids taken by position through nbr
+        q, j, d2 = _partition_top_k(qid, qcols, pid, pcols, k, cell, dist_thres, exclude_self, budget)
+        return pa.RecordBatch.from_arrays([pa.array(q), nbr(j), pa.array(d2)], names=["_q", "nbr_id", "d2"])
 
-        parts = [b for b in it if b.num_rows]
-        if not parts:  # an empty partition yields nothing
-            return
-        b = pa.Table.from_batches(parts).combine_chunks().to_batches()[0]
-        pid, *pcols = arrow_batch_cols(b, "nbr_id", *[f"t{j}" for j in range(d)])
-        q, j, d2 = _partition_top_k(
-            qid, qcols, np.asarray(pid), pcols, k, cell, dist_thres, exclude_self, budget
-        )
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(q), b.column("nbr_id").take(pa.array(j)), pa.array(d2)],
-            names=["_q", "nbr_id", "d2"],
-        )
+    prep = _prepared(t, d, cell)
+    if prep is None:
 
-    local = t.mapInArrow(run, schema)
-    # each partition returns at most k rows per query; the partition count
-    # comes from the plan the collect then reuses
-    n_parts = local._jdf.queryExecution().executedPlan().execute().getNumPartitions()
-    if len(batch) * k * n_parts > MAX_DRIVER_CANDIDATES:
+        def rows(it):
+            parts = [b for b in it if b.num_rows]
+            if not parts:  # an empty partition yields nothing
+                return
+            b = pa.Table.from_batches(parts).combine_chunks().to_batches()[0]
+            pid, *pcols = arrow_batch_cols(b, "nbr_id", *[f"t{j}" for j in range(d)])
+            yield top(np.asarray(pid), pcols, lambda j: b.column("nbr_id").take(pa.array(j)))
+
+        local = t.mapInArrow(rows, schema)
+        # each partition returns at most k rows per query; the partition
+        # count comes from the plan the collect then reuses
+        n_sets = local._jdf.queryExecution().executedPlan().execute().getNumPartitions()
+    else:
+        ids = prep.ids
+
+        def packed(it):
+            for b in it:
+                for pid, pcols, null in _unpack_points(b, d, ids):
+                    # a null id ranks as NaN, as the row input reads it
+                    key = pid if null is None else np.where(null, np.nan, pid)
+                    yield top(key, pcols, lambda j: pa.array(pid[j], mask=None if null is None else null[j]))
+
+        local, n_sets = prep.df.mapInArrow(packed, schema), prep.rows
+    if len(batch) * k * n_sets > MAX_DRIVER_CANDIDATES:
         return None
     got = local.toPandas()
     nbr = got["nbr_id"].to_numpy()
@@ -516,11 +676,20 @@ def knn_points_bucketed(
 
     - *one pass*: the projected queries are broadcastable (Catalyst's
       size estimate within ``spark.sql.autoBroadcastJoinThreshold``; −1
-      disables) and queries × k × point partitions is within
+      disables) and queries × k × point sets is within
       ``MAX_DRIVER_CANDIDATES``. The batch is collected once and rides
       in the closure of one ``mapInArrow`` over the points, whose tasks
-      return each query's exact local top-k for the driver to merge. No
-      join, shuffle or extent job.
+      return each query's exact local top-k per set for the driver to
+      merge. No join, shuffle or extent job. Its input, by the point
+      side: when every leaf of its plan is served from Spark's cache
+      (and its id is a fixed-width number), the first call persists a
+      prepared copy — each partition's ids and coordinates packed in
+      cell key order into rows of at most ``PREPARED_ROW_BYTES`` — and
+      every call reads those few rows as zero-copy arrays, one set each.
+      The copy is tied to its source's cache instance: it is unpersisted
+      once the source is uncached or re-cached, and never serves an
+      earlier cache. Any other point side is read as its rows, one set
+      per partition, and caches nothing.
     - *tile cogroup* otherwise (:func:`_tile_top_k`): one extent job
       sizes tiles with a halo; pass 1 settles most queries per tile,
       pass 2 takes each straggler to the tiles within its bound, and a

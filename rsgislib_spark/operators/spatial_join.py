@@ -26,8 +26,9 @@ Two physical strategies, same semantics:
    emits the matched zone's position and the zone rows join on it. This
    is the 100 TB path whenever zones fit on an executor (they do by
    design — the reference's zone side is a small vector layer).
-   :func:`spatial_select`, :func:`layer_predicate` and the ``vec_*_vec``
-   predicates run the same pass over a slim (id, bbox) projection.
+   :func:`spatial_select` runs the same pass and emits each matching
+   row once; :func:`layer_predicate` and the ``vec_*_vec`` predicates run
+   it over a slim (id, bbox) projection.
 
  - :func:`spatial_join_cells` — both sides exploded to covering grid
    cells, cell equi-join (Catalyst sort-merge/shuffle-hash with AQE),
@@ -168,6 +169,8 @@ def _matched_rows(
     null ``zone_id`` and null attributes (a null position). ``how="right"``
     emits :data:`ZONE_POS` (the matched zone's position) instead of
     ``zone_id`` and no attributes, for the caller's join on the zone rows.
+    ``how="semi"`` emits each row that meets some zone once, its columns
+    only.
 
     Callers filter ``rows`` by :func:`_in_zone_bbox` first (except a left
     join, which must see every row), so the pass sees the candidates and
@@ -180,7 +183,7 @@ def _matched_rows(
     from rsgislib_spark.kernels.codecs import arrow_batch_cols
 
     fields = [
-        StructField(ZONE_POS if how == "right" else "zone_id", LongType()),
+        *([] if how == "semi" else [StructField(ZONE_POS if how == "right" else "zone_id", LongType())]),
         *rows.schema.fields,
         *attrs,
     ]
@@ -196,6 +199,10 @@ def _matched_rows(
                 continue
             rects = np.column_stack(arrow_batch_cols(b, "minx", "miny", "maxx", "maxy"))
             qi, zi = zx.match(rects.astype(np.float64), join_op)
+            if how == "semi":
+                if len(qi):
+                    yield pa.RecordBatch.from_arrays(b.take(pa.array(np.unique(qi))).columns, names=slots)
+                continue
             null = None
             if how == "left":
                 miss = np.flatnonzero(np.bincount(qi, minlength=b.num_rows) == 0)
@@ -375,10 +382,16 @@ def spatial_select(
     images: DataFrame, zones: DataFrame, join_op: str = "intersects",
     id_col: str = "image_id",
 ) -> DataFrame:
-    """Semi-join: images matching ANY zone — reference ``spatial_select``
-    (vectorutils/__init__.py:2565-2610). left_semi keeps image columns only."""
-    pairs = _id_pairs(images, zones, id_col, join_op)[0].select(id_col).distinct()
-    return images.join(pairs, id_col, "left_semi")
+    """Semi-join: the image rows matching ANY zone, image columns only,
+    each row once — reference ``spatial_select``
+    (vectorutils/__init__.py:2565-2610). One fence collect and one pass
+    over the bbox-filtered rows (:func:`_matched_rows`, ``how="semi"``):
+    rows are selected by position, so a row that meets no zone stays out
+    even when another row shares its ``id_col`` (kept for the signature
+    shared with the joins)."""
+    zx, _ = _zone_side(zones)
+    zones_b = images.sparkSession.sparkContext.broadcast((zx, None))
+    return _matched_rows(images.filter(_in_zone_bbox(zx)), zones_b, join_op, how="semi")
 
 
 # ---------------------------------------------- boolean layer predicates

@@ -259,8 +259,9 @@ FROM grads GROUP BY image_key
 def q99_spatial_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-join layer select (spatial_select,
     vectorutils/__init__.py:2565-2610): images whose footprint
-    intersects ANY zone, image columns only, each image once. Plan:
-    broadcast-STRtree pair generation → distinct ids → left_semi."""
+    intersects ANY zone, image columns only, each image once. Plan: one
+    zone fence, then one broadcast-STRtree pass over the bbox-filtered
+    images that emits each matching row once."""
     from rsgislib_spark.operators.spatial_join import spatial_select
 
     load_views(spark, sf_dir)

@@ -15,6 +15,9 @@ from rsgislib_spark.operators.spatial_join import spatial_join_broadcast
 
 #: queries collect, the one Python pass over the points, result collect
 KNN_ONE_ROUND_JOBS = 3
+#: a cached point table's first call also builds its prepared copy: the
+#: one collect that fills the persisted packed rows and counts them
+KNN_PREPARE_JOBS = 1
 #: the same call forced onto the tile cogroup: the point extent, then one
 #: job per shuffle stage of the DAG (both passes' inputs, the window) and
 #: the result collect
@@ -44,6 +47,29 @@ def test_knn_one_round_job_budget(spark, points_pdf, monkeypatch):
     n = _jobs(spark, "budget-knn", lambda: knn.knn_points_bucketed(qs, pts, k=4, cell=50000.0).toPandas())
     assert len(rounds) == 1
     assert n <= KNN_ONE_ROUND_JOBS, n
+
+
+def test_knn_on_a_cached_point_table_job_budget(spark, points_pdf):
+    """The first call over a cached point table builds its prepared copy
+    (at most KNN_PREPARE_JOBS more); the second reads it within the one
+    round's budget and adds no entry to Spark's cache manager."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    pts = spark.createDataFrame(points_pdf).cache()
+    qs = spark.createDataFrame(points_pdf.iloc[:16])
+
+    def call():
+        return knn.knn_points_bucketed(qs, pts, k=4, cell=50000.0).toPandas()
+
+    try:
+        pts.count()
+        first = _jobs(spark, "budget-knn-prepare", call)
+        entries = cache.numCachedEntries()
+        second = _jobs(spark, "budget-knn-prepared", call)
+        assert cache.numCachedEntries() == entries
+    finally:
+        pts.unpersist()
+    assert second <= KNN_ONE_ROUND_JOBS, second
+    assert first <= KNN_ONE_ROUND_JOBS + KNN_PREPARE_JOBS, first
 
 
 def test_knn_tile_cogroup_job_budget(spark, points_pdf, monkeypatch):

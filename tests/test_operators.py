@@ -311,23 +311,47 @@ def knn_rounds():
 def knn_path(spark, path, rounds=True):
     """Run a bucketed kNN on one physical path and check every call took
     it: "broadcast" (the query batch shipped to the points in one Python
-    pass, the default for small batches) or "distributed" (the tile
-    cogroup, forced by spark.sql.autoBroadcastJoinThreshold=-1). With
-    ``rounds=False`` no pass may run at all."""
+    pass, the default for small batches), "cached" (the same pass with
+    the point table cached first, so it reads the table's prepared copy)
+    or "distributed" (the tile cogroup, forced by
+    spark.sql.autoBroadcastJoinThreshold=-1). With ``rounds=False`` no
+    pass may run at all."""
+    from rsgislib_spark.operators import knn
+
     key = "spark.sql.autoBroadcastJoinThreshold"
     threshold = spark.conf.get(key)
+    real_body, real_prepared = knn._knn_bucketed, knn._prepared
+    cached, prepared = [], []
+
+    def body(queries, points, *args):  # caches the point table first
+        if not points.is_cached:
+            cached.append(points.cache())
+        return real_body(queries, points, *args)
+
+    def spy(*args):
+        out = real_prepared(*args)
+        prepared.append(out is not None)
+        return out
+
     with knn_rounds() as taken:
         if path == "distributed":
             spark.conf.set(key, "-1")
+        if path == "cached":
+            knn._knn_bucketed, knn._prepared = body, spy
         try:
             yield
         finally:
             spark.conf.set(key, threshold)
-    want = "_local_top_k" if path == "broadcast" else "_tile_top_k"
+            knn._knn_bucketed, knn._prepared = real_body, real_prepared
+            for df in cached:
+                df.unpersist()
+    want = "_tile_top_k" if path == "distributed" else "_local_top_k"
     assert set(taken) <= {want} and bool(taken) == rounds, (path, taken)
+    if path == "cached":  # every pass read the prepared copy
+        assert all(prepared) and len(prepared) == len(taken), (path, prepared, taken)
 
 
-KNN_PATHS = ("broadcast", "distributed")
+KNN_PATHS = ("broadcast", "cached", "distributed")
 
 
 class TestKNN:
@@ -798,6 +822,110 @@ class TestKNN:
                     assert a.loc[pid, "closest_id"] == b.loc[pid, "closest_id"], (path, pid)
                     assert a.loc[pid, "dist"] == pytest.approx(b.loc[pid, "dist"]), (path, pid)
 
+
+    def test_knn_prepared_rows_split_at_the_byte_bound(self, spark, points_pdf, monkeypatch):
+        """A byte bound of 7 points splits each cached partition into
+        several prepared rows (one local top-k each): the result still
+        equals brute force, and a null id (in some rows' masks only)
+        comes back as the row input returns it."""
+        from rsgislib_spark.operators import knn
+
+        monkeypatch.setattr(knn, "PREPARED_ROW_BYTES", 7 * 24)
+        pts = spark.createDataFrame(points_pdf).repartition(2).cache()
+        qpdf = points_pdf.iloc[:30]
+        qs = spark.createDataFrame(qpdf)
+        try:
+            with knn_rounds() as taken:
+                got = knn.knn_points_bucketed(qs, pts, k=4, cell=20000.0).toPandas()
+            assert taken == ["_local_top_k"]
+            (copy,) = [e for e in knn._prepared_copies if e.df.is_cached]
+            assert copy.rows == sum(-(-n // 7) for n in pts.rdd.glom().map(len).collect()), copy.rows
+            self._assert_knn_brute(got, qpdf, points_pdf, 4)
+            # pt_id 0 (the first query's own point) loses its id
+            nulls = points_pdf.assign(pt_id=points_pdf["pt_id"].astype("Int64").where(points_pdf["pt_id"] != 0))
+            ids = spark.createDataFrame(nulls, "pt_id long, x double, y double")
+            rows = ids.select("pt_id", "x", "y")
+            want = knn.knn_points_bucketed(qs, rows, k=4, cell=20000.0).toPandas()
+            with knn_path(spark, "cached"):
+                got = knn.knn_points_bucketed(qs, rows, k=4, cell=20000.0).toPandas()
+            assert want["nbr_id"].isna().any()
+            assert self._rows(got.fillna(-1)) == self._rows(want.fillna(-1))
+        finally:
+            pts.unpersist()
+
+    @staticmethod
+    def _cache_entries(spark):
+        return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+    def _parquet_points(self, spark, path, seed):
+        pdf = datagen.gen_points(200, seed=seed)[["pt_id", "x", "y"]]
+        spark.createDataFrame(pdf).write.mode("overwrite").parquet(str(path))
+        return pdf
+
+    def test_knn_prepared_copy_never_outlives_its_source_cache(self, spark, tmp_path):
+        """Cache a parquet point table, run kNN, unpersist, overwrite the
+        files, cache them again: the next call builds a new prepared copy
+        and equals brute force on the new points. Re-caching the same
+        DataFrame (a plan equal to the old one's) also replaces the copy."""
+        from rsgislib_spark.operators import knn
+
+        path = tmp_path / "pts"
+        old = self._parquet_points(spark, path, 1)
+        qs = spark.createDataFrame(old.iloc[:20])
+        pts = spark.read.parquet(str(path)).cache()
+        copies = []
+        for _ in range(2):
+            with knn_path(spark, "cached"):
+                got = knn.knn_points_bucketed(qs, pts, k=5, cell=20000.0).toPandas()
+            self._assert_knn_brute(got, old.iloc[:20], old, 5)
+            copies += [e for e in knn._prepared_copies if e.df.is_cached and e not in copies]
+            pts.unpersist()
+            pts.cache()
+        assert len(copies) == 2 and not copies[0].df.is_cached, copies
+        pts.unpersist()
+        new = self._parquet_points(spark, path, 2)
+        pts = spark.read.parquet(str(path)).cache()
+        try:
+            with knn_path(spark, "cached"):
+                got = knn.knn_points_bucketed(qs, pts, k=5, cell=20000.0).toPandas()
+        finally:
+            pts.unpersist()
+        self._assert_knn_brute(got, old.iloc[:20], new, 5)
+
+    def test_knn_prepared_copy_unpersisted_with_its_source(self, spark, tmp_path):
+        """After ``unpersist`` alone the next call reads the current files
+        and Spark's cache holds no prepared copy of the old table."""
+        from rsgislib_spark.operators import knn
+
+        path = tmp_path / "pts"
+        old = self._parquet_points(spark, path, 3)
+        qs = spark.createDataFrame(old.iloc[:20])
+        knn.knn_points_bucketed(qs, qs, k=1).toPandas()  # unpersists the copies of dead sources
+        before = self._cache_entries(spark)
+        pts = spark.read.parquet(str(path)).cache()
+        with knn_path(spark, "cached"):
+            knn.knn_points_bucketed(qs, pts, k=5, cell=20000.0).toPandas()
+        assert self._cache_entries(spark) == before + 2  # the source and its copy
+        pts.unpersist()
+        new = self._parquet_points(spark, path, 4)
+        with knn_path(spark, "broadcast"):
+            got = knn.knn_points_bucketed(qs, spark.read.parquet(str(path)), k=5, cell=20000.0).toPandas()
+        self._assert_knn_brute(got, old.iloc[:20], new, 5)
+        assert self._cache_entries(spark) == before
+        assert not [e for e in knn._prepared_copies if e.df.is_cached]
+
+    def test_knn_uncached_points_cache_nothing(self, spark, points_pdf):
+        """A point side not served from Spark's cache takes the row input
+        step: the call adds no entry to Spark's cache manager."""
+        from rsgislib_spark.operators.knn import knn_points_bucketed
+
+        pts = spark.createDataFrame(points_pdf)
+        qs = spark.createDataFrame(points_pdf.iloc[:10])
+        knn_points_bucketed(qs, pts, k=1).toPandas()  # unpersists the copies of dead sources
+        before = self._cache_entries(spark)
+        with knn_path(spark, "broadcast"):
+            knn_points_bucketed(qs, pts, k=3).toPandas()
+        assert self._cache_entries(spark) == before
 
 # ------------------------------------------------- round-3 regression fixes
 class TestRound3Fixes:

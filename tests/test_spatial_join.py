@@ -205,6 +205,24 @@ def test_spatial_select_semi(spark_tables, images_nopix_pdf, zones_pdf):
     assert len(sel) == len(exp_ids)
 
 
+def test_spatial_select_selects_rows_not_ids(spark):
+    """Two rows share image_id 7: only the one inside the zone comes
+    back (selecting by id returned the row at (50, 50) as well)."""
+    square = [np.array([[100.0, 100.0], [200.0, 100.0], [200.0, 200.0], [100.0, 200.0], [100.0, 100.0]])]
+    zones = spark.createDataFrame(
+        pd.DataFrame({"zone_id": [1], "geometry": [geom.polygon_to_wkb(square)]})
+    )
+    images = spark.createDataFrame(pd.DataFrame({
+        "image_id": [7, 7, 8],
+        "tag": ["in", "out", "far"],
+        "minx": [140.0, 50.0, 500.0], "miny": [140.0, 50.0, 500.0],
+        "maxx": [150.0, 51.0, 501.0], "maxy": [150.0, 51.0, 501.0],
+    }))
+    got = spatial_select(images, zones).toPandas()
+    assert list(got.columns) == images.columns
+    assert got.values.tolist() == [[7, "in", 140.0, 140.0, 150.0, 150.0]]
+
+
 def test_zone_index_pickles(zones_pdf):
     import pickle
 
