@@ -11,9 +11,9 @@
 
  - :func:`closest_point_join` — spatial k=1 join, reference
    ``match_closest_vec_pts`` (``vectorutils/__init__.py:3359-3473``):
-   argmin of the full distance matrix, optional tolerance. The reference
-   raises on ties; we break ties deterministically by smallest train id
-   (documented deviation, SURVEY §2.3).
+   :func:`knn_points_bucketed` with k=1, optional tolerance. The
+   reference raises on ties; we break ties deterministically by smallest
+   match id (documented deviation, SURVEY §2.3).
 
  - :func:`knn_points_bucketed` / :func:`knn_features_bucketed` — the
    SCALE path (the north rule's "kNN neighbor lookup over cell-bucketed
@@ -31,11 +31,13 @@
    equi-join (cell ≥ r ⇒ ring-1 covers the disk), replacing the O(N²)
    theta-join.
 
-Physical shape: ``knn_apply``/``closest_point_join``/``radius_count``
-broadcast the training/match side — the documented FAST PATH when that
-side is small (it is the labelled sample set by construction). The
-``*_bucketed`` operators are the default at scale: candidates per query
-bounded by local density, and the point table is never broadcast.
+Physical shape: each point operator has one path. The spatial ones
+(``closest_point_join`` and the ``*_bucketed`` operators) bound a
+query's candidates by local density and never broadcast the point
+table. ``knn_apply`` broadcasts its training side, the labelled sample
+set (small by construction), because its four non-euclidean metrics
+have no cell bound; it walks each batch's distance matrix in blocks of
+at most ``KNN_ELEM_BUDGET`` elements.
 """
 
 from __future__ import annotations
@@ -65,8 +67,9 @@ MAX_BROADCAST_TRAIN = 5_000_000
 MAX_DRIVER_CANDIDATES = 2_000_000
 #: Most (query, point) candidate pairs one kernel call holds at once: its
 #: candidate ranges and dense blocks are walked in windows of this many
-#: elements, so a hot cell costs time, not memory (read when the op is
-#: built; patchable in tests).
+#: elements, so a hot cell costs time, not memory; ``knn_apply``'s
+#: (query, train, feature) blocks too (read when the op is built;
+#: patchable in tests).
 KNN_ELEM_BUDGET = 1 << 19
 
 
@@ -755,7 +758,11 @@ def radius_count_bucketed(
     points (both shuffled; the hint keeps the optimizer from
     broadcasting them); the refine keeps ``d2 ≤ r²``. The self-pair
     (d2 = 0) always joins, so an inner join + count-1 yields 0 for
-    isolated points without a left join. Pure Catalyst."""
+    isolated points without a left join. Pure Catalyst.
+
+    A point with a null or NaN coordinate gets no row and counts for no
+    other point, as in the kNN operators: its cell key is null or its d2
+    NaN, which the join or the refine drops."""
     cell = float(cell if cell is not None else radius)
     if cell < radius:
         raise ValueError("cell must be >= radius for ring-1 coverage")
@@ -789,8 +796,40 @@ def _distances(q: np.ndarray, t: np.ndarray, metric: str, p: float, vi: np.ndarr
         return (np.abs(d) ** p).sum(axis=2) ** (1.0 / p)
     if metric == "mahalanobis":
         # d Vi d^T per pair; Vi = inverse covariance of the TRAINING set
-        return np.sqrt(np.einsum("qtf,fg,qtg->qt", d, vi, d))
+        return np.sqrt(((d @ vi) * d).sum(axis=2))
     raise ValueError(f"metric must be one of {METRICS}")
+
+
+def _apply_batch(
+    q: np.ndarray, tf: np.ndarray, tv: np.ndarray, k: int, metric: str, vi: np.ndarray | None,
+    summary: str, dist_thres: float, budget: int,
+):
+    """(out_val, n_neigh) of one batch of apply rows ``q`` over the
+    training features ``tf`` and values ``tv``: each row's k nearest
+    under ``metric``, those within ``dist_thres`` summarized. The
+    distance matrix is walked in blocks of at most ``budget`` (query ×
+    train × feature) elements, each row's k nearest so far merged with
+    the next block by ``argpartition``."""
+    nt, nf = tf.shape
+    kk = min(k, nt)
+    tb = max(1, min(nt, budget // nf))  # train rows per block
+    qb = max(1, budget // (tb * nf))  # query rows per block
+    out_val, n_neigh = [], []
+    for a in range(0, len(q), qb):
+        qs = q[a : a + qb]
+        dd, at = np.zeros((len(qs), 0)), np.zeros((len(qs), 0), np.int64)
+        for c in range(0, nt, tb):
+            cols = np.arange(c, min(c + tb, nt))
+            dd = np.hstack([dd, _distances(qs, tf[c : c + tb], metric, 2.0, vi)])
+            at = np.hstack([at, np.broadcast_to(cols, (len(qs), len(cols)))])
+            if dd.shape[1] > kk:
+                keep = np.argpartition(dd, kk - 1, axis=1)[:, :kk]
+                dd, at = np.take_along_axis(dd, keep, axis=1), np.take_along_axis(at, keep, axis=1)
+        # the summaries reduce the (block × kk) candidates at once
+        valid = dd < dist_thres
+        out_val.append(_summarize_rows(tv[at], valid, summary))
+        n_neigh.append(valid.sum(axis=1))
+    return np.concatenate(out_val), np.concatenate(n_neigh).astype(np.int32)
 
 
 def _summarize(vals: np.ndarray, how: str) -> float:
@@ -895,6 +934,7 @@ def knn_apply(
 
     src = apply_df.select(id_col, *feat_cols)
     schema = f"{id_col} long, out_val double, n_neigh int"
+    budget = KNN_ELEM_BUDGET
 
     def _run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tf, tv, vi_ = b.value
@@ -902,19 +942,8 @@ def knn_apply(
             if not len(pdf):
                 continue
             q = pdf[list(feat_cols)].to_numpy(np.float64)
-            dm = _distances(q, tf, metric, 2.0, vi_)
-            ids = pdf[id_col].to_numpy(np.int64)
-            # top-k per row under threshold — fully vectorized: argpartition
-            # narrows to kk candidates per row, the mask keeps in-threshold
-            # ones, and the summaries reduce the (batch × kk) block at once
-            kk = min(k, dm.shape[1])
-            part = np.argpartition(dm, kk - 1, axis=1)[:, :kk]
-            dd = np.take_along_axis(dm, part, axis=1)
-            valid = dd < dist_thres
-            vals = tv[part]
-            out_val = _summarize_rows(vals, valid, summary)
-            n_neigh = valid.sum(axis=1).astype(np.int32)
-            yield pd.DataFrame({id_col: ids, "out_val": out_val, "n_neigh": n_neigh})
+            out_val, n_neigh = _apply_batch(q, tf, tv, k, metric, vi_, summary, dist_thres, budget)
+            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(np.int64), "out_val": out_val, "n_neigh": n_neigh})
 
     return src.mapInPandas(_run, schema=schema)
 
@@ -925,105 +954,27 @@ def closest_point_join(
     tolerance: float = np.inf,
     base_id: str = "pt_id",
     match_id: str = "pt_id",
-    strategy: str = "broadcast",
 ) -> DataFrame:
-    """k=1 spatial join point→closest point.
+    """k=1 spatial join point→closest point: :func:`knn_points_bucketed`
+    with k=1 and ``dist_thres=tolerance``, over its kernel and paths.
+    The kNN queries are keyed on the base row itself, ``struct(base_id,
+    x, y)`` taken distinct, and ``base`` is left-joined back on that key:
+    one output row per base row, also when base rows share an id (equal
+    rows get equal matches).
 
-    ``strategy="broadcast"`` (fast path, match side small) broadcasts the
-    match table; ``strategy="bucketed"`` delegates to
-    :func:`knn_points_bucketed` with k=1 — no broadcast, scale path.
-
-    Output: base_id, closest_id (null when no match within tolerance),
-    dist (NaN when no match — identical across both strategies). Ties
-    broken by smallest match id (deviation from the reference, which
-    raises — ``vectorutils/__init__.py:3428-3434``)."""
-    if strategy == "bucketed":
-        qdf = base.select(F.col(base_id).alias("pt_id"), "x", "y")
-        tdf = match.select(F.col(match_id).alias("pt_id"), "x", "y")
-        res = knn_points_bucketed(
-            qdf, tdf, k=1, dist_thres=tolerance, exclude_self=False
-        ).select(
-            F.col("query_id").alias(base_id),
-            F.col("nbr_id").alias("closest_id"),
-            F.sqrt("d2").alias("dist"),
-        )
-        # beyond-tolerance rows: left join yields null dist — normalize to
-        # NaN so both strategies emit the same (null closest_id, NaN dist)
-        return (
-            base.select(base_id)
-            .join(res, base_id, "left")
-            .withColumn("dist", F.coalesce(F.col("dist"), F.lit(float("nan"))))
-        )
-    spark = base.sparkSession
-    m = fenced_small_pdf(
-        match.select(match_id, "x", "y"),
-        "closest_point_join broadcast match set",
-        'Use strategy="bucketed" (knn_points_bucketed) instead.',
-        max_rows=MAX_BROADCAST_TRAIN,
+    Output: base_id, closest_id (null when no match lies within
+    tolerance, or when the base row has a null or NaN coordinate), dist
+    (NaN when closest_id is null). A match point with a null or NaN
+    coordinate is never a match. Ties broken by smallest match id
+    (deviation from the reference, which raises —
+    ``vectorutils/__init__.py:3428-3434``)."""
+    row = F.struct(base_id, "x", "y").alias("_row")
+    res = knn_points_bucketed(
+        base.select(row, "x", "y").distinct(),
+        match.select(F.col(match_id).alias("_row"), "x", "y"),
+        k=1, dist_thres=tolerance, id_col="_row", exclude_self=False,
+    ).select(F.col("query_id").alias("_row"), F.col("nbr_id").alias("closest_id"), F.sqrt("d2").alias("dist"))
+    # an unmatched row's left-joined dist is null: normalize it to NaN
+    return base.select(base_id, row).join(res, "_row", "left").select(
+        base_id, "closest_id", F.coalesce("dist", F.lit(float("nan"))).alias("dist")
     )
-    b = spark.sparkContext.broadcast(
-        (m[match_id].to_numpy(np.int64), m["x"].to_numpy(np.float64), m["y"].to_numpy(np.float64))
-    )
-    schema = f"{base_id} long, closest_id long, dist double"
-    src = base.select(base_id, "x", "y")
-
-    def _run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mid, mx, my = b.value
-        # deterministic tie-break: pre-sort by id so argmin picks smallest
-        order = np.argsort(mid, kind="stable")
-        mid_s, mx_s, my_s = mid[order], mx[order], my[order]
-        for pdf in it:
-            if not len(pdf):
-                continue
-            qx = pdf["x"].to_numpy(np.float64)
-            qy = pdf["y"].to_numpy(np.float64)
-            d2 = (qx[:, None] - mx_s[None, :]) ** 2 + (qy[:, None] - my_s[None, :]) ** 2
-            j = np.argmin(d2, axis=1)
-            dist = np.sqrt(d2[np.arange(len(qx)), j])
-            cid = mid_s[j].astype(np.float64)
-            bad = dist >= tolerance
-            cid[bad] = np.nan
-            out = pd.DataFrame(
-                {
-                    base_id: pdf[base_id].to_numpy(np.int64),
-                    "closest_id": pd.array(
-                        np.where(bad, None, mid_s[j]), dtype="Int64"
-                    ),
-                    "dist": np.where(bad, np.nan, dist),
-                }
-            )
-            yield out
-
-    return src.mapInPandas(_run, schema=schema)
-
-
-def radius_count(points: DataFrame, radius: float, id_col: str = "pt_id") -> DataFrame:
-    """Count of OTHER points within ``radius`` of each point — reference
-    ``calc_npts_in_radius`` (``vectorattrs/__init__.py:997-1049``, KDTree
-    ball query minus self)."""
-    spark = points.sparkSession
-    p = fenced_small_pdf(
-        points.select(id_col, "x", "y"),
-        "radius_count broadcast point set",
-        "Use radius_count_bucketed (cell equi-join scale path) instead.",
-        max_rows=MAX_BROADCAST_TRAIN,
-    )
-    b = spark.sparkContext.broadcast(
-        (p["x"].to_numpy(np.float64), p["y"].to_numpy(np.float64))
-    )
-    schema = f"{id_col} long, n_in_radius long"
-    src = points.select(id_col, "x", "y")
-    r2 = radius * radius
-
-    def _run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ax, ay = b.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            qx = pdf["x"].to_numpy(np.float64)
-            qy = pdf["y"].to_numpy(np.float64)
-            d2 = (qx[:, None] - ax[None, :]) ** 2 + (qy[:, None] - ay[None, :]) ** 2
-            n = (d2 <= r2).sum(axis=1) - 1  # minus self
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(np.int64), "n_in_radius": n})
-
-    return src.mapInPandas(_run, schema=schema)

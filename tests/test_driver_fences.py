@@ -86,7 +86,6 @@ def test_point_extract_and_chips_fence(spark, monkeypatch):
 def test_knn_fences(spark, monkeypatch):
     from rsgislib_spark.operators import knn
 
-    pts = _points_df(spark, 8)
     train = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -100,7 +99,3 @@ def test_knn_fences(spark, monkeypatch):
     monkeypatch.setattr(knn, "MAX_BROADCAST_TRAIN", 7)
     with pytest.raises(ValueError, match="knn_features_bucketed"):
         knn.knn_apply(train, train, ["f1", "f2"], "val", k=2).count()
-    with pytest.raises(ValueError, match="knn_points_bucketed"):
-        knn.closest_point_join(pts, pts).count()
-    with pytest.raises(ValueError, match="radius_count_bucketed"):
-        knn.radius_count(pts, 5.0).count()

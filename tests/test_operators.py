@@ -10,7 +10,7 @@ import pytest
 
 from rsgislib_spark import datagen
 from rsgislib_spark.kernels import codecs, geom, pixelmath
-from rsgislib_spark.operators.knn import closest_point_join, knn_apply, radius_count
+from rsgislib_spark.operators.knn import METRICS, closest_point_join, knn_apply, radius_count_bucketed
 from rsgislib_spark.operators.point_extract import extract_point_values
 from rsgislib_spark.operators.tiler import tile_images, tile_manifest
 from rsgislib_spark.operators.zonal import segment_mode, segment_stats, zonal_band_stats
@@ -410,53 +410,135 @@ class TestKNN:
             else:
                 assert np.isnan(got.loc[pid, "out_val"])
 
-    def test_closest_point_join(self, spark, points_pdf):
-        base = points_pdf.iloc[:50]
-        match = points_pdf.iloc[50:]
-        got = (
-            closest_point_join(
-                spark.createDataFrame(base), spark.createDataFrame(match)
-            ).toPandas().set_index("pt_id")
-        )
-        mx = match[["x", "y"]].to_numpy(float)
-        mid = match["pt_id"].to_numpy()
-        for p in base.itertuples(index=False):
-            d = np.hypot(mx[:, 0] - p.x, mx[:, 1] - p.y)
-            j = int(np.argmin(d))
-            assert got.loc[p.pt_id, "closest_id"] == mid[j]
-            assert got.loc[p.pt_id, "dist"] == pytest.approx(d[j])
+    @pytest.mark.parametrize("metric", METRICS)
+    def test_knn_apply_small_element_budget(self, spark, points_pdf, metric, monkeypatch):
+        """With a budget of a few dozen (query × train × feature)
+        elements, far below one apply row's distances, knn_apply still
+        equals a numpy brute force under every metric, and no distance
+        block of the batch body exceeds the budget."""
+        from rsgislib_spark.operators import knn
 
-    def test_closest_point_tolerance(self, spark, points_pdf):
-        base = points_pdf.iloc[:20]
-        match = points_pdf.iloc[50:]
-        got = closest_point_join(
-            spark.createDataFrame(base), spark.createDataFrame(match), tolerance=1000.0
-        ).toPandas()
-        far = got[got.closest_id.isna()]
-        near = got[~got.closest_id.isna()]
-        assert (near.dist < 1000.0).all()
-        assert far.dist.isna().all()
+        train = points_pdf[points_pdf.is_train == 1]
+        apply_ = points_pdf[points_pdf.is_train == 0]
+        feat = ["feat_1", "feat_2", "feat_3"]
+        q, t = apply_[feat].to_numpy(float), train[feat].to_numpy(float)
+        tv = train["feat_2"].to_numpy(float)
+        vi = np.linalg.pinv(np.atleast_2d(np.cov(t, rowvar=False)))
+        diff = q[:, None, :] - t[None, :, :]
+        dm = {
+            "euclidean": np.sqrt((diff**2).sum(2)),
+            "manhattan": np.abs(diff).sum(2),
+            "chebyshev": np.abs(diff).max(2),
+            "minkowski": ((np.abs(diff) ** 2).sum(2)) ** 0.5,
+            "mahalanobis": np.sqrt(np.einsum("qtf,fg,qtg->qt", diff, vi, diff)),
+        }[metric]
+        flat = np.unique(dm)
+        thres = (flat[len(flat) // 3] + flat[len(flat) // 3 + 1]) / 2.0  # between two distances
+        k, budget = 5, 40
+        monkeypatch.setattr(knn, "KNN_ELEM_BUDGET", budget)
+        got = knn_apply(
+            spark.createDataFrame(apply_), spark.createDataFrame(train), feat, "feat_2",
+            k=k, metric=metric, summary="median", dist_thres=thres,
+        ).toPandas().set_index("pt_id")
+        sizes, real = [], knn._distances
+
+        def spy(qs, ts, *args):
+            sizes.append(qs.shape[0] * ts.shape[0] * ts.shape[1])
+            return real(qs, ts, *args)
+
+        monkeypatch.setattr(knn, "_distances", spy)
+        out_val, n_neigh = knn._apply_batch(q, t, tv, k, metric, vi, "median", thres, budget)
+        assert sizes and max(sizes) <= budget, max(sizes)
+        for i, pid in enumerate(apply_["pt_id"]):
+            sel = [j for j in np.argsort(dm[i], kind="stable")[:k] if dm[i, j] < thres]
+            for val, n in ((got.loc[pid, "out_val"], got.loc[pid, "n_neigh"]), (out_val[i], n_neigh[i])):
+                assert n == len(sel), (pid, n, sel)
+                if sel:
+                    assert val == pytest.approx(np.median(tv[sel])), pid
+                else:
+                    assert np.isnan(val), pid
+
+    @staticmethod
+    def _closest_brute(base, match, tolerance):
+        """Sorted (base id, closest id, dist) rows of a numpy brute force:
+        a row with a NaN coordinate, or no match within tolerance, gets
+        (id, None, NaN); ties go to the smallest match id."""
+        ok = np.isfinite(match["x"].to_numpy(float)) & np.isfinite(match["y"].to_numpy(float))
+        mx, my = match["x"].to_numpy(float)[ok], match["y"].to_numpy(float)[ok]
+        mid = match["pt_id"].to_numpy()[ok]
+        rows = []
+        for p in base.itertuples(index=False):
+            d2 = (mx - p.x) ** 2 + (my - p.y) ** 2
+            j = np.lexsort((mid, d2))[:1]
+            if np.isfinite(p.x) and np.isfinite(p.y) and len(j) and np.sqrt(d2[j[0]]) < tolerance:
+                rows.append((p.pt_id, int(mid[j[0]]), float(np.sqrt(d2[j[0]]))))
+            else:
+                rows.append((p.pt_id, None, np.nan))
+        return sorted(rows, key=repr)
+
+    @pytest.mark.parametrize("path", KNN_PATHS)
+    def test_closest_point_join(self, spark, points_pdf, path):
+        """Each base row's closest match point equals a numpy brute force
+        on every kNN path: with and without a tolerance (rows past it get
+        a null closest_id and a NaN dist); base rows that share an id,
+        with other coordinates or fully duplicated, come back once each
+        (a join on the id alone returned n² rows for n of them); a row
+        with a NaN or null coordinate is unmatched and never a match; an
+        empty match side leaves every row unmatched."""
+        nan = float("nan")
+        odd_base = pd.DataFrame({
+            "pt_id": [5, 5, 7, 7, 8, 9, 10],
+            "x": [0.0, 10.0, 3.0, 3.0, nan, 4.0, nan],
+            "y": [0.0, 0.0, 1.0, 1.0, 1.0, 1.0, 1.0],
+        })
+        odd_match = pd.DataFrame({"pt_id": [1, 2, 3, 4, 6], "x": [1.0, 9.0, nan, 4.0, 2.0], "y": [0.0, 0.0, 1.0, 1.0, nan]})
+
+        def frame(pdf, nan_id):
+            # a pandas NaN arrives as SQL null: row nan_id gets a real NaN x
+            return spark.createDataFrame(pdf[["pt_id", "x", "y"]], "pt_id long, x double, y double").selectExpr(
+                "pt_id", f"IF(pt_id = {nan_id}, DOUBLE('NaN'), x) AS x", "y"
+            )
+
+        cases = [(points_pdf.iloc[:50], points_pdf.iloc[50:], -1, -1, t) for t in (np.inf, 1000.0, 80000.0)]
+        cases += [(odd_base, odd_match, 8, 3, 5.0), (odd_base, odd_match.iloc[:0], 8, 3, 5.0)]
+        for base, match, base_nan, match_nan, tolerance in cases:
+            bdf, mdf = frame(base, base_nan), frame(match, match_nan)
+            with knn_path(spark, path):
+                got = closest_point_join(bdf, mdf, tolerance=tolerance).toPandas()
+            got = sorted(
+                ((r.pt_id, None if pd.isna(r.closest_id) else int(r.closest_id), r.dist) for r in got.itertuples()),
+                key=repr,
+            )
+            want = self._closest_brute(base, match, tolerance)
+            label = (path, len(match), tolerance)
+            assert len(got) == len(want), (label, got, want)
+            for g, w in zip(got, want):
+                assert g[:2] == w[:2], (label, g, w)
+                assert g[2] == pytest.approx(w[2], nan_ok=True), (label, g, w)
+        assert frame(odd_base, 8).filter("isnan(x)").count() == 1
+        assert frame(odd_match, 3).filter("isnan(x)").count() == 1
 
     def test_radius_count_vs_brute(self, spark, points_pdf):
+        """The bucketed radius count equals a numpy brute force; a point
+        with a null or NaN coordinate gets no row and counts for no other
+        point."""
+        from pyspark.sql import functions as F
+
         r = 50000.0
-        got = radius_count(spark.createDataFrame(points_pdf), r).toPandas().set_index("pt_id")
+        x0, y0 = float(points_pdf["x"].iloc[0]), float(points_pdf["y"].iloc[0])
+        odd = [(-1, float("nan"), y0), (-2, x0, float("nan")), (-3, None, y0), (-4, x0, None)]
+        pts = spark.createDataFrame(points_pdf[["pt_id", "x", "y"]]).unionByName(
+            spark.createDataFrame(odd, "pt_id long, x double, y double")
+        )
+        assert pts.filter(F.isnan("x") | F.isnan("y")).count() == 2
+        got = radius_count_bucketed(pts, r).toPandas().set_index("pt_id")
         xs = points_pdf["x"].to_numpy(float)
         ys = points_pdf["y"].to_numpy(float)
         d2 = (xs[:, None] - xs[None, :]) ** 2 + (ys[:, None] - ys[None, :]) ** 2
         exp = (d2 <= r * r).sum(axis=1) - 1
+        assert sorted(got.index) == sorted(points_pdf["pt_id"])
         for i, pid in enumerate(points_pdf["pt_id"]):
             assert got.loc[pid, "n_in_radius"] == exp[i]
-
-    def test_radius_count_bucketed_matches_broadcast(self, spark, points_pdf):
-        from rsgislib_spark.operators.knn import radius_count_bucketed
-
-        r = 50000.0
-        pts = spark.createDataFrame(points_pdf)
-        brute = radius_count(pts, r).toPandas().set_index("pt_id")["n_in_radius"]
-        buck = radius_count_bucketed(pts, r).toPandas().set_index("pt_id")["n_in_radius"]
-        assert len(buck) == len(points_pdf)
-        for pid in points_pdf["pt_id"]:
-            assert buck[pid] == brute[pid]
 
     def _assert_knn_brute(self, got, qpdf, ppdf, k, label=None):
         xs = ppdf["x"].to_numpy(float)
@@ -801,28 +883,6 @@ class TestKNN:
         assert got.empty
         assert list(got.columns) == ["query_id", "nbr_id", "d2", "rank"]
 
-    def test_closest_point_join_bucketed_matches_broadcast(self, spark, points_pdf):
-        base = spark.createDataFrame(points_pdf.iloc[:50])
-        match = spark.createDataFrame(points_pdf.iloc[50:])
-        a = (
-            closest_point_join(base, match, tolerance=80000.0)
-            .toPandas().set_index("pt_id").sort_index()
-        )
-        for path in KNN_PATHS:
-            with knn_path(spark, path):
-                b = (
-                    closest_point_join(base, match, tolerance=80000.0, strategy="bucketed")
-                    .toPandas().set_index("pt_id").sort_index()
-                )
-            assert list(a.index) == list(b.index), path
-            for pid in a.index:
-                if pd.isna(a.loc[pid, "closest_id"]):
-                    assert pd.isna(b.loc[pid, "closest_id"]), (path, pid)
-                else:
-                    assert a.loc[pid, "closest_id"] == b.loc[pid, "closest_id"], (path, pid)
-                    assert a.loc[pid, "dist"] == pytest.approx(b.loc[pid, "dist"]), (path, pid)
-
-
     def test_knn_prepared_rows_split_at_the_byte_bound(self, spark, points_pdf, monkeypatch):
         """A byte bound of 7 points splits each cached partition into
         several prepared rows (one local top-k each): the result still
@@ -988,13 +1048,13 @@ class TestRound3Fixes:
                 assert np.allclose(sub["d2"].to_numpy(), d2[order])
 
     def test_closest_point_bucketed_nan_not_null_dist(self, spark, points_pdf):
-        """ADVICE r2 (low): beyond-tolerance rows must emit NaN dist (not
-        SQL NULL) from the bucketed path, matching the broadcast path."""
+        """Beyond-tolerance rows emit a NaN dist, not the SQL NULL that
+        the left join back onto the base rows yields."""
         from pyspark.sql import functions as F
 
         base = spark.createDataFrame(points_pdf.iloc[:20])
         match = spark.createDataFrame(points_pdf.iloc[50:])
-        res = closest_point_join(base, match, tolerance=1000.0, strategy="bucketed")
+        res = closest_point_join(base, match, tolerance=1000.0)
         unmatched = res.filter(F.col("closest_id").isNull())
         assert unmatched.count() > 0  # fixture guarantees some far points
         assert unmatched.filter(F.col("dist").isNull()).count() == 0
