@@ -11,11 +11,8 @@ Compare performance with ``python3 perfbench/run.py --workload <name>
 Prints ONE JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-``--scaling`` additionally runs the flagship spatial-join+tiling job at
-local[8] and local[32] on the same input and reports throughput at both
-plus scaling efficiency (the sandbox proxy for the north rule's N→4N
-cluster-size criterion) — results written to BENCH/BASELINE.md by
-scripts/run_scaling.py.
+The scaling numbers recorded in BENCH/BASELINE.md are history; the
+cluster-size evidence is ``scripts/run_standalone_cluster.py``.
 """
 
 from __future__ import annotations
@@ -55,7 +52,7 @@ def _q91_bytes_table(spark, sf_dir: str) -> str:
     gate needs no on-disk state); the BENCH variant instead scans a
     prebuilt bytes table — the shape a real deployment pays, where
     stored bytes are read, never encoded, in the hot path. The build is
-    outside the timed window, exactly like scripts/bench_decode.py."""
+    outside the timed window, as perfbench builds its inputs."""
     from rsgislib_spark.pipeline import encode_images_df
 
     sf = sf_dir.rstrip("/").split("sf")[-1]

@@ -483,6 +483,52 @@ def arrow_batch_cols(b, *names) -> list:
     return out
 
 
+#: Most payload bytes one output RecordBatch of :func:`payload_batches`
+#: carries — Arrow ``binary`` offsets are int32, so a batch is cut before
+#: its payloads would pass 2³¹ − 1 bytes.
+MAX_PAYLOAD_BATCH_BYTES = 2**31 - 1
+
+
+def payload_batches(schema, cols: dict, sizes, data, limit: int):
+    """Output RecordBatches of a 1 → N payload operator (tiles, frames).
+
+    ``schema`` is the pyarrow output schema; ``cols`` holds its non-payload
+    columns (arrays, or Arrow arrays such as a ``take`` of an input
+    column), ``sizes`` each row's payload bytes and ``data`` all payloads
+    as one contiguous uint8 array. The one column missing from ``cols``
+    leaves as an Arrow binary array over ``data`` (int32 offsets from the
+    cumulative sizes): no per-row Python bytes objects. A batch is cut
+    before its payloads pass ``limit`` bytes; one payload larger than
+    ``limit`` raises."""
+    import pyarrow as pa
+
+    arrs = {
+        f.name: cols[f.name].cast(f.type) if isinstance(cols[f.name], pa.Array)
+        else pa.array(cols[f.name], f.type)
+        for f in schema if f.name in cols
+    }
+    cum = np.concatenate(([0], np.cumsum(sizes, dtype=np.int64)))
+    buf = pa.py_buffer(data)
+    s = 0
+    while s < len(cum) - 1:
+        e = int(np.searchsorted(cum, cum[s] + limit, "right")) - 1
+        if e == s:
+            raise ValueError(
+                f"one {int(cum[s + 1] - cum[s])}-byte payload exceeds the "
+                f"{limit}-byte output batch limit"
+            )
+        payload = pa.BinaryArray.from_buffers(
+            pa.binary(), e - s,
+            [None, pa.py_buffer((cum[s : e + 1] - cum[s]).astype(np.int32)),
+             buf.slice(int(cum[s]), int(cum[e] - cum[s]))],
+        )
+        yield pa.RecordBatch.from_arrays(
+            [arrs[f.name].slice(s, e - s) if f.name in arrs else payload for f in schema],
+            schema=schema,
+        )
+        s = e
+
+
 # ----------------------------------------------------------------- oracles
 
 

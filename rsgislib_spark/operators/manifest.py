@@ -6,13 +6,19 @@ delete temp dirs and restart from zero — ``segmentation/tiledclump.py:
 finished partitions.
 
 Design (Iceberg-snapshot style, parquet-native so it runs in this
-container): output is bucketed by a deterministic hash of a key column;
-each bucket is written as its own job to ``out_dir/bucket=<b>/``; after a
-bucket lands, a LINEAGE row ``(stage, bucket, n_rows, key_hash_sum)`` is
-appended to ``out_dir/_manifest/``. On restart, completed buckets are
-read from the manifest and skipped (driver-side anti-set). The lineage
-hash (bit_xor of xxhash64 of the key, order-independent) lets a verifier
-re-check any bucket without re-running the producer.
+container): output is bucketed by a deterministic hash of a key column
+into ``out_dir/bucket=<b>/``, and each finished bucket has one LINEAGE
+row ``(n_rows, key_hash_sum, bucket, stage)`` in its own file under
+``out_dir/_manifest/``. A call writes every bucket the manifest lacks in
+ONE partitioned write to ``out_dir/_staging/``, takes their lineage rows
+from one aggregate over the staged files, then commits bucket by bucket:
+a directory rename, then the manifest row (written under a dot-prefixed
+name that readers skip, then renamed). A bucket counts as done only once
+its manifest row exists, so a kill at any point leaves buckets that the
+next call rewrites (the storage unit's own metadata does the
+partitioning, as in Jigsaw, SIGMOD 2021). The lineage hash (bit_xor of
+xxhash64 of the key, order-independent) lets a verifier re-check any
+bucket without re-running the producer.
 
 Determinism: bucket = pmod(xxhash64(key), n_buckets) — stable across
 retries, executors, and salting (same hash family as operators.salting).
@@ -21,24 +27,38 @@ retries, executors, and salting (same hash family as operators.salting).
 from __future__ import annotations
 
 import os
+import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 MANIFEST_SUBDIR = "_manifest"
+STAGING_SUBDIR = "_staging"
+
+#: One lineage row per bucket; the schema Spark-written manifests had.
+MANIFEST_SCHEMA = pa.schema([
+    ("n_rows", pa.int64()), ("key_hash_sum", pa.int64()),
+    ("bucket", pa.int32()), ("stage", pa.string()),
+])
 
 
 def bucket_col(id_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets)).cast("int")
 
 
-def completed_buckets(spark: SparkSession, out_dir: str) -> set:
+def completed_buckets(out_dir: str) -> set:
+    """Buckets with a manifest row, read on the driver (no Spark job);
+    dot- and underscore-prefixed files are uncommitted or metadata."""
     mdir = os.path.join(out_dir, MANIFEST_SUBDIR)
-    if not os.path.exists(mdir) or not any(
-        f.endswith(".parquet") for f in os.listdir(mdir)
-    ):
+    if not os.path.isdir(mdir):
         return set()
-    pdf = spark.read.parquet(mdir).select("bucket").distinct().toPandas()
-    return set(int(b) for b in pdf["bucket"])
+    return {
+        int(b)
+        for f in os.listdir(mdir)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+        for b in pq.read_table(os.path.join(mdir, f), columns=["bucket"]).column(0).to_pylist()
+    }
 
 
 def resumable_write(
@@ -48,35 +68,53 @@ def resumable_write(
     n_buckets: int = 16,
     stage: str = "tiles",
 ) -> dict:
-    """Write ``df`` to ``out_dir`` bucket-by-bucket with manifest commits.
+    """Write ``df`` to ``out_dir`` in ``n_buckets`` buckets with manifest
+    commits.
 
     Returns {"written": [...], "skipped": [...]}. Restart-safe: re-invoking
-    after a kill continues from the first un-manifested bucket. The input
-    should be cheap to re-derive or cached; at scale the source table is
-    partitioned on the same bucket expression so each pass prunes to one
-    bucket's files (Iceberg partition transform ``bucket(N, id)``).
+    after a kill writes exactly the buckets without a manifest row, and
+    nothing at all when none is missing. The missing buckets are written
+    in one pass over ``df`` (a filter on the bucket column, then one
+    ``partitionBy`` write), so every input row is computed once per call;
+    a kill during that write loses every bucket not yet committed.
     """
-    spark = df.sparkSession
-    done = completed_buckets(spark, out_dir)
-    b = df.withColumn("_bucket", bucket_col(id_col, n_buckets))
-    written, skipped = [], []
-    mdir = os.path.join(out_dir, MANIFEST_SUBDIR)
-    for bk in range(n_buckets):
-        if bk in done:
-            skipped.append(bk)
-            continue
-        part = b.filter(F.col("_bucket") == bk).drop("_bucket")
-        part.write.mode("overwrite").parquet(os.path.join(out_dir, f"bucket={bk}"))
-        # lineage row: counts + order-independent key hash (verifiable)
+    done = completed_buckets(out_dir)
+    missing = [b for b in range(n_buckets) if b not in done]
+    if missing:
+        staging = os.path.join(out_dir, STAGING_SUBDIR)
+        shutil.rmtree(staging, ignore_errors=True)
+        staged = df.withColumn("bucket", bucket_col(id_col, n_buckets)).filter(
+            F.col("bucket").isin(missing)
+        )
+        staged.write.partitionBy("bucket").parquet(staging)
+        # lineage rows: counts + order-independent key hash (verifiable).
         # bit_xor: order-independent and overflow-free (ANSI-safe), unlike
-        # a bigint SUM of full-range hashes
-        lin = part.agg(
-            F.count("*").alias("n_rows"),
-            F.coalesce(F.expr(f"bit_xor(xxhash64({id_col}))"), F.lit(0)).alias("key_hash_sum"),
-        ).withColumn("bucket", F.lit(bk)).withColumn("stage", F.lit(stage))
-        lin.coalesce(1).write.mode("append").parquet(mdir)
-        written.append(bk)
-    return {"written": written, "skipped": skipped}
+        # a bigint SUM of full-range hashes. The explicit schema reads a
+        # staging directory that holds no rows.
+        lineage = {
+            r["bucket"]: (r["n_rows"], r["key_hash_sum"])
+            for r in df.sparkSession.read.schema(staged.schema).parquet(staging)
+            .groupBy("bucket")
+            .agg(
+                F.count("*").alias("n_rows"),
+                F.expr(f"bit_xor(xxhash64({id_col}))").alias("key_hash_sum"),
+            )
+            .collect()
+        }
+        mdir = os.path.join(out_dir, MANIFEST_SUBDIR)
+        os.makedirs(mdir, exist_ok=True)
+        for b in missing:
+            final = os.path.join(out_dir, f"bucket={b}")
+            shutil.rmtree(final, ignore_errors=True)
+            if b in lineage:  # an empty bucket has no staged directory
+                os.rename(os.path.join(staging, f"bucket={b}"), final)
+            n_rows, key_hash = lineage.get(b, (0, 0))
+            row = pa.table([[n_rows], [key_hash], [b], [stage]], schema=MANIFEST_SCHEMA)
+            tmp = os.path.join(mdir, f".part-{b:05d}.parquet")
+            pq.write_table(row, tmp)
+            os.rename(tmp, os.path.join(mdir, f"part-{b:05d}.parquet"))
+        shutil.rmtree(staging)
+    return {"written": missing, "skipped": [b for b in range(n_buckets) if b in done]}
 
 
 # ----------------------------------------------- pluggable table-format sink
@@ -132,7 +170,7 @@ def write_table(
 
     With ``table`` set and an Iceberg catalog configured, writes through
     ``df.writeTo(table)`` (snapshot isolation, hidden partitioning —
-    ``bucket(N, id)`` replaces the manual bucket loop). Otherwise falls
+    ``bucket(N, id)`` replaces the staged bucket write). Otherwise falls
     back to :func:`resumable_write`'s parquet + lineage-manifest layout,
     which provides the same restart-without-recompute guarantee with no
     extra jars. Returns a dict whose ``backend`` key says which path ran.
@@ -162,17 +200,14 @@ def verify_against_manifest(spark: SparkSession, out_dir: str, id_col: str) -> D
     """Re-hash every written bucket and compare with its lineage row —
     returns rows with ok boolean per bucket."""
     man = read_manifest(spark, out_dir).select("bucket", "n_rows", "key_hash_sum")
-    data = spark.read.option("basePath", out_dir).parquet(
-        *[
-            os.path.join(out_dir, d)
-            for d in os.listdir(out_dir)
-            if d.startswith("bucket=")
-        ]
-    )
-    actual = data.groupBy("bucket").agg(
-        F.count("*").alias("actual_rows"),
-        F.expr(f"bit_xor(xxhash64({id_col}))").alias("actual_hash"),
-    )
+    paths = [os.path.join(out_dir, d) for d in os.listdir(out_dir) if d.startswith("bucket=")]
+    if paths:
+        actual = spark.read.option("basePath", out_dir).parquet(*paths).groupBy("bucket").agg(
+            F.count("*").alias("actual_rows"),
+            F.expr(f"bit_xor(xxhash64({id_col}))").alias("actual_hash"),
+        )
+    else:  # every bucket is empty: no bucket has a directory
+        actual = spark.createDataFrame([], "bucket int, actual_rows long, actual_hash long")
     return (
         man.join(actual, "bucket", "left")
         .withColumn(

@@ -58,7 +58,7 @@ def image_features(images: DataFrame) -> DataFrame:
     set spark.sql.execution.arrow.maxRecordsPerBatch ≈ 64 for the
     session running it (an 8 MB payload partition is ~330 rows = ONE
     default batch per task, serializing transfer then compute;
-    small batches pipeline them — measured ~3× in scripts/bench_decode)."""
+    small batches pipeline them — measured ~3×, BENCH/BASELINE.md)."""
     from rsgislib_spark.kernels.phash import phash64
 
     def _run(it):
@@ -255,37 +255,9 @@ def decode_video_frames(buf: bytes, fmt: str, h: int, w: int) -> np.ndarray:
     )
 
 
-def _frame_batch(ids, nos, hs, ws, chunks):
-    """One output RecordBatch of sampled frames: the payloads leave as
-    ONE contiguous Arrow binary array (an offsets buffer over a single
-    ``np.concatenate`` of the frame rows) — no per-frame Python bytes
-    objects. Callers keep the batch's frame bytes ≤ MAX_FRAME_BATCH_BYTES,
-    so the int32 offsets cannot wrap."""
-    import pyarrow as pa
-
-    sizes = np.concatenate([np.full(len(c), c.shape[1], dtype=np.int64) for c in chunks])
-    offsets = np.concatenate(([0], np.cumsum(sizes))).astype(np.int32)
-    data = np.concatenate([c.reshape(-1) for c in chunks])
-    frame_arr = pa.BinaryArray.from_buffers(
-        pa.binary(), len(sizes),
-        [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(data.tobytes())],
-    )
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(ids, pa.string()),
-            pa.array(np.concatenate(nos), pa.int32()),
-            pa.array(hs, pa.int32()),
-            pa.array(ws, pa.int32()),
-            frame_arr,
-        ],
-        names=["clip_id", "frame_no", "h", "w", "frame"],
-    )
-
-
 #: Most frame bytes one output RecordBatch of :func:`sample_video_frames`
-#: carries — Arrow ``binary`` offsets are int32, so a batch is flushed
-#: before its accumulated frames would pass 2³¹ − 1 bytes.
-MAX_FRAME_BATCH_BYTES = 2**31 - 1
+#: carries (see ``codecs.MAX_PAYLOAD_BATCH_BYTES``).
+MAX_FRAME_BATCH_BYTES = codecs.MAX_PAYLOAD_BATCH_BYTES
 
 
 def sample_video_frames(video: DataFrame, every_k: int = 5) -> DataFrame:
@@ -297,46 +269,31 @@ def sample_video_frames(video: DataFrame, every_k: int = 5) -> DataFrame:
     views (``codecs.arrow_batch_cols``), and the sampled frames leave as
     one contiguous binary array per output batch. An input batch whose
     sampled frames pass ``MAX_FRAME_BATCH_BYTES`` is split over several
-    output batches (mid-clip if need be); one frame larger than the limit
-    raises."""
+    output batches (mid-clip if need be; ``codecs.payload_batches``); one
+    frame larger than the limit raises."""
     limit = MAX_FRAME_BATCH_BYTES
 
     def _run(it):
+        import pyarrow as pa
+
+        schema = pa.schema([("clip_id", pa.string()), ("frame_no", pa.int32()),
+                            ("h", pa.int32()), ("w", pa.int32()), ("frame", pa.binary())])
         for b in it:
             if not b.num_rows:
                 continue
-            ids, views, fmts, hs, ws = codecs.arrow_batch_cols(
-                b, "clip_id", "bytes", "fmt", "h", "w"
+            views, fmts, hs, ws = codecs.arrow_batch_cols(b, "bytes", "fmt", "h", "w")
+            sel = [decode_video_frames(views[k], fmts[k], int(hs[k]), int(ws[k]))[::every_k]
+                   for k in range(b.num_rows)]
+            rows = np.repeat(np.arange(b.num_rows), [len(f) for f in sel])
+            yield from codecs.payload_batches(
+                schema,
+                {"clip_id": b.column("clip_id").take(rows),
+                 "frame_no": np.concatenate([np.arange(len(f)) * every_k for f in sel]),
+                 "h": hs[rows], "w": ws[rows]},
+                hs[rows].astype(np.int64) * ws[rows],
+                np.concatenate([f.reshape(-1) for f in sel]),
+                limit,
             )
-            out_ids, out_no, out_h, out_w, chunks = [], [], [], [], []
-            nbytes = 0
-            for k in range(b.num_rows):
-                h, w = int(hs[k]), int(ws[k])
-                frames = decode_video_frames(views[k], fmts[k], h, w)
-                sel = np.ascontiguousarray(frames[::every_k]).reshape(-1, h * w)
-                nos = np.arange(0, len(frames), every_k)
-                s = 0
-                while s < len(sel):
-                    take = min(len(sel) - s, (limit - nbytes) // (h * w))
-                    if not take:
-                        if not nbytes:
-                            raise ValueError(
-                                f"one {h}x{w} frame exceeds the {limit}-byte "
-                                "output batch limit"
-                            )
-                        yield _frame_batch(out_ids, out_no, out_h, out_w, chunks)
-                        out_ids, out_no, out_h, out_w, chunks = [], [], [], [], []
-                        nbytes = 0
-                        continue
-                    out_ids.extend([ids[k]] * take)
-                    out_no.append(nos[s : s + take])
-                    out_h.extend([h] * take)
-                    out_w.extend([w] * take)
-                    chunks.append(sel[s : s + take])
-                    nbytes += take * h * w
-                    s += take
-            if chunks:
-                yield _frame_batch(out_ids, out_no, out_h, out_w, chunks)
 
     return video.select("clip_id", "bytes", "fmt", "h", "w").mapInArrow(
         _run,

@@ -33,6 +33,8 @@ TILE_SCHEMA = (
 )
 
 _MODES = ("simple", "overlap", "block")
+#: the columns of a tile window row (kernels.pixelmath), in TILE_SCHEMA order
+_WIN_COLS = ("tile_x", "tile_y", "x0", "y0", "tw", "th")
 
 
 def tile_windows(mode: str, w: int, h: int, tile_w: int, tile_h: int,
@@ -44,6 +46,21 @@ def tile_windows(mode: str, w: int, h: int, tile_w: int, tile_h: int,
     if mode == "block":
         return pixelmath.block_windows_anchored(w, h, tile_w)
     raise ValueError(f"mode must be one of {_MODES}")
+
+
+def _window_pixels(img: np.ndarray, wins: np.ndarray):
+    """(bytes per window, pixels) for every window row ``(tile_x, tile_y,
+    x0, y0, tw, th)`` of ``img``: each window's pixels row-major, all
+    windows in one contiguous uint8 array, cut by one gather (no per-tile
+    copy)."""
+    h, w = img.shape[:2]
+    px = img.reshape(h * w, -1)
+    x0, y0, tw, th = wins[:, 2], wins[:, 3], wins[:, 4], wins[:, 5]
+    t = np.repeat(np.arange(len(wins)), th)  # the window of each window row
+    starts = (y0[t] + np.arange(len(t)) - np.repeat(np.cumsum(th) - th, th)) * w + x0[t]
+    lens = tw[t]
+    idx = np.repeat(starts - (np.cumsum(lens) - lens), lens) + np.arange(lens.sum())
+    return tw * th * px.shape[1] * px.itemsize, px[idx].reshape(-1).view(np.uint8)
 
 
 def tile_images(
@@ -64,69 +81,61 @@ def tile_images(
     Tuning: transfer-bound BOTH ways (bytes in, tile payloads out) —
     set spark.sql.execution.arrow.maxRecordsPerBatch ≈ 64 for the
     session running it (measured 3.2× vs the default; see
-    scripts/bench_decode.py and BENCH/BASELINE.md).
+    BENCH/BASELINE.md and perfbench's tile-manifest workload).
     """
     if mode not in _MODES:
         raise ValueError(f"mode must be one of {_MODES}")
     src = images.select("image_id", "bytes", "w", "h", "fmt", "minx", "miny")
 
+    limit = codecs.MAX_PAYLOAD_BATCH_BYTES
+
     def _tile(it):
         # mapInArrow both ways: binary payload columns never round-trip
         # through pandas object arrays (input decode views are zero-copy
-        # Arrow buffer slices; output tile payloads go straight into an
-        # Arrow binary array).
+        # Arrow buffer slices; a batch's tile payloads leave as one buffer
+        # behind one Arrow binary array, codecs.payload_batches).
         import pyarrow as pa
 
+        schema = pa.schema([("image_id", pa.string()), *[(c, pa.int32()) for c in _WIN_COLS],
+                            ("pixels", pa.binary()), ("cell", pa.int64())])
         for b in it:
             if not b.num_rows:
                 continue
-            ids, views, ws, hs, fmts, minxs, minys = codecs.arrow_batch_cols(
-                b, "image_id", "bytes", "w", "h", "fmt", "minx", "miny"
+            views, ws, hs, fmts, minxs, minys = codecs.arrow_batch_cols(
+                b, "bytes", "w", "h", "fmt", "minx", "miny"
             )
-            out = {k: [] for k in
-                   ("image_id", "tile_x", "tile_y", "x0", "y0", "tw", "th", "pixels", "cell")}
+            wins, ccs, sizes, data = [], [], [], []
             for r in range(b.num_rows):
                 w, h = int(ws[r]), int(hs[r])
                 img = codecs.decode_image(views[r], fmts[r], h, w)
-                wins = tile_windows(mode, w, h, tile_w, tile_h, overlap, offset)
+                win = tile_windows(mode, w, h, tile_w, tile_h, overlap, offset)
                 maxy = minys[r] + h * pixel_size
-                cx = minxs[r] + (wins[:, 2] + wins[:, 4] / 2.0) * pixel_size
-                cy = maxy - (wins[:, 3] + wins[:, 5] / 2.0) * pixel_size
-                cc = cells.encode_point(cx, cy, res)
-                for k, (tx, ty, x0, y0, tw, th) in enumerate(wins):
-                    out["image_id"].append(ids[r])
-                    out["tile_x"].append(int(tx))
-                    out["tile_y"].append(int(ty))
-                    out["x0"].append(int(x0))
-                    out["y0"].append(int(y0))
-                    out["tw"].append(int(tw))
-                    out["th"].append(int(th))
-                    out["pixels"].append(
-                        np.ascontiguousarray(img[y0 : y0 + th, x0 : x0 + tw]).tobytes()
-                    )
-                    out["cell"].append(int(cc[k]))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out["image_id"], pa.string()),
-                    pa.array(out["tile_x"], pa.int32()),
-                    pa.array(out["tile_y"], pa.int32()),
-                    pa.array(out["x0"], pa.int32()),
-                    pa.array(out["y0"], pa.int32()),
-                    pa.array(out["tw"], pa.int32()),
-                    pa.array(out["th"], pa.int32()),
-                    pa.array(out["pixels"], pa.binary()),
-                    pa.array(out["cell"], pa.int64()),
-                ],
-                names=["image_id", "tile_x", "tile_y", "x0", "y0",
-                       "tw", "th", "pixels", "cell"],
+                cx = minxs[r] + (win[:, 2] + win[:, 4] / 2.0) * pixel_size
+                cy = maxy - (win[:, 3] + win[:, 5] / 2.0) * pixel_size
+                ccs.append(cells.encode_point(cx, cy, res))
+                sz, px = _window_pixels(img, win)
+                wins.append(win)
+                sizes.append(sz)
+                data.append(px)
+            win = np.concatenate(wins)
+            rows = np.repeat(np.arange(b.num_rows), [len(x) for x in wins])
+            yield from codecs.payload_batches(
+                schema,
+                {"image_id": b.column("image_id").take(rows),
+                 **{c: win[:, j] for j, c in enumerate(_WIN_COLS)},
+                 "cell": np.concatenate(ccs)},
+                np.concatenate(sizes),
+                np.concatenate(data),
+                limit,
             )
 
     return src.mapInArrow(_tile, schema=TILE_SCHEMA)
 
 
 def tile_manifest(tiles: DataFrame) -> DataFrame:
-    """Per-image tile counts + payload bytes — the lineage/manifest row
-    source (see operators.manifest for the resumable writer)."""
+    """Per-image tile counts, payload bytes and cell range of a tile
+    table (a summary; the resumable writer's lineage rows come from
+    operators.manifest itself)."""
     from pyspark.sql import functions as F
 
     return tiles.groupBy("image_id").agg(

@@ -429,9 +429,10 @@ def north_star_resumable(
     replicate: int = 1,
 ) -> dict:
     """North-star with checkpoint-resumable output (north rule): per-zone
-    results land bucket-by-bucket with manifest commits + lineage rows —
+    results land in buckets with manifest commits + lineage rows —
     a killed job re-invoked with the same ``out_dir`` skips every bucket
-    whose manifest row exists and recomputes nothing else."""
+    whose manifest row exists and writes only the others (one pass over
+    the result)."""
     from rsgislib_spark.operators.manifest import resumable_write
 
     result = north_star(spark, sf_dir, replicate=replicate)

@@ -1,10 +1,8 @@
 #!/usr/bin/env python
 """REAL Spark standalone-cluster scaling evidence for the north rule.
 
-The multi-JVM emulation (run_multijvm_scaling.py) splits the input
-manually across 4 independent local-mode processes. This harness goes
-one step further and runs the ACTUAL cluster stack available in the
-sandbox: one standalone Master + four 8-core Workers (separate JVMs,
+This harness runs the ACTUAL cluster stack available in the sandbox:
+one standalone Master + four 8-core Workers (separate JVMs,
 taskset-pinned to disjoint core slices), then `spark-submit`s the
 north-star job against spark://... with
 
@@ -112,8 +110,7 @@ def stop_cluster(procs) -> None:
 def submit(sf_dir: str, rep: int, cores_max: int, executor_cores: int = 8,
            driver_cpuset: str | None = None) -> float:
     """One spark-submit; returns the min timed wall AFTER an in-process
-    JIT warmup run (the multi-JVM emulation also times warm JVMs).
-    Partition count matches the emulation's granularity: 16/core."""
+    JIT warmup run. 16 partitions per core."""
     n_parts = cores_max * 16
     cmd = (["taskset", "-c", driver_cpuset] if driver_cpuset else []) + [
         f"{SPARK_HOME}/bin/spark-submit",

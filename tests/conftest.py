@@ -42,3 +42,21 @@ def points_pdf():
     from rsgislib_spark import datagen
 
     return datagen.gen_points(200, seed=42)
+
+
+@pytest.fixture(scope="session")
+def manifest_files():
+    """bucket → the committed file that holds its row under
+    ``out_dir/_manifest`` (a resumable write's lineage manifest)."""
+    import pyarrow.parquet as pq
+
+    def files(out_dir):
+        mdir = os.path.join(out_dir, "_manifest")
+        return {
+            b: os.path.join(mdir, f)
+            for f in sorted(os.listdir(mdir))
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+            for b in pq.read_table(os.path.join(mdir, f), columns=["bucket"]).column(0).to_pylist()
+        }
+
+    return files

@@ -7,10 +7,13 @@ group and the status tracker, so a reintroduced per-round persist /
 emptiness check / checkpoint, or a second pass over the image table,
 fails here without a benchmark run."""
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
-from rsgislib_spark.operators import knn
+from rsgislib_spark.operators import knn, manifest
 from rsgislib_spark.operators.spatial_join import spatial_join_broadcast
 
 #: queries collect, the one Python pass over the points, result collect
@@ -26,6 +29,13 @@ KNN_TILE_JOBS = 8
 #: the bbox-filtered images that emits the final rows: no attribute
 #: broadcast or join, and no widening shuffle of the input
 WINDOW_JOIN_JOBS = 2
+#: one resumable write that has buckets left to write: the one staged
+#: partitioned write, then the lineage aggregate over the staged files
+#: (its shuffle stage and its collect), and one more for the parallel file
+#: listing Spark runs over more than 32 staged directories; the manifest
+#: is read and written on the driver, so a call with nothing left to write
+#: runs no job
+MANIFEST_WRITE_JOBS = 4
 
 
 def _jobs(spark, group, action):
@@ -124,3 +134,34 @@ def test_window_join_on_a_thin_cached_table_job_budget(spark, images_nopix_pdf, 
     finally:
         images.unpersist()
     assert n <= WINDOW_JOIN_JOBS, n
+
+
+def test_resumable_write_job_budget(spark, tmp_path, manifest_files):
+    """A write and a resume of two buckets each pass every input row
+    through the producer once, and a call with nothing left passes none:
+    the bucket filter sits above the producer, so one staged write
+    replaces a filtered pass per bucket."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def produce(it):
+        for b in it:
+            seen.add(b.num_rows)
+            yield b
+
+    src = spark.range(5000).withColumnRenamed("id", "row_id").mapInArrow(produce, "row_id long")
+    out = str(tmp_path / "budget")
+
+    def call(group):
+        seen.value = 0
+        n = _jobs(spark, group, lambda: manifest.resumable_write(src, out, "row_id", n_buckets=8))
+        return n, seen.value
+
+    n, rows = call("budget-manifest-write")
+    assert n <= MANIFEST_WRITE_JOBS and rows == 5000, (n, rows)
+    files = manifest_files(out)
+    for b in (6, 7):
+        os.remove(files[b])
+        shutil.rmtree(os.path.join(out, f"bucket={b}"))
+    n, rows = call("budget-manifest-resume")
+    assert n <= MANIFEST_WRITE_JOBS and rows == 5000, (n, rows)
+    assert call("budget-manifest-done") == (0, 0)

@@ -43,6 +43,26 @@ class TestTiler:
                 arr, img[t0.y0 : t0.y0 + t0.th, t0.x0 : t0.x0 + t0.tw]
             )
 
+    def test_payload_batch_split_keeps_rows(self, spark, images_df, small_images_pdf, monkeypatch):
+        """Every tile's payload equals its window of the decoded image, and
+        a byte limit below one Arrow batch's payloads cuts it into several
+        output batches (mid-image) with the same rows; a limit below one
+        tile raises."""
+        def rows():
+            tiles = tile_images(images_df, 64, 64, mode="overlap", overlap=4)
+            return sorted(tuple(r) for r in tiles.collect())
+
+        whole = rows()
+        src = small_images_pdf.set_index("image_id")
+        imgs = {i: codecs.decode_image(r.bytes, r.fmt, r.h, r.w) for i, r in src.iterrows()}
+        for iid, _, _, x0, y0, tw, th, px, _ in whole:
+            assert bytes(px) == imgs[iid][y0 : y0 + th, x0 : x0 + tw].tobytes()
+        monkeypatch.setattr(codecs, "MAX_PAYLOAD_BATCH_BYTES", 3 * 72 * 72)
+        assert rows() == whole
+        monkeypatch.setattr(codecs, "MAX_PAYLOAD_BATCH_BYTES", 100)
+        with pytest.raises(Exception, match="output batch limit"):
+            rows()
+
     def test_block_mode_full_size(self, spark, images_df):
         tiles = tile_images(images_df, 64, 64, mode="block").toPandas()
         assert (tiles.tw == 64).all() and (tiles.th == 64).all()

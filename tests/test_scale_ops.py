@@ -1,6 +1,7 @@
 """Salting, manifest-resume, lineage verify, incremental streaming."""
 
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -88,6 +89,81 @@ class TestManifest:
         v = manifest.verify_against_manifest(spark, out, "row_id").toPandas()
         assert not v[v.bucket == 2].ok.iloc[0]
         assert v[v.bucket != 2].ok.all()
+
+
+    @staticmethod
+    def _assert_complete(spark, out, n_buckets, ids):
+        """Every bucket verifies, the rows are ``ids`` exactly once, and
+        every parquet file on disk is a committed bucket's or a committed
+        manifest row's: no ``_staging``, no stray ``bucket=`` path."""
+        v = manifest.verify_against_manifest(spark, out, "row_id").toPandas()
+        assert len(v) == n_buckets and v.ok.all()
+        assert not os.path.exists(os.path.join(out, manifest.STAGING_SUBDIR))
+        full = {f"bucket={b}" for b in v.bucket[v.n_rows > 0]}
+        assert {d for d in os.listdir(out) if d.startswith("bucket=")} == full
+        for root, _, fs in os.walk(out):
+            rel = os.path.relpath(root, out)
+            for f in fs:
+                if f.endswith(".parquet"):
+                    assert rel in full or (rel == "_manifest" and not f.startswith(".")), (rel, f)
+        if full:
+            back = spark.read.option("basePath", out).parquet(*[f"{out}/{d}" for d in full])
+            assert sorted(r.row_id for r in back.select("row_id").collect()) == sorted(ids)
+
+    @pytest.mark.parametrize("torn", ["staging", "uncommitted_bucket", "temp_manifest_row"])
+    def test_resume_after_a_torn_write(self, spark, skewed_df, tmp_path, manifest_files, torn):
+        """One case per on-disk state a kill can leave: a leftover
+        ``_staging`` of junk, a renamed bucket directory whose manifest row
+        was never written (here with a stale duplicate file in it), and a
+        manifest row still under its dot-prefixed temporary name. The
+        resume writes exactly the buckets without a committed row."""
+        out = str(tmp_path / "torn")
+        manifest.resumable_write(skewed_df, out, "row_id", n_buckets=8)
+        rows = manifest_files(out)
+        for b in (2, 5):
+            mdir, name = os.path.split(rows[b])
+            if torn == "temp_manifest_row":
+                os.rename(rows[b], os.path.join(mdir, "." + name))
+            else:
+                os.remove(rows[b])
+            bdir = f"{out}/bucket={b}"
+            if torn == "uncommitted_bucket":
+                part = next(f for f in sorted(os.listdir(bdir)) if f.endswith(".parquet"))
+                shutil.copy(f"{bdir}/{part}", f"{bdir}/stale-{part}")
+            else:
+                shutil.rmtree(bdir)
+        if torn == "staging":
+            for b in (2, 3):  # 3 is committed: its junk must not land either
+                os.makedirs(f"{out}/_staging/bucket={b}")
+                with open(f"{out}/_staging/bucket={b}/part-0.parquet", "wb") as fh:
+                    fh.write(b"not a parquet file")
+        r = manifest.resumable_write(skewed_df, out, "row_id", n_buckets=8)
+        assert r == {"written": [2, 5], "skipped": [0, 1, 3, 4, 6, 7]}
+        self._assert_complete(spark, out, 8, range(5000))
+
+    @pytest.mark.parametrize("n", [3, 0], ids=["fewer_ids_than_buckets", "no_rows"])
+    def test_empty_buckets_commit_skip_and_verify(self, spark, tmp_path, manifest_files, n):
+        """Buckets that get no rows still get a manifest row, are skipped
+        on resume and verify; so does an input with no rows at all."""
+        df = spark.createDataFrame(
+            pd.DataFrame({"row_id": np.arange(n), "cell": np.zeros(n, np.int64), "val": np.arange(n)}),
+            schema="row_id long, cell long, val long",
+        )
+        out = str(tmp_path / "sparse")
+        assert manifest.resumable_write(df, out, "row_id", n_buckets=8)["written"] == list(range(8))
+        self._assert_complete(spark, out, 8, range(n))
+        v = manifest.verify_against_manifest(spark, out, "row_id").toPandas()
+        assert v.n_rows.sum() == n and (v.n_rows == 0).any()
+        # kill one empty bucket, and one full one when there is one
+        killed = sorted({int(v.bucket[v.n_rows == 0].min()), int(v.bucket.iloc[v.n_rows.argmax()])})
+        rows = manifest_files(out)
+        for b in killed:
+            os.remove(rows[b])
+            shutil.rmtree(f"{out}/bucket={b}", ignore_errors=True)
+        r = manifest.resumable_write(df, out, "row_id", n_buckets=8)
+        assert r["written"] == killed
+        self._assert_complete(spark, out, 8, range(n))
+        assert manifest.resumable_write(df, out, "row_id", n_buckets=8)["written"] == []
 
 
 class TestTableSinkSeam:
