@@ -47,18 +47,24 @@ def bucket_col(id_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets)).cast("int")
 
 
-def completed_buckets(out_dir: str) -> set:
-    """Buckets with a manifest row, read on the driver (no Spark job);
-    dot- and underscore-prefixed files are uncommitted or metadata."""
+def _manifest_table(out_dir: str) -> pa.Table:
+    """Every committed manifest row, read on the driver with pyarrow (no
+    Spark job); dot- and underscore-prefixed files are uncommitted or
+    metadata. The one reader of ``_manifest``."""
     mdir = os.path.join(out_dir, MANIFEST_SUBDIR)
-    if not os.path.isdir(mdir):
-        return set()
-    return {
-        int(b)
-        for f in os.listdir(mdir)
+    files = sorted(
+        f for f in (os.listdir(mdir) if os.path.isdir(mdir) else [])
         if f.endswith(".parquet") and not f.startswith((".", "_"))
-        for b in pq.read_table(os.path.join(mdir, f), columns=["bucket"]).column(0).to_pylist()
-    }
+    )
+    return pa.concat_tables(
+        [pq.read_table(os.path.join(mdir, f), schema=MANIFEST_SCHEMA) for f in files]
+        or [MANIFEST_SCHEMA.empty_table()]
+    )
+
+
+def completed_buckets(out_dir: str) -> set:
+    """Buckets with a committed manifest row."""
+    return set(_manifest_table(out_dir).column("bucket").to_pylist())
 
 
 def resumable_write(
@@ -193,7 +199,9 @@ def write_table(
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, MANIFEST_SUBDIR))
+    """The committed manifest rows (:data:`MANIFEST_SCHEMA`) as a small
+    local DataFrame; no Spark scan of ``_manifest``."""
+    return spark.createDataFrame(_manifest_table(out_dir))
 
 
 def verify_against_manifest(spark: SparkSession, out_dir: str, id_col: str) -> DataFrame:

@@ -166,69 +166,58 @@ def tile_batches(
     """
     from pyspark import TaskContext
 
-    from rsgislib_spark.kernels.pixelmath import block_windows_anchored
-
     src = images.select("image_id", "bytes", "w", "h", "fmt")
-    schema = (
-        "batch_id string, n int, tensor binary, image_ids array<string>, "
-        "xs array<int>, ys array<int>"
-    )
+    limit = codecs.MAX_PAYLOAD_BATCH_BYTES
 
     def _run(it):
-        # mapInArrow + zero-copy payload views per the repo's
-        # Arrow-boundary rule for binary columns (4.4× on the decode
-        # bench); tensors leave as one pandas-free RecordBatch per
-        # Arrow input batch.
+        # one gather per image (_window_pixels) into the partition's one
+        # block buffer; each batch's tensor is a slice of it behind one
+        # Arrow binary array and its block lists are Arrow list arrays
+        # over offsets (codecs.payload_batches): no per-block appends.
         import pyarrow as pa
 
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-        buf_t, buf_id, buf_x, buf_y = [], [], [], []
-        seq = 0
-        rows = []
-
-        def flush():
-            nonlocal seq, buf_t, buf_id, buf_x, buf_y
-            if not buf_t:
-                return
-            tensor = np.stack(buf_t).astype(np.uint8)
-            rows.append(
-                (f"p{pid}_b{seq}", len(buf_t), tensor.tobytes(),
-                 list(buf_id), [int(v) for v in buf_x], [int(v) for v in buf_y])
-            )
-            seq += 1
-            buf_t, buf_id, buf_x, buf_y = [], [], [], []
-
+        schema = pa.schema([
+            ("batch_id", pa.string()), ("n", pa.int32()), ("tensor", pa.binary()),
+            ("image_ids", pa.list_(pa.string())), ("xs", pa.list_(pa.int32())),
+            ("ys", pa.list_(pa.int32())),
+        ])
+        ids, wins, sizes, data = [], [], [], []
         for b in it:
             if not b.num_rows:
                 continue
-            ids, views, ws, hs, fmts = codecs.arrow_batch_cols(
-                b, "image_id", "bytes", "w", "h", "fmt"
-            )
+            views, ws, hs, fmts = codecs.arrow_batch_cols(b, "bytes", "w", "h", "fmt")
+            rows = []
             for k in range(b.num_rows):
                 w, h = int(ws[k]), int(hs[k])
                 if w < block or h < block:
                     continue  # reference iterator requires block ≤ image
-                img = codecs.decode_image(views[k], fmts[k], h, w)
-                for xb, yb, x0, y0, tw, th in block_windows_anchored(w, h, block):
-                    buf_t.append(img[y0 : y0 + th, x0 : x0 + tw])
-                    buf_id.append(ids[k])
-                    buf_x.append(xb)
-                    buf_y.append(yb)
-                    if len(buf_t) >= batch_size:
-                        flush()
-        flush()
-        if rows:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([r[0] for r in rows], pa.string()),
-                    pa.array([r[1] for r in rows], pa.int32()),
-                    pa.array([r[2] for r in rows], pa.binary()),
-                    pa.array([r[3] for r in rows], pa.list_(pa.string())),
-                    pa.array([r[4] for r in rows], pa.list_(pa.int32())),
-                    pa.array([r[5] for r in rows], pa.list_(pa.int32())),
-                ],
-                names=["batch_id", "n", "tensor", "image_ids", "xs", "ys"],
-            )
+                win = pixelmath.block_windows_anchored(w, h, block)
+                sz, px = _window_pixels(codecs.decode_image(views[k], fmts[k], h, w), win)
+                rows.append(np.full(len(win), k))
+                wins.append(win)
+                sizes.append(sz)
+                data.append(px)
+            if rows:
+                ids.append(b.column("image_id").take(np.concatenate(rows)).cast(pa.string()))
+        if not wins:
+            return
+        win, sizes = np.concatenate(wins), np.concatenate(sizes)
+        starts = np.arange(0, len(win), batch_size)
+        offsets = pa.array(np.append(starts, len(win)), pa.int32())
+        pid = TaskContext.get().partitionId() if TaskContext.get() else 0
+        yield from codecs.payload_batches(
+            schema,
+            {"batch_id": [f"p{pid}_b{seq}" for seq in range(len(starts))],
+             "n": np.diff(offsets.to_numpy()),
+             "image_ids": pa.ListArray.from_arrays(offsets, pa.concat_arrays(ids)),
+             "xs": pa.ListArray.from_arrays(offsets, pa.array(win[:, 0], pa.int32())),
+             "ys": pa.ListArray.from_arrays(offsets, pa.array(win[:, 1], pa.int32()))},
+            np.add.reduceat(sizes, starts),
+            np.concatenate(data),
+            limit,
+        )
 
-    return src.mapInArrow(_run, schema=schema)
+    return src.mapInArrow(_run, schema=(
+        "batch_id string, n int, tensor binary, image_ids array<string>, "
+        "xs array<int>, ys array<int>"
+    ))

@@ -8,19 +8,19 @@ single mapInArrow per task and differ only in their input step:
                     (:func:`lattice_grid`); :func:`north_star_decoded`
                     reads stored bytes and decodes every payload once
                     (``codecs.decode_image``)
- 2. pixel kernels — band synthesis + focal sum/count over CHUNK stacks
-                    of same-shape images (:func:`shape_runs`), reduced per
-                    image; the per-tile rollup of the tiler (create_tiles
-                    semantics, imageutils.cpp:2061-2093) is fused away
-                    algebraically, tiles are only counted
+ 2. pixel kernels — four reductions per image over CHUNK stacks of
+                    same-shape images (:func:`shape_runs`): sum, min, max
+                    and the 3×3 focal sum as cyᵀ·G·cx
+                    (:func:`_stats_from_grid`); the per-tile rollup of the
+                    tiler (create_tiles semantics,
+                    imageutils.cpp:2061-2093) is fused away algebraically,
+                    tiles are only counted (TILE)
  3. spatial join  — images × zone polygons, broadcast STRtree refine
                     (perform_spatial_join semantics, vectorutils:2159-2225);
                     zero shuffle of the image side
  4. zonal rollup  — per-zone partial aggregation in the same map, then
                     one tiny groupBy (populate_rat_with_stats,
                     rastergis.cpp:1740-1766; :func:`_zone_stats`)
-
-:func:`tile_stats_df` is the per-tile output of the same kernels.
 
 Scale design: the image side partitions by range on image_key (uniform);
 the zone side broadcasts (small by construction). The only shuffles move
@@ -44,7 +44,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from rsgislib_spark.kernels import codecs, geom
 
-TILE = 96
+TILE = 96  # tile edge the zonal pass counts tiles with
+RADIUS = 1  # focal window half-width: the 3×3 window
 
 
 # ------------------------------------------------------------ zone prep
@@ -107,10 +108,11 @@ def images_df(spark: SparkSession, sf_dir: str, replicate: int = 1) -> DataFrame
 
 # ---------------------------------------------------------- pixel kernels
 
-CHUNK = 8  # images per kernel invocation: keeps int16 temporaries (~2·h·w·2B·CHUNK)
-# inside per-core L2 so the kernel stays cache-resident — at CHUNK=64 the
-# arrays stream DRAM and the 32-core node hits its bandwidth ceiling
-# (measured: aggregate throughput capped ~1.7x from 8→32 cores)
+CHUNK = 8  # images per kernel invocation: keeps the stack and its one float64
+# temporary (the (m, h, w) cast the focal matmul reads, ~h·w·8B·CHUNK) near
+# per-core cache — at CHUNK=64 the arrays stream DRAM and the 32-core node
+# hits its bandwidth ceiling (measured with the earlier box filter:
+# aggregate throughput capped ~1.7x from 8→32 cores)
 
 
 def lattice_grid(keys: np.ndarray, w: int, h: int) -> np.ndarray:
@@ -137,69 +139,6 @@ def lattice_grid(keys: np.ndarray, w: int, h: int) -> np.ndarray:
     return g.astype(np.uint8)
 
 
-def _tile_stats_chunk(keys: np.ndarray, w: int, h: int, tile: int, radius: int):
-    """Per-tile stats for a CHUNK of same-shape images in one 3-D numpy
-    pass. int32 throughout (values bounded: pixel < 251, tile sum <
-    251·96² < 2³¹, focal window sum < 251·9) — halves memory traffic vs
-    int64, which is what bounds this kernel on a full node."""
-    m = len(keys)
-    grid = lattice_grid(keys, w, h)  # (m, h, w)
-
-    y0 = np.clip(np.arange(h) - radius, 0, h)
-    y1 = np.clip(np.arange(h) + radius + 1, 0, h)
-    x0 = np.clip(np.arange(w) - radius, 0, w)
-    x1 = np.clip(np.arange(w) + radius + 1, 0, w)
-    if radius == 1 and h >= 3 and w >= 3:
-        # separable 3-term box sums, edges as 2-term sums (the clipped-
-        # window rule); int16 partials, no pad copies — this kernel is
-        # memory-bandwidth bound on a full node, so every byte/px counts
-        row = np.empty((m, h, w), dtype=np.int16)
-        g16 = grid.astype(np.int16)  # one widened copy reused 3×
-        np.add(g16[:, :, :-2], g16[:, :, 1:-1], out=row[:, :, 1:-1])
-        np.add(row[:, :, 1:-1], g16[:, :, 2:], out=row[:, :, 1:-1])
-        np.add(g16[:, :, 0], g16[:, :, 1], out=row[:, :, 0])
-        np.add(g16[:, :, -2], g16[:, :, -1], out=row[:, :, -1])
-        fs = np.empty((m, h, w), dtype=np.int16)
-        np.add(row[:, :-2], row[:, 1:-1], out=fs[:, 1:-1])
-        np.add(fs[:, 1:-1], row[:, 2:], out=fs[:, 1:-1])
-        np.add(row[:, 0], row[:, 1], out=fs[:, 0])
-        np.add(row[:, -2], row[:, -1], out=fs[:, -1])
-    else:
-        s = np.zeros((m, h + 1, w + 1), dtype=np.int32)
-        np.cumsum(np.cumsum(grid, axis=1, dtype=np.int32), axis=2, out=s[:, 1:, 1:])
-        Y0, X0 = np.ix_(y0, x0)
-        Y1, X1 = np.ix_(y1, x1)
-        fs = s[:, Y1, X1] - s[:, Y0, X1] - s[:, Y1, X0] + s[:, Y0, X0]
-    fc2d = np.outer(y1 - y0, x1 - x0).astype(np.int64)
-
-    xs = np.arange(0, w, tile)
-    ys = np.arange(0, h, tile)
-
-    def blocks(a, uf=np.add):
-        # accumulate in int64 WITHOUT materializing a widened copy
-        dt = np.int64 if uf is np.add else None
-        return uf.reduceat(uf.reduceat(a, ys, axis=1, dtype=dt), xs, axis=2, dtype=dt)
-
-    tw = np.diff(np.append(xs, w))
-    th = np.diff(np.append(ys, h))
-    ntx, nty = len(xs), len(ys)
-    txg, tyg = np.meshgrid(np.arange(ntx, dtype=np.int32) + 1,
-                           np.arange(nty, dtype=np.int32) + 1)
-    nt = ntx * nty
-    fcnt2d = np.add.reduceat(np.add.reduceat(fc2d, ys, axis=0), xs, axis=1)
-    return {
-        "image_key": np.repeat(keys, nt),
-        "tile_x": np.tile(txg.ravel(), m),
-        "tile_y": np.tile(tyg.ravel(), m),
-        "n_px": np.tile(np.outer(th, tw).ravel().astype(np.int64), m),
-        "sum_v": blocks(grid).reshape(-1).astype(np.int64),
-        "min_v": blocks(grid, np.minimum).reshape(-1).astype(np.int64),
-        "max_v": blocks(grid, np.maximum).reshape(-1).astype(np.int64),
-        "focal_sum": blocks(fs).reshape(-1).astype(np.int64),
-        "focal_cnt": np.tile(fcnt2d.ravel(), m),
-    }
-
-
 def shape_runs(ws: np.ndarray, hs: np.ndarray, keys: np.ndarray):
     """Rows sorted by (w, h, key) and the same-shape runs of that order:
     ``(order, [(i, j, w, h), ...])`` where ``order[i:j]`` are the rows of
@@ -216,73 +155,31 @@ def shape_runs(ws: np.ndarray, hs: np.ndarray, keys: np.ndarray):
     ]
 
 
-def tile_stats_df(images: DataFrame, tile: int = TILE, radius: int = 1) -> DataFrame:
-    """Per-tile output of the pixel kernels. Images are grouped by
-    shape and processed CHUNK at a time in a single 3-D numpy pass:
-    synth band grid → integral-image focal sums → per-tile block
-    reductions with ``ufunc.reduceat`` at the tile boundaries (full +
-    remainder tiles, create_tiles semantics). Emits per-tile stats rows
-    only — pixels never leave the task."""
-
-    def _run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not len(pdf):
-                continue
-            keys = pdf["image_key"].to_numpy(np.int64)
-            order, runs = shape_runs(
-                pdf["w"].to_numpy(np.int32), pdf["h"].to_numpy(np.int32), keys
-            )
-            yield pd.concat(
-                [
-                    pd.DataFrame(
-                        _tile_stats_chunk(
-                            keys[order[c0 : min(c0 + CHUNK, j)]], w, h, tile, radius
-                        )
-                    )
-                    for i, j, w, h in runs
-                    for c0 in range(i, j, CHUNK)
-                ],
-                ignore_index=True,
-            )
-
-    schema = (
-        "image_key long, tile_x int, tile_y int, n_px long, sum_v long, "
-        "min_v long, max_v long, focal_sum long, focal_cnt long"
-    )
-    return images.select("image_key", "w", "h").mapInPandas(_run, schema=schema)
+def _window_counts(n: int) -> np.ndarray:
+    """Pixels of the clipped (2·RADIUS + 1)-wide window at each of ``n``
+    positions along one axis: ``min(i + RADIUS + 1, n) − max(i − RADIUS, 0)``."""
+    i = np.arange(n)
+    return (np.minimum(i + RADIUS + 1, n) - np.maximum(i - RADIUS, 0)).astype(np.float64)
 
 
-def _stats_from_grid(grid: np.ndarray, radius: int):
+def _stats_from_grid(grid: np.ndarray):
     """Whole-image band + focal reductions over a (m, h, w) uint8 pixel
-    stack — the per-tile → per-image rollup of :func:`_tile_stats_chunk`
-    fused away algebraically (Σ over tiles of tile-sums ≡ whole-image
-    sum), so no reduceat/tile assembly runs at all. Same band + focal
-    kernels; the stack is synthesized or decoded by the caller."""
-    m, h, w = grid.shape
-
-    row = np.empty((m, h, w), dtype=np.int16)
-    g16 = grid.astype(np.int16)
-    np.add(g16[:, :, :-2], g16[:, :, 1:-1], out=row[:, :, 1:-1])
-    np.add(row[:, :, 1:-1], g16[:, :, 2:], out=row[:, :, 1:-1])
-    np.add(g16[:, :, 0], g16[:, :, 1], out=row[:, :, 0])
-    np.add(g16[:, :, -2], g16[:, :, -1], out=row[:, :, -1])
-    fs = np.empty((m, h, w), dtype=np.int16)
-    np.add(row[:, :-2], row[:, 1:-1], out=fs[:, 1:-1])
-    np.add(fs[:, 1:-1], row[:, 2:], out=fs[:, 1:-1])
-    np.add(row[:, 0], row[:, 1], out=fs[:, 0])
-    np.add(row[:, -2], row[:, -1], out=fs[:, -1])
-
-    cx = np.full(w, 2 * radius + 1, dtype=np.int64)
-    cx[:radius] = cx[-radius:] = 2 * radius
-    cy = np.full(h, 2 * radius + 1, dtype=np.int64)
-    cy[:radius] = cy[-radius:] = 2 * radius
-    focal_cnt = int(cy.sum() * cx.sum())
+    stack: sum, min, max and the focal sum. The focal sum of an image G
+    is the sum of its clipped 3×3 window sums, i.e. each pixel weighted
+    by the windows that hold it: cyᵀ·G·cx with the per-row and
+    per-column window counts (:func:`_window_counts`), two BLAS
+    reductions and no box-filtered copy. Every term is an integer below
+    255·9·h·w < 2⁵³, so the float64 products are exact in any summation
+    order and at any BLAS thread count. The stack is synthesized or
+    decoded by the caller."""
+    _, h, w = grid.shape
+    cx, cy = _window_counts(w), _window_counts(h)
     return (
         grid.sum(axis=(1, 2), dtype=np.int64),
         grid.min(axis=(1, 2)).astype(np.int64),
         grid.max(axis=(1, 2)).astype(np.int64),
-        fs.sum(axis=(1, 2), dtype=np.int64),
-        focal_cnt,
+        ((grid @ cx) @ cy).astype(np.int64),
+        int(cx.sum() * cy.sum()),
     )
 
 
@@ -304,7 +201,7 @@ def _derive_footprints(keys: np.ndarray, replicate: int):
     return w, h, bbox
 
 
-def _zone_partials(zx, ws, hs, bbox, keys, pixels, tile: int, radius: int):
+def _zone_partials(zx, ws, hs, bbox, keys, pixels):
     """The zonal partial body both north stars run, once per task:
     per-image band + focal stats over same-shape CHUNK stacks →
     STRtree match of the footprints → per-zone partial agg. Yields one
@@ -322,8 +219,8 @@ def _zone_partials(zx, ws, hs, bbox, keys, pixels, tile: int, radius: int):
             (
                 sum_v[c0:c1], min_v[c0:c1], max_v[c0:c1],
                 focal_sum[c0:c1], focal_cnt[c0:c1],
-            ) = _stats_from_grid(pixels(order[c0:c1], w, h), radius)
-        n_tiles[i:j] = -(-w // tile) * -(-h // tile)
+            ) = _stats_from_grid(pixels(order[c0:c1], w, h))
+        n_tiles[i:j] = -(-w // TILE) * -(-h // TILE)
         n_px[i:j] = w * h
     qi, zi = zx.match(bbox[order], "intersects")
     if not len(qi):
@@ -376,7 +273,7 @@ def _zone_stats(rows: DataFrame, sf_dir: str, input_step, *args) -> DataFrame:
     )
 
 
-def _zone_partials_fused(zindex_b, tile: int, radius: int, replicate: int):
+def _zone_partials_fused(zindex_b, replicate: int):
     """Input step of :func:`north_star`: only the 8-byte image_key
     crosses the Arrow boundary; footprints are derived and pixels
     synthesized in-kernel (:func:`lattice_grid`)."""
@@ -392,7 +289,7 @@ def _zone_partials_fused(zindex_b, tile: int, radius: int, replicate: int):
         ws, hs, bbox = _derive_footprints(keys, replicate)
         yield from _zone_partials(
             zindex_b.value, ws, hs, bbox, keys,
-            lambda rows, w, h: lattice_grid(keys[rows], w, h), tile, radius,
+            lambda rows, w, h: lattice_grid(keys[rows], w, h),
         )
 
     return _run
@@ -403,7 +300,6 @@ def north_star(
     sf_dir: str,
     n_partitions: int | None = None,
     replicate: int = 1,
-    tile: int = TILE,
 ) -> DataFrame:
     """Full pipeline → per-zone tile statistics. Forcing the result
     executes every stage. Plan shape: scan → explode → [ONE fused map:
@@ -417,7 +313,7 @@ def north_star(
         n_partitions = spark.sparkContext.defaultParallelism * 4
     imgs = imgs.repartition(n_partitions, "image_key")
     return _zone_stats(
-        imgs.select("image_key"), sf_dir, _zone_partials_fused, tile, 1, max(replicate, 1)
+        imgs.select("image_key"), sf_dir, _zone_partials_fused, max(replicate, 1)
     )
 
 
@@ -497,7 +393,7 @@ def encode_images_df(
     return imgs.mapInPandas(_enc, schema=schema)
 
 
-def _zone_partials_decoded(zindex_b, tile: int, radius: int):
+def _zone_partials_decoded(zindex_b):
     """Input step of :func:`north_star_decoded` over BYTES-BEARING rows:
     the executor reads real pixel payloads exactly as
     ``RSGISCalcImage::calcImage`` does (src/img/RSGISCalcImage.cpp:149-230
@@ -530,7 +426,7 @@ def _zone_partials_decoded(zindex_b, tile: int, radius: int):
             return stack
 
         yield from _zone_partials(
-            zindex_b.value, ws, hs, bbox, np.arange(len(ws)), pixels, tile, radius
+            zindex_b.value, ws, hs, bbox, np.arange(len(ws)), pixels
         )
 
     return _run
@@ -541,7 +437,6 @@ def north_star_decoded(
     sf_dir: str,
     n_partitions: int | None = None,
     replicate: int = 1,
-    tile: int = TILE,
     images_bytes: DataFrame | None = None,
 ) -> DataFrame:
     """DECODE-INCLUSIVE north star: bytes-bearing rows → codec decode →
@@ -558,5 +453,5 @@ def north_star_decoded(
         images_bytes = encode_images_df(spark, sf_dir, n_partitions, replicate)
     return _zone_stats(
         images_bytes.select("bytes", "fmt", "w", "h", "minx", "miny", "maxx", "maxy"),
-        sf_dir, _zone_partials_decoded, tile, 1,
+        sf_dir, _zone_partials_decoded,
     )

@@ -290,41 +290,43 @@ def test_soundfile_parity_when_installed(spark):
 # ------------------------------------------------------- fused pipeline
 
 
-def test_image_stats_fused_matches_tile_stats(spark):
-    """The per-image kernel north_star runs (_stats_from_grid over
-    lattice_grid, tiles counted as in _zone_partials) equals the
-    per-tile kernel of tile_stats_df rolled up per image."""
-    from rsgislib_spark.pipeline import TILE, _stats_from_grid, lattice_grid, tile_stats_df
+def test_image_stats_match_brute_force():
+    """The zonal partial body's per-image stats (sum, min, max, focal
+    sum and count of the clipped 3×3 window) equal a zero-padded
+    9-shift brute force at every extent down to one pixel, and its tile
+    count equals the number of simple tiler windows at TILE."""
+    from rsgislib_spark.kernels import geom, pixelmath
+    from rsgislib_spark.operators.spatial_join import ZoneIndex
+    from rsgislib_spark.pipeline import TILE, _stats_from_grid, _zone_partials
 
-    shapes = {7: (100, 64), 13: (200, 200)}
-    imgs = spark.createDataFrame(
-        [(k, w, h) for k, (w, h) in shapes.items()], "image_key long, w int, h int"
-    )
-    agg = {
-        r["image_key"]: r.asDict()
-        for r in tile_stats_df(imgs)
-        .groupBy("image_key")
-        .agg(
-            F.count("*").alias("n_tiles"),
-            F.sum("n_px").alias("n_px"),
-            F.sum("sum_v").alias("sum_v"),
-            F.min("min_v").alias("min_v"),
-            F.max("max_v").alias("max_v"),
-            F.sum("focal_sum").alias("focal_sum"),
-            F.sum("focal_cnt").alias("focal_cnt"),
-        )
-        .collect()
-    }
-    assert set(agg) == set(shapes)
-    for k, (w, h) in shapes.items():
-        s, mn, mx, fsum, fcnt = _stats_from_grid(lattice_grid(np.array([k]), w, h), 1)
-        fused = {
-            "n_tiles": -(-w // TILE) * -(-h // TILE), "n_px": w * h,
-            "sum_v": s[0], "min_v": mn[0], "max_v": mx[0],
-            "focal_sum": fsum[0], "focal_cnt": fcnt,
-        }
-        for c, v in fused.items():
-            assert v == agg[k][c], (k, c)
+    def brute_focal(a):
+        h, w = a.shape
+        p = np.pad(a.astype(np.int64), 1)
+        return sum(p[dy:dy + h, dx:dx + w] for dy in range(3) for dx in range(3)).sum()
+
+    world = [np.array([[-1.0, -1.0], [1e3, -1.0], [1e3, 1e3], [-1.0, 1e3]])]
+    zx = ZoneIndex.from_pandas(pd.DataFrame({"zone_id": [5], "geometry": [geom.polygon_to_wkb(world)]}))
+    rng = np.random.default_rng(13)
+    for h, w in [(1, 1), (1, 5), (5, 1), (2, 2), (2, 7), (64, 100), (200, 200)]:
+        grid = rng.integers(0, 256, (3, h, w), dtype=np.uint8)
+        grid[0] = 255
+        s, mn, mx, fsum, fcnt = _stats_from_grid(grid)
+        for t, g in enumerate(grid):
+            assert (s[t], mn[t], mx[t]) == (g.sum(dtype=np.int64), g.min(), g.max()), (h, w)
+            assert fsum[t] == brute_focal(g), (h, w)
+        assert fcnt == brute_focal(np.ones((h, w), np.uint8)), (h, w)
+
+        n_tiles = len(pixelmath.tile_windows_simple(w, h, TILE, TILE))
+        assert -(-w // TILE) * -(-h // TILE) == n_tiles
+        ws, hs = np.full(3, w, np.int32), np.full(3, h, np.int32)
+        bbox = np.tile([0.0, 0.0, 1.0, 1.0], (3, 1))
+        (batch,) = _zone_partials(zx, ws, hs, bbox, np.arange(3), lambda rows, w, h: grid[rows])
+        row = batch.to_pylist()[0]
+        assert row == {
+            "zone_id": 5, "n_images": 3, "n_tiles": 3 * n_tiles, "n_px": 3 * h * w,
+            "sum_v": int(s.sum()), "min_v": int(mn.min()), "max_v": 255,
+            "focal_sum": int(fsum.sum()), "focal_cnt": 3 * fcnt,
+        }, (h, w)
 
 
 def test_north_star_runs_and_replicates(spark):

@@ -99,16 +99,27 @@ class TestTiler:
             if rec.w >= 32 and rec.h >= 32:
                 want += len(pixelmath.block_windows_anchored(rec.w, rec.h, 32))
         assert got["n"].sum() == want
-        # tensors round-trip: n × 32 × 32 uint8, content matches the decode
-        row = got.iloc[0]
-        t = np.frombuffer(row["tensor"], dtype=np.uint8).reshape(row["n"], 32, 32)
+        # ids are p{partition}_b{seq}, unique; every block of every batch
+        # is n × 32 × 32 uint8 and equals its window of the decoded image
+        assert got["batch_id"].str.fullmatch(r"p\d+_b\d+").all()
+        assert got["batch_id"].is_unique
         src = small_images_pdf.set_index("image_id")
-        rec = src.loc[row["image_ids"][0]]
-        img = codecs.decode_image(rec["bytes"], rec["fmt"], rec["h"], rec["w"])
-        wins = pixelmath.block_windows_anchored(rec["w"], rec["h"], 32)
-        xb, yb = row["xs"][0], row["ys"][0]
-        win = next(w for w in wins if w[0] == xb and w[1] == yb)
-        assert np.array_equal(t[0], img[win[3]:win[3]+32, win[2]:win[2]+32])
+        imgs, seen = {}, set()
+        for row in got.itertuples(index=False):
+            assert len(row.image_ids) == len(row.xs) == len(row.ys) == row.n
+            t = np.frombuffer(row.tensor, dtype=np.uint8).reshape(row.n, 32, 32)
+            for blk, iid, xb, yb in zip(t, row.image_ids, row.xs, row.ys):
+                rec = src.loc[iid]
+                if iid not in imgs:
+                    imgs[iid] = (
+                        codecs.decode_image(rec["bytes"], rec["fmt"], rec["h"], rec["w"]),
+                        {(w[0], w[1]): w for w in pixelmath.block_windows_anchored(rec["w"], rec["h"], 32)},
+                    )
+                img, wins = imgs[iid]
+                win = wins[(xb, yb)]
+                assert np.array_equal(blk, img[win[3]:win[3] + 32, win[2]:win[2] + 32])
+                seen.add((iid, xb, yb))
+        assert len(seen) == want
 
     def test_caption_equality_per_tile_row(self, spark, images_df, small_images_pdf):
         # north-rule per-row invariant: every tile row equi-joins back to

@@ -137,6 +137,12 @@ class TestManifest:
                 os.makedirs(f"{out}/_staging/bucket={b}")
                 with open(f"{out}/_staging/bucket={b}/part-0.parquet", "wb") as fh:
                     fh.write(b"not a parquet file")
+        # both readers skip the dot-prefixed temporary row and agree
+        committed = {0, 1, 3, 4, 6, 7}
+        assert manifest.completed_buckets(out) == committed
+        man = manifest.read_manifest(spark, out).toPandas()
+        assert list(man.columns) == ["n_rows", "key_hash_sum", "bucket", "stage"]
+        assert set(man.bucket) == committed and len(man) == len(committed)
         r = manifest.resumable_write(skewed_df, out, "row_id", n_buckets=8)
         assert r == {"written": [2, 5], "skipped": [0, 1, 3, 4, 6, 7]}
         self._assert_complete(spark, out, 8, range(5000))
