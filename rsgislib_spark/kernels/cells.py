@@ -1,8 +1,8 @@
 """Hierarchical grid-cell spatial index (H3/S2-style, planar).
 
 A from-scratch int64 cell index over a planar CRS, playing the role H3/S2
-plays in the north rule: footprints and points are assigned to cells, and
-spatial joins become cell equi-joins followed by an exact geometric refine.
+plays in the north rule: tiles and points are assigned to cells, and
+point joins become cell equi-joins followed by an exact refine.
 
 Layout of a cell id (int64)::
 
@@ -127,42 +127,6 @@ def cell_bounds(cell: np.ndarray):
     minx = ix.astype(np.float64) * s
     miny = iy.astype(np.float64) * s
     return minx, miny, minx + s, miny + s
-
-
-def cells_covering_bbox(minx, miny, maxx, maxy, res: int):
-    """Cells overlapped by each bbox (variable count per row).
-
-    Vectorized over rows: returns ``(row_idx, cell_id)`` flat arrays —
-    the explode-ready form the footprint→cell assignment uses.
-    bboxes are half-open on the max edge: a bbox whose max coordinate lies
-    exactly on a cell boundary does NOT claim the next cell.
-    """
-    s = cell_size(res)
-    minx = np.asarray(minx, dtype=np.float64)
-    miny = np.asarray(miny, dtype=np.float64)
-    maxx = np.asarray(maxx, dtype=np.float64)
-    maxy = np.asarray(maxy, dtype=np.float64)
-    ix0 = np.floor(minx / s).astype(np.int64)
-    iy0 = np.floor(miny / s).astype(np.int64)
-    # half-open: subtract a ulp-ish epsilon-free trick via ceil - 1
-    ix1 = np.ceil(maxx / s).astype(np.int64) - 1
-    iy1 = np.ceil(maxy / s).astype(np.int64) - 1
-    ix1 = np.maximum(ix1, ix0)
-    iy1 = np.maximum(iy1, iy0)
-    nx = (ix1 - ix0 + 1).astype(np.int64)
-    ny = (iy1 - iy0 + 1).astype(np.int64)
-    counts = nx * ny
-    total = int(counts.sum())
-    row_idx = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
-    # per-row local offset 0..count-1
-    starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    local = np.arange(total, dtype=np.int64) - np.repeat(starts, counts)
-    nx_r = np.repeat(nx, counts)
-    dx = local % nx_r
-    dy = local // nx_r
-    cix = np.repeat(ix0, counts) + dx
-    ciy = np.repeat(iy0, counts) + dy
-    return row_idx, encode_ixiy(cix, ciy, res)
 
 
 def linear_cell(x, y, cell: float, grid_dim: int = 1 << 21):

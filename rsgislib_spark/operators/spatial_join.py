@@ -6,7 +6,8 @@ Reimplements ``rsgislib.vectorutils.perform_spatial_join`` semantics
 contains}``, one output row per matching pair (geopandas sjoin
 multiplicity), base attributes retained.
 
-Two physical strategies, same semantics:
+One physical strategy, and one zone side (:func:`_zone_side`) that the
+zonal operators (``operators.zonal``) share:
 
  - :func:`spatial_join_broadcast` — the zone side is collected once
    (one fenced ``toArrow`` of every zone column but the bbox) and
@@ -23,27 +24,20 @@ Two physical strategies, same semantics:
    sharing an id keep their own attributes. A ``left`` join passes every
    image and emits the unmatched ones with a null ``zone_id`` and null
    attributes. Only ``right`` joins: it must keep every zone, so the pass
-   emits the matched zone's position and the zone rows join on it. This
-   is the 100 TB path whenever zones fit on an executor (they do by
-   design — the reference's zone side is a small vector layer).
+   emits the matched zone's position and the zone rows join on it. The
+   zone side must fit on the driver (:data:`MAX_BROADCAST_ZONES`); the
+   reference's zone side is a small vector layer.
    :func:`spatial_select` runs the same pass and emits each matching
    row once; :func:`layer_predicate` and the ``vec_*_vec`` predicates run
    it over a slim (id, bbox) projection.
 
- - :func:`spatial_join_cells` — both sides exploded to covering grid
-   cells, cell equi-join (Catalyst sort-merge/shuffle-hash with AQE),
-   pair-dedup, then the exact refine. The scale-out path when the zone
-   side is itself huge.
-
-Both strategies refine through :meth:`ZoneIndex.refine`: one batched
-pass over all candidate (rect, zone) pairs of an Arrow batch
+Every pass refines through :meth:`ZoneIndex.refine`: one batched pass
+over all candidate (rect, zone) pairs of an Arrow batch
 (``geom.rect_polygon_pairs``), however many zones they touch — never a
 loop over zones.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -52,29 +46,29 @@ from pyspark.sql import DataFrame, functions as F
 
 from rsgislib_spark.kernels import geom
 from rsgislib_spark.kernels.strtree import STRtree
-from rsgislib_spark.operators.footprints import DEFAULT_RES, explode_footprint_cells
 
 JOIN_OPS = ("intersects", "within", "contains")
 JOIN_HOWS = ("inner", "left", "right")
 
-#: Driver fence for the broadcast zone side: 500k polygons × ~1 KB WKB
-#: ≈ 0.5 GB on the driver — above that the zone side is no longer
-#: "small by construction" (SURVEY §1.1) and must go through the cells
-#: path with the zone explode run as a DataFrame op.
+#: Driver fence for every broadcast zone side (joins, selects, layer
+#: predicates, zonal operators): 500k polygons × ~1 KB WKB ≈ 0.5 GB on
+#: the driver — above that the zone side is no longer "small by
+#: construction" (SURVEY §1.1).
 MAX_BROADCAST_ZONES = 500_000
 
 
 def _zone_side(zones: DataFrame, *cols: str) -> tuple[ZoneIndex, pa.Table]:
-    """The zone side's one driver collect: ``zone_id``, ``geometry`` and
-    ``cols`` of every zone, as Arrow (types exact), behind the
-    :data:`MAX_BROADCAST_ZONES` fence; with the :class:`ZoneIndex` built
-    from it (zone position = row of the table)."""
+    """The one driver collect of every DataFrame zone input (joins,
+    selects, layer predicates, zonal operators): ``zone_id``,
+    ``geometry`` and ``cols`` of every zone, as Arrow (types exact),
+    behind the :data:`MAX_BROADCAST_ZONES` fence; with the
+    :class:`ZoneIndex` built from it (zone position = row of the table)."""
     from rsgislib_spark.qcommon import fenced_small_table
 
     table = fenced_small_table(
         zones.select("zone_id", "geometry", *cols),
-        "spatial_join broadcast zone index",
-        "Use spatial_join_cells (both-sides-large path) instead.",
+        "broadcast zone index",
+        "The zone side must fit on the driver: it is collected and broadcast whole.",
         max_rows=MAX_BROADCAST_ZONES,
     )
     return ZoneIndex(table["zone_id"].to_numpy(), table["geometry"].to_pylist()), table
@@ -253,9 +247,9 @@ def spatial_join_broadcast(
     (:func:`_matched_rows`) that emits these rows, attributes included:
     no join. ``right`` joins the pass's matches to the zone rows on the
     zone position (a broadcast of the matches when they are small).
-    Rows and zones pair by position, not by key: ``id_col`` (the image
-    key) and ``zone_id`` may repeat; ``id_col`` is kept for the
-    signature shared with :func:`spatial_join_cells`.
+    Rows and zones pair by position, not by key: image ids and
+    ``zone_id`` may repeat. ``id_col`` is not read; it is kept because
+    callers pass it.
     """
     if join_how not in JOIN_HOWS:
         raise ValueError(f"join_how must be one of {JOIN_HOWS}")
@@ -293,89 +287,6 @@ def spatial_join_broadcast(
         fields = [StructField(f.name, f.dataType, True, f.metadata) for f in fields]
     zones_b = spark.sparkContext.broadcast((zx, _zone_batch(zx, table, attr_names)))
     return _matched_rows(rows, zones_b, join_op, fields, how=join_how)
-
-
-def spatial_join_cells(
-    images: DataFrame,
-    zones: DataFrame,
-    join_op: str = "intersects",
-    res: int = DEFAULT_RES,
-    id_col: str = "image_id",
-    join_how: str = "inner",
-) -> DataFrame:
-    """Cell equi-join + exact refine — both sides large. Returns the
-    PAIR LIST (id_col, zone_id); callers attach payloads/attrs by
-    equi-join afterwards (no broadcast — the point of this path).
-
-    images exploded to covering cells; zones exploded to covering cells
-    (driver-side, zone count small — if zones were huge this explode runs
-    as a DataFrame op too); equi-join on cell, keyed by the zone's
-    position in the broadcast ZoneIndex; duplicate pairs (image spanning
-    k cells) removed with ``dropDuplicates``; then one
-    :meth:`ZoneIndex.refine` per Arrow batch over all its pairs.
-
-    ``join_how`` mirrors the reference's full inner/left/right surface
-    (vectorutils/__init__.py:2159-2225) on this path too: ``left``
-    preserves unmatched images (null zone_id) via an anti-join of the
-    image ids against the refined pairs — one extra shuffle on the
-    16-byte id key, no broadcast; ``right`` preserves unmatched zones
-    (null id) symmetrically. A huge×huge LEFT spatial join is a real
-    shape at 100 TB (every image row must survive into the tiling
-    stage whether or not a zone claims it).
-    """
-    if join_how not in JOIN_HOWS:
-        raise ValueError(f"join_how must be one of {JOIN_HOWS}")
-    spark = images.sparkSession
-    img_cells = explode_footprint_cells(images, res=res, id_col=id_col)
-
-    zx, table = _zone_side(zones, "minx", "miny", "maxx", "maxy")
-    from rsgislib_spark.kernels import cells as cellmod
-
-    ridx, cc = cellmod.cells_covering_bbox(
-        *(table[c].to_numpy() for c in ("minx", "miny", "maxx", "maxy")), res
-    )
-    zcells = pd.DataFrame({"zone_pos": ridx.astype(np.int64), "cell": cc})
-    zcells_df = spark.createDataFrame(zcells)
-    zindex_b = spark.sparkContext.broadcast(zx)
-
-    cand = img_cells.join(F.broadcast(zcells_df), "cell", "inner").select(
-        id_col, "zone_pos", "minx", "miny", "maxx", "maxy"
-    ).dropDuplicates([id_col, "zone_pos"])
-
-    id_type = dict(images.dtypes)[id_col]
-    schema = f"{id_col} {id_type}, zone_id long"
-
-    def _refine(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        zx: ZoneIndex = zindex_b.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            rects = pdf[["minx", "miny", "maxx", "maxy"]].to_numpy(dtype=np.float64)
-            zpos = pdf["zone_pos"].to_numpy(dtype=np.int64)
-            keep = zx.refine(rects, zpos, join_op)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy()[keep], "zone_id": zx.zone_ids[zpos[keep]]}
-            )
-
-    pairs = cand.mapInPandas(_refine, schema=schema)
-    if join_how == "inner":
-        return pairs
-    id_type = dict(images.dtypes)[id_col]
-    if join_how == "left":
-        unmatched = (
-            images.select(id_col)
-            .join(pairs.select(id_col), id_col, "left_anti")
-            .withColumn("zone_id", F.lit(None).cast("long"))
-        )
-        return pairs.unionByName(unmatched)
-    # right: every zone at least once
-    unmatched_z = (
-        zones.select("zone_id")
-        .join(pairs.select("zone_id"), "zone_id", "left_anti")
-        .withColumn(id_col, F.lit(None).cast(id_type))
-        .select(id_col, "zone_id")
-    )
-    return pairs.unionByName(unmatched_z)
 
 
 def spatial_select(

@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame
 
 from rsgislib_spark.datagen import PIXEL_SIZE
 from rsgislib_spark.kernels import cells, codecs, pixelmath
-from rsgislib_spark.operators.footprints import DEFAULT_RES
 
 TILE_SCHEMA = (
     "image_id string, tile_x int, tile_y int, x0 int, y0 int, "
@@ -70,13 +69,15 @@ def tile_images(
     mode: str = "simple",
     overlap: int = 0,
     offset: bool = False,
-    res: int = DEFAULT_RES,
+    res: int = 7,
     pixel_size: float = PIXEL_SIZE,
 ) -> DataFrame:
     """images(image_id, bytes, w, h, fmt, minx, miny, ...) → tile rows.
 
-    Cell assignment: the grid cell containing the tile's spatial center
-    (image row 0 is the TOP of the footprint, GDAL convention).
+    Cell assignment: the grid cell at ``res`` containing the tile's
+    spatial center (image row 0 is the TOP of the footprint, GDAL
+    convention); the default 7 is a cell edge of 8192 world units, 819 px
+    at 10 m/px.
 
     Tuning: transfer-bound BOTH ways (bytes in, tile payloads out) —
     set spark.sql.execution.arrow.maxRecordsPerBatch ≈ 64 for the

@@ -33,9 +33,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from rsgislib_spark.datagen import PIXEL_SIZE
 from rsgislib_spark.kernels import codecs, pixelmath
-from rsgislib_spark.operators.spatial_join import ZoneIndex
-#: Driver fence for the broadcast side (fenced_small_pdf) — patchable in tests.
-MAX_BROADCAST_ZONES = 500_000
+from rsgislib_spark.operators.spatial_join import ZoneIndex, _zone_side
 
 
 _PARTIAL_SCHEMA = (
@@ -245,20 +243,13 @@ def zonal_band_stats(
 ) -> DataFrame:
     """Polygon zonal stats over image pixels (pixel-center-in-polygon).
 
-    zones broadcast as a ZoneIndex; a single image pass emits per-zone
+    zones broadcast as the join's ZoneIndex (``spatial_join._zone_side``,
+    behind its driver fence); a single image pass emits per-zone
     partials. Returns zone_id + count/min/max/mean/sum/stddev (null stats
     for zones with zero valid pixels — the reference's no-data fill rule).
     """
-    spark = images.sparkSession
-    from rsgislib_spark.qcommon import fenced_small_pdf
-
-    zones_pdf = fenced_small_pdf(
-        zones.select("zone_id", "geometry"),
-        "zonal broadcast zone index",
-        "Bucket zones to cells and aggregate per cell instead.",
-        max_rows=MAX_BROADCAST_ZONES,
-    )
-    zindex_b = spark.sparkContext.broadcast(ZoneIndex.from_pandas(zones_pdf))
+    zx, _ = _zone_side(zones)
+    zindex_b = images.sparkSession.sparkContext.broadcast(zx)
 
     src = images.select("bytes", "w", "h", "fmt", "minx", "miny")
 
@@ -430,16 +421,8 @@ def zonal_band_mode_median(
     operator doesn't cover. Partials are per-(zone, value) histogram
     counts — 256 rows per zone max — so the shuffle stays O(zones·256)
     regardless of pixel count."""
-    spark = images.sparkSession
-    from rsgislib_spark.qcommon import fenced_small_pdf
-
-    zones_pdf = fenced_small_pdf(
-        zones.select("zone_id", "geometry"),
-        "zonal broadcast zone index",
-        "Bucket zones to cells and aggregate per cell instead.",
-        max_rows=MAX_BROADCAST_ZONES,
-    )
-    zindex_b = spark.sparkContext.broadcast(ZoneIndex.from_pandas(zones_pdf))
+    zx, _ = _zone_side(zones)
+    zindex_b = images.sparkSession.sparkContext.broadcast(zx)
     src = images.select("bytes", "w", "h", "fmt", "minx", "miny")
 
     def _hist(it):

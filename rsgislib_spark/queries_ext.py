@@ -4838,16 +4838,19 @@ HAVING SUM(n_border) > 0
 
 
 def q85_spatial_join_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The huge×huge spatial-join path: CELL equi-join + exact refine
-    (operators/spatial_join.spatial_join_cells) instead of the broadcast
-    STRtree — the fallback for when the zone side outgrows an executor.
-    Same oracle as q11, proving cells-path == broadcast-path == SQL."""
-    from rsgislib_spark.operators.spatial_join import spatial_join_cells
+    """The broadcast window join's pair list: (image, zone) pairs of an
+    inner ``intersects`` join over the slim (image_id, bbox) projection,
+    zone attributes dropped. Its oracle is q11's: the pairs must not
+    depend on the image columns carried through the pass. Closed
+    intervals, so an image that only touches a zone's edge is a pair."""
+    from rsgislib_spark.operators.spatial_join import spatial_join_broadcast
 
     load_views(spark, sf_dir)
-    gi = _geo_images(spark).withColumnRenamed("image_key", "image_id")
+    gi = _geo_images(spark).select(
+        F.col("image_key").alias("image_id"), "minx", "miny", "maxx", "maxy"
+    )
     zones = spark.createDataFrame(_zones_with_wkb(spark))
-    out = spatial_join_cells(gi, zones, join_op="intersects", id_col="image_id")
+    out = spatial_join_broadcast(gi, zones, join_op="intersects", join_how="inner")
     return out.select(F.col("image_id").alias("image_key"), "zone_id")
 
 
@@ -4859,21 +4862,19 @@ ON i.minx <= z.maxx AND i.maxx >= z.minx AND i.miny <= z.maxy AND i.maxy >= z.mi
 
 
 def q129_spatial_join_cells_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT how on the huge×huge CELLS spatial-join path (VERDICT r4
-    task 4): unmatched images survive with null zone_id via an anti-join
-    of ids against the refined pairs — no broadcast anywhere, matching
-    the reference's join_how surface (vectorutils/__init__.py:2159-2225)
-    on the scale path. Zones are restricted to a subset so the left
-    preservation is actually exercised (some images match nothing)."""
-    from rsgislib_spark.operators.spatial_join import spatial_join_cells
+    """Left-join preservation with a zone subset: the q85 pairs as a
+    ``left`` join (vectorutils/__init__.py:2159-2225) against the zones
+    with ``zone_id % 3 = 0`` only, so some images meet no zone and must
+    come back once each with a null zone_id."""
+    from rsgislib_spark.operators.spatial_join import spatial_join_broadcast
 
     load_views(spark, sf_dir)
-    gi = _geo_images(spark).withColumnRenamed("image_key", "image_id")
+    gi = _geo_images(spark).select(
+        F.col("image_key").alias("image_id"), "minx", "miny", "maxx", "maxy"
+    )
     zones = spark.createDataFrame(_zones_with_wkb(spark))
     zones = zones.filter(F.col("zone_id") % 3 == 0)
-    out = spatial_join_cells(
-        gi, zones, join_op="intersects", id_col="image_id", join_how="left"
-    )
+    out = spatial_join_broadcast(gi, zones, join_op="intersects", join_how="left")
     return out.select(F.col("image_id").alias("image_key"), "zone_id")
 
 

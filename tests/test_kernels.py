@@ -43,18 +43,6 @@ class TestCells:
         assert len(np.unique(ring)) == 25
         assert c[0] in ring
 
-    def test_covering_bbox(self):
-        s = cells.cell_size(6)
-        # bbox exactly one cell
-        r, cc = cells.cells_covering_bbox([0.0], [0.0], [s], [s], 6)
-        assert len(cc) == 1
-        # 2x2 cover
-        r, cc = cells.cells_covering_bbox([s / 2], [s / 2], [s * 1.5], [s * 1.5], 6)
-        assert len(cc) == 4
-        # vectorized multi-row
-        r, cc = cells.cells_covering_bbox([0.0, s / 2], [0.0, s / 2], [s, s * 1.5], [s, s * 1.5], 6)
-        assert (r == np.array([0, 1, 1, 1, 1])).all()
-
     def test_morton_locality(self):
         # neighbours in space are near in id space more often than random
         c1 = cells.encode_point(np.array([1000.0]), np.array([1000.0]), 20)

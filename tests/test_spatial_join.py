@@ -1,10 +1,11 @@
-"""Spatial-join parity: broadcast strategy vs numpy oracle vs cell strategy.
+"""Spatial-join parity: the broadcast strategy vs a numpy oracle.
 
 Oracle role: the reference delegates its joins to geopandas/shapely
 (vectorutils/__init__.py:2217); with those unavailable in this container,
 the oracle is an independent brute-force evaluation of the same predicate
-kernels over ALL (image, zone) pairs — no tree, no cells — so index and
-join plumbing are tested against exhaustive evaluation.
+kernels over ALL (image, zone) pairs — no tree — so index and join
+plumbing are tested against exhaustive evaluation, for every join_how
+with its null-padded unmatched rows.
 """
 
 import inspect
@@ -17,10 +18,10 @@ import pytest
 
 from rsgislib_spark.kernels import geom
 from rsgislib_spark.operators.spatial_join import (
+    JOIN_HOWS,
     JOIN_OPS,
     ZoneIndex,
     spatial_join_broadcast,
-    spatial_join_cells,
     spatial_select,
 )
 
@@ -51,32 +52,45 @@ def spark_tables(spark, images_nopix_pdf, zones_pdf):
     return images, zones
 
 
-@pytest.mark.parametrize("join_op", ["intersects", "within", "contains"])
-def test_broadcast_join_matches_oracle(spark_tables, images_nopix_pdf, zones_pdf, join_op):
+def _expected_pairs(images_pdf, zones_pdf, join_op, join_how):
+    """The brute-force pairs, plus each unmatched image (``left``) or
+    zone (``right``) once with ``None`` on the other side."""
+    exp = brute_pairs(images_pdf, zones_pdf, join_op)
+    if join_how == "left":
+        hit = {i for i, _ in exp}
+        exp |= {(i, None) for i in images_pdf["image_id"] if i not in hit}
+    elif join_how == "right":
+        hit = {z for _, z in exp}
+        exp |= {(None, int(z)) for z in zones_pdf["zone_id"] if int(z) not in hit}
+    return exp
+
+
+@pytest.mark.parametrize(
+    "join_op, join_how",
+    # an inner case's id is its predicate alone, inner being the default how
+    [
+        pytest.param(op, how, id=op if how == "inner" else f"{op}-{how}")
+        for how in JOIN_HOWS
+        for op in JOIN_OPS
+    ],
+)
+def test_broadcast_join_matches_oracle(
+    spark_tables, images_nopix_pdf, zones_pdf, join_op, join_how
+):
     images, zones = spark_tables
     got = (
-        spatial_join_broadcast(images, zones, join_op=join_op, join_how="inner")
+        spatial_join_broadcast(images, zones, join_op=join_op, join_how=join_how)
         .select("image_id", "zone_id")
-        .toPandas()
+        .collect()
     )
-    got_pairs = set(zip(got["image_id"], got["zone_id"].astype(int)))
-    exp = brute_pairs(images_nopix_pdf, zones_pdf, join_op)
-    assert got_pairs == exp
-    if join_op == "intersects":
+    got_pairs = [(r.image_id, None if r.zone_id is None else int(r.zone_id)) for r in got]
+    exp = _expected_pairs(images_nopix_pdf, zones_pdf, join_op, join_how)
+    assert len(got_pairs) == len(set(got_pairs))
+    assert set(got_pairs) == exp
+    if join_op == "intersects" and join_how == "inner":
         assert len(exp) > 100  # skewed placement must produce real matches
-
-
-def test_cell_join_matches_broadcast(spark_tables, images_nopix_pdf, zones_pdf):
-    images, zones = spark_tables
-    for join_op in JOIN_OPS:
-        a = (
-            spatial_join_broadcast(images, zones, join_op=join_op)
-            .select("image_id", "zone_id").toPandas()
-        )
-        b = spatial_join_cells(images, zones, join_op=join_op).toPandas()
-        pa = set(zip(a["image_id"], a["zone_id"].astype(int)))
-        pb = set(zip(b["image_id"], b["zone_id"].astype(int)))
-        assert pa == pb
+    if join_how != "inner":
+        assert any(None in p for p in exp)  # the padding is exercised
 
 
 def _square(x0, y0, x1, y1):
@@ -315,41 +329,6 @@ class TestLayerPredicates:
         sub = parts[parts.image_id == 0]
         assert set(sub["zone_id"].dropna().astype(int)) == {1, 2}
         assert (sub["zone_id"].isna()).sum() >= 1  # the gap between zones
-
-
-def test_cells_left_right_hows_match_broadcast(spark_tables):
-    """Cells-path left/right parity with the broadcast path (VERDICT r4
-    task 4): identical pair sets including the null-padded unmatched
-    rows, with zero broadcast of either side in the cells plan."""
-    images, zones = spark_tables
-    # left: every image survives; unmatched ones carry null zone_id
-    bl = (
-        spatial_join_broadcast(images, zones, join_op="within", join_how="left")
-        .select("image_id", "zone_id").toPandas()
-    )
-    cl = spatial_join_cells(
-        images, zones, join_op="within", join_how="left"
-    ).toPandas()
-    key = lambda df: set(
-        (i, -1 if z != z else int(z))  # NaN → -1 sentinel
-        for i, z in zip(df["image_id"], df["zone_id"].astype("float"))
-    )
-    assert key(bl) == key(cl)
-    assert cl["zone_id"].isna().sum() > 0
-    # right: every zone survives; unmatched ones carry null image_id
-    br = (
-        spatial_join_broadcast(images, zones, join_op="contains", join_how="right")
-        .select("image_id", "zone_id").toPandas()
-    )
-    cr = spatial_join_cells(
-        images, zones, join_op="contains", join_how="right"
-    ).toPandas()
-    zkey = lambda df: set(
-        ("~none" if i is None or i != i else i, int(z))
-        for i, z in zip(df["image_id"], df["zone_id"])
-    )
-    assert zkey(br) == zkey(cr)
-    assert cr["image_id"].isna().sum() > 0
 
 
 # ------------------------------------------- zone-bbox pushdown semantics
